@@ -97,18 +97,12 @@ object Cli {
     }
   }
 
-  /** Schema of a logged table from its live files — CommitLog reads
-    * are schema-explicit, and for an operator-facing CLI the table's
-    * own current files ARE the schema of record. */
+  /** Schema of a logged table — CommitLog reads are schema-explicit:
+    * the schema LEDGER when an evolving writer stamped it, else
+    * inferred from the table's newest live file
+    * ([[graft.store.CommitLog.tableSchema]]). */
   private def loggedSchema(spark: SparkSession, table: String) =
-    // the schema LEDGER is authoritative when an evolving writer has
-    // stamped it (a mergeSchema table's newest file can be NARROWER
-    // than the evolved schema); file inference is the fallback
-    graft.store.CommitLog.schemaAt(spark, table).getOrElse {
-      val (_, files) = graft.store.CommitLog.liveFiles(spark, table)
-      require(files.nonEmpty, s"no live files in logged table $table")
-      spark.read.parquet(files.map(f => s"$table/$f"): _*).schema
-    }
+    graft.store.CommitLog.tableSchema(spark, table)
 
   def run(spark: SparkSession, args: Array[String]): String = args.toList match {
     case "ingest" :: root :: filter :: depth :: rest =>
@@ -223,17 +217,14 @@ object Cli {
 
     case "log-schema" :: table :: rest if rest.size <= 1 =>
       val asOf = rest.headOption.map(_.toLong).getOrElse(Long.MaxValue)
-      val ledger = graft.store.CommitLog.schemaAt(spark, table, asOf)
-      val schema = ledger.getOrElse {
-        // no ledger entry at this version: infer from the files live
-        // AT that snapshot, not today's
-        val (_, files) = graft.store.CommitLog.liveFiles(spark, table, asOf)
-        require(files.nonEmpty, s"no live files in logged table $table at $asOf")
-        spark.read.parquet(files.map(f => s"$table/$f"): _*).schema
-      }
+      // no ledger entry at this version: inferred from the files live
+      // AT that snapshot, not today's (a clone's absolute references
+      // resolve like the table's own files)
+      val snap = graft.store.CommitLog.snapshot(spark, table, asOf)
+      val schema = graft.store.CommitLog.tableSchema(spark, table, snap)
       val fields = schema.fields.map(f =>
         s"""{"name":"${f.name}","type":"${f.dataType.simpleString}"}""")
-      s"""{"cmd":"log-schema","table":"$table","from_ledger":${ledger.isDefined},""" +
+      s"""{"cmd":"log-schema","table":"$table","from_ledger":${snap.schemaJson.isDefined},""" +
         s""""fields":[${fields.mkString(",")}]}"""
 
     case "log-delete" :: table :: predicate :: rest if rest.isEmpty ||

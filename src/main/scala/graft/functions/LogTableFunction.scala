@@ -68,15 +68,7 @@ object LogTableFunction {
     }
     val spark = SparkSession.active
     val path = graft.store.GraftSql.resolvePath(spark, rawPath)
-    val schema = CommitLog.schemaAt(spark, path, asOf).getOrElse {
-      val (_, files) = CommitLog.liveFiles(spark, path, asOf)
-      require(files.nonEmpty,
-        s"cannot infer the schema of $path — no schema ledger and no live " +
-          "files at the requested version; stamp the table with " +
-          "append(mergeSchema = true) or read through the Scala API")
-      spark.read.parquet(CommitLog.resolveDataPath(path, files.last)).schema
-    }
-    CommitLog.read(spark, path, schema, asOf)
+    CommitLog.read(spark, path, CommitLog.tableSchema(spark, path, asOf), asOf)
       .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.logical
   }

@@ -56,7 +56,10 @@ private[graft] object GraftLogBatch {
     val path = graft.store.GraftSql.resolvePath(spark,
       GraftLogStreamProvider.pathOf(parameters))
     val asOf = asOfVersion(spark, path, parameters)
-    val schema = user.getOrElse(schemaFor(spark, path, asOf))
+    // one snapshot feeds the schema, the live set and the mapping, so
+    // they describe one version even across a concurrent rename
+    val snap = CommitLog.snapshot(spark, path, asOf)
+    val schema = user.getOrElse(CommitLog.tableSchema(spark, path, snap))
     // A snapshot carrying DELETION VECTORS cannot be served as a bare
     // file relation — the vectored positions would resurrect. Until
     // OPTIMIZE absorbs the vectors, such a snapshot reads through the
@@ -66,12 +69,12 @@ private[graft] object GraftLogBatch {
     // A COLUMN-MAPPED snapshot (renamed/dropped columns — files carry
     // physical names) routes through the same bridge: a bare file
     // relation has no projection hook to alias physical → logical.
-    val (_, entries) = CommitLog.liveFilesFull(spark, path, asOf)
-    if (entries.exists(_.dv.isDefined) ||
-        CommitLog.mappingAt(spark, path, asOf).nonEmpty)
-      return new GraftLogDvRelation(spark, path, nullify(schema), entries, asOf)
+    val entries = snap.live
+    if (entries.exists(_.dv.isDefined) || snap.mapping.nonEmpty)
+      return new GraftLogDvRelation(spark, path, nullify(schema), entries,
+        snap.mapping)
     HadoopFsRelation(
-      location = new GraftLogFileIndex(spark, path, asOf),
+      location = new GraftLogFileIndex(spark, path, asOf, Some(snap)),
       partitionSchema = StructType(Nil),
       // nullable like Spark's own DataSource.resolveRelation makes
       // user schemas for file sources: a column absent from an older
@@ -159,16 +162,21 @@ private[graft] object GraftLogBatch {
   * Files committed without stats (or with stats a predicate can't be
   * compared against) are always kept — pruning is an optimization,
   * never a correctness input. */
-final class GraftLogFileIndex(spark: SparkSession, tablePath: String,
-    asOf: Long = Long.MaxValue) extends FileIndex {
+final class GraftLogFileIndex private[graft] (spark: SparkSession,
+    tablePath: String, asOf: Long, initial: Option[CommitLog.Snapshot])
+    extends FileIndex {
+
+  def this(spark: SparkSession, tablePath: String, asOf: Long = Long.MaxValue) =
+    this(spark, tablePath, asOf, None)
 
   private val root = new Path(tablePath)
 
   @volatile private var snapshot: Seq[(FileStatus, Option[Map[String, (Any, Any)]])] =
-    load()
+    load(initial.getOrElse(CommitLog.snapshot(spark, tablePath, asOf)))
 
-  private def load(): Seq[(FileStatus, Option[Map[String, (Any, Any)]])] = {
-    val (_, withStats) = CommitLog.liveFilesWithStats(spark, tablePath, asOf)
+  private def load(snap: CommitLog.Snapshot)
+      : Seq[(FileStatus, Option[Map[String, (Any, Any)]])] = {
+    val withStats = snap.live.map(e => (e.name, e.stats))
     if (withStats.isEmpty) Seq.empty
     else {
       // ONE directory listing PER DISTINCT PARENT (the table root,
@@ -185,7 +193,7 @@ final class GraftLogFileIndex(spark: SparkSession, tablePath: String,
       val statusOf: Map[String, FileStatus] =
         CommitLog.statusFor(fs, tablePath, withStats.map(_._1))
       // stats are keyed by PHYSICAL name; pushed filters are logical
-      val mapping = CommitLog.mappingAt(spark, tablePath, asOf)
+      val mapping = snap.mapping
       resolved.map { case (abs, name, statsJson) =>
         val st = statusOf.getOrElse(abs, throw new IllegalStateException(
           s"live data file $name of $tablePath is missing — the snapshot " +
@@ -208,7 +216,8 @@ final class GraftLogFileIndex(spark: SparkSession, tablePath: String,
 
   override def partitionSchema: StructType = StructType(Nil)
 
-  override def refresh(): Unit = snapshot = load()
+  override def refresh(): Unit =
+    snapshot = load(CommitLog.snapshot(spark, tablePath, asOf))
 
   override def inputFiles: Array[String] =
     snapshot.map(_._1.getPath.toString).toArray
@@ -249,7 +258,7 @@ final class GraftLogFileIndex(spark: SparkSession, tablePath: String,
   * the inner re-translation is purely an optimization. */
 private[graft] final class GraftLogDvRelation(spark: SparkSession,
     tablePath: String, dataSchema: StructType,
-    entries: Seq[CommitLog.LiveEntry], asOf: Long = Long.MaxValue)
+    entries: Seq[CommitLog.LiveEntry], mapping: Map[String, String])
     extends BaseRelation with PrunedFilteredScan {
 
   override def sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -260,11 +269,9 @@ private[graft] final class GraftLogDvRelation(spark: SparkSession,
     * a column-mapped table) — the metadata aggregate
     * ([[graft.store.GraftStatsAggRule]]) folds these the same way it
     * folds [[GraftLogFileIndex.fileStats]]. */
-  private[graft] def fileStats: Seq[Option[Map[String, (Any, Any)]]] = {
-    val mapping = CommitLog.mappingAt(spark, tablePath, asOf)
+  private[graft] def fileStats: Seq[Option[Map[String, (Any, Any)]]] =
     entries.map(_.stats.map(j =>
       CommitLog.statsToLogical(CommitLog.parseStatsJson(j), mapping)))
-  }
 
   /** Per-live-file deletion-vector state: None = no vector (every
     * physical row visible); Some(Some(n)) = a vector deleting n of
@@ -279,7 +286,6 @@ private[graft] final class GraftLogDvRelation(spark: SparkSession,
     // a DV only removes rows, so the add-time stats remain a sound
     // superset envelope; stats keys remap physical → logical on a
     // column-mapped snapshot
-    val mapping = CommitLog.mappingAt(spark, tablePath, asOf)
     val kept = entries.filter { e =>
       e.stats.map(j => CommitLog.statsToLogical(
         CommitLog.parseStatsJson(j), mapping)) match {
@@ -288,7 +294,7 @@ private[graft] final class GraftLogDvRelation(spark: SparkSession,
       }
     }
     val base = CommitLog.visibleRows(spark, tablePath, dataSchema, kept,
-      mappingAsOf = asOf)
+      mapping = Some(mapping))
     val filtered = filters.flatMap(FilterColumns.toColumn).foldLeft(base)(_.filter(_))
     val projected =
       if (requiredColumns.isEmpty)

@@ -133,8 +133,7 @@ object CdcStream {
     CommitLog.keyedRewrite(spark, sinkTable, schema, keyCols,
       deleteKeys = touchedKeys, appendDf = netInserts,
       opTag = Some(s"txn=$queryId:$batchId"), publisher = publisher,
-      abortOnLostRace =
-        () => batchId <= CommitLog.lastTxnBatch(spark, sinkTable, queryId),
+      abortOnLostRace = batchId <= _.lastTxnBatch(queryId),
       deletionVectors = deletionVectors)
   }
 

@@ -1,7 +1,10 @@
 package graft.store
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+
+import scala.collection.immutable.SortedMap
 
 /** The change feed's "this range is gone" failure, as a TYPE: raised by
   * [[CommitLog.changesSince]] when the requested version range cannot
@@ -34,6 +37,18 @@ final class FeedGapException(msg: String) extends IllegalStateException(msg)
   *    the log and retry at the next number. Uncommitted data files are
   *    invisible, so a crash at ANY point loses nothing and corrupts
   *    nothing — vacuum() reclaims the orphans later.
+  *  - ONE REPLAY: every read of the log's state — the live set, the
+  *    txn/consumed idempotence ledgers, the schema ledger and its
+  *    column mapping, constraints, properties — is a projection of one
+  *    immutable [[Snapshot]], built from one `_graft_log` listing and
+  *    one checkpoint-then-fold pass. A caller reading several ledgers
+  *    of one table takes one Snapshot, so they all describe one
+  *    version. Each publish attempt takes one Snapshot too: `next` is
+  *    its version + 1, and the remove/DV validation, the constraint
+  *    and schema fences and the caller's `abortOnLostRace` all judge
+  *    that same Snapshot, AFTER `next` was derived from it — a
+  *    competitor landing later collides at `next` and loops the
+  *    attempt back through every fence.
   *  - A rewrite (compaction) commits `adds ++ removes` as ONE version:
   *    readers see the old files or the new files, never both, never
   *    neither. A concurrent append simply wins an earlier or later
@@ -180,169 +195,255 @@ object CommitLog {
     content.linesIterator.filter(_.nonEmpty)
   }
 
-  /** (latest version ≤ asOf, live data-file names at that version) —
-    * 0 / empty for a table with no commits yet. Replay starts from the
-    * newest checkpoint ≤ asOf (if any) and folds only the commits
-    * after it. `asOf` is TIME TRAVEL: the log replayed up to an
-    * earlier version IS that snapshot, for free, as long as vacuum
-    * hasn't reclaimed its files (same retention contract as Delta).
-    * Incomplete commit/checkpoint files cannot exist: content becomes
-    * visible atomically with the publish rename. */
+  /** One-line projections of [[Snapshot]] — each is one listing and one
+    * replay. `asOf` is TIME TRAVEL: the log replayed up to an earlier
+    * version IS that snapshot, for free, as long as vacuum hasn't
+    * reclaimed its files (same retention contract as Delta). Callers
+    * that read several ledgers of one table take one [[snapshot]]
+    * instead of calling several of these. */
   def liveFiles(spark: SparkSession, tablePath: String,
       asOf: Long = Long.MaxValue): (Long, Seq[String]) = {
-    val (v, withStats) = liveFilesWithStats(spark, tablePath, asOf)
-    (v, withStats.map(_._1))
+    val s = snapshot(spark, tablePath, asOf)
+    (s.version, s.live.map(_.name))
   }
 
   /** Latest committed version of the table (0 = no commits yet) — one
-    * log-directory listing, no replay; what a streaming source polls
-    * per trigger to see whether anything new landed. */
-  def latestVersion(spark: SparkSession, tablePath: String): Long = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    latestVersion(fsOf(spark, log), log)
-  }
+    * log-directory listing, no content read; what a streaming source
+    * polls per trigger to see whether anything new landed. A publish
+    * attempt derives `next` the same listing-only way, from the
+    * version of the [[Snapshot]] its fences then judge. */
+  def latestVersion(spark: SparkSession, tablePath: String): Long =
+    listLog(spark, tablePath).latest
 
   /** [[liveFiles]] plus each live file's LOG-CARRIED column statistics
     * (the optional `|{json}` suffix its add line recorded at write
     * time — Delta's stats-in-add-action pattern): file name → raw
-    * stats JSON, None for files committed without stats. Checkpoints
-    * carry the suffixes, so stats survive pruneLog like the ledgers
-    * do. Consumers: the merge/delete match probe skips files from the
-    * LOG instead of paying one footer read per live file. */
+    * stats JSON, None for files committed without stats. Consumers:
+    * the merge/delete match probe skips files from the LOG instead of
+    * paying one footer read per live file. */
   private[graft] def liveFilesWithStats(spark: SparkSession, tablePath: String,
       asOf: Long = Long.MaxValue): (Long, Seq[(String, Option[String])]) = {
-    val (v, full) = liveFilesFull(spark, tablePath, asOf)
-    (v, full.map(e => (e.name, e.stats)))
+    val s = snapshot(spark, tablePath, asOf)
+    (s.version, s.live.map(e => (e.name, e.stats)))
   }
 
-  /** One live-set entry of the full replay: the data file, its
-    * log-carried stats JSON, the DELETION VECTOR file currently
-    * attached to it (None = every physical row is live), and — when
-    * the attaching commit recorded it — the vector's POSITION COUNT
-    * (how many of the file's rows it deletes; cumulative, like the
-    * vector itself). The count is what lets COUNT(*) stay a ledger
-    * fold on a merge-on-read table (GraftStatsAggRule). */
+  /** One live-set entry of the replay: the data file, its log-carried
+    * stats JSON, the DELETION VECTOR file currently attached to it
+    * (None = every physical row is live), and — when the attaching
+    * commit recorded it — the vector's POSITION COUNT (how many of the
+    * file's rows it deletes; cumulative, like the vector itself). The
+    * count is what lets COUNT(*) stay a ledger fold on a merge-on-read
+    * table (GraftStatsAggRule). */
   private[graft] final case class LiveEntry(name: String,
       stats: Option[String], dv: Option[String],
       dvRows: Option[Long] = None)
 
-  /** [[liveFilesWithStats]] plus each file's deletion-vector
-    * attachment — the complete snapshot state. DV attachments ride
-    * `*file|dvfile` lines (merge-on-read row deletes): the data file
-    * stays live and untouched, and readers subtract the positions the
-    * DV parquet lists for it. A re-added file (`+`) starts DV-free; a
-    * removed file drops its attachment with it; a later `*` line for
-    * the same file REPLACES the attachment (DVs are cumulative — each
-    * new vector carries every deleted position of its file). */
+  /** The complete live set at `asOf`: [[liveFilesWithStats]] plus each
+    * file's deletion-vector attachment. */
   private[graft] def liveFilesFull(spark: SparkSession, tablePath: String,
       asOf: Long = Long.MaxValue): (Long, Seq[LiveEntry]) = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
-    if (!fs.exists(log)) return (0L, Seq.empty)
-    val entries = fs.listStatus(log)
-    val ckpt = entries.flatMap { st =>
-      st.getPath.getName match {
-        case CheckpointRe(v) if v.toLong <= asOf => Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1).lastOption
-    val base = ckpt.map(_._1).getOrElse(0L)
-    val live = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Option[String], Option[String], Option[Long])]
-    def addLine(line: String): Unit = {
-      val body = line.drop(1)
-      val bar = body.indexOf('|')
-      if (bar < 0) { live(body) = (None, None, None); () }
-      else {
-        live(body.substring(0, bar)) =
-          (Some(body.substring(bar + 1)), None, None); ()
-      }
-    }
-    def dvLine(line: String, p: org.apache.hadoop.fs.Path): Unit = {
-      val body = line.drop(1)
-      val bar = body.indexOf('|')
-      if (bar < 0) throw new IllegalStateException(
-        s"corrupt DV line in $p (no |dvfile): $line")
-      val data = body.substring(0, bar)
-      // optional POSITION COUNT third segment (`*file|dvfile|n`) —
-      // file names never contain '|', so the split is unambiguous;
-      // attachments committed before counts were recorded stay
-      // countless (consumers abstain, never guess)
-      val rest = body.substring(bar + 1)
-      val bar2 = rest.indexOf('|')
-      val (dv, nRows) =
-        if (bar2 < 0) (rest, None)
-        else (rest.substring(0, bar2),
-          Some(java.lang.Long.parseLong(rest.substring(bar2 + 1))))
-      live.get(data) match {
-        // `*file|-` DETACHES (restore() resetting a kept file to a
-        // vector-free historical state)
-        case Some((st, _, _)) =>
-          live(data) =
-            (st, if (dv == "-") None else Some(dv),
-              if (dv == "-") None else nRows); ()
-        case None => throw new IllegalStateException(
-          s"corrupt commit in $p: DV attached to non-live file $data")
-      }
-    }
-    ckpt.foreach { case (_, p) =>
-      readLines(fs, p).foreach { line =>
-        if (line.startsWith("+")) addLine(line)
-        else if (line.startsWith("*")) dvLine(line, p)
-        else if (line.startsWith("#")) () // carried ledger tags (#txn=/#consumed=)
-        else throw new IllegalStateException(s"corrupt checkpoint line in $p: $line")
-      }
-    }
-    val commits = entries.flatMap { st =>
-      st.getPath.getName match {
-        case CommitRe(v) if v.toLong > base && v.toLong <= asOf =>
-          Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1)
-    commits.foreach { case (_, p) =>
-      readLines(fs, p).foreach { line =>
-        if (line.startsWith("+")) addLine(line)
-        else if (line.startsWith("-")) { live -= line.drop(1); () }
-        else if (line.startsWith("*")) dvLine(line, p)
-        else if (line.startsWith("#")) () // operation header (e.g. #op=delete)
-        else if (line.startsWith("~")) () // change (CDC) file — never part of the live set
-        else throw new IllegalStateException(s"corrupt commit line in $p: $line")
-      }
-    }
-    val reached = commits.lastOption.map(_._1).getOrElse(base)
-    // an EXPLICIT asOf must resolve exactly: versions are contiguous by
-    // construction, so reaching a lower version means the requested one
-    // never existed or its commits were pruned past a checkpoint —
-    // silently answering with a different snapshot would be a wrong
-    // historical read (Delta throws VersionNotFound here too)
-    if (asOf != Long.MaxValue && reached != asOf)
-      throw new IllegalStateException(
-        s"version $asOf of $tablePath unavailable (latest reachable: $reached — " +
-          "nonexistent, or its commits were pruned past a checkpoint)")
-    (reached, live.toSeq.map { case (n, (st, dv, nRows)) =>
-      LiveEntry(n, st, dv, nRows) })
+    val s = snapshot(spark, tablePath, asOf)
+    (s.version, s.live)
   }
 
-  /** Latest version from the log LISTING alone — one directory list,
-    * no content reads. The version race loop polls this; the full
-    * replay is reserved for readers and for remove-validation (a
-    * micro-batch table accumulates thousands of commits, and O(V)
-    * content reads per append would make the commit path O(V²) over
-    * the table's lifetime). CHECKPOINT versions count too: after the
-    * supported prune-commits-behind-a-checkpoint cleanup, a
-    * commits-only max would restart numbering below the checkpoint
-    * base and every new commit would be invisible to replay. */
-  private def latestVersion(fs: org.apache.hadoop.fs.FileSystem,
-      log: org.apache.hadoop.fs.Path): Long =
-    if (!fs.exists(log)) 0L
-    else fs.listStatus(log).foldLeft(0L) { (mx, st) =>
-      st.getPath.getName match {
-        case CommitRe(v) => math.max(mx, v.toLong)
-        case CheckpointRe(v) => math.max(mx, v.toLong)
-        case _ => mx
+  /** One listing of `_graft_log`, parsed — the ONLY place a log file
+    * name is matched against [[CommitRe]] / [[CheckpointRe]]. A missing
+    * log directory lists as empty (`exists` false). */
+  private final class LogListing(val tablePath: String, val fs: FileSystem,
+      val exists: Boolean, val commits: SortedMap[Long, Path],
+      val checkpoints: SortedMap[Long, Path]) {
+
+    /** Latest version from the names alone. CHECKPOINT versions count
+      * too: after the supported prune-commits-behind-a-checkpoint
+      * cleanup, a commits-only max would restart numbering below the
+      * checkpoint base and every new commit would be invisible to
+      * replay. */
+    def latest: Long =
+      math.max(commits.lastOption.fold(0L)(_._1), checkpoints.lastOption.fold(0L)(_._1))
+
+    def snapshot(asOf: Long = Long.MaxValue): Snapshot = new Snapshot(this, asOf)
+  }
+
+  private def listLog(spark: SparkSession, tablePath: String): LogListing = {
+    val log = new Path(tablePath, LogDir)
+    val fs = fsOf(spark, log)
+    val files =
+      try Some(fs.listStatus(log).toSeq.map(st => st.getPath.getName -> st.getPath))
+      catch { case _: java.io.FileNotFoundException => None }
+    def parsed(re: scala.util.matching.Regex) = SortedMap.from(
+      files.getOrElse(Seq.empty).collect { case (re(v), p) => v.toLong -> p })
+    new LogListing(tablePath, fs, files.isDefined, parsed(CommitRe),
+      parsed(CheckpointRe))
+  }
+
+  /** The table at `asOf` (latest by default): one listing, no content
+    * read until a ledger is asked for. */
+  private[graft] def snapshot(spark: SparkSession, tablePath: String,
+      asOf: Long = Long.MaxValue): Snapshot =
+    listLog(spark, tablePath).snapshot(asOf)
+
+  /** THE log replay: one listing, then the newest checkpoint ≤ `asOf`
+    * (if any) and every later commit up to `asOf`, folded in version
+    * order. Every checkpoint carries the full state through its own
+    * version (induction from the first), so pruning the commits it
+    * subsumes moves no ledger backwards. `version` comes from the
+    * listing alone; the files are read once, when a ledger is first
+    * asked for — a commit attempt that needs no ledger reads none.
+    * Content becomes visible atomically with the publish rename, so
+    * incomplete files cannot exist. The fold holds:
+    *  - the LIVE SET, in first-add order: `+name[|stats]` adds (a
+    *    re-added file starts DV-free), `-name` removes, `*file|dv[|n]`
+    *    deletion-vector attachments (a later one REPLACES it — vectors
+    *    are cumulative);
+    *  - the IDEMPOTENCE ledgers: per-query max batch (`txn=<q>:<b>` op
+    *    tags) and max consumed source version (`consumed=<v>` op tags);
+    *  - the SCHEMA ledger (newest `#schema=` header ≤ `asOf`) and the
+    *    column mapping and burned names derived from it;
+    *  - the CHECK-constraint ledger (`#constraint=+name:sql` adds,
+    *    `#constraint=-name` drops) and the TABLE-PROPERTIES ledger
+    *    (`#property=+key:value` sets, `#property=-key` unsets).
+    * Only live-set reads ([[live]]) refuse an explicit `asOf` the
+    * replay cannot reach exactly — versions are contiguous, so reaching
+    * a lower one means the requested version never existed or was
+    * pruned past a checkpoint, and answering with another snapshot
+    * would be a wrong historical read (Delta throws VersionNotFound
+    * too). The ledger reads fold whatever survives at or below `asOf`. */
+  private[graft] final class Snapshot private[CommitLog] (listing: LogListing,
+      asOf: Long) {
+    private val base = listing.checkpoints.rangeTo(asOf).lastOption
+    private val commits = listing.commits
+      .rangeFrom(base.fold(0L)(_._1) + 1).rangeTo(asOf)
+
+    /** The version reached (0 for a table with no commits yet). */
+    val version: Long = commits.lastOption.orElse(base).fold(0L)(_._1)
+
+    private lazy val state: ReplayState = {
+      val live = scala.collection.mutable.LinkedHashMap.empty[String, LiveEntry]
+      var txn = Map.empty[String, Long]
+      var consumed = 0L
+      var schema = Option.empty[(Long, String)]
+      var constraints = Map.empty[String, String]
+      var properties = Map.empty[String, String]
+      // a corrupt line fails the live-set reads only; the ledgers fold on
+      var corrupt = Option.empty[String]
+      def fail(msg: String): Unit = if (corrupt.isEmpty) corrupt = Some(msg)
+      def ledgerTag(tag: String): Unit = tag match {
+        case TxnTagRe(q, b) =>
+          txn = txn.updated(q, math.max(b.toLong, txn.getOrElse(q, -1L)))
+        case ConsumedTagRe(v) => consumed = math.max(consumed, v.toLong)
+        case _ => ()
       }
+      def keyed(m: Map[String, String], b: String): Map[String, String] =
+        if (b.startsWith("+")) {
+          val i = b.indexOf(':')
+          if (i > 1) m + (b.substring(1, i) -> b.substring(i + 1)) else m
+        } else if (b.startsWith("-")) m - b.substring(1)
+        else m
+      // file names never contain '|', so the split is unambiguous; the
+      // optional POSITION COUNT (`*file|dv|n`) is absent on attachments
+      // committed before counts were recorded (consumers abstain)
+      def dvLine(body: String, p: Path, line: String): Unit =
+        body.split("\\|", 3) match {
+          case Array(data, dv, n @ _*) => live.get(data) match {
+            // `*file|-` DETACHES (restore() resetting a kept file to a
+            // vector-free historical state)
+            case Some(e) => live(data) =
+              if (dv == "-") e.copy(dv = None, dvRows = None)
+              else e.copy(dv = Some(dv), dvRows = n.headOption.map(_.toLong))
+            case None =>
+              fail(s"corrupt commit in $p: DV attached to non-live file $data")
+          }
+          case _ => fail(s"corrupt DV line in $p (no |dvfile): $line")
+        }
+      def fold(v: Long, p: Path, checkpoint: Boolean): Unit =
+        readLines(listing.fs, p).foreach { l =>
+          val body = l.drop(1)
+          l.head match {
+            case '+' =>
+              val bar = body.indexOf('|')
+              val e =
+                if (bar < 0) LiveEntry(body, None, None)
+                else LiveEntry(body.substring(0, bar), Some(body.substring(bar + 1)), None)
+              live(e.name) = e
+            case '-' if !checkpoint => live -= body
+            case '*' => dvLine(body, p, l)
+            case '~' if !checkpoint => () // change (CDC) file — never live
+            case '#' =>
+              // the newest `#schema=` version wins (a checkpoint's
+              // carried header is outranked by any later evolution)
+              if (body.startsWith("schema=")) {
+                if (schema.forall(_._1 < v)) schema = Some(v -> body.stripPrefix("schema="))
+              } else if (body.startsWith("constraint="))
+                constraints = keyed(constraints, body.stripPrefix("constraint="))
+              else if (body.startsWith("property="))
+                properties = keyed(properties, body.stripPrefix("property="))
+              // a checkpoint carries the idempotence tags bare; a commit
+              // carries them as its op tag (`#op=txn=q:b`)
+              else if (checkpoint) ledgerTag(body)
+              else if (body.startsWith("op=")) ledgerTag(body.stripPrefix("op="))
+            case _ => fail(
+              s"corrupt ${if (checkpoint) "checkpoint" else "commit"} line in $p: $l")
+          }
+        }
+      base.foreach { case (v, p) => fold(v, p, checkpoint = true) }
+      commits.foreach { case (v, p) => fold(v, p, checkpoint = false) }
+      ReplayState(live.values.toSeq, txn, consumed, schema.map(_._2),
+        constraints, properties, corrupt)
     }
+
+    /** The live entries at `asOf`; throws on a corrupt log or on an
+      * explicit `asOf` the replay cannot reach (see above). */
+    def live: Seq[LiveEntry] = {
+      state.corrupt.foreach(m => throw new IllegalStateException(m))
+      if (listing.exists && asOf != Long.MaxValue && version != asOf)
+        throw new IllegalStateException(
+          s"version $asOf of ${listing.tablePath} unavailable (latest reachable: " +
+            s"$version — nonexistent, or its commits were pruned past a checkpoint)")
+      state.live
+    }
+
+    /** Highest batch id `queryId` committed; -1 when it never did. */
+    def lastTxnBatch(queryId: String): Long = state.txn.getOrElse(queryId, -1L)
+    def consumed: Long = state.consumed
+    def schemaJson: Option[String] = state.schemaJson
+    lazy val schema: Option[StructType] = schemaJson.map(
+      org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[StructType])
+    /** logical → physical (empty for an unmapped table). */
+    lazy val mapping: Map[String, String] =
+      schema.map(columnMapping).getOrElse(Map.empty)
+    def constraints: Map[String, String] = state.constraints
+    def properties: Map[String, String] = state.properties
+    def burned: Set[String] = properties.get(BurnedProp)
+      .map(_.split(',').filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+
+    /** The checkpoint file for this snapshot — the inverse of the fold
+      * above: the ledgers as bare header tags, then every live file
+      * with its stats suffix, then its deletion-vector attachment, so
+      * none survives only in prunable commit files (Delta's
+      * txn-action-in-checkpoint pattern). Deterministic (max per
+      * ledger, sorted), so a version-tie loser writes identical bytes. */
+    def checkpoint: String = {
+      val entries = live
+      (state.txn.toSeq.sortBy(_._1).map { case (q, b) => s"#txn=$q:$b" } ++
+        (if (consumed > 0L) Seq(s"#consumed=$consumed") else Seq.empty) ++
+        schemaJson.map("#schema=" + _).toSeq ++
+        constraints.toSeq.sortBy(_._1).map { case (n, c) => s"#constraint=+$n:$c" } ++
+        properties.toSeq.sortBy(_._1).map { case (k, v) => s"#property=+$k:$v" } ++
+        entries.map(e => "+" + e.name + e.stats.map("|" + _).getOrElse("")) ++
+        entries.collect { case e if e.dv.isDefined =>
+          s"*${e.name}|${e.dv.get}" + e.dvRows.map("|" + _).getOrElse("") })
+        .mkString("\n")
+    }
+  }
+
+  /** What one [[Snapshot]] replay folded. */
+  private final case class ReplayState(live: Seq[LiveEntry],
+      txn: Map[String, Long], consumed: Long, schemaJson: Option[String],
+      constraints: Map[String, String], properties: Map[String, String],
+      corrupt: Option[String])
+
+  private val TxnTagRe = "txn=([^:\\s]+):(-?[0-9]+)".r
+  private val ConsumedTagRe = "consumed=([0-9]+)".r
 
   /** Publish a commit adding/removing the given data-file names.
     * Optimistic: races for the next version number; on losing,
@@ -367,7 +468,7 @@ object CommitLog {
       constraintsExpect: Option[Map[String, String]] = None,
       schemaExpect: Option[Option[String]] = None): Long =
     commitOrAbort(spark, tablePath, adds, removes, publisher, opTag,
-      abortOnLostRace = () => false, changeAdds = changeAdds,
+      abortOnLostRace = _ => false, changeAdds = changeAdds,
       addStats = addStats, schemaJson = schemaJson,
       removeDvExpect = removeDvExpect, constraintsExpect = constraintsExpect,
       schemaExpect = schemaExpect)
@@ -379,21 +480,23 @@ object CommitLog {
     * vacuum-eligible orphans). This closes the zombie-writer window an
     * up-front idempotence check leaves open: two drivers running the
     * same logical operation can BOTH pass a check taken before the
-    * race. A loser of the publish race re-checks here and sees the
+    * race. The hook receives the attempt's [[Snapshot]] (no second
+    * replay). A loser of the publish race re-checks here and sees the
     * winner's claim — the Delta pattern of re-validating txn versions
     * inside the optimistic-commit conflict path, generalized to any
     * caller-supplied predicate. The first attempt must fence too: a
     * competitor that fully committed BEFORE this writer's first
     * publish leaves no race to lose (the publish lands cleanly at
     * latest + 1), so an attempts>0-only fence would double-apply.
-    * Ordering makes this airtight: `next` is derived BEFORE the fence
-    * runs, so a competitor landing after the fence check collides at
+    * Ordering makes this airtight: `next` is derived from the
+    * attempt's Snapshot BEFORE the fence judges that same Snapshot, so
+    * a competitor landing after the attempt's listing collides at
     * `next` and forces a losing publish, which loops back through the
     * fence. */
   private[store] def commitOrAbort(spark: SparkSession, tablePath: String,
       adds: Seq[String], removes: Seq[String],
       publisher: AtomicPublisher, opTag: Option[String],
-      abortOnLostRace: () => Boolean,
+      abortOnLostRace: Snapshot => Boolean,
       changeAdds: Seq[String] = Seq.empty,
       addStats: Map[String, String] = Map.empty,
       schemaJson: Option[String] = None,
@@ -451,83 +554,84 @@ object CommitLog {
       }).mkString("\n")
     var attempts = 0
     while (attempts < 10000) {
-      // A removing commit must publish at EXACTLY validated-version + 1:
-      // validating against one listing and then racing latestVersion()
-      // from a SECOND listing is a TOCTOU hole — a rewrite landing
-      // between the two would make this commit's first publish attempt
-      // land on a version number past the conflict, skipping
-      // re-validation and doubling the table. Deriving `next` from the
-      // same replay that validated means any interleaved commit forces
-      // a LOSING publish, which loops back through validation.
-      // DV-attaching commits validate under the same discipline: the
-      // attached file must still be live AND still carry the attachment
-      // the planner read (dvExpect) — a concurrent compaction that
-      // absorbed the file, or a concurrent delete that replaced its DV,
-      // planned against state this commit would clobber (the second
-      // attacher's vector was built from the FIRST attacher's pre-state,
-      // so publishing it would resurrect the first delete's rows).
-      val next =
-        if (removes.nonEmpty || dvAttach.nonEmpty) {
-          val (v, liveSeq) = liveFilesFull(spark, tablePath)
-          val live = liveSeq.map(_.name).toSet
-          val gone = removes.filterNot(live)
-          if (gone.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"rewrite conflict on $tablePath: inputs already removed by a " +
-                s"concurrent commit (${gone.take(3).mkString(", ")}…) — " +
-                "re-read the live set and rerun the rewrite")
-          val dvByName = liveSeq.map(e => e.name -> e.dv).toMap
-          // attachments to files ADDED by this same commit (restore
-          // re-adding a historical file with its vector) have no
-          // current state to conflict with
-          val dvConflicts = dvAttach.keys.filterNot(adds.contains).filter { f =>
-            dvByName.get(f) match {
-              case None => true // attachment target no longer live
-              case Some(cur) => cur != dvExpect(f) // attachment moved under us
-            }
+      // ONE snapshot per attempt feeds `next` and every check below. A
+      // removing commit must publish at EXACTLY validated-version + 1:
+      // validating against one listing and racing a number from a
+      // SECOND listing is a TOCTOU hole — a rewrite landing between the
+      // two would make this commit's first publish attempt land on a
+      // version number past the conflict, skipping re-validation and
+      // doubling the table. `next` needs the listing alone; file
+      // contents are read only when a check asks for a ledger.
+      val snap = listLog(spark, tablePath).snapshot()
+      val next = snap.version + 1
+      if (removes.nonEmpty || dvAttach.nonEmpty) {
+        val liveSeq = snap.live
+        val live = liveSeq.map(_.name).toSet
+        val gone = removes.filterNot(live)
+        if (gone.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"rewrite conflict on $tablePath: inputs already removed by a " +
+              s"concurrent commit (${gone.take(3).mkString(", ")}…) — " +
+              "re-read the live set and rerun the rewrite")
+        // DV-attaching commits validate under the same discipline: the
+        // attached file must still be live AND still carry the
+        // attachment the planner read (dvExpect) — a concurrent
+        // compaction that absorbed the file, or a concurrent delete that
+        // replaced its DV, planned against state this commit would
+        // clobber (the second attacher's vector was built from the FIRST
+        // attacher's pre-state, so publishing it would resurrect the
+        // first delete's rows).
+        val dvByName = liveSeq.map(e => e.name -> e.dv).toMap
+        // attachments to files ADDED by this same commit (restore
+        // re-adding a historical file with its vector) have no
+        // current state to conflict with
+        val dvConflicts = dvAttach.keys.filterNot(adds.contains).filter { f =>
+          dvByName.get(f) match {
+            case None => true // attachment target no longer live
+            case Some(cur) => cur != dvExpect(f) // attachment moved under us
           }
-          if (dvConflicts.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"deletion-vector conflict on $tablePath: file(s) " +
-                s"${dvConflicts.take(3).mkString(", ")}… were rewritten or " +
-                "re-vectored by a concurrent commit — re-read the live set " +
-                "and rerun the delete")
-          // the REMOVE side of the DV fence: a rewrite (optimize /
-          // copy-on-write delete/update/merge) was planned from the
-          // VISIBLE rows of its inputs, so a deletion vector attached
-          // (or replaced) on a removed file AFTER planning means the
-          // rewrite's restated rows would resurrect a concurrent
-          // delete — "still live" alone is not enough evidence. Every
-          // remove-carrying planner passes the per-file attachment it
-          // planned against; any drift fails loudly here (the ordering
-          // the dvExpect fence above covers only the attaching side).
-          val rmDrift = removeDvExpect.collect {
-            case (f, planned) if live(f) && dvByName.get(f).flatten !=
-              planned => f
-          }
-          if (rmDrift.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"rewrite conflict on $tablePath: removed file(s) " +
-                s"${rmDrift.take(3).mkString(", ")}… were re-vectored by a " +
-                "concurrent delete after this rewrite was planned — " +
-                "re-read the live set and rerun the rewrite")
-          v + 1
-        } else latestVersion(fs, log) + 1
+        }
+        if (dvConflicts.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"deletion-vector conflict on $tablePath: file(s) " +
+              s"${dvConflicts.take(3).mkString(", ")}… were rewritten or " +
+              "re-vectored by a concurrent commit — re-read the live set " +
+              "and rerun the delete")
+        // the REMOVE side of the DV fence: a rewrite (optimize /
+        // copy-on-write delete/update/merge) was planned from the
+        // VISIBLE rows of its inputs, so a deletion vector attached
+        // (or replaced) on a removed file AFTER planning means the
+        // rewrite's restated rows would resurrect a concurrent
+        // delete — "still live" alone is not enough evidence. Every
+        // remove-carrying planner passes the per-file attachment it
+        // planned against; any drift fails loudly here (the ordering
+        // the dvExpect fence above covers only the attaching side).
+        val rmDrift = removeDvExpect.collect {
+          case (f, planned) if live(f) && dvByName.get(f).flatten !=
+            planned => f
+        }
+        if (rmDrift.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"rewrite conflict on $tablePath: removed file(s) " +
+              s"${rmDrift.take(3).mkString(", ")}… were re-vectored by a " +
+              "concurrent delete after this rewrite was planned — " +
+              "re-read the live set and rerun the rewrite")
+      }
       // CONSTRAINT fence: a writer whose rows were validated under the
       // constraint set read at plan time must not land them after a
       // DDL commit grew that set — the landed rows would be
       // unvalidated against the new constraint and the "green ledger
       // means the whole table satisfies every active constraint"
-      // invariant would break silently. Ordered AFTER deriving `next`
-      // (like the zombie fence): a constraint commit landing after
-      // this read occupies `next` or later, so this writer either
-      // loses the publish and loops back through the check, or
-      // commits BELOW the constraint version — whose addConstraint
-      // re-validates against it (the add-side fence). Dropped
-      // constraints never invalidate validated rows, so only
-      // additions and changed checks conflict.
+      // invariant would break silently. Judged on the attempt snapshot,
+      // AFTER `next` was derived from it (like the zombie fence): a
+      // constraint commit landing after this listing occupies `next` or
+      // later, so this writer either loses the publish and loops back
+      // through the check, or commits BELOW the constraint version —
+      // whose addConstraint re-validates against it (the add-side
+      // fence). Dropped constraints never invalidate validated rows, so
+      // only additions and changed checks conflict.
       constraintsExpect.foreach { expected =>
-        val grew = constraintsAt(spark, tablePath).filter { case (n, c) =>
+        val grew = snap.constraints.filter { case (n, c) =>
           !expected.get(n).contains(c)
         }
         if (grew.nonEmpty)
@@ -542,21 +646,20 @@ object CommitLog {
       // rename/drop/evolution) would silently REVERT that movement (a
       // version-race loser republishes its stale evolution at the next
       // number; a drop reverted this way re-exposes a burned column).
-      // Same post-derivation ordering as the other fences: a ledger
-      // move after this read collides at `next` and loops back here.
+      // Same ordering as the other fences: a ledger move after this
+      // listing collides at `next` and loops back here.
       schemaExpect.foreach { expected =>
-        val cur = schemaAt(spark, tablePath).map(_.json)
-        if (cur != expected)
+        if (snap.schemaJson != expected)
           throw new java.util.ConcurrentModificationException(
             s"the schema ledger of $tablePath moved after this commit's " +
               "schema was derived (a concurrent rename/drop/evolution) — " +
               "re-read the schema and rerun the operation")
       }
-      // fence AFTER deriving `next` (see the contract above): a
-      // competitor committing before this point is visible to the
-      // predicate's ledger read; one committing after collides at
-      // `next` and sends us back around the loop
-      if (abortOnLostRace()) return None
+      // the caller's fence judges the same snapshot (see the contract
+      // above): a competitor committing before this attempt's listing
+      // is visible to it; one committing after collides at `next` and
+      // sends us back around the loop
+      if (abortOnLostRace(snap)) return None
       // IN-COMMIT timestamp, clamped monotone against the predecessor
       // commit (Delta's inCommitTimestamp rule: max(parent + 1, now)) —
       // storage mod times are one skewed object-store clock away from a
@@ -564,50 +667,26 @@ object CommitLog {
       // ill-defined. The predecessor read is one small content read; a
       // pruned/absent predecessor clamps against 0 (timestamp travel
       // below a pruned checkpoint is already refused).
-      val prevTs = commitTsOf(fs,
-        new org.apache.hadoop.fs.Path(log, f"${next - 1}%020d.commit"))
+      val prevTs = commitTsOf(fs, new Path(log, f"${next - 1}%020d.commit"))
         .getOrElse(0L)
       val ts = math.max(prevTs + 1, System.currentTimeMillis())
-      val dst = new org.apache.hadoop.fs.Path(log, f"$next%020d.commit")
+      val dst = new Path(log, f"$next%020d.commit")
       if (publisher.publish(fs, log, dst, contentFor(ts))) {
         // periodic checkpoint so readers replay a bounded commit
-        // suffix; WHOLLY best-effort — the commit is already durable,
-        // so no failure here (snapshot replay included) may surface to
-        // the caller: a thrown "append failed" after a landed commit
-        // would drive an at-least-once caller to double-commit. A
-        // version-tie loser wrote identical content; a skipped
-        // checkpoint only costs replay length, never correctness.
-        // The checkpoint CARRIES the idempotence-ledger tags
-        // (txn=/consumed=) folded through version `next` — Delta's
-        // txn-action-in-checkpoint pattern — so pruning the commits it
-        // subsumes cannot regress lastTxnBatch / lastConsumed and
-        // silently re-open the exactly-once window. Header content is
-        // deterministic (max per ledger, sorted), so a version-tie
-        // loser still writes identical bytes.
+        // suffix: the Snapshot at `next`, serialized — the live set
+        // with stats and DV attachments plus every ledger, so pruning
+        // the commits it subsumes cannot regress lastTxnBatch /
+        // lastConsumed and silently re-open the exactly-once window.
+        // WHOLLY best-effort — the commit is already durable, so no
+        // failure here (snapshot replay included) may surface to the
+        // caller: a thrown "append failed" after a landed commit would
+        // drive an at-least-once caller to double-commit. A version-tie
+        // loser wrote identical content; a skipped checkpoint only costs
+        // replay length, never correctness.
         if (next % CheckpointInterval == 0) {
           try {
-            // the snapshot carries each file's stats suffix AND its DV
-            // attachment alongside the ledger tags, so none survives
-            // only in prunable commit files
-            val snap = liveFilesFull(spark, tablePath, asOf = next)._2
-            val (txn, consumed, schemaTag) = ledgerTags(fs, log, upTo = next)
-            val constraints = constraintsAt(spark, tablePath, asOf = next)
-            val props = propertiesAt(spark, tablePath, asOf = next)
-            val headers =
-              txn.toSeq.sortBy(_._1).map { case (q, b) => s"#txn=$q:$b" } ++
-                (if (consumed > 0L) Seq(s"#consumed=$consumed") else Seq.empty) ++
-                schemaTag.map("#schema=" + _).toSeq ++
-                constraints.toSeq.sortBy(_._1).map { case (n, c) =>
-                  s"#constraint=+$n:$c" } ++
-                props.toSeq.sortBy(_._1).map { case (k, v) =>
-                  s"#property=+$k:$v" }
-            publisher.publish(fs, log,
-              new org.apache.hadoop.fs.Path(log, f"$next%020d.checkpoint"),
-              (headers ++ snap.map { e =>
-                "+" + e.name + e.stats.map("|" + _).getOrElse("") } ++
-                snap.collect { case e if e.dv.isDefined =>
-                  s"*${e.name}|${e.dv.get}" +
-                    e.dvRows.map("|" + _).getOrElse("") }).mkString("\n"))
+            publisher.publish(fs, log, new Path(log, f"$next%020d.checkpoint"),
+              listLog(spark, tablePath).snapshot(next).checkpoint)
             ()
           } catch { case scala.util.control.NonFatal(_) => () }
         }
@@ -619,153 +698,21 @@ object CommitLog {
       s"could not win a commit version for $tablePath after $attempts attempts")
   }
 
-  /** The idempotence ledgers folded through version `upTo`: per-query
-    * max committed batch (from `txn=<q>:<b>` tags) and the max
-    * consumed-source-version (from `consumed=<v>` tags) — read from
-    * the newest surviving checkpoint's carried headers plus every
-    * surviving commit file's `#op=` header at or below `upTo`.
-    * Commits a checkpoint subsumes may be pruned; their tags live on
-    * in the checkpoint, so the ledgers never move backwards — which is
-    * also why replay is BOUNDED like liveFiles': every checkpoint
-    * carried the tags through its own version (induction from the
-    * first), so only the commits AFTER the newest checkpoint need
-    * their headers read. Driver cost: one listing + one checkpoint
-    * read + one small read per post-checkpoint commit. */
-  private def ledgerTags(fs: org.apache.hadoop.fs.FileSystem,
-      log: org.apache.hadoop.fs.Path,
-      upTo: Long = Long.MaxValue): (Map[String, Long], Long, Option[String]) = {
-    if (!fs.exists(log)) return (Map.empty, 0L, None)
-    val entries = fs.listStatus(log)
-    val ckpt = entries.flatMap { st =>
-      st.getPath.getName match {
-        case CheckpointRe(v) if v.toLong <= upTo => Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1).lastOption
-    val base = ckpt.map(_._1).getOrElse(0L)
-    var txn = Map.empty[String, Long]
-    var consumed = 0L
-    // the SCHEMA ledger: newest `#schema=` header at or below `upTo`
-    // wins (version-ordered, not fold-ordered — an evolution at v7
-    // outranks the bootstrap header a checkpoint at v10 carries only
-    // if the checkpoint predates it, so track the version explicitly)
-    var schemaV = -1L
-    var schema: Option[String] = None
-    def foldSchema(v: Long, json: String): Unit =
-      if (v > schemaV) { schemaV = v; schema = Some(json) }
-    def fold(tag: String): Unit = tag match {
-      case TxnTagRe(q, b) =>
-        txn = txn.updated(q, math.max(b.toLong, txn.getOrElse(q, -1L)))
-      case ConsumedTagRe(v) => consumed = math.max(consumed, v.toLong)
-      case _ => ()
-    }
-    ckpt.foreach { case (v, p) =>
-      readLines(fs, p).foreach { l =>
-        if (l.startsWith("#schema=")) foldSchema(v, l.stripPrefix("#schema="))
-        else if (l.startsWith("#")) fold(l.drop(1))
-      }
-    }
-    entries.foreach { st =>
-      st.getPath.getName match {
-        case CommitRe(v) if v.toLong > base && v.toLong <= upTo =>
-          readLines(fs, st.getPath).foreach { l =>
-            if (l.startsWith("#op=")) fold(l.stripPrefix("#op="))
-            else if (l.startsWith("#schema="))
-              foldSchema(v.toLong, l.stripPrefix("#schema="))
-          }
-        case _ => ()
-      }
-    }
-    (txn, consumed, schema)
-  }
-
-  private val TxnTagRe = "txn=([^:\\s]+):(-?[0-9]+)".r
-  private val ConsumedTagRe = "consumed=([0-9]+)".r
-
-  /** CHECK-constraint ledger at `asOf`: `#constraint=+name:sql` adds,
-    * `#constraint=-name` drops, folded in version order; the newest
-    * checkpoint carries the then-current map (like the schema ledger),
-    * so pruneLog cannot lose an active constraint. Name → SQL check
-    * expression. */
+  /** CHECK-constraint ledger at `asOf`, name → SQL check expression
+    * (see [[Snapshot]]). */
   def constraintsAt(spark: SparkSession, tablePath: String,
-      asOf: Long = Long.MaxValue): Map[String, String] = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
-    if (!fs.exists(log)) return Map.empty
-    val entries = fs.listStatus(log)
-    val ckpt = entries.flatMap { st =>
-      st.getPath.getName match {
-        case CheckpointRe(v) if v.toLong <= asOf => Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1).lastOption
-    val base = ckpt.map(_._1).getOrElse(0L)
-    var cs = Map.empty[String, String]
-    def fold(line: String): Unit = {
-      val b = line.stripPrefix("#constraint=")
-      if (b.startsWith("+")) {
-        val i = b.indexOf(':')
-        if (i > 1) { cs += b.substring(1, i) -> b.substring(i + 1); () }
-      } else if (b.startsWith("-")) { cs -= b.substring(1); () }
-    }
-    ckpt.foreach { case (_, p) =>
-      readLines(fs, p).foreach(l => if (l.startsWith("#constraint=")) fold(l))
-    }
-    entries.flatMap { st =>
-      st.getPath.getName match {
-        case CommitRe(v) if v.toLong > base && v.toLong <= asOf =>
-          Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1).foreach { case (_, p) =>
-      readLines(fs, p).foreach(l => if (l.startsWith("#constraint=")) fold(l))
-    }
-    cs
-  }
+      asOf: Long = Long.MaxValue): Map[String, String] =
+    snapshot(spark, tablePath, asOf).constraints
 
-  /** TABLE-PROPERTIES ledger at `asOf` (Delta's TBLPROPERTIES):
-    * `#property=+key:value` sets, `#property=-key` unsets, folded in
-    * version order, checkpoint-carried like constraints. The
-    * `bloom.columns` / `bloom.ndv[.col]` properties are consumed by
-    * EVERY data-file write ([[tableWriteOptions]]), which is what
-    * keeps a declared point-lookup index alive through maintenance a
-    * caller didn't hand-feed writer options — SQL OPTIMIZE, CLI
-    * verbs, and every copy-on-write rewrite included. */
+  /** TABLE-PROPERTIES ledger at `asOf` (Delta's TBLPROPERTIES; see
+    * [[Snapshot]]). The `bloom.columns` / `bloom.ndv[.col]` properties
+    * are consumed by EVERY data-file write ([[tableWriteOptions]]),
+    * which is what keeps a declared point-lookup index alive through
+    * maintenance a caller didn't hand-feed writer options — SQL
+    * OPTIMIZE, CLI verbs, and every copy-on-write rewrite included. */
   def propertiesAt(spark: SparkSession, tablePath: String,
-      asOf: Long = Long.MaxValue): Map[String, String] = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
-    if (!fs.exists(log)) return Map.empty
-    val entries = fs.listStatus(log)
-    val ckpt = entries.flatMap { st =>
-      st.getPath.getName match {
-        case CheckpointRe(v) if v.toLong <= asOf => Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1).lastOption
-    val base = ckpt.map(_._1).getOrElse(0L)
-    var ps = Map.empty[String, String]
-    def fold(line: String): Unit = {
-      val b = line.stripPrefix("#property=")
-      if (b.startsWith("+")) {
-        val i = b.indexOf(':')
-        if (i > 1) { ps += b.substring(1, i) -> b.substring(i + 1); () }
-      } else if (b.startsWith("-")) { ps -= b.substring(1); () }
-    }
-    ckpt.foreach { case (_, p) =>
-      readLines(fs, p).foreach(l => if (l.startsWith("#property=")) fold(l))
-    }
-    entries.flatMap { st =>
-      st.getPath.getName match {
-        case CommitRe(v) if v.toLong > base && v.toLong <= asOf =>
-          Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1).foreach { case (_, p) =>
-      readLines(fs, p).foreach(l => if (l.startsWith("#property=")) fold(l))
-    }
-    ps
-  }
+      asOf: Long = Long.MaxValue): Map[String, String] =
+    snapshot(spark, tablePath, asOf).properties
 
   /** Effective merge-on-read default for SQL/catalog DML over this
     * table — the `delta.enableDeletionVectors` shape as a TABLE
@@ -821,7 +768,7 @@ object CommitLog {
     props.foreach { case (k, v) => validateProperty(spark, k, v) }
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("properties"),
-      abortOnLostRace = () => false,
+      abortOnLostRace = _ => false,
       constraintTags = Seq.empty,
       propertyTags = props.toSeq.sortBy(_._1).map { case (k, v) => s"+$k:$v" })
       .getOrElse(throw new IllegalStateException("unreachable: unfenced property set"))
@@ -843,11 +790,11 @@ object CommitLog {
       publisher: AtomicPublisher = RenameOrLinkPublisher): Boolean = {
     require(props.nonEmpty, "no properties to set")
     props.foreach { case (k, v) => validateProperty(spark, k, v) }
-    def taken() = propertiesAt(spark, tablePath).keySet.exists(props.contains)
-    if (taken()) return false
+    def taken(s: Snapshot) = s.properties.keySet.exists(props.contains)
+    if (taken(snapshot(spark, tablePath))) return false
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("properties"),
-      abortOnLostRace = () => taken(),
+      abortOnLostRace = taken,
       propertyTags = props.toSeq.sortBy(_._1).map { case (k, v) => s"+$k:$v" })
       .isDefined
   }
@@ -864,24 +811,17 @@ object CommitLog {
         missing.mkString(", "))
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("properties"),
-      abortOnLostRace = () => false,
+      abortOnLostRace = _ => false,
       propertyTags = keys.sorted.map("-" + _))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced property unset"))
   }
 
   /** Effective parquet writer options for a data-file write into this
-    * table: the property-declared bloom-filter options (so a declared
-    * point-lookup index survives EVERY rewrite — the probe path reads
-    * these filters) overlaid by the caller's explicit options. */
-  private[store] def tableWriteOptions(spark: SparkSession, tablePath: String,
-      explicit: Map[String, String] = Map.empty): Map[String, String] =
-    bloomOptions(propertiesAt(spark, tablePath),
-      mappingAt(spark, tablePath)) ++ explicit
-
-  /** [[tableWriteOptions]] over ALREADY-READ properties/mapping — the
-    * append paths fold the ledgers once and share the result with
-    * [[maybeAutoCompact]] instead of re-reading per call. */
-  private[store] def tableWriteOptionsWith(props: Map[String, String],
+    * table, from its snapshot's properties and mapping: the
+    * property-declared bloom-filter options (so a declared point-lookup
+    * index survives EVERY rewrite — the probe path reads these
+    * filters) overlaid by the caller's explicit options. */
+  private[store] def tableWriteOptions(props: Map[String, String],
       mapping: Map[String, String],
       explicit: Map[String, String] = Map.empty): Map[String, String] =
     bloomOptions(props, mapping) ++ explicit
@@ -949,14 +889,16 @@ object CommitLog {
     // write-heavy table fails loudly rather than spinning.
     var attempts = 0
     while (attempts < 20) {
-      val (scanVersion, entries) = liveFilesFull(spark, tablePath)
-      val schema = schemaAt(spark, tablePath).orElse {
+      val snap = snapshot(spark, tablePath)
+      val (scanVersion, entries) = (snap.version, snap.live)
+      val schema = snap.schema.orElse {
         if (entries.isEmpty) None
         else Some(spark.read.parquet(
           resolveDataPath(tablePath, entries.last.name)).schema)
       }
       schema.foreach { sch =>
-        val bad = visibleRows(spark, tablePath, sch, entries)
+        val bad = visibleRows(spark, tablePath, sch, entries,
+          mapping = Some(snap.mapping))
           .filter(not(coalesce(expr(check).cast("boolean"), lit(true))))
           .limit(1).collect()
         if (bad.nonEmpty)
@@ -966,7 +908,7 @@ object CommitLog {
       }
       commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
         publisher = publisher, opTag = Some("constraint"),
-        abortOnLostRace = () => latestVersion(spark, tablePath) != scanVersion,
+        abortOnLostRace = _.version != scanVersion,
         constraintTags = Seq(s"+$name:$check")) match {
         case Some(v) => return v
         case None => attempts += 1 // something landed since the scan: revalidate
@@ -986,22 +928,18 @@ object CommitLog {
       s"no CHECK constraint $name on $tablePath")
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("constraint"),
-      abortOnLostRace = () => false, constraintTags = Seq(s"-$name"))
+      abortOnLostRace = _ => false, constraintTags = Seq(s"-$name"))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced constraint drop"))
   }
 
-  /** Wrap a to-be-written frame with the table's active CHECK
-    * constraints: each check rides the write plan as a raise_error
-    * projection (evaluated per row inline — no second pass over the
-    * data), so the first violating row fails the whole write loudly,
-    * before its commit publishes. */
-  private[store] def enforced(df: DataFrame, tablePath: String): DataFrame =
-    enforcedWith(df, constraintsAt(df.sparkSession, tablePath))
-
-  /** [[enforced]] against a CAPTURED constraint set — write paths read
-    * the set once, enforce with it, and pass the same map to their
-    * commit as `constraintsExpect`, so the enforcement a plan carries
-    * and the fence its commit validates can never disagree. */
+  /** Wrap a to-be-written frame with a CAPTURED set of the table's
+    * CHECK constraints: each check rides the write plan as a
+    * raise_error projection (evaluated per row inline — no second pass
+    * over the data), so the first violating row fails the whole write
+    * loudly, before its commit publishes. Write paths read the set
+    * once, enforce with it, and pass the same map to their commit as
+    * `constraintsExpect`, so the enforcement a plan carries and the
+    * fence its commit validates can never disagree. */
   private[store] def enforcedWith(df: DataFrame,
       cs: Map[String, String]): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -1037,16 +975,12 @@ object CommitLog {
     * cost: one listing + one small read per surviving commit. */
   def versionAtTimestamp(spark: SparkSession, tablePath: String,
       tsMs: Long): Long = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
-    if (!fs.exists(log))
+    val listing = listLog(spark, tablePath)
+    if (!listing.exists)
       throw new IllegalStateException(s"no commit log at $tablePath")
-    val stamped = fs.listStatus(log).flatMap { st =>
-      st.getPath.getName match {
-        case CommitRe(v) => commitTsOf(fs, st.getPath).map(v.toLong -> _)
-        case _ => None
-      }
-    }.sortBy(_._1)
+    val stamped = listing.commits.toSeq.flatMap { case (v, p) =>
+      commitTsOf(listing.fs, p).map(v -> _)
+    }
     if (stamped.isEmpty)
       throw new IllegalStateException(
         s"$tablePath has no timestamped commits — written before in-commit " +
@@ -1096,9 +1030,9 @@ object CommitLog {
     * straggler rewrites (the caller adds them). */
   private def removeMatching(spark: SparkSession, tablePath: String,
       schema: StructType, predicate: org.apache.spark.sql.Column,
-      entries: Seq[LiveEntry],
-      mapping: Map[String, String]): (Seq[LiveEntry], Seq[String]) = {
+      snap: Snapshot): (Seq[LiveEntry], Seq[String]) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    val (entries, mapping) = (snap.live, snap.mapping)
     if (entries.isEmpty) return (Seq.empty, Seq.empty)
     requireBasenameSoundness(entries, s"predicate rewrite on $tablePath")
     val dir = new org.apache.hadoop.fs.Path(tablePath)
@@ -1106,7 +1040,7 @@ object CommitLog {
     val byName = entriesByName(entries)
     val matchedCounts: Map[String, Long] =
       visibleRows(spark, tablePath, schema, entries,
-        meta = Seq("_rm_file" -> "file_name"))
+        meta = Seq("_rm_file" -> "file_name"), mapping = Some(mapping))
         .filter(predicate)
         .groupBy(col("_rm_file")).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1119,9 +1053,10 @@ object CommitLog {
         val writerId = freshWriterId("w")
         val staging =
           new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-        toPhysical(visibleRows(spark, tablePath, schema, partial)
+        toPhysical(visibleRows(spark, tablePath, schema, partial,
+          mapping = Some(mapping))
           .filter(not(coalesce(predicate, lit(false)))), mapping)
-          .write.options(tableWriteOptions(spark, tablePath))
+          .write.options(tableWriteOptions(snap.properties, mapping))
           .parquet(staging.toString)
         landStaged(fs, dir, staging, writerId)
       }
@@ -1507,17 +1442,9 @@ object CommitLog {
   private[graft] def addedBytesByVersion(spark: SparkSession,
       tablePath: String, sinceVersion: Long,
       untilVersion: Long): Seq[(Long, Option[Long])] = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
-    if (!fs.exists(log)) return Seq.empty
-    fs.listStatus(log).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case CommitRe(v)
-          if v.toLong > sinceVersion && v.toLong <= untilVersion =>
-          Some(v.toLong -> feedCostOf(fs, st.getPath))
-        case _ => None
-      }
-    }.sortBy(_._1)
+    val listing = listLog(spark, tablePath)
+    listing.commits.rangeFrom(sinceVersion + 1).rangeTo(untilVersion).toSeq
+      .map { case (v, p) => v -> feedCostOf(listing.fs, p) }
   }
 
   /** What one commit file costs the change feed, per commit shape —
@@ -1610,17 +1537,17 @@ object CommitLog {
     // reader consulting schemaAt never sees files the recorded schema
     // cannot describe. Existing files are untouched: add-column reads
     // null-fill, widened reads upcast per file (the read contract).
-    val props = propertiesAt(spark, tablePath) // one fold, four consumers
+    val snap = snapshot(spark, tablePath) // one replay, every consumer
+    val props = snap.properties
     // generated columns land BEFORE schema evolution sees the frame:
     // a table-creating (or evolving) append that omits a generated
     // column must still record it in the schema ledger
     val dfG = withGenerated(df, props)
-    val cur = schemaAt(spark, tablePath)
+    val cur = snap.schema
     val next: Option[StructType] =
       if (!mergeSchema) None
       else {
-        val n = cur.fold(dfG.schema)(
-          evolveSchema(_, dfG.schema, burnedAt(spark, tablePath)))
+        val n = cur.fold(dfG.schema)(evolveSchema(_, dfG.schema, snap.burned))
         if (cur.exists(sameShape(_, n))) None else Some(n)
       }
     val evolved = next.map(_.json)
@@ -1633,9 +1560,9 @@ object CommitLog {
     // options (Bloom.writeWithBloomFilters' parquet.bloom.filter.*) are
     // the intended use, making logged files probe-able by
     // pruneByFooterStats' point-lookup path
-    val cs = constraintsAt(spark, tablePath)
+    val cs = snap.constraints
     toPhysical(enforcedWith(clusteredForWrite(dfG, props), cs), mapping).write
-      .options(tableWriteOptionsWith(props, mapping, writeOptions))
+      .options(tableWriteOptions(props, mapping, writeOptions))
       .parquet(staging.toString)
     val names = landStaged(fs, dir, staging, writerId)
     val v = commit(spark, tablePath, adds = names, publisher = publisher,
@@ -1666,25 +1593,26 @@ object CommitLog {
     val spark = df.sparkSession
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
-    val (version, live) = liveFiles(spark, tablePath)
-    val props = propertiesAt(spark, tablePath)
+    val snap = snapshot(spark, tablePath)
+    val (version, live) = (snap.version, snap.live.map(_.name))
+    val props = snap.properties
     val dfG = withGenerated(df, props) // before the restamp sees the shape
-    val cur = schemaAt(spark, tablePath)
+    val cur = snap.schema
     // a restamp inherits surviving columns' PHYSICAL identities and
     // burns-aware fresh ones for new names — an overwrite must not
     // silently discard the mapping a renamed table carries
     val restamped: Option[StructType] = cur match {
       case Some(c) if !sameShape(c, dfG.schema) =>
-        Some(inheritMapping(c, dfG.schema, burnedAt(spark, tablePath)))
+        Some(inheritMapping(c, dfG.schema, snap.burned))
       case _ => None
     }
     val restamp = restamped.map(_.json)
     val mapping = restamped.orElse(cur).map(columnMapping).getOrElse(Map.empty)
     val writerId = freshWriterId("w")
     val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    val cs = constraintsAt(spark, tablePath)
+    val cs = snap.constraints
     toPhysical(enforcedWith(clusteredForWrite(dfG, props), cs), mapping).write
-      .options(tableWriteOptionsWith(props, mapping, writeOptions))
+      .options(tableWriteOptions(props, mapping, writeOptions))
       .parquet(staging.toString)
     val names = landStaged(fs, dir, staging, writerId)
     if (names.isEmpty && live.isEmpty) return version // nothing to publish
@@ -1738,7 +1666,7 @@ object CommitLog {
       publisher: AtomicPublisher = RenameOrLinkPublisher,
       writeOptions: Map[String, String] = Map.empty): Long =
     replaceWhereCore(df, tablePath, predicate, publisher, writeOptions,
-      opTag = "replaceWhere", abortOnLostRace = () => false)
+      opTag = "replaceWhere", abortOnLostRace = _ => false)
       // nets-to-nothing: report the current version without a second
       // log replay (one directory listing, not a fold)
       .getOrElse(latestVersion(df.sparkSession, tablePath))
@@ -1765,7 +1693,7 @@ object CommitLog {
     if (batchId <= lastTxnBatch(spark, tablePath, queryId)) return None
     replaceWhereCore(df, tablePath, predicate, publisher,
       writeOptions = Map.empty, opTag = s"txn=$queryId:$batchId",
-      abortOnLostRace = () => batchId <= lastTxnBatch(spark, tablePath, queryId))
+      abortOnLostRace = batchId <= _.lastTxnBatch(queryId))
   }
 
   /** [[replaceWhere]]'s engine, fence-parameterized: None when the
@@ -1802,19 +1730,20 @@ object CommitLog {
       publisher: AtomicPublisher,
       writeOptions: Map[String, String],
       opTag: String,
-      abortOnLostRace: () => Boolean): Option[Long] = {
+      abortOnLostRace: Snapshot => Boolean): Option[Long] = {
     import org.apache.spark.sql.functions.{coalesce, col, concat, lit, not,
       raise_error, struct, to_json, when}
     val spark = df.sparkSession
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
-    val (_, entries) = liveFilesFull(spark, tablePath)
-    val props = propertiesAt(spark, tablePath)
+    val snap = snapshot(spark, tablePath)
+    val entries = snap.live
+    val props = snap.properties
     val dfG = withGenerated(df, props)
     // after withGenerated: the predicate may name a generated column
     // the caller's frame does not carry
     requireDeterministicPredicate(spark, dfG.schema, predicate, "replaceWhere")
-    val cur = schemaAt(spark, tablePath)
+    val cur = snap.schema
     cur.foreach { c =>
       require(sameShape(c, dfG.schema),
         s"replaceWhere input shape (${dfG.schema.simpleString}) does not " +
@@ -1822,8 +1751,8 @@ object CommitLog {
           "replace swaps rows, not the table's shape (overwrite() restamps)")
     }
     val schema = cur.getOrElse(dfG.schema)
-    val mapping = mappingAt(spark, tablePath)
-    val cs = constraintsAt(spark, tablePath)
+    val mapping = snap.mapping
+    val cs = snap.constraints
     // incoming rows must live inside the replaced region — in-plan,
     // loud, before anything publishes (NULL predicate = outside)
     val inside = coalesce(predicate, lit(false))
@@ -1837,23 +1766,23 @@ object CommitLog {
     val writerId = freshWriterId("w")
     val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
     toPhysical(enforcedWith(clusteredForWrite(guarded, props), cs), mapping)
-      .write.options(tableWriteOptionsWith(props, mapping, writeOptions))
+      .write.options(tableWriteOptions(props, mapping, writeOptions))
       .parquet(staging.toString)
     val newNames = landStaged(fs, dir, staging, writerId)
     // old side: deleteWhere's shared probe + file-drop classification
-    // + straggler rewrite (reusing this write's mapping — no second
-    // ledger replay)
+    // + straggler rewrite, over this write's snapshot
     val (affectedEntries, rewriteNames) =
-      removeMatching(spark, tablePath, schema, predicate, entries, mapping)
+      removeMatching(spark, tablePath, schema, predicate, snap)
     if (newNames.isEmpty && affectedEntries.isEmpty) return None // nets to nothing
     val preImages =
       if (affectedEntries.isEmpty) None
-      else Some(visibleRows(spark, tablePath, schema, affectedEntries)
+      else Some(visibleRows(spark, tablePath, schema, affectedEntries,
+        mapping = Some(mapping))
         .filter(predicate).withColumn(ChangeTypeCol, lit("delete")))
     val postImages =
       if (newNames.isEmpty) None
       else Some(visibleRows(spark, tablePath, schema,
-        newNames.map(n => LiveEntry(n, None, None)))
+        newNames.map(n => LiveEntry(n, None, None)), mapping = Some(mapping))
         .withColumn(ChangeTypeCol, lit("insert")))
     val cdc = (preImages.toSeq ++ postImages.toSeq)
       .reduceOption(_.unionByName(_))
@@ -1885,7 +1814,7 @@ object CommitLog {
     * the way appendOnce rides the txn= ledger. */
   private[store] def appendOrAbort(df: DataFrame, tablePath: String,
       publisher: AtomicPublisher, opTag: Option[String],
-      abortOnLostRace: () => Boolean,
+      abortOnLostRace: Snapshot => Boolean,
       schemaJson: Option[String] = None,
       schemaExpect: Option[Option[String]] = None): Option[Long] = {
     val spark = df.sparkSession
@@ -1893,15 +1822,16 @@ object CommitLog {
     val fs = fsOf(spark, dir)
     val writerId = freshWriterId("w")
     val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    val cs = constraintsAt(spark, tablePath)
+    val snap = snapshot(spark, tablePath)
+    val cs = snap.constraints
     val mapping = schemaJson
       .map(j => columnMapping(org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[StructType]))
-      .getOrElse(mappingAt(spark, tablePath))
-    val props = propertiesAt(spark, tablePath)
+      .getOrElse(snap.mapping)
+    val props = snap.properties
     toPhysical(enforcedWith(
       clusteredForWrite(withGenerated(df, props), props), cs), mapping).write
-      .options(tableWriteOptionsWith(props, mapping)).parquet(staging.toString)
+      .options(tableWriteOptions(props, mapping)).parquet(staging.toString)
     val names = landStaged(fs, dir, staging, writerId)
     commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
       publisher = publisher, opTag = opTag, abortOnLostRace = abortOnLostRace,
@@ -1924,8 +1854,8 @@ object CommitLog {
     * LoggedStoreSpec pins both evolutions under both publishers. */
   def read(spark: SparkSession, tablePath: String, schema: StructType,
       asOf: Long = Long.MaxValue): DataFrame = {
-    val (_, entries) = liveFilesFull(spark, tablePath, asOf)
-    visibleRows(spark, tablePath, schema, entries, mappingAsOf = asOf)
+    val snap = snapshot(spark, tablePath, asOf)
+    visibleRows(spark, tablePath, schema, snap.live, mapping = Some(snap.mapping))
   }
 
   /** Column names of a deletion-vector parquet: the data file each
@@ -1984,12 +1914,13 @@ object CommitLog {
     * [[DvBroadcastMaxBytes]] drop the broadcast hint (see there).
     * `meta` appends `_metadata`-derived columns (alias → field name)
     * for callers that need file identity or position on the VISIBLE
-    * rows (the merge/delete probes). */
+    * rows (the merge/delete probes). `mapping` is the column mapping of
+    * the snapshot `entries` came from; None takes the current one. */
   private[graft] def visibleRows(spark: SparkSession, tablePath: String,
       schema: StructType, entries: Seq[LiveEntry],
       meta: Seq[(String, String)] = Seq.empty,
       dvBroadcastMaxBytes: Long = DvBroadcastMaxBytes,
-      mappingAsOf: Long = Long.MaxValue): DataFrame = {
+      mapping: Option[Map[String, String]] = None): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val outSchema = StructType(schema.fields ++ meta.map { case (a, f) =>
       org.apache.spark.sql.types.StructField(a,
@@ -2002,12 +1933,12 @@ object CommitLog {
     // in the same projection (a plain Project — the vectorized scan
     // and codegen are untouched); unmapped tables keep the exact
     // pre-mapping plan
-    val mapping = mappingAt(spark, tablePath, mappingAsOf)
-    def phys(n: String): String = mapping.getOrElse(n, n)
+    val mapped = mapping.getOrElse(mappingAt(spark, tablePath))
+    def phys(n: String): String = mapped.getOrElse(n, n)
     val readSchema =
-      if (mapping.isEmpty) schema
+      if (mapped.isEmpty) schema
       else StructType(schema.fields.map(f => f.copy(name = phys(f.name))))
-    val outCols = (if (mapping.isEmpty) schema.fieldNames.map(col).toSeq
+    val outCols = (if (mapped.isEmpty) schema.fieldNames.map(col).toSeq
       else schema.fieldNames.map(n => col(phys(n)).as(n)).toSeq) ++
       meta.map { case (a, f) => col(s"_metadata.$f").as(a) }
     def scan(files: Seq[String]) = spark.read.schema(readSchema)
@@ -2093,7 +2024,8 @@ object CommitLog {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
-    val (version, entries) = liveFilesFull(spark, tablePath)
+    val snap = snapshot(spark, tablePath)
+    val (version, entries) = (snap.version, snap.live)
     val files = entries.map(_.name)
     if (files.isEmpty) return version
     val paths = files.map(f => resolveDataPath(tablePath, f))
@@ -2110,18 +2042,16 @@ object CommitLog {
     // shape carries PHYSICAL names, which must not re-enter the
     // logical read path (a clash with a re-added logical name would
     // read the wrong column)
-    val schema = schemaAt(spark, tablePath)
-      .getOrElse(spark.read.parquet(paths: _*).schema)
+    val schema = snap.schema.getOrElse(spark.read.parquet(paths: _*).schema)
     // same layout semantics as the unlogged compactor: plain, range-
     // clustered, or "a,b" z-order (ZOrder.layout) — compaction doubling
     // as the logged table's clustered index. writeOptions carries the
     // parquet bloom-filter knobs through the rewrite: a bloom-indexed
     // table must not silently LOSE its point-lookup index to
     // maintenance (the pruneByFooterStats probe path reads them)
-    toPhysical(
-      ZOrder.layout(visibleRows(spark, tablePath, schema, entries), nOut, clusterBy),
-      mappingAt(spark, tablePath))
-      .write.options(tableWriteOptions(spark, tablePath, writeOptions))
+    toPhysical(ZOrder.layout(visibleRows(spark, tablePath, schema, entries,
+        mapping = Some(snap.mapping)), nOut, clusterBy), snap.mapping)
+      .write.options(tableWriteOptions(snap.properties, snap.mapping, writeOptions))
       .parquet(staging.toString)
     val names = landStaged(fs, dir, staging, writerId)
     // commit() validates `files` against the live set (and each removed
@@ -2176,10 +2106,12 @@ object CommitLog {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
-    val (version, entries) = liveFilesFull(spark, tablePath)
+    val snap = snapshot(spark, tablePath)
+    val (version, entries) = (snap.version, snap.live)
     if (entries.isEmpty) return version
+    val mapping = snap.mapping
     // ledger-first for the same column-mapping reason as compact()
-    val schema = schemaAt(spark, tablePath).getOrElse(spark.read
+    val schema = snap.schema.getOrElse(spark.read
       .parquet(entries.map(e => resolveDataPath(tablePath, e.name)): _*).schema)
     // predicate → pushed-filter list, resolved the way a real scan
     // would resolve it (analyzed Filter node over the table's plan)
@@ -2190,13 +2122,13 @@ object CommitLog {
         // must run first or a literal wrapped in an implicit cast
         // (`id < 100` on a bigint column) translates to nothing and
         // the scope silently widens to the whole table
-        val optimized = visibleRows(spark, tablePath, schema, entries)
+        val optimized = visibleRows(spark, tablePath, schema, entries,
+            mapping = Some(mapping))
           .filter(cond).queryExecution.optimizedPlan
         optimized.collect {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
         }.flatMap(org.apache.spark.sql.graft.StreamingShim.translateFilter(_).toSeq)
     }
-    val mapping = mappingAt(spark, tablePath)
     def inScope(e: LiveEntry): Boolean =
       e.stats.map(s => statsToLogical(parseStatsJson(s), mapping)) match {
         case Some(m) if filters.nonEmpty =>
@@ -2223,10 +2155,9 @@ object CommitLog {
       candidates.size.toLong), 10000L)).toInt
     val writerId = freshWriterId("c")
     val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    toPhysical(
-      ZOrder.layout(visibleRows(spark, tablePath, schema, candidates), nOut, clusterBy),
-      mapping)
-      .write.options(tableWriteOptions(spark, tablePath, writeOptions))
+    toPhysical(ZOrder.layout(visibleRows(spark, tablePath, schema, candidates,
+        mapping = Some(mapping)), nOut, clusterBy), mapping)
+      .write.options(tableWriteOptions(snap.properties, mapping, writeOptions))
       .parquet(staging.toString)
     val names = landStaged(fs, dir, staging, writerId)
     commit(spark, tablePath, adds = names, removes = candidates.map(_.name),
@@ -2293,11 +2224,6 @@ object CommitLog {
     }
   }
 
-  /** [[maybeAutoCompact]] folding the properties ledger itself — for
-    * call sites that have not already read it. */
-  private def maybeAutoCompact(spark: SparkSession, tablePath: String): Unit =
-    maybeAutoCompact(spark, tablePath, propertiesAt(spark, tablePath))
-
   /** Generated columns behind `graft.generated.<col> = '<sql expr>'`
     * table properties (the Delta generated-columns shape): a write
     * whose frame LACKS the column gets it computed from the
@@ -2355,11 +2281,6 @@ object CommitLog {
       }
     }
   }
-
-  /** [[withGenerated]] folding the properties ledger itself — for the
-    * row-writing paths that have not already read it. */
-  private[store] def generated(df: DataFrame, tablePath: String): DataFrame =
-    withGenerated(df, propertiesAt(df.sparkSession, tablePath))
 
   /** Writer-side clustering behind the `graft.clusterBy` table
     * property (the Delta liquid-clustering / `CLUSTER BY` shape,
@@ -2427,47 +2348,46 @@ object CommitLog {
     * still existing, or pruning would silently re-open the
     * exactly-once window. */
   def lastTxnBatch(spark: SparkSession, tablePath: String,
-      queryId: String, asOf: Long = Long.MaxValue): Long = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    ledgerTags(fsOf(spark, log), log, upTo = asOf)._1.getOrElse(queryId, -1L)
-  }
+      queryId: String, asOf: Long = Long.MaxValue): Long =
+    snapshot(spark, tablePath, asOf).lastTxnBatch(queryId)
 
   /** Highest source version a view table has consumed, parsed from
     * `consumed=<v>` commit tags and checkpoint-carried headers — the
     * IncrementalView checkpoint, prune-surviving for the same reason
     * as [[lastTxnBatch]]. 0 when never consumed. */
   def lastConsumed(spark: SparkSession, tablePath: String,
-      asOf: Long = Long.MaxValue): Long = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    ledgerTags(fsOf(spark, log), log, upTo = asOf)._2
-  }
+      asOf: Long = Long.MaxValue): Long =
+    snapshot(spark, tablePath, asOf).consumed
 
   /** The LARGEST sink version (≤ `upTo`) whose consumed ledger is at
     * or below `srcVersion` — the inverse lookup a torn-window-free
     * probe needs to pin two independently-drained sibling tables to
     * the same SOURCE version (Bm25Index's postings/doclens pair).
-    * Binary search over the monotone consumed fold: O(log V) ledger
-    * reads, each one listing + one checkpoint + the post-checkpoint
-    * commit headers. The caller must verify the version found carries
-    * EXACTLY the source version it wants: a checkpoint that subsumed
+    * Binary search over the monotone consumed fold: one listing, then
+    * O(log V) [[Snapshot]] folds (one checkpoint read + the
+    * post-checkpoint commit files each). The caller must verify the
+    * version found carries EXACTLY the source version it wants: a
+    * checkpoint that subsumed
     * the granular tags, or batch boundaries that never landed on it,
     * both surface as consumed < srcVersion — a loud mismatch, never a
     * silently-still-torn snapshot. */
   def versionAtConsumed(spark: SparkSession, tablePath: String,
-      srcVersion: Long, upTo: Long): Long =
-    versionAtLedger(v => lastConsumed(spark, tablePath, asOf = v),
-      srcVersion, upTo)
+      srcVersion: Long, upTo: Long): Long = {
+    val listing = listLog(spark, tablePath)
+    versionAtLedger(listing.snapshot(_).consumed, srcVersion, upTo)
+  }
 
   /** [[versionAtConsumed]] on a `txn=<queryId>` ledger instead — the
     * streaming-consumer twin: the sink version at which the query's
     * committed batch id was ≤ `batchId`. */
   def versionAtTxnBatch(spark: SparkSession, tablePath: String,
-      queryId: String, batchId: Long, upTo: Long): Long =
-    versionAtLedger(v => lastTxnBatch(spark, tablePath, queryId, asOf = v),
-      batchId, upTo)
+      queryId: String, batchId: Long, upTo: Long): Long = {
+    val listing = listLog(spark, tablePath)
+    versionAtLedger(listing.snapshot(_).lastTxnBatch(queryId), batchId, upTo)
+  }
 
   /** Largest version ≤ `upTo` whose monotone ledger fold is ≤
-    * `target` — binary search, O(log V) ledger reads. The fold at
+    * `target` — binary search, O(log V) Snapshot folds. The fold at
     * version 0 is its never-written sentinel (0 for consumed, −1 for
     * txn), both ≤ any valid target, so the invariant holds at lo=0. */
   private def versionAtLedger(foldAt: Long => Long, target: Long,
@@ -2491,11 +2411,8 @@ object CommitLog {
     * and historical readers consult ("what shape was this table at
     * version 7?"). */
   def schemaAt(spark: SparkSession, tablePath: String,
-      asOf: Long = Long.MaxValue): Option[StructType] = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    ledgerTags(fsOf(spark, log), log, upTo = asOf)._3
-      .map(org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[StructType])
-  }
+      asOf: Long = Long.MaxValue): Option[StructType] =
+    snapshot(spark, tablePath, asOf).schema
 
   // ── COLUMN MAPPING (rename/drop evolution) ─────────────────────────
   //
@@ -2542,11 +2459,10 @@ object CommitLog {
     * tables without a ledger are unmapped by construction. */
   private[graft] def mappingAt(spark: SparkSession, tablePath: String,
       asOf: Long = Long.MaxValue): Map[String, String] =
-    schemaAt(spark, tablePath, asOf).map(columnMapping).getOrElse(Map.empty)
+    snapshot(spark, tablePath, asOf).mapping
 
   private[graft] def burnedAt(spark: SparkSession, tablePath: String): Set[String] =
-    propertiesAt(spark, tablePath).get(BurnedProp)
-      .map(_.split(',').filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+    snapshot(spark, tablePath).burned
 
   /** Fresh physical name for a column whose logical name is taken or
     * burned — unique by construction, never colliding with a user
@@ -2662,12 +2578,17 @@ object CommitLog {
     * from the newest file live at `asOf` (one footer read). */
   def tableSchema(spark: SparkSession, tablePath: String,
       asOf: Long = Long.MaxValue): StructType =
-    schemaAt(spark, tablePath, asOf).getOrElse {
-      val (_, files) = liveFiles(spark, tablePath, asOf)
+    tableSchema(spark, tablePath, snapshot(spark, tablePath, asOf))
+
+  /** [[tableSchema]] of an already-taken snapshot. */
+  private[graft] def tableSchema(spark: SparkSession, tablePath: String,
+      snap: Snapshot): StructType =
+    snap.schema.getOrElse {
+      val files = snap.live
       require(files.nonEmpty,
         s"cannot infer the schema of empty logged table $tablePath — " +
           "no ledger and no live files; supply a schema")
-      spark.read.parquet(resolveDataPath(tablePath, files.last)).schema
+      spark.read.parquet(resolveDataPath(tablePath, files.last.name)).schema
     }
 
   /** RENAME COLUMN — metadata-only (one schema commit, zero file
@@ -2696,8 +2617,9 @@ object CommitLog {
 
   def renameColumn(spark: SparkSession, tablePath: String, from: String,
       to: String, publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
-    val ledger = schemaAt(spark, tablePath)
-    val cur = ledger.getOrElse(tableSchema(spark, tablePath))
+    val snap = snapshot(spark, tablePath)
+    val ledger = snap.schema
+    val cur = ledger.getOrElse(tableSchema(spark, tablePath, snap))
     validateRenameColumn(spark, tablePath, cur, from, to)
     val next = StructType(cur.fields.map { f =>
       if (f.name == from)
@@ -2706,7 +2628,7 @@ object CommitLog {
     })
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("rename_column"),
-      abortOnLostRace = () => false, schemaJson = Some(next.json),
+      abortOnLostRace = _ => false, schemaJson = Some(next.json),
       schemaExpect = Some(ledger.map(_.json)))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced rename"))
   }
@@ -2729,17 +2651,18 @@ object CommitLog {
 
   def dropColumn(spark: SparkSession, tablePath: String, name: String,
       publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
-    val ledger = schemaAt(spark, tablePath)
-    val cur = ledger.getOrElse(tableSchema(spark, tablePath))
+    val snap = snapshot(spark, tablePath)
+    val ledger = snap.schema
+    val cur = ledger.getOrElse(tableSchema(spark, tablePath, snap))
     validateDropColumn(spark, tablePath, cur, name)
     val field = cur.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"no column $name in $tablePath (${cur.fieldNames.mkString(", ")})"))
-    val burned = burnedAt(spark, tablePath) + physicalName(field)
+    val burned = snap.burned + physicalName(field)
     val next = StructType(cur.fields.filterNot(_.name == name))
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("drop_column"),
-      abortOnLostRace = () => false, schemaJson = Some(next.json),
+      abortOnLostRace = _ => false, schemaJson = Some(next.json),
       propertyTags = Seq(s"+$BurnedProp:${burned.toSeq.sorted.mkString(",")}"),
       schemaExpect = Some(ledger.map(_.json)))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced drop"))
@@ -2768,15 +2691,16 @@ object CommitLog {
   def addColumns(spark: SparkSession, tablePath: String,
       fields: Seq[org.apache.spark.sql.types.StructField],
       publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
-    val ledger = schemaAt(spark, tablePath)
-    val cur = ledger.getOrElse(tableSchema(spark, tablePath))
+    val snap = snapshot(spark, tablePath)
+    val ledger = snap.schema
+    val cur = ledger.getOrElse(tableSchema(spark, tablePath, snap))
     validateAddColumns(spark, tablePath, cur, fields)
     val next = evolveSchema(cur,
       StructType(cur.fields ++ fields.map(_.copy(nullable = true))),
-      burnedAt(spark, tablePath))
+      snap.burned)
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("evolve"),
-      abortOnLostRace = () => false, schemaJson = Some(next.json),
+      abortOnLostRace = _ => false, schemaJson = Some(next.json),
       schemaExpect = Some(ledger.map(_.json)))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced add-columns"))
   }
@@ -2877,17 +2801,18 @@ object CommitLog {
     require(!queryId.exists(c => c.isWhitespace || c == ':'),
       s"queryId must be whitespace/colon-free: $queryId")
     val spark = df.sparkSession
-    if (batchId <= lastTxnBatch(spark, tablePath, queryId)) return None
+    val snap = snapshot(spark, tablePath)
+    if (batchId <= snap.lastTxnBatch(queryId)) return None
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
     val writerId = freshWriterId("w")
     val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    val cs = constraintsAt(spark, tablePath)
-    val props = propertiesAt(spark, tablePath) // one fold, three consumers
-    val mapping = mappingAt(spark, tablePath)
+    val cs = snap.constraints
+    val props = snap.properties
+    val mapping = snap.mapping
     toPhysical(enforcedWith(
       clusteredForWrite(withGenerated(df, props), props), cs), mapping).write
-      .options(tableWriteOptionsWith(props, mapping))
+      .options(tableWriteOptions(props, mapping))
       .parquet(staging.toString)
     val names = landStaged(fs, dir, staging, writerId)
     // an EMPTY batch publishes nothing and records nothing: the ledger
@@ -2896,7 +2821,7 @@ object CommitLog {
     if (names.isEmpty) return None
     val won = commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
       publisher = publisher, opTag = Some(s"txn=$queryId:$batchId"),
-      abortOnLostRace = () => batchId <= lastTxnBatch(spark, tablePath, queryId),
+      abortOnLostRace = batchId <= _.lastTxnBatch(queryId),
       addStats = statsFor(spark, tablePath, names),
       constraintsExpect = Some(cs))
     if (won.isDefined) maybeAutoCompact(spark, tablePath, props)
@@ -2923,13 +2848,14 @@ object CommitLog {
       s"queryId must be whitespace/colon-free: $queryId")
     require(keyCols.nonEmpty, "upsertOnce needs key columns")
     val spark = df.sparkSession
-    if (batchId <= lastTxnBatch(spark, tablePath, queryId)) return None
+    val snap = snapshot(spark, tablePath)
+    if (batchId <= snap.lastTxnBatch(queryId)) return None
     val src = df.localCheckpoint(true)
     if (src.isEmpty) return None // empty batch: replaying it is a no-op
     // the batch's shape drives the keyed rewrite, so a batch NARROWER
     // than the sink's declared schema would silently drop the missing
     // columns from every rewritten file — refuse loudly instead
-    schemaAt(spark, tablePath).foreach { ledger =>
+    snap.schema.foreach { ledger =>
       require(ledger.fieldNames.sorted.sameElements(src.schema.fieldNames.sorted),
         s"upsert batch columns (${src.schema.fieldNames.mkString(", ")}) do not " +
           s"match the sink's declared schema (${ledger.fieldNames.mkString(", ")})")
@@ -2943,8 +2869,8 @@ object CommitLog {
     val won = keyedRewrite(spark, tablePath, src.schema, keyCols,
       deleteKeys = src, appendDf = src,
       opTag = Some(s"txn=$queryId:$batchId"), publisher = publisher,
-      abortOnLostRace = () => batchId <= lastTxnBatch(spark, tablePath, queryId))
-    if (won.isDefined) maybeAutoCompact(spark, tablePath)
+      abortOnLostRace = batchId <= _.lastTxnBatch(queryId))
+    if (won.isDefined) maybeAutoCompact(spark, tablePath, snap.properties)
     won
   }
 
@@ -2988,22 +2914,21 @@ object CommitLog {
       predicate: org.apache.spark.sql.Column,
       publisher: AtomicPublisher = RenameOrLinkPublisher,
       deletionVectors: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
-    val (version, entries) = liveFilesFull(spark, tablePath)
+    import org.apache.spark.sql.functions.lit
+    val snap = snapshot(spark, tablePath)
+    val (version, entries) = (snap.version, snap.live)
     if (entries.isEmpty) return version
     requireDeterministicPredicate(spark, schema, predicate, "deleteWhere")
     if (deletionVectors)
-      return deleteWhereMor(spark, tablePath, schema, predicate, publisher,
-        version, entries)
+      return deleteWhereMor(spark, tablePath, schema, predicate, publisher, snap)
     // the probe and the rewrite both read VISIBLE rows (DV-aware): a
     // position an earlier merge-on-read delete vectored out must
     // neither count as a match nor resurrect in the rewrite
-    val (affectedEntries, names) = removeMatching(spark, tablePath, schema,
-      predicate, entries, mappingAt(spark, tablePath))
+    val (affectedEntries, names) =
+      removeMatching(spark, tablePath, schema, predicate, snap)
     if (affectedEntries.isEmpty) return version // nothing matched: no new version
-    val affectedDf = visibleRows(spark, tablePath, schema, affectedEntries)
+    val affectedDf = visibleRows(spark, tablePath, schema, affectedEntries,
+      mapping = Some(snap.mapping))
     // CDC pre-images cover matched rows of BOTH dropped and rewritten
     // files — a dropped file's rows are read once here (its only read)
     // so the change feed stays exact
@@ -3017,7 +2942,7 @@ object CommitLog {
     // count 0 / DESCRIBE / streaming reads)
     val stamp =
       if (names.isEmpty && affectedEntries.size == entries.size &&
-          schemaAt(spark, tablePath).isEmpty) Some(schema.json)
+          snap.schema.isEmpty) Some(schema.json)
       else None
     commit(spark, tablePath, adds = names,
       removes = affectedEntries.map(_.name),
@@ -3053,11 +2978,9 @@ object CommitLog {
     * approach the file's own row count). */
   private def deleteWhereMor(spark: SparkSession, tablePath: String,
       schema: StructType, predicate: org.apache.spark.sql.Column,
-      publisher: AtomicPublisher, version: Long,
-      entries: Seq[LiveEntry]): Long = {
+      publisher: AtomicPublisher, snap: Snapshot): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
+    val (version, entries) = (snap.version, snap.live)
     // the _dv_f keying below is by basename — a legacy colliding ledger
     // would attach one file's positions to the other's vector
     requireBasenameSoundness(entries, s"merge-on-read delete on $tablePath")
@@ -3066,7 +2989,8 @@ object CommitLog {
     // affected-file collect — a non-deterministic predicate must not
     // vector positions and feed pre-images that disagree
     val matched = visibleRows(spark, tablePath, schema, entries,
-      meta = Seq("_dv_f" -> "file_name", "_dv_p" -> "row_index"))
+      meta = Seq("_dv_f" -> "file_name", "_dv_p" -> "row_index"),
+      mapping = Some(snap.mapping))
       .filter(predicate)
       .localCheckpoint(true)
     val affected = matched.select(col("_dv_f")).distinct()
@@ -3080,7 +3004,7 @@ object CommitLog {
       matched.drop("_dv_f", "_dv_p").withColumn(ChangeTypeCol, lit("delete")))
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("delete"),
-      abortOnLostRace = () => false, changeAdds = cdcNames,
+      abortOnLostRace = _ => false, changeAdds = cdcNames,
       dvAttach = dvAttach, dvExpect = dvExpect, dvRowCounts = dvCounts)
       .getOrElse(throw new IllegalStateException("unreachable: unfenced DV delete"))
   }
@@ -3152,8 +3076,11 @@ object CommitLog {
         s"of $tablePath (${schema.fieldNames.mkString(", ")})")
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
-    val (version, entries) = liveFilesFull(spark, tablePath)
+    val snap = snapshot(spark, tablePath)
+    val (version, entries) = (snap.version, snap.live)
     if (entries.isEmpty) return version
+    val mapping = snap.mapping
+    val writeOptions = tableWriteOptions(snap.properties, mapping)
     // same double-evaluation exposure as deleteWhere/replaceWhere: the
     // predicate runs for the probe, the when(hit) rewrite, and both
     // CDC image filters — a nondeterministic one updates rows that
@@ -3177,7 +3104,8 @@ object CommitLog {
       // of a wide table costs one vector + increment-sized new files).
       // One evaluation feeds positions, post-images, and CDC.
       val matched = visibleRows(spark, tablePath, schema, entries,
-        meta = Seq("_uw_f" -> "file_name", "_uw_p" -> "row_index"))
+        meta = Seq("_uw_f" -> "file_name", "_uw_p" -> "row_index"),
+        mapping = Some(mapping))
         .filter(predicate)
         .localCheckpoint(true)
       val affected = matched.select(col("_uw_f")).distinct()
@@ -3189,17 +3117,16 @@ object CommitLog {
       val postDf = matched.select(post: _*)
       val writerId = freshWriterId("w")
       val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-      val cs = constraintsAt(spark, tablePath)
-      toPhysical(enforcedWith(generated(postDf, tablePath), cs),
-        mappingAt(spark, tablePath)).write
-        .options(tableWriteOptions(spark, tablePath)).parquet(staging.toString)
+      val cs = snap.constraints
+      toPhysical(enforcedWith(withGenerated(postDf, snap.properties), cs), mapping)
+        .write.options(writeOptions).parquet(staging.toString)
       val names = landStaged(fs, dir, staging, writerId)
       val cdcNames = landChangeFiles(spark, tablePath,
         matched.drop("_uw_f", "_uw_p").withColumn(ChangeTypeCol, lit("delete"))
           .unionByName(postDf.withColumn(ChangeTypeCol, lit("insert"))))
       return commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
         publisher = publisher, opTag = Some("update"),
-        abortOnLostRace = () => false, changeAdds = cdcNames,
+        abortOnLostRace = _ => false, changeAdds = cdcNames,
         addStats = statsFor(spark, tablePath, names),
         dvAttach = dvAttach, dvExpect = dvExpect, dvRowCounts = dvCounts,
         constraintsExpect = Some(cs))
@@ -3207,24 +3134,24 @@ object CommitLog {
     }
     // probe and rewrite read VISIBLE rows (DV-aware) — see deleteWhere
     val affected = visibleRows(spark, tablePath, schema, entries,
-      meta = Seq("_uw_file" -> "file_name"))
+      meta = Seq("_uw_file" -> "file_name"), mapping = Some(mapping))
       .filter(predicate)
       .select(col("_uw_file")).distinct()
       .collect().map(_.getString(0)).toSeq
     if (affected.isEmpty) return version // nothing matched: no new version
     val affectedEntries = affected.map(byName)
-    val affectedDf = visibleRows(spark, tablePath, schema, affectedEntries)
+    val affectedDf = visibleRows(spark, tablePath, schema, affectedEntries,
+      mapping = Some(mapping))
     val hit = coalesce(predicate, lit(false))
     val rewritten = schema.fields.map(f =>
       when(hit, assignments.get(f.name).map(_.cast(f.dataType))
         .getOrElse(col(f.name))).otherwise(col(f.name)).as(f.name)).toIndexedSeq
     val writerId = freshWriterId("w")
     val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    val cs = constraintsAt(spark, tablePath)
-    toPhysical(enforcedWith(generated(affectedDf.select(rewritten: _*), tablePath), cs),
-      mappingAt(spark, tablePath))
-      .write.options(tableWriteOptions(spark, tablePath))
-      .parquet(staging.toString)
+    val cs = snap.constraints
+    toPhysical(enforcedWith(withGenerated(affectedDf.select(rewritten: _*),
+      snap.properties), cs), mapping)
+      .write.options(writeOptions).parquet(staging.toString)
     val names = landStaged(fs, dir, staging, writerId)
     val cdcNames = landChangeFiles(spark, tablePath,
       affectedDf.filter(predicate)
@@ -3307,11 +3234,11 @@ object CommitLog {
     // as the rewrite. The source must still carry every table column —
     // merge is a full-row upsert; partial-column sources use the
     // clause surface (MergeClauses).
-    val ledger = schemaAt(spark, tablePath)
+    val snap = snapshot(spark, tablePath)
+    val ledger = snap.schema
     val opSchema =
       if (!mergeSchema) schema
-      else evolveSchema(ledger.getOrElse(schema),
-        source.schema, burnedAt(spark, tablePath))
+      else evolveSchema(ledger.getOrElse(schema), source.schema, snap.burned)
     val schemaTag =
       if (!mergeSchema) None
       else if (ledger.exists(sameShape(_, opSchema))) None
@@ -3544,14 +3471,16 @@ object CommitLog {
       schema: StructType, keyCols: Seq[String], deleteKeys: DataFrame,
       appendDf: DataFrame, opTag: Option[String],
       publisher: AtomicPublisher,
-      abortOnLostRace: () => Boolean = () => false,
+      abortOnLostRace: Snapshot => Boolean = _ => false,
       schemaJson: Option[String] = None,
       deletionVectors: Boolean = false,
       schemaExpect: Option[Option[String]] = None): Option[Long] = {
     import org.apache.spark.sql.functions.{col, lit}
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
-    val (version, liveEntries) = liveFilesFull(spark, tablePath)
+    val snap = snapshot(spark, tablePath)
+    val liveEntries = snap.live
+    val mapping = Some(snap.mapping)
     requireBasenameSoundness(liveEntries, s"keyed rewrite on $tablePath")
     val filesWithStats = liveEntries.map(e => (e.name, e.stats))
     val entryByName = entriesByName(liveEntries)
@@ -3566,14 +3495,15 @@ object CommitLog {
     // appended rows are NEW values: active CHECK constraints ride their
     // write plan (survivor restatements are valid by induction); the
     // captured set doubles as the commit-time constraint fence
-    val cs = constraintsAt(spark, tablePath)
-    val app = enforcedWith(generated(appendDf.select(cols: _*), tablePath), cs)
+    val cs = snap.constraints
+    val app = enforcedWith(withGenerated(appendDf.select(cols: _*), snap.properties), cs)
     // write under the mapping the commit will declare (an evolving
     // merge's schemaJson may assign fresh physicals to new columns)
     val writeMapping = schemaJson
       .map(j => columnMapping(org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[StructType]))
-      .getOrElse(mappingAt(spark, tablePath))
+      .getOrElse(snap.mapping)
+    val writeOptions = tableWriteOptions(snap.properties, snap.mapping)
     // stats-based skipping first: files whose LOG-carried min/max (or,
     // fallback, footer min/max + bloom filters) prove no key can match
     // never enter the probe scan — on a clustered table an
@@ -3593,7 +3523,7 @@ object CommitLog {
       // CDC pre-images, affected-file collect all read the checkpoint).
       val matched = visibleRows(spark, tablePath, schema,
         candidates.map(entryByName),
-        meta = Seq("_kr_f" -> "file_name", "_kr_p" -> "row_index"))
+        meta = Seq("_kr_f" -> "file_name", "_kr_p" -> "row_index"), mapping = mapping)
         .join(keyD, keyCols, "left_semi")
         .localCheckpoint(true)
       val affectedMor = matched.select(col("_kr_f")).distinct()
@@ -3607,8 +3537,7 @@ object CommitLog {
         affectedMor.map(entryByName), fresh)
       val writerId = freshWriterId("w")
       val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-      toPhysical(app, writeMapping).write
-        .options(tableWriteOptions(spark, tablePath))
+      toPhysical(app, writeMapping).write.options(writeOptions)
         .parquet(staging.toString)
       val names = landStaged(fs, dir, staging, writerId)
       val cdcNames = landChangeFiles(spark, tablePath,
@@ -3634,7 +3563,7 @@ object CommitLog {
         val keyOnly = StructType(schema.fields.filter(f =>
           keyCols.contains(f.name)))
         visibleRows(spark, tablePath, keyOnly, candidates.map(entryByName),
-          meta = Seq("_kr_file" -> "file_name"))
+          meta = Seq("_kr_file" -> "file_name"), mapping = mapping)
           .join(keyD, keyCols, "left_semi")
           .groupBy(col("_kr_file")).count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -3654,15 +3583,14 @@ object CommitLog {
     // removes the old slice's files without restating a byte); only
     // the partially-covered files restate their surviving rows
     val partial = partialMatches(affectedEntries, matchedCounts)
-    val aff = visibleRows(spark, tablePath, schema, affectedEntries)
+    val aff = visibleRows(spark, tablePath, schema, affectedEntries, mapping = mapping)
     val restate =
       if (partial.isEmpty) app
-      else visibleRows(spark, tablePath, schema, partial)
+      else visibleRows(spark, tablePath, schema, partial, mapping = mapping)
         .join(keyD, keyCols, "left_anti").unionByName(app)
     val writerId = freshWriterId("w")
     val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    toPhysical(restate, writeMapping)
-      .write.options(tableWriteOptions(spark, tablePath))
+    toPhysical(restate, writeMapping).write.options(writeOptions)
       .parquet(staging.toString)
     val names = landStaged(fs, dir, staging, writerId)
     val cdcNames = landChangeFiles(spark, tablePath,
@@ -3690,15 +3618,14 @@ object CommitLog {
     * never data-sized. */
   def history(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
+    val listing = listLog(spark, tablePath)
+    // version order; a checkpoint row precedes its version's commit row
+    val files = (listing.checkpoints.toSeq.map { case (v, p) => (v, false, p) } ++
+      listing.commits.toSeq.map { case (v, p) => (v, true, p) }).sortBy(f => (f._1, f._2))
     val rows: Seq[(Long, String, Long, Long, Option[Long])] =
-      if (!fs.exists(log)) Seq.empty
-      else fs.listStatus(log).toSeq.sortBy(_.getPath.getName).flatMap { st =>
-        val n = st.getPath.getName
-        def version = n.takeWhile(_ != '.').toLong
-        if (n.endsWith(".commit")) {
-          val lines = readLines(fs, st.getPath).toSeq
+      files.map { case (version, isCommit, p) =>
+        if (isCommit) {
+          val lines = readLines(listing.fs, p).toSeq
           val adds = lines.count(_.startsWith("+"))
           val removes = lines.count(_.startsWith("-"))
           // explicit header wins; otherwise derive from commit shape
@@ -3708,12 +3635,10 @@ object CommitLog {
           val ts = lines.collectFirst {
             case l if l.startsWith("#ts=") => l.drop(4).toLong
           }
-          Some((version, op, adds.toLong, removes.toLong, ts))
-        } else if (n.endsWith(".checkpoint")) {
-          Some((version, "checkpoint",
-            readLines(fs, st.getPath).count(_.startsWith("+")).toLong, 0L,
-            None: Option[Long]))
-        } else None
+          (version, op, adds.toLong, removes.toLong, ts)
+        } else
+          (version, "checkpoint",
+            readLines(listing.fs, p).count(_.startsWith("+")).toLong, 0L, None: Option[Long])
       }
     rows.toDF("version", "operation", "n_added", "n_removed", "commit_ts_ms")
   }
@@ -3732,7 +3657,9 @@ object CommitLog {
     * them); a vector-free table runs zero jobs. */
   def detail(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
-    val (version, entries) = liveFilesFull(spark, tablePath)
+    val listing = listLog(spark, tablePath)
+    val snap = listing.snapshot()
+    val (version, entries) = (snap.version, snap.live)
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
     // LEDGER-FIRST sizing: when every live file carries its
@@ -3758,20 +3685,16 @@ object CommitLog {
     val dvPositions =
       if (vectored.forall(_.dvRows.isDefined)) vectored.flatMap(_.dvRows).sum
       else dvRows(spark, tablePath, vectored).map(_.count()).getOrElse(0L)
-    val lastTs = {
-      val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-      commitTsOf(fs, new org.apache.hadoop.fs.Path(log, f"$version%020d.commit"))
-    }
+    val lastTs = listing.commits.get(version).flatMap(commitTsOf(fs, _))
     val schemaSource =
-      if (schemaAt(spark, tablePath).isDefined) "ledger"
+      if (snap.schemaJson.isDefined) "ledger"
       else if (entries.nonEmpty) "inferred" else "none"
     // the property map rides along: clustering, bloom, MOR default and
     // generated columns are all property-driven behavior — a table
     // cannot be audited from SQL without seeing them
     Seq((tablePath, version, entries.size.toLong, sizeBytes,
       entries.count(_.dv.isDefined).toLong, dvPositions,
-      constraintsAt(spark, tablePath).size.toLong, schemaSource, lastTs,
-      propertiesAt(spark, tablePath)))
+      snap.constraints.size.toLong, schemaSource, lastTs, snap.properties))
       .toDF("table", "version", "num_files", "size_bytes",
         "num_vectored_files", "num_vectored_positions",
         "num_constraints", "schema_source", "last_commit_ts_ms",
@@ -3815,20 +3738,13 @@ object CommitLog {
         org.apache.spark.sql.types.LongType, nullable = false))
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withVersion)
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
     require(sinceVersion >= 0, s"sinceVersion must be >= 0: $sinceVersion")
-    if (!fs.exists(log)) return empty
-    val upper = if (asOf == Long.MaxValue) latestVersion(fs, log) else asOf
+    val listing = listLog(spark, tablePath)
+    if (!listing.exists) return empty
+    val upper = if (asOf == Long.MaxValue) listing.latest else asOf
     require(sinceVersion <= upper,
       s"sinceVersion $sinceVersion past latest version $upper of $tablePath")
-    val commits = fs.listStatus(log).flatMap { st =>
-      st.getPath.getName match {
-        case CommitRe(v) if v.toLong > sinceVersion && v.toLong <= upper =>
-          Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1)
+    val commits = listing.commits.rangeFrom(sinceVersion + 1).rangeTo(upper).toSeq
     val missing = ((sinceVersion + 1) to upper).toSet -- commits.map(_._1).toSet
     if (missing.nonEmpty)
       throw new FeedGapException(
@@ -3845,7 +3761,7 @@ object CommitLog {
     // an insert-only feed silently skipping it would hand consumers
     // deleted rows as still-live; consumers re-bootstrap past it.
     val fed: Seq[(String, Long, Boolean)] = commits.toSeq.flatMap { case (v, p) =>
-      val lines = readLines(fs, p).toSeq
+      val lines = readLines(listing.fs, p).toSeq
       val removing = lines.exists(_.startsWith("-"))
       // a DV-attaching commit (`*` lines) DELETES rows without removing
       // files — row-changing by definition, never a compaction
@@ -3952,11 +3868,15 @@ object CommitLog {
     * explicit, introspectable situation, not a silent one). */
   def restore(spark: SparkSession, tablePath: String, toVersion: Long,
       publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
-    val (cur, curEntries) = liveFilesFull(spark, tablePath)
+    // one listing: the current snapshot and the target one
+    val listing = listLog(spark, tablePath)
+    val now = listing.snapshot()
+    val (cur, curEntries) = (now.version, now.live)
     require(toVersion <= cur,
       s"cannot restore $tablePath to version $toVersion — latest is $cur")
     if (toVersion == cur) return cur // proven no-op
-    val (_, target) = liveFilesFull(spark, tablePath, asOf = toVersion)
+    val past = listing.snapshot(toVersion)
+    val target = past.live
     requireDistinctBasenames(target, s"restore of $tablePath to $toVersion")
     // every restored file (and attached vector) must still exist —
     // restoring to a vacuumed snapshot would publish dangling names
@@ -3973,9 +3893,8 @@ object CommitLog {
         s"cannot restore $tablePath to version $toVersion: file(s) " +
           s"${gone.take(3).mkString(", ")}… were vacuumed — the snapshot is " +
           "behind the retention window")
-    val schemaTag = (schemaAt(spark, tablePath, asOf = toVersion),
-        schemaAt(spark, tablePath)) match {
-      case (Some(old), Some(now)) if old.json != now.json => Some(old.json)
+    val schemaTag = (past.schema, now.schema) match {
+      case (Some(old), Some(current)) if old.json != current.json => Some(old.json)
       case _ => None
     }
     val curNames = curEntries.map(_.name).toSet
@@ -4007,7 +3926,7 @@ object CommitLog {
       schemaTag.isEmpty) return cur // identical live state: no-op
     commitOrAbort(spark, tablePath, adds = adds, removes = removes,
       publisher = publisher, opTag = Some("restore"),
-      abortOnLostRace = () => false,
+      abortOnLostRace = _ => false,
       addStats = adds.flatMap(n => statsByName.get(n).flatten.map(n -> _)).toMap,
       schemaJson = schemaTag, dvAttach = dvAttach, dvExpect = dvExpect,
       dvRowCounts = dvCounts)
@@ -4031,26 +3950,13 @@ object CommitLog {
     * Log-sized driver work; data files are vacuum()'s job, not this. */
   def pruneLog(spark: SparkSession, tablePath: String,
       keepSince: Long = Long.MaxValue): Seq[Long] = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
-    if (!fs.exists(log)) return Seq.empty
-    val entries = fs.listStatus(log)
-    val ckpt = entries.flatMap { st =>
-      st.getPath.getName match {
-        case CheckpointRe(v) if v.toLong <= keepSince => Some(v.toLong)
-        case _ => None
-      }
-    }.sorted.lastOption
-    ckpt match {
+    val listing = listLog(spark, tablePath)
+    listing.checkpoints.rangeTo(keepSince).lastOption match {
       case None => Seq.empty // nothing to replay from — prune nothing
-      case Some(base) =>
-        entries.flatMap { st =>
-          st.getPath.getName match {
-            case CommitRe(v) if v.toLong <= base =>
-              fs.delete(st.getPath, false); Some(v.toLong)
-            case _ => None
-          }
-        }.sorted.toSeq
+      case Some((base, _)) =>
+        listing.commits.rangeTo(base).toSeq.map { case (v, p) =>
+          listing.fs.delete(p, false); v
+        }
     }
   }
 
@@ -4119,7 +4025,7 @@ object CommitLog {
     val schema = spark.read.option("mergeSchema", "true").parquet(tablePath).schema
     commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
       publisher = publisher, opTag = Some("convert"),
-      abortOnLostRace = () => latestVersion(spark, tablePath) != 0,
+      abortOnLostRace = _.version != 0,
       addStats = stats,
       schemaJson = Some(schema.json),
       schemaExpect = Some(None))
@@ -4164,13 +4070,13 @@ object CommitLog {
       s"clone destination $clonePath already has commits")
     // pin ONE source version, then read every ledger AT that version —
     // a concurrent source commit cannot mix states into the clone
-    val (srcV, entries) = liveFilesFull(spark, src, asOf)
+    val snap = snapshot(spark, src, asOf)
+    val (srcV, entries) = (snap.version, snap.live)
     require(srcV > 0, s"cannot clone $src — no commits at version $asOf")
     requireDistinctBasenames(entries, s"shallow clone of $src@$srcV")
-    val schemaJson = schemaAt(spark, src, srcV).map(_.json)
-    val constraints = constraintsAt(spark, src, srcV)
-    val props = propertiesAt(spark, src, srcV) +
-      ("graft.cloneSource" -> s"$src@$srcV")
+    val schemaJson = snap.schema.map(_.json)
+    val constraints = snap.constraints
+    val props = snap.properties + ("graft.cloneSource" -> s"$src@$srcV")
     val adds = entries.map(e => resolveDataPath(src, e.name))
     val addStats = entries.flatMap(e =>
       e.stats.map(resolveDataPath(src, e.name) -> _)).toMap
@@ -4184,7 +4090,7 @@ object CommitLog {
       publisher = publisher, opTag = Some("clone"),
       // a concurrent writer racing table creation at the same path
       // must not make this land as "version 2 of someone else's table"
-      abortOnLostRace = () => latestVersion(spark, clonePath) != 0,
+      abortOnLostRace = _.version != 0,
       addStats = addStats,
       schemaJson = schemaJson,
       dvAttach = dvAttach,
@@ -4217,21 +4123,14 @@ object CommitLog {
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) return Seq.empty
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
-    val changeRefs: Set[String] =
-      if (!fs.exists(log)) Set.empty
-      else fs.listStatus(log).toSeq.flatMap { st =>
-        st.getPath.getName match {
-          case CommitRe(_) => readLines(fs, st.getPath)
-            .filter(_.startsWith("~")).map(_.drop(1)).toSeq
-          case _ => Seq.empty
-        }
-      }.toSet
+    val listing = listLog(spark, tablePath)
+    val changeRefs: Set[String] = listing.commits.values.flatMap(p =>
+      readLines(fs, p).filter(_.startsWith("~")).map(_.drop(1))).toSet
     // keep-set: live data files, their ATTACHED deletion vectors, and
     // commit-referenced CDC files — a superseded vector (its file
     // re-vectored or compacted) drops out of the attachments and ages
     // out like any other unreferenced file
-    val entries = liveFilesFull(spark, tablePath)._2
+    val entries = listing.snapshot().live
     val live = entries.map(_.name).toSet ++ entries.flatMap(_.dv) ++ changeRefs
     val cutoff = System.currentTimeMillis() - minAgeMs
     fs.listStatus(dir).flatMap { st =>

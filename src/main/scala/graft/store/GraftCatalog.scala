@@ -194,7 +194,7 @@ class GraftCatalog extends TableCatalog {
     user.foreach { case (k, v) => CommitLog.validateProperty(spark, k, v) }
     CommitLog.commitOrAbort(spark, path, adds = Seq.empty, removes = Seq.empty,
       publisher = RenameOrLinkPublisher, opTag = Some("create"),
-      abortOnLostRace = () => false, schemaJson = Some(schema.json),
+      abortOnLostRace = _ => false, schemaJson = Some(schema.json),
       schemaExpect = Some(None),
       propertyTags = user.toSeq.sortBy(_._1).map { case (k, v) => s"+$k:$v" })
       .getOrElse(throw new IllegalStateException("unreachable: unfenced create"))

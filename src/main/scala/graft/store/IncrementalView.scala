@@ -90,7 +90,7 @@ object IncrementalView {
     // maxVersions window, or a `latest` read at an earlier time) has
     // already applied part of our (since, srcVersion] range — a
     // >= fence would let us double-apply the overlap.
-    val fence = () => CommitLog.lastConsumed(spark, viewTable) != since
+    val fence = (s: CommitLog.Snapshot) => s.consumed != since
     val feed = CommitLog
       .changesSince(spark, srcTable, since, srcSchema, asOf = srcVersion)
     val ct = col(CommitLog.ChangeTypeCol)

@@ -109,7 +109,9 @@ final class MergeClauses private (
       "merge with no clauses")
     val dir = new org.apache.hadoop.fs.Path(tablePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (version, liveEntries) = CommitLog.liveFilesFull(spark, tablePath)
+    val snap = CommitLog.snapshot(spark, tablePath)
+    val (version, liveEntries) = (snap.version, snap.live)
+    val mapping = snap.mapping
     val filesWithStats = liveEntries.map(e => (e.name, e.stats))
     val entryByName = liveEntries.map(e => e.name -> e).toMap
     val files = filesWithStats.map(_._1)
@@ -173,7 +175,8 @@ final class MergeClauses private (
           val probeSchema = StructType(schema.fields.filter(f =>
             probeCols.contains(f.name)))
           val withFile = CommitLog.visibleRows(spark, tablePath, probeSchema,
-            candidates.map(entryByName), meta = Seq("_mc_file" -> "file_name"))
+            candidates.map(entryByName), meta = Seq("_mc_file" -> "file_name"),
+            mapping = Some(mapping))
           val matchedFiles = withFile
             .join(srcKeys, keyCols, "left_semi").select("_mc_file")
           val claimed = bySourceDelete match {
@@ -197,7 +200,7 @@ final class MergeClauses private (
         affected.map(entryByName),
         meta = if (deletionVectors)
           Seq("_mc_f" -> "file_name", "_mc_p" -> "row_index")
-        else Seq.empty))
+        else Seq.empty, mapping = Some(mapping)))
     // matched target keys all live in affected files (the probe visited
     // every file that can hold one), so the insert anti-join needs only
     // the affected reads — increment-sized, never a table rescan
@@ -304,17 +307,17 @@ final class MergeClauses private (
       // same write discipline as every CommitLog path: constraints
       // captured once (and fenced at commit), columns landed under
       // their PHYSICAL names on a mapped table
-      val cs = CommitLog.constraintsAt(spark, tablePath)
+      val cs = snap.constraints
       CommitLog.toPhysical(
-        CommitLog.enforcedWith(CommitLog.generated(addsDf, tablePath), cs),
-        CommitLog.mappingAt(spark, tablePath)).write
-        .options(CommitLog.tableWriteOptions(spark, tablePath))
+        CommitLog.enforcedWith(CommitLog.withGenerated(addsDf, snap.properties), cs),
+        mapping).write
+        .options(CommitLog.tableWriteOptions(snap.properties, mapping))
         .parquet(staging.toString)
       val names = CommitLog.landStaged(fs, dir, staging, writerId)
       val cdcNames = CommitLog.landChangeFiles(spark, tablePath, cdc)
       return CommitLog.commitOrAbort(spark, tablePath, adds = names,
         removes = Seq.empty, publisher = publisher, opTag = Some("merge"),
-        abortOnLostRace = () => false, changeAdds = cdcNames,
+        abortOnLostRace = _ => false, changeAdds = cdcNames,
         addStats = CommitLog.statsFor(spark, tablePath, names),
         dvAttach = dvAttach, dvExpect = dvExpect, dvRowCounts = dvCounts,
         constraintsExpect = Some(cs))
@@ -326,11 +329,11 @@ final class MergeClauses private (
       case Some(ins) => rewritten.unionByName(ins)
       case None => rewritten
     }
-    val cs = CommitLog.constraintsAt(spark, tablePath)
+    val cs = snap.constraints
     CommitLog.toPhysical(
-      CommitLog.enforcedWith(CommitLog.generated(withInserts, tablePath), cs),
-      CommitLog.mappingAt(spark, tablePath)).write
-      .options(CommitLog.tableWriteOptions(spark, tablePath))
+      CommitLog.enforcedWith(CommitLog.withGenerated(withInserts, snap.properties), cs),
+      mapping).write
+      .options(CommitLog.tableWriteOptions(snap.properties, mapping))
       .parquet(staging.toString)
     val names = CommitLog.landStaged(fs, dir, staging, writerId)
     val cdcNames = CommitLog.landChangeFiles(spark, tablePath, cdc)

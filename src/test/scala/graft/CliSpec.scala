@@ -183,5 +183,12 @@ class CliSpec extends SparkSpec {
     // asOf reads the pre-evolution ledger state (none at v1 → inference)
     val sch1 = Cli.run(spark, Array("log-schema", t, "1"))
     assert(sch1.contains(""""from_ledger":false""") && !sch1.contains("note"), sch1)
+    // a shallow clone of the ledger-less version references the
+    // source's files by absolute path: inference must resolve them
+    val c = t + "_clone"
+    graft.store.CommitLog.shallowClone(spark, t, c, asOf = 1)
+    val schC = Cli.run(spark, Array("log-schema", c))
+    assert(schC.contains(""""from_ledger":false""") &&
+      schC.contains("""{"name":"id","type":"bigint"}""") && !schC.contains("note"), schC)
   }
 }

@@ -206,7 +206,7 @@ class CloneSpec extends SparkSpec {
     val f2 = land("b", Seq(3L, 4L))
     CommitLog.commitOrAbort(spark, t, adds = Seq(f1, f2),
       removes = Seq.empty, publisher = RenameOrLinkPublisher,
-      opTag = Some("forged-legacy"), abortOnLostRace = () => false)
+      opTag = Some("forged-legacy"), abortOnLostRace = _ => false)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))

@@ -192,7 +192,7 @@ abstract class ColumnMappingBehavior(publisher: AtomicPublisher) extends SparkSp
     val e = intercept[java.util.ConcurrentModificationException] {
       CommitLog.commitOrAbort(spark, t, adds = Seq.empty, removes = Seq.empty,
         publisher = publisher, opTag = Some("evolve"),
-        abortOnLostRace = () => false,
+        abortOnLostRace = _ => false,
         schemaJson = Some(staleEvolved.json),
         schemaExpect = Some(staleLedger.map(_.json)))
     }

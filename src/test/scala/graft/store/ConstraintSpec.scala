@@ -135,7 +135,7 @@ class ConstraintSpec extends SparkSpec {
     val e = intercept[java.util.ConcurrentModificationException] {
       CommitLog.commitOrAbort(spark, t, adds = names, removes = Seq.empty,
         publisher = RenameOrLinkPublisher, opTag = None,
-        abortOnLostRace = () => false, constraintsExpect = Some(readCs))
+        abortOnLostRace = _ => false, constraintsExpect = Some(readCs))
     }
     assert(e.getMessage.contains("constraint"))
     assert(CommitLog.read(spark, t, schema).filter(col("id") < 0).count() == 0,
@@ -149,7 +149,7 @@ class ConstraintSpec extends SparkSpec {
     val names2 = CommitLog.landStaged(fs, dir, staging2, writer2)
     assert(CommitLog.commitOrAbort(spark, t, adds = names2, removes = Seq.empty,
       publisher = RenameOrLinkPublisher, opTag = None,
-      abortOnLostRace = () => false,
+      abortOnLostRace = _ => false,
       constraintsExpect = Some(Map("id_nonneg" -> "id >= 0"))).isDefined)
   }
 

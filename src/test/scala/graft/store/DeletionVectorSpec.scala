@@ -152,7 +152,7 @@ abstract class DeletionVectorBehavior(publisher: AtomicPublisher) extends SparkS
     val stale = intercept[java.util.ConcurrentModificationException] {
       CommitLog.commitOrAbort(spark, t, adds = Seq.empty, removes = Seq.empty,
         publisher = publisher, opTag = Some("delete"),
-        abortOnLostRace = () => false,
+        abortOnLostRace = _ => false,
         dvAttach = Map(file -> "bogus-dv.parquet"),
         dvExpect = Map(file -> None)) // planned before the competitor won
     }
@@ -162,7 +162,7 @@ abstract class DeletionVectorBehavior(publisher: AtomicPublisher) extends SparkS
     val gone = intercept[java.util.ConcurrentModificationException] {
       CommitLog.commitOrAbort(spark, t, adds = Seq.empty, removes = Seq.empty,
         publisher = publisher, opTag = Some("delete"),
-        abortOnLostRace = () => false,
+        abortOnLostRace = _ => false,
         dvAttach = Map(file -> "bogus-dv.parquet"),
         dvExpect = Map(file -> None))
     }
@@ -192,7 +192,7 @@ abstract class DeletionVectorBehavior(publisher: AtomicPublisher) extends SparkS
     val e = intercept[java.util.ConcurrentModificationException] {
       CommitLog.commitOrAbort(spark, t, adds = names,
         removes = planned.map(_.name), publisher = publisher, opTag = None,
-        abortOnLostRace = () => false,
+        abortOnLostRace = _ => false,
         removeDvExpect = planned.map(p => p.name -> p.dv).toMap)
     }
     assert(e.getMessage.contains("re-vectored"))

@@ -5,6 +5,8 @@
 # Usage: tools/ab_bench.sh <alt-classes-dir> <out.jsonl> [runs-per-arm]
 set -e
 ALT="$1"; OUT="$2"; RUNS="${3:-3}"
+# the repository root, from this script's own location (works on any copy)
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
 --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
@@ -23,7 +25,7 @@ run_one() {  # $1 = arm name, $2 = classes dir
   local line
   line=$(java $OPENS -Xmx8g -Dspark.ui.enabled=false \
     -Dspark.sql.session.timeZone=UTC \
-    -cp "$2:/root/repo/src/main/resources:/opt/spark/jars/*" \
+    -cp "$2:$ROOT/src/main/resources:/opt/spark/jars/*" \
     graft.Bench 2>/dev/null | grep '"metric"' | tail -1)
   # fail LOUDLY if the run produced no JSON (bad classpath, crash):
   # a silent half-line would poison the A/B instead of aborting it
@@ -35,7 +37,7 @@ run_one() {  # $1 = arm name, $2 = classes dir
 }
 sleep 45   # let the box cool before the first timed run
 for i in $(seq 1 "$RUNS"); do
-  run_one head /root/repo/target/scala-2.13/classes
+  run_one head "$ROOT/target/scala-2.13/classes"
   run_one alt  "$ALT"
 done
 echo DONE >> "$OUT"

@@ -2,6 +2,8 @@
 # Run a graft main class directly against compiled classes (fast dev loop —
 # avoids sbt startup). Usage: tools/run.sh graft.Verify <args...>
 set -e
+# the repository root, from this script's own location (works on any copy)
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
 --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
@@ -17,4 +19,4 @@ OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/root/repo/src/main/resources:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:/opt/spark/jars/*" "$@"
