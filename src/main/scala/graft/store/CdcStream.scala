@@ -115,7 +115,8 @@ object CdcStream {
     require(!queryId.exists(c => c.isWhitespace || c == ':'),
       s"queryId must be whitespace/colon-free: $queryId")
     require(keyCols.nonEmpty, "applyChangesOnce needs key columns")
-    if (batchId <= CommitLog.lastTxnBatch(spark, sinkTable, queryId)) return None
+    val snap = CommitLog.snapshot(spark, sinkTable)
+    if (batchId <= snap.lastTxnBatch(queryId)) return None
     val ct = col(CommitLog.ChangeTypeCol)
     val meta = Seq(CommitLog.ChangeTypeCol, "_commit_version")
     val w = org.apache.spark.sql.expressions.Window
@@ -130,7 +131,7 @@ object CdcStream {
     // deletionVectors: the sink applies the increment MERGE-ON-READ —
     // touched keys vector out instead of rewriting their files (the
     // 100 TB keyed-replication shape; absorb with OPTIMIZE)
-    CommitLog.keyedRewrite(spark, sinkTable, schema, keyCols,
+    CommitLog.keyedRewrite(spark, sinkTable, snap, schema, keyCols,
       deleteKeys = touchedKeys, appendDf = netInserts,
       opTag = Some(s"txn=$queryId:$batchId"), publisher = publisher,
       abortOnLostRace = batchId <= _.lastTxnBatch(queryId),

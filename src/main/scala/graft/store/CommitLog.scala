@@ -1035,8 +1035,6 @@ object CommitLog {
     val (entries, mapping) = (snap.live, snap.mapping)
     if (entries.isEmpty) return (Seq.empty, Seq.empty)
     requireBasenameSoundness(entries, s"predicate rewrite on $tablePath")
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
     val byName = entriesByName(entries)
     val matchedCounts: Map[String, Long] =
       visibleRows(spark, tablePath, schema, entries,
@@ -1049,17 +1047,9 @@ object CommitLog {
     val partial = partialMatches(affectedEntries, matchedCounts)
     val names =
       if (partial.isEmpty) Seq.empty[String] // every affected file drops whole
-      else {
-        val writerId = freshWriterId("w")
-        val staging =
-          new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-        toPhysical(visibleRows(spark, tablePath, schema, partial,
-          mapping = Some(mapping))
-          .filter(not(coalesce(predicate, lit(false)))), mapping)
-          .write.options(tableWriteOptions(snap.properties, mapping))
-          .parquet(staging.toString)
-        landStaged(fs, dir, staging, writerId)
-      }
+      else stage(visibleRows(spark, tablePath, schema, partial,
+          mapping = Some(mapping)).filter(not(coalesce(predicate, lit(false)))),
+        tablePath, mapping, tableWriteOptions(snap.properties, mapping))
     (affectedEntries, names)
   }
 
@@ -1375,10 +1365,29 @@ object CommitLog {
     (""""([^"\\]+)":\[(""" + StatsValuePat + """),(""" +
       StatsValuePat + """)\]""").r
 
+  /** THE write path of every file a logged-table verb lands (data,
+    * change and deletion-vector files): `df` is written with `options`
+    * under a fresh `_staging_<writerId>` dir, its columns renamed to
+    * their PHYSICAL names under `mapping`, then landed by
+    * [[landStaged]]. `mapping` and `options` come from the [[Snapshot]]
+    * the verb already holds, or from the schema its commit will
+    * declare — never from a second log read, so the files and the
+    * commit that publishes them describe one table state. `writer` is
+    * the id prefix: `w` for writes, `c` for maintenance rewrites. */
+  private[store] def stage(df: DataFrame, tablePath: String,
+      mapping: Map[String, String], options: Map[String, String] = Map.empty,
+      writer: String = "w"): Seq[String] = {
+    val dir = new org.apache.hadoop.fs.Path(tablePath)
+    val writerId = freshWriterId(writer)
+    val staging = new org.apache.hadoop.fs.Path(dir, s"_staging_$writerId")
+    toPhysical(df, mapping).write.options(options).parquet(staging.toString)
+    landStaged(fsOf(df.sparkSession, dir), dir, staging, writerId)
+  }
+
   /** Land a staged parquet write's part files in the table directory
     * under writer-unique names (still uncommitted — invisible until
-    * the caller's commit references them). The ONE landing protocol
-    * both append and compact use; vacuum keys on the name scheme. */
+    * the caller's commit references them). [[stage]] is its one engine
+    * caller; vacuum keys on the name scheme. */
   private[store] def landStaged(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, staging: org.apache.hadoop.fs.Path,
       writerId: String): Seq[String] = {
@@ -1522,55 +1531,22 @@ object CommitLog {
 
   /** Logged append: land the frame's part files under writer-unique
     * names, then publish them in one commit. Readers see all rows or
-    * none. Safe under arbitrary concurrent writers — no lock. */
+    * none. Safe under arbitrary concurrent writers — no lock.
+    * `writeOptions`: parquet writer knobs per append — the bloom-filter
+    * options (Bloom.writeWithBloomFilters' parquet.bloom.filter.*) are
+    * the intended use, making logged files probe-able by
+    * pruneByFooterStats' point-lookup path. */
   def append(df: DataFrame, tablePath: String,
       publisher: AtomicPublisher = RenameOrLinkPublisher,
       opTag: Option[String] = None,
       writeOptions: Map[String, String] = Map.empty,
       mergeSchema: Boolean = false): Long = {
-    val spark = df.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
-    // WRITE-PATH schema evolution (Delta's mergeSchema): widen/extend
-    // the schema LEDGER in the same commit as the data — the evolved
-    // `#schema=` header and the new files publish atomically, so a
-    // reader consulting schemaAt never sees files the recorded schema
-    // cannot describe. Existing files are untouched: add-column reads
-    // null-fill, widened reads upcast per file (the read contract).
-    val snap = snapshot(spark, tablePath) // one replay, every consumer
-    val props = snap.properties
-    // generated columns land BEFORE schema evolution sees the frame:
-    // a table-creating (or evolving) append that omits a generated
-    // column must still record it in the schema ledger
-    val dfG = withGenerated(df, props)
-    val cur = snap.schema
-    val next: Option[StructType] =
-      if (!mergeSchema) None
-      else {
-        val n = cur.fold(dfG.schema)(evolveSchema(_, dfG.schema, snap.burned))
-        if (cur.exists(sameShape(_, n))) None else Some(n)
-      }
-    val evolved = next.map(_.json)
-    // write under the mapping the COMMIT will declare (the evolved
-    // schema's, when this append evolves it)
-    val mapping = next.orElse(cur).map(columnMapping).getOrElse(Map.empty)
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    // writeOptions: parquet writer knobs per append — the bloom-filter
-    // options (Bloom.writeWithBloomFilters' parquet.bloom.filter.*) are
-    // the intended use, making logged files probe-able by
-    // pruneByFooterStats' point-lookup path
-    val cs = snap.constraints
-    toPhysical(enforcedWith(clusteredForWrite(dfG, props), cs), mapping).write
-      .options(tableWriteOptions(props, mapping, writeOptions))
-      .parquet(staging.toString)
-    val names = landStaged(fs, dir, staging, writerId)
-    val v = commit(spark, tablePath, adds = names, publisher = publisher,
-      opTag = opTag,
-      addStats = statsFor(spark, tablePath, names), schemaJson = evolved,
-      constraintsExpect = Some(cs),
-      schemaExpect = if (evolved.isDefined) Some(cur.map(_.json)) else None)
-    maybeAutoCompact(spark, tablePath, props)
+    val snap = snapshot(df.sparkSession, tablePath) // one replay, every consumer
+    val v = appendOrAbort(df, tablePath, snap, publisher, opTag,
+      abortOnLostRace = _ => false, writeOptions = writeOptions,
+      mergeSchema = mergeSchema)
+      .getOrElse(snap.version) // nothing to publish
+    maybeAutoCompact(df.sparkSession, tablePath, snap.properties)
     v
   }
 
@@ -1591,8 +1567,6 @@ object CommitLog {
       publisher: AtomicPublisher = RenameOrLinkPublisher,
       writeOptions: Map[String, String] = Map.empty): Long = {
     val spark = df.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
     val snap = snapshot(spark, tablePath)
     val (version, live) = (snap.version, snap.live.map(_.name))
     val props = snap.properties
@@ -1608,13 +1582,9 @@ object CommitLog {
     }
     val restamp = restamped.map(_.json)
     val mapping = restamped.orElse(cur).map(columnMapping).getOrElse(Map.empty)
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
     val cs = snap.constraints
-    toPhysical(enforcedWith(clusteredForWrite(dfG, props), cs), mapping).write
-      .options(tableWriteOptions(props, mapping, writeOptions))
-      .parquet(staging.toString)
-    val names = landStaged(fs, dir, staging, writerId)
+    val names = stage(enforcedWith(clusteredForWrite(dfG, props), cs), tablePath,
+      mapping, tableWriteOptions(props, mapping, writeOptions))
     if (names.isEmpty && live.isEmpty) return version // nothing to publish
     // no removeDvExpect: an overwrite's adds derive from the NEW frame,
     // not the removed files' rows, so a concurrently attached vector on
@@ -1664,12 +1634,12 @@ object CommitLog {
   def replaceWhere(df: DataFrame, tablePath: String,
       predicate: org.apache.spark.sql.Column,
       publisher: AtomicPublisher = RenameOrLinkPublisher,
-      writeOptions: Map[String, String] = Map.empty): Long =
-    replaceWhereCore(df, tablePath, predicate, publisher, writeOptions,
+      writeOptions: Map[String, String] = Map.empty): Long = {
+    val snap = snapshot(df.sparkSession, tablePath)
+    replaceWhereCore(df, tablePath, snap, predicate, publisher, writeOptions,
       opTag = "replaceWhere", abortOnLostRace = _ => false)
-      // nets-to-nothing: report the current version without a second
-      // log replay (one directory listing, not a fold)
-      .getOrElse(latestVersion(df.sparkSession, tablePath))
+      .getOrElse(snap.version) // nets to nothing
+  }
 
   /** EXACTLY-ONCE streaming replaceWhere — [[appendOnce]]'s txn-ledger
     * fence applied to the backfill verb: a `foreachBatch` loop that
@@ -1689,17 +1659,13 @@ object CommitLog {
       publisher: AtomicPublisher = RenameOrLinkPublisher): Option[Long] = {
     require(!queryId.exists(c => c.isWhitespace || c == ':'),
       s"queryId must be whitespace/colon-free: $queryId")
-    val spark = df.sparkSession
-    if (batchId <= lastTxnBatch(spark, tablePath, queryId)) return None
-    replaceWhereCore(df, tablePath, predicate, publisher,
+    val snap = snapshot(df.sparkSession, tablePath)
+    if (batchId <= snap.lastTxnBatch(queryId)) return None
+    replaceWhereCore(df, tablePath, snap, predicate, publisher,
       writeOptions = Map.empty, opTag = s"txn=$queryId:$batchId",
       abortOnLostRace = batchId <= _.lastTxnBatch(queryId))
   }
 
-  /** [[replaceWhere]]'s engine, fence-parameterized: None when the
-    * operation nets to nothing (no incoming rows, no matching old
-    * rows) or when a lost publish race re-evaluates `abortOnLostRace`
-    * to true (the staged files become vacuum-eligible orphans). */
   /** Refuse a nondeterministic predicate for the row-level verbs that
     * evaluate it MORE THAN ONCE (match-count probe, then straggler
     * rewrite / CDC images): rand()-style sampling would silently
@@ -1725,18 +1691,21 @@ object CommitLog {
         s"result each time: $expr")
   }
 
+  /** [[replaceWhere]]'s engine over the caller's `snap`,
+    * fence-parameterized: None when the operation nets to nothing (no
+    * incoming rows, no matching old rows) or when a lost publish race
+    * re-evaluates `abortOnLostRace` to true (the staged files become
+    * vacuum-eligible orphans). */
   private def replaceWhereCore(df: DataFrame, tablePath: String,
+      snap: Snapshot,
       predicate: org.apache.spark.sql.Column,
       publisher: AtomicPublisher,
       writeOptions: Map[String, String],
       opTag: String,
       abortOnLostRace: Snapshot => Boolean): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, concat, lit, not,
+    import org.apache.spark.sql.functions.{coalesce, col, concat, lit,
       raise_error, struct, to_json, when}
     val spark = df.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
-    val snap = snapshot(spark, tablePath)
     val entries = snap.live
     val props = snap.properties
     val dfG = withGenerated(df, props)
@@ -1763,12 +1732,8 @@ object CommitLog {
           to_json(struct(dfG.columns.map(col).toIndexedSeq: _*)))))
           .otherwise(lit(null).cast("string")))
       .filter(col(guard).isNull).drop(guard)
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    toPhysical(enforcedWith(clusteredForWrite(guarded, props), cs), mapping)
-      .write.options(tableWriteOptions(props, mapping, writeOptions))
-      .parquet(staging.toString)
-    val newNames = landStaged(fs, dir, staging, writerId)
+    val newNames = stage(enforcedWith(clusteredForWrite(guarded, props), cs),
+      tablePath, mapping, tableWriteOptions(props, mapping, writeOptions))
     // old side: deleteWhere's shared probe + file-drop classification
     // + straggler rewrite, over this write's snapshot
     val (affectedEntries, rewriteNames) =
@@ -1786,7 +1751,7 @@ object CommitLog {
         .withColumn(ChangeTypeCol, lit("insert")))
     val cdc = (preImages.toSeq ++ postImages.toSeq)
       .reduceOption(_.unionByName(_))
-    val cdcNames = cdc.map(landChangeFiles(spark, tablePath, _))
+    val cdcNames = cdc.map(landChangeFiles(tablePath, _, mapping))
       .getOrElse(Seq.empty)
     val adds = newNames ++ rewriteNames
     // deleteWhere's self-describing stamp: a replace that empties an
@@ -1807,36 +1772,59 @@ object CommitLog {
       constraintsExpect = Some(cs))
   }
 
-  /** [[append]] with the zombie-fencing hook of [[commitOrAbort]]:
-    * None when a lost publish race re-evaluates `abortOnLostRace` to
-    * true (the staged files become vacuum-eligible orphans). The
-    * consumed=-ledger writers (IncrementalView / CdcStream) ride this
-    * the way appendOnce rides the txn= ledger. */
+  /** THE append core — every verb that lands NEW rows without
+    * restating old ones ([[append]], [[appendOnce]], a keyed rewrite
+    * that matched nothing, IncrementalView's refresh and rebuild):
+    * the new-row chain (generated columns → declared clustering →
+    * CHECK constraints, in that order) staged under `snap`'s
+    * properties and mapping, published in one commit fenced by
+    * `abortOnLostRace`. None when a lost publish race re-evaluates the
+    * fence to true (the staged files become vacuum-eligible orphans)
+    * or when there is nothing to publish (no files landed, nothing
+    * removed, no schema stamped). `removes` replaces those files in
+    * the same commit (rebuild). The constraint set enforced is the one
+    * the commit fences on.
+    *
+    * WRITE-PATH schema evolution (Delta's mergeSchema): `mergeSchema`
+    * widens/extends the schema LEDGER from the frame, or `schemaJson`
+    * is a schema the caller already evolved; either way the evolved
+    * `#schema=` header and the new files publish atomically, so a
+    * reader consulting schemaAt never sees files the recorded schema
+    * cannot describe, and the files are written under the mapping
+    * that commit declares. Existing files are untouched: add-column
+    * reads null-fill, widened reads upcast per file (the read
+    * contract). */
   private[store] def appendOrAbort(df: DataFrame, tablePath: String,
-      publisher: AtomicPublisher, opTag: Option[String],
+      snap: Snapshot, publisher: AtomicPublisher, opTag: Option[String],
       abortOnLostRace: Snapshot => Boolean,
+      writeOptions: Map[String, String] = Map.empty,
+      mergeSchema: Boolean = false,
       schemaJson: Option[String] = None,
-      schemaExpect: Option[Option[String]] = None): Option[Long] = {
+      removes: Seq[String] = Seq.empty): Option[Long] = {
     val spark = df.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    val snap = snapshot(spark, tablePath)
-    val cs = snap.constraints
-    val mapping = schemaJson
-      .map(j => columnMapping(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType]))
-      .getOrElse(snap.mapping)
     val props = snap.properties
-    toPhysical(enforcedWith(
-      clusteredForWrite(withGenerated(df, props), props), cs), mapping).write
-      .options(tableWriteOptions(props, mapping)).parquet(staging.toString)
-    val names = landStaged(fs, dir, staging, writerId)
-    commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
+    // generated columns land BEFORE schema evolution sees the frame:
+    // a table-creating (or evolving) append that omits a generated
+    // column must still record it in the schema ledger
+    val dfG = withGenerated(df, props)
+    val cur = snap.schema
+    val evolved: Option[StructType] = schemaJson
+      .map(org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[StructType])
+      .orElse(if (!mergeSchema) None else {
+        val n = cur.fold(dfG.schema)(evolveSchema(_, dfG.schema, snap.burned))
+        if (cur.exists(sameShape(_, n))) None else Some(n)
+      })
+    val mapping = evolved.orElse(cur).map(columnMapping).getOrElse(Map.empty)
+    val cs = snap.constraints
+    val names = stage(enforcedWith(clusteredForWrite(dfG, props), cs), tablePath,
+      mapping, tableWriteOptions(props, mapping, writeOptions))
+    val stamp = schemaJson.orElse(evolved.map(_.json))
+    if (names.isEmpty && removes.isEmpty && stamp.isEmpty) return None
+    commitOrAbort(spark, tablePath, adds = names, removes = removes,
       publisher = publisher, opTag = opTag, abortOnLostRace = abortOnLostRace,
-      addStats = statsFor(spark, tablePath, names), schemaJson = schemaJson,
-      constraintsExpect = Some(cs), schemaExpect = schemaExpect)
+      addStats = statsFor(spark, tablePath, names), schemaJson = stamp,
+      constraintsExpect = Some(cs),
+      schemaExpect = if (stamp.isDefined) Some(cur.map(_.json)) else None)
   }
 
   /** Snapshot read of the live file set (empty frame with `schema` for
@@ -2031,8 +2019,6 @@ object CommitLog {
     val paths = files.map(f => resolveDataPath(tablePath, f))
     val totalBytes = paths.map(p => fs.getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val writerId = freshWriterId("c")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
     // DV ABSORPTION: the rewrite reads VISIBLE rows, so attached
     // deletion vectors are folded into clean files here and their
     // attachments die with the removed inputs (the vector parquets
@@ -2049,11 +2035,9 @@ object CommitLog {
     // parquet bloom-filter knobs through the rewrite: a bloom-indexed
     // table must not silently LOSE its point-lookup index to
     // maintenance (the pruneByFooterStats probe path reads them)
-    toPhysical(ZOrder.layout(visibleRows(spark, tablePath, schema, entries,
-        mapping = Some(snap.mapping)), nOut, clusterBy), snap.mapping)
-      .write.options(tableWriteOptions(snap.properties, snap.mapping, writeOptions))
-      .parquet(staging.toString)
-    val names = landStaged(fs, dir, staging, writerId)
+    val names = stage(ZOrder.layout(visibleRows(spark, tablePath, schema, entries,
+        mapping = Some(snap.mapping)), nOut, clusterBy), tablePath, snap.mapping,
+      tableWriteOptions(snap.properties, snap.mapping, writeOptions), writer = "c")
     // commit() validates `files` against the live set (and each removed
     // file's DV attachment against what this rewrite planned from) and
     // throws on a concurrent rewrite or delete — never a silent table
@@ -2153,13 +2137,9 @@ object CommitLog {
     val nOut = math.max(1L, math.min(math.min(
       (totalBytes + targetBytes - 1) / targetBytes,
       candidates.size.toLong), 10000L)).toInt
-    val writerId = freshWriterId("c")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    toPhysical(ZOrder.layout(visibleRows(spark, tablePath, schema, candidates,
-        mapping = Some(mapping)), nOut, clusterBy), mapping)
-      .write.options(tableWriteOptions(snap.properties, mapping, writeOptions))
-      .parquet(staging.toString)
-    val names = landStaged(fs, dir, staging, writerId)
+    val names = stage(ZOrder.layout(visibleRows(spark, tablePath, schema, candidates,
+        mapping = Some(mapping)), nOut, clusterBy), tablePath, mapping,
+      tableWriteOptions(snap.properties, mapping, writeOptions), writer = "c")
     commit(spark, tablePath, adds = names, removes = candidates.map(_.name),
       publisher = publisher, addStats = statsFor(spark, tablePath, names),
       removeDvExpect = candidates.map(e => e.name -> e.dv).toMap)
@@ -2236,8 +2216,12 @@ object CommitLog {
     * rides the write plan as a raise_error projection (the CHECK
     * constraint mechanism), so it costs no second pass.
     *
-    * Applied on EVERY row-writing path (append/overwrite, streaming
-    * appendOnce, appendOrAbort, DML post-images, merge writes).
+    * Applied on EVERY row-writing path: the append core
+    * [[appendOrAbort]] (append, appendOnce, a keyed rewrite that
+    * matched nothing, view refresh and rebuild), overwrite,
+    * replaceWhere, UPDATE post-images and merge writes (keyed and
+    * clause) — each stages its rows through [[stage]] under its
+    * Snapshot's mapping.
     * Consequence for UPDATE/MERGE: an assignment that changes an
     * input of the expression without restating the generated column
     * consistently FAILS rather than silently keeping the stale value
@@ -2803,28 +2787,14 @@ object CommitLog {
     val spark = df.sparkSession
     val snap = snapshot(spark, tablePath)
     if (batchId <= snap.lastTxnBatch(queryId)) return None
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    val cs = snap.constraints
-    val props = snap.properties
-    val mapping = snap.mapping
-    toPhysical(enforcedWith(
-      clusteredForWrite(withGenerated(df, props), props), cs), mapping).write
-      .options(tableWriteOptions(props, mapping))
-      .parquet(staging.toString)
-    val names = landStaged(fs, dir, staging, writerId)
-    // an EMPTY batch publishes nothing and records nothing: the ledger
-    // not advancing is safe because replaying an empty batch is a
-    // no-op, and "empty commit" is a protocol violation
-    if (names.isEmpty) return None
-    val won = commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
-      publisher = publisher, opTag = Some(s"txn=$queryId:$batchId"),
-      abortOnLostRace = batchId <= _.lastTxnBatch(queryId),
-      addStats = statsFor(spark, tablePath, names),
-      constraintsExpect = Some(cs))
-    if (won.isDefined) maybeAutoCompact(spark, tablePath, props)
+    // a batch that lands no file publishes nothing and records nothing
+    // (None from the core): the ledger not advancing is safe because
+    // replaying an empty batch is a no-op, and "empty commit" is a
+    // protocol violation
+    val won = appendOrAbort(df, tablePath, snap, publisher,
+      opTag = Some(s"txn=$queryId:$batchId"),
+      abortOnLostRace = batchId <= _.lastTxnBatch(queryId))
+    if (won.isDefined) maybeAutoCompact(spark, tablePath, snap.properties)
     won
   }
 
@@ -2866,7 +2836,7 @@ object CommitLog {
       throw new IllegalArgumentException(
         s"upsert batch has duplicate key(s), e.g. ${dup.head.toSeq.init.mkString(",")} — " +
           "an Update-mode state store emits one row per key; dedupe the batch")
-    val won = keyedRewrite(spark, tablePath, src.schema, keyCols,
+    val won = keyedRewrite(spark, tablePath, snap, src.schema, keyCols,
       deleteKeys = src, appendDf = src,
       opTag = Some(s"txn=$queryId:$batchId"), publisher = publisher,
       abortOnLostRace = batchId <= _.lastTxnBatch(queryId))
@@ -2932,9 +2902,9 @@ object CommitLog {
     // CDC pre-images cover matched rows of BOTH dropped and rewritten
     // files — a dropped file's rows are read once here (its only read)
     // so the change feed stays exact
-    val cdcNames = landChangeFiles(spark, tablePath,
-      affectedDf.filter(predicate)
-        .withColumn(ChangeTypeCol, lit("delete")))
+    val cdcNames = landChangeFiles(tablePath,
+      affectedDf.filter(predicate).withColumn(ChangeTypeCol, lit("delete")),
+      snap.mapping)
     // an EMPTYING delete on an un-ledgered table stamps the schema
     // ledger in the same commit: once the last data file drops there
     // is no footer left to infer a schema from, and a logged table
@@ -3000,8 +2970,9 @@ object CommitLog {
     val fresh = matched.select(col("_dv_f").as(DvFileCol), col("_dv_p").as(DvPosCol))
     val (dvAttach, dvExpect, dvCounts) =
       landVector(spark, tablePath, affectedEntries, fresh)
-    val cdcNames = landChangeFiles(spark, tablePath,
-      matched.drop("_dv_f", "_dv_p").withColumn(ChangeTypeCol, lit("delete")))
+    val cdcNames = landChangeFiles(tablePath,
+      matched.drop("_dv_f", "_dv_p").withColumn(ChangeTypeCol, lit("delete")),
+      snap.mapping)
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("delete"),
       abortOnLostRace = _ => false, changeAdds = cdcNames,
@@ -3021,14 +2992,10 @@ object CommitLog {
       affectedEntries: Seq[LiveEntry], fresh: DataFrame)
       : (Map[String, String], Map[String, Option[String]], Map[String, Long]) = {
     import org.apache.spark.sql.functions.col
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
     val cumulative = dvRows(spark, tablePath, affectedEntries.filter(_.dv.isDefined))
       .map(_.unionByName(fresh)).getOrElse(fresh)
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    cumulative.repartition(1).write.parquet(staging.toString)
-    val dvName = landStaged(fs, dir, staging, writerId) match {
+    // vector columns are engine-owned, never mapped
+    val dvName = stage(cumulative.repartition(1), tablePath, Map.empty) match {
       case Seq(one) => one
       case many => throw new IllegalStateException(
         s"deletion vector staged ${many.size} files, expected 1")
@@ -3074,8 +3041,6 @@ object CommitLog {
     require(unknown.isEmpty,
       s"UPDATE SET references unknown column(s) ${unknown.mkString(", ")} " +
         s"of $tablePath (${schema.fieldNames.mkString(", ")})")
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
     val snap = snapshot(spark, tablePath)
     val (version, entries) = (snap.version, snap.live)
     if (entries.isEmpty) return version
@@ -3115,15 +3080,12 @@ object CommitLog {
       val (dvAttach, dvExpect, dvCounts) = landVector(spark, tablePath,
         affected.map(byName), fresh)
       val postDf = matched.select(post: _*)
-      val writerId = freshWriterId("w")
-      val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
       val cs = snap.constraints
-      toPhysical(enforcedWith(withGenerated(postDf, snap.properties), cs), mapping)
-        .write.options(writeOptions).parquet(staging.toString)
-      val names = landStaged(fs, dir, staging, writerId)
-      val cdcNames = landChangeFiles(spark, tablePath,
+      val names = stage(enforcedWith(withGenerated(postDf, snap.properties), cs),
+        tablePath, mapping, writeOptions)
+      val cdcNames = landChangeFiles(tablePath,
         matched.drop("_uw_f", "_uw_p").withColumn(ChangeTypeCol, lit("delete"))
-          .unionByName(postDf.withColumn(ChangeTypeCol, lit("insert"))))
+          .unionByName(postDf.withColumn(ChangeTypeCol, lit("insert"))), mapping)
       return commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
         publisher = publisher, opTag = Some("update"),
         abortOnLostRace = _ => false, changeAdds = cdcNames,
@@ -3146,18 +3108,14 @@ object CommitLog {
     val rewritten = schema.fields.map(f =>
       when(hit, assignments.get(f.name).map(_.cast(f.dataType))
         .getOrElse(col(f.name))).otherwise(col(f.name)).as(f.name)).toIndexedSeq
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
     val cs = snap.constraints
-    toPhysical(enforcedWith(withGenerated(affectedDf.select(rewritten: _*),
-      snap.properties), cs), mapping)
-      .write.options(writeOptions).parquet(staging.toString)
-    val names = landStaged(fs, dir, staging, writerId)
-    val cdcNames = landChangeFiles(spark, tablePath,
+    val names = stage(enforcedWith(withGenerated(affectedDf.select(rewritten: _*),
+      snap.properties), cs), tablePath, mapping, writeOptions)
+    val cdcNames = landChangeFiles(tablePath,
       affectedDf.filter(predicate)
         .withColumn(ChangeTypeCol, lit("delete"))
         .unionByName(affectedDf.filter(predicate).select(post: _*)
-          .withColumn(ChangeTypeCol, lit("insert"))))
+          .withColumn(ChangeTypeCol, lit("insert"))), mapping)
     commit(spark, tablePath, adds = names, removes = affectedEntries.map(_.name),
       publisher = publisher, opTag = Some("update"), changeAdds = cdcNames,
       addStats = statsFor(spark, tablePath, names),
@@ -3172,21 +3130,17 @@ object CommitLog {
   val ChangeTypeCol = "_change_type"
 
   /** Land a CDC frame (`schema` + [[ChangeTypeCol]]) as change files in
-    * the table directory: writer-unique names (collision-free on any
-    * store), invisible to scans until the caller's commit lists them
-    * under `~`. */
-  private[store] def landChangeFiles(spark: SparkSession, tablePath: String,
-      cdc: DataFrame): Seq[String] = {
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    // change files carry PHYSICAL column names like data files (the
-    // change-type tag is never a mapped column), so the feed reads one
-    // naming scheme across every file generation
-    toPhysical(cdc, mappingAt(spark, tablePath)).write.parquet(staging.toString)
-    landStaged(fs, dir, staging, writerId)
-  }
+    * the table directory through [[stage]]: writer-unique names
+    * (collision-free on any store), invisible to scans until the
+    * caller's commit lists them under `~`. Change files carry PHYSICAL
+    * column names like data files (the change-type tag is never a
+    * mapped column), so the feed reads one naming scheme across every
+    * file generation — which is why `mapping` must be the one the
+    * caller's commit declares: an evolving merge assigns fresh
+    * physicals that the table's current mapping does not know yet. */
+  private[store] def landChangeFiles(tablePath: String, cdc: DataFrame,
+      mapping: Map[String, String]): Seq[String] =
+    stage(cdc, tablePath, mapping)
 
   /** Keyed upsert (MERGE): for every source row whose key matches a
     * live target row, the target row is REPLACED by the source row;
@@ -3258,12 +3212,11 @@ object CommitLog {
       throw new IllegalArgumentException(
         s"merge source has duplicate key(s), e.g. ${dup.head.toSeq.init.mkString(",")} — " +
           "which duplicate wins is undefined; dedupe the source first")
-    if (src.isEmpty) return liveFiles(spark, tablePath)._1 // empty merge: no-op
-    keyedRewrite(spark, tablePath, opSchema, keyCols,
+    if (src.isEmpty) return snap.version // empty merge: no-op
+    keyedRewrite(spark, tablePath, snap, opSchema, keyCols,
       deleteKeys = src, appendDf = src, opTag = Some("merge"),
       publisher = publisher, schemaJson = schemaTag,
-      deletionVectors = deletionVectors,
-      schemaExpect = if (schemaTag.isDefined) Some(ledger.map(_.json)) else None)
+      deletionVectors = deletionVectors)
       .getOrElse(throw new IllegalStateException("unreachable: unfenced merge"))
   }
 
@@ -3313,14 +3266,15 @@ object CommitLog {
   private[store] val BloomProbeMaxKeys = 10000
   private[store] def pruneByFooterStats(spark: SparkSession, tablePath: String,
       files: Seq[String], keyCols: Seq[String], src: DataFrame,
+      mapping: Map[String, String],
       alwaysAll: Boolean = false,
       logStats: Map[String, String] = Map.empty): Seq[String] = {
     import org.apache.spark.sql.functions.{col, max, min}
     if (alwaysAll || files.isEmpty) return files
     val conf = spark.sparkContext.hadoopConfiguration
-    // column mapping: log stats and footers are keyed by PHYSICAL
-    // names; the probe's key columns are logical
-    val mapping = mappingAt(spark, tablePath)
+    // column mapping (the snapshot's that `files` came from): log stats
+    // and footers are keyed by PHYSICAL names; the probe's key columns
+    // are logical
     def physK(k: String): String = mapping.getOrElse(k, k)
     // source key envelope: one row, 2×|keys| columns
     val aggs = keyCols.flatMap(k =>
@@ -3465,45 +3419,52 @@ object CommitLog {
     * appears in `deleteKeys`, (2) append `appendDf`, (3) materialize
     * CDC (removed pre-images as `delete`, appended rows as `insert`),
     * all in one optionally-tagged commit. Files without a matching key
-    * are never rewritten (pruning scan); a no-match-no-append call is
-    * a no-op. */
+    * are never rewritten (pruning scan); a call that matches nothing
+    * is a plain [[appendOrAbort]]. Everything is planned, staged and
+    * fenced on the caller's `snap`: probes read under its mapping, and
+    * data and CDC files land under the mapping the commit declares
+    * (`schemaJson`'s, when an evolving merge stamps one — fresh
+    * physicals for new columns — else `snap`'s). */
   private[store] def keyedRewrite(spark: SparkSession, tablePath: String,
+      snap: Snapshot,
       schema: StructType, keyCols: Seq[String], deleteKeys: DataFrame,
       appendDf: DataFrame, opTag: Option[String],
       publisher: AtomicPublisher,
       abortOnLostRace: Snapshot => Boolean = _ => false,
       schemaJson: Option[String] = None,
-      deletionVectors: Boolean = false,
-      schemaExpect: Option[Option[String]] = None): Option[Long] = {
+      deletionVectors: Boolean = false): Option[Long] = {
     import org.apache.spark.sql.functions.{col, lit}
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
-    val snap = snapshot(spark, tablePath)
     val liveEntries = snap.live
     val mapping = Some(snap.mapping)
     requireBasenameSoundness(liveEntries, s"keyed rewrite on $tablePath")
-    val filesWithStats = liveEntries.map(e => (e.name, e.stats))
     val entryByName = entriesByName(liveEntries)
-    val files = filesWithStats.map(_._1)
     // the key set drives five jobs (stats envelope, bloom key collect,
     // affected-file probe, the anti-join rewrite, the CDC semi-join) —
     // materialize it once, increment-sized (the merge-source
     // single-evaluation discipline, applied to the keys)
     val keyD = deleteKeys.select(keyCols.map(col): _*).distinct()
       .localCheckpoint(true)
-    val cols = schema.fieldNames.map(col).toSeq
+    val appendRows = appendDf.select(schema.fieldNames.map(col).toSeq: _*)
+    // nothing matched: the operation degenerates to a plain append
+    // (still tagged, still fenced). An EMPTY append still commits —
+    // a tagged caller (view refresh riding a consumed= tag) must
+    // advance its checkpoint even when the increment nets to
+    // nothing, or it reprocesses the same increment forever.
+    def appendOnly = appendOrAbort(appendRows, tablePath, snap, publisher,
+      opTag, abortOnLostRace, schemaJson = schemaJson)
     // appended rows are NEW values: active CHECK constraints ride their
     // write plan (survivor restatements are valid by induction); the
     // captured set doubles as the commit-time constraint fence
     val cs = snap.constraints
-    val app = enforcedWith(withGenerated(appendDf.select(cols: _*), snap.properties), cs)
+    val app = enforcedWith(withGenerated(appendRows, snap.properties), cs)
     // write under the mapping the commit will declare (an evolving
     // merge's schemaJson may assign fresh physicals to new columns)
     val writeMapping = schemaJson
       .map(j => columnMapping(org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[StructType]))
       .getOrElse(snap.mapping)
-    val writeOptions = tableWriteOptions(snap.properties, snap.mapping)
+    val writeOptions = tableWriteOptions(snap.properties, writeMapping)
+    val schemaExpect = schemaJson.map(_ => snap.schema.map(_.json))
     // stats-based skipping first: files whose LOG-carried min/max (or,
     // fallback, footer min/max + bloom filters) prove no key can match
     // never enter the probe scan — on a clustered table an
@@ -3511,9 +3472,10 @@ object CommitLog {
     // in (MergePruneSpec pins fewer-files-than-live-set and the
     // footer-free log path)
     val candidates =
-      if (files.isEmpty) Seq.empty
-      else pruneByFooterStats(spark, tablePath, files, keyCols, keyD,
-        logStats = filesWithStats.collect { case (n, Some(s)) => n -> s }.toMap)
+      if (liveEntries.isEmpty) Seq.empty
+      else pruneByFooterStats(spark, tablePath, liveEntries.map(_.name), keyCols, keyD,
+        snap.mapping,
+        logStats = liveEntries.collect { case LiveEntry(n, Some(s), _, _) => n -> s }.toMap)
     if (deletionVectors && candidates.nonEmpty) {
       // MERGE-ON-READ upsert: vector out the matched target positions
       // and append the source alongside — no affected-file rewrite at
@@ -3528,21 +3490,15 @@ object CommitLog {
         .localCheckpoint(true)
       val affectedMor = matched.select(col("_kr_f")).distinct()
         .collect().map(_.getString(0)).toSeq
-      if (affectedMor.isEmpty)
-        return appendOrAbort(app, tablePath, publisher, opTag, abortOnLostRace,
-          schemaJson = schemaJson, schemaExpect = schemaExpect)
+      if (affectedMor.isEmpty) return appendOnly
       val fresh = matched.select(col("_kr_f").as(DvFileCol),
         col("_kr_p").as(DvPosCol))
       val (dvAttach, dvExpect, dvCounts) = landVector(spark, tablePath,
         affectedMor.map(entryByName), fresh)
-      val writerId = freshWriterId("w")
-      val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-      toPhysical(app, writeMapping).write.options(writeOptions)
-        .parquet(staging.toString)
-      val names = landStaged(fs, dir, staging, writerId)
-      val cdcNames = landChangeFiles(spark, tablePath,
+      val names = stage(app, tablePath, writeMapping, writeOptions)
+      val cdcNames = landChangeFiles(tablePath,
         matched.drop("_kr_f", "_kr_p").withColumn(ChangeTypeCol, lit("delete"))
-          .unionByName(app.withColumn(ChangeTypeCol, lit("insert"))))
+          .unionByName(app.withColumn(ChangeTypeCol, lit("insert"))), writeMapping)
       return commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
         publisher = publisher, opTag = opTag, abortOnLostRace = abortOnLostRace,
         changeAdds = cdcNames, addStats = statsFor(spark, tablePath, names),
@@ -3568,15 +3524,7 @@ object CommitLog {
           .groupBy(col("_kr_file")).count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
-    if (matchedCounts.isEmpty) {
-      // nothing matched: the operation degenerates to a plain append
-      // (still tagged, still fenced). An EMPTY append still commits —
-      // a tagged caller (view refresh riding a consumed= tag) must
-      // advance its checkpoint even when the increment nets to
-      // nothing, or it reprocesses the same increment forever.
-      return appendOrAbort(app, tablePath, publisher, opTag, abortOnLostRace,
-        schemaJson = schemaJson, schemaExpect = schemaExpect)
-    }
+    if (matchedCounts.isEmpty) return appendOnly
     val affectedEntries = matchedCounts.keys.toSeq.sorted.map(entryByName)
     // a file whose every visible row's key is in the delete set DROPS
     // as a pure log line (a merge re-landing a whole aligned slice
@@ -3588,15 +3536,11 @@ object CommitLog {
       if (partial.isEmpty) app
       else visibleRows(spark, tablePath, schema, partial, mapping = mapping)
         .join(keyD, keyCols, "left_anti").unionByName(app)
-    val writerId = freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
-    toPhysical(restate, writeMapping).write.options(writeOptions)
-      .parquet(staging.toString)
-    val names = landStaged(fs, dir, staging, writerId)
-    val cdcNames = landChangeFiles(spark, tablePath,
+    val names = stage(restate, tablePath, writeMapping, writeOptions)
+    val cdcNames = landChangeFiles(tablePath,
       aff.join(keyD, keyCols, "left_semi")
         .withColumn(ChangeTypeCol, lit("delete"))
-        .unionByName(app.withColumn(ChangeTypeCol, lit("insert"))))
+        .unionByName(app.withColumn(ChangeTypeCol, lit("insert"))), writeMapping)
     commitOrAbort(spark, tablePath, adds = names,
       removes = affectedEntries.map(_.name),
       publisher = publisher, opTag = opTag, abortOnLostRace = abortOnLostRace,

@@ -68,7 +68,10 @@ object IncrementalView {
       keyCols: Option[Seq[String]] = None,
       maxVersions: Option[Long] = None): Option[Long] = {
     import org.apache.spark.sql.functions.{col, row_number, when}
-    val since = lastConsumed(spark, viewTable)
+    // one view Snapshot: the consumed ledger read here, and the mapping,
+    // properties and constraints every file this refresh lands uses
+    val snap = CommitLog.snapshot(spark, viewTable)
+    val since = snap.consumed
     val (latest, _) = CommitLog.liveFiles(spark, srcTable)
     if (latest == since) return None
     // `maxVersions` bounds one refresh to a version window — the
@@ -105,7 +108,7 @@ object IncrementalView {
       .limit(1).count() > 0
     if (!hasDeletes) {
       val committed = CommitLog.appendOrAbort(
-        transform(feed.drop(meta: _*)), viewTable,
+        transform(feed.drop(meta: _*)), viewTable, snap,
         publisher, opTag = Some(s"$TagPrefix$srcVersion"),
         abortOnLostRace = fence)
       // an abort means a concurrent refresh moved the ledger while we
@@ -136,7 +139,7 @@ object IncrementalView {
     // retract the pre-image the view holds
     val touchedKeys = last.select(keys.map(col): _*)
     val netInserts = transform(last.filter(ct === "insert").drop(meta: _*))
-    val committed = CommitLog.keyedRewrite(spark, viewTable,
+    val committed = CommitLog.keyedRewrite(spark, viewTable, snap,
       netInserts.schema, keys,
       deleteKeys = touchedKeys, appendDf = netInserts,
       opTag = Some(s"$TagPrefix$srcVersion"), publisher = publisher,
@@ -148,24 +151,24 @@ object IncrementalView {
   /** Re-bootstrap from a full snapshot read — the recovery path after
     * a source DELETE (or any feed gap): the view is REWRITTEN to
     * transform(snapshot) in one atomic commit that also re-bases the
-    * checkpoint at the snapshot's version. */
+    * checkpoint at the snapshot's version. The rebuilt rows obey the
+    * view's own write rules (column mapping, generated columns,
+    * clustering, CHECK constraints, bloom options) like any append. */
   def rebuild(spark: SparkSession, srcTable: String, srcSchema: StructType,
       viewTable: String, transform: DataFrame => DataFrame,
       publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
-    val (srcVersion, _) = CommitLog.liveFiles(spark, srcTable)
-    val snapshot = transform(CommitLog.read(spark, srcTable, srcSchema))
-    val dir = new org.apache.hadoop.fs.Path(viewTable)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = CommitLog.liveFiles(spark, viewTable)._2
+    // the source is read AT the version the tag records: a source
+    // commit landing in between would otherwise be in the rebuilt rows
+    // AND re-applied by the next refresh
+    val srcVersion = CommitLog.latestVersion(spark, srcTable)
+    val rows = transform(CommitLog.read(spark, srcTable, srcSchema, asOf = srcVersion))
     // land the rebuilt rows, then publish adds + removes-of-everything
     // as ONE commit: readers see the old view or the rebuilt view,
     // never a mix, and the tag re-bases the consumer checkpoint
-    val writerId = CommitLog.freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(viewTable, s"_staging_$writerId")
-    snapshot.write.parquet(staging.toString)
-    val names = CommitLog.landStaged(fs, dir, staging, writerId)
-    CommitLog.commit(spark, viewTable, adds = names, removes = old,
-      publisher = publisher, opTag = Some(s"$TagPrefix$srcVersion"),
-      addStats = CommitLog.statsFor(spark, viewTable, names))
+    val snap = CommitLog.snapshot(spark, viewTable)
+    CommitLog.appendOrAbort(rows, viewTable, snap, publisher,
+      opTag = Some(s"$TagPrefix$srcVersion"), abortOnLostRace = _ => false,
+      removes = snap.live.map(_.name))
+      .getOrElse(snap.version) // nothing to publish
   }
 }

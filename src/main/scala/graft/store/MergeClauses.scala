@@ -107,8 +107,6 @@ final class MergeClauses private (
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(matched.nonEmpty || insertClause.nonEmpty || bySourceDelete.nonEmpty,
       "merge with no clauses")
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = CommitLog.snapshot(spark, tablePath)
     val (version, liveEntries) = (snap.version, snap.live)
     val mapping = snap.mapping
@@ -161,7 +159,7 @@ final class MergeClauses private (
       if (files.isEmpty) Seq.empty
       else {
         val candidates = CommitLog.pruneByFooterStats(
-          spark, tablePath, files, keyCols, src,
+          spark, tablePath, files, keyCols, src, mapping,
           alwaysAll = bySourceDelete.nonEmpty,
           logStats = filesWithStats.collect { case (n, Some(s)) => n -> s }.toMap)
         if (candidates.isEmpty) Seq.empty
@@ -276,9 +274,13 @@ final class MergeClauses private (
       case None => preImages.limit(0)
     }
     val cdc = preImages.unionByName(postImages).unionByName(insertImages)
-
-    val writerId = CommitLog.freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(tablePath, s"_staging_$writerId")
+    // same write discipline as every CommitLog path: constraints
+    // captured once (and fenced at commit), data and CDC files landed
+    // under the snapshot's PHYSICAL names on a mapped table
+    val cs = snap.constraints
+    def stageRows(rows: DataFrame): Seq[String] = CommitLog.stage(
+      CommitLog.enforcedWith(CommitLog.withGenerated(rows, snap.properties), cs),
+      tablePath, mapping, CommitLog.tableWriteOptions(snap.properties, mapping))
 
     if (deletionVectors) {
       // ── MERGE-ON-READ: vector out every claimed row (dropped or
@@ -304,17 +306,8 @@ final class MergeClauses private (
         case Some(ins) => postOnly.unionByName(ins)
         case None => postOnly
       }
-      // same write discipline as every CommitLog path: constraints
-      // captured once (and fenced at commit), columns landed under
-      // their PHYSICAL names on a mapped table
-      val cs = snap.constraints
-      CommitLog.toPhysical(
-        CommitLog.enforcedWith(CommitLog.withGenerated(addsDf, snap.properties), cs),
-        mapping).write
-        .options(CommitLog.tableWriteOptions(snap.properties, mapping))
-        .parquet(staging.toString)
-      val names = CommitLog.landStaged(fs, dir, staging, writerId)
-      val cdcNames = CommitLog.landChangeFiles(spark, tablePath, cdc)
+      val names = stageRows(addsDf)
+      val cdcNames = CommitLog.landChangeFiles(tablePath, cdc, mapping)
       return CommitLog.commitOrAbort(spark, tablePath, adds = names,
         removes = Seq.empty, publisher = publisher, opTag = Some("merge"),
         abortOnLostRace = _ => false, changeAdds = cdcNames,
@@ -329,14 +322,8 @@ final class MergeClauses private (
       case Some(ins) => rewritten.unionByName(ins)
       case None => rewritten
     }
-    val cs = snap.constraints
-    CommitLog.toPhysical(
-      CommitLog.enforcedWith(CommitLog.withGenerated(withInserts, snap.properties), cs),
-      mapping).write
-      .options(CommitLog.tableWriteOptions(snap.properties, mapping))
-      .parquet(staging.toString)
-    val names = CommitLog.landStaged(fs, dir, staging, writerId)
-    val cdcNames = CommitLog.landChangeFiles(spark, tablePath, cdc)
+    val names = stageRows(withInserts)
+    val cdcNames = CommitLog.landChangeFiles(tablePath, cdc, mapping)
     // removeDvExpect: a concurrent MOR delete re-vectoring an affected
     // file after this plan must fail the commit, not be resurrected
     CommitLog.commit(spark, tablePath, adds = names, removes = affected,

@@ -219,7 +219,7 @@ class CloneSpec extends SparkSpec {
     assert(ex.getMessage.contains("basename collision"), ex.getMessage)
     // the keyed-rewrite probe (merge/stream upsert path) refuses too
     val ex2 = intercept[IllegalArgumentException] {
-      CommitLog.keyedRewrite(spark, t, schema, Seq("id"),
+      CommitLog.keyedRewrite(spark, t, CommitLog.snapshot(spark, t), schema, Seq("id"),
         deleteKeys = Seq(1L).toDF("id"), appendDf = Seq(9L).toDF("id"),
         opTag = None, publisher = RenameOrLinkPublisher)
     }

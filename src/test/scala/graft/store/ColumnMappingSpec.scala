@@ -96,6 +96,23 @@ abstract class ColumnMappingBehavior(publisher: AtomicPublisher) extends SparkSp
     // and the physical name recorded for the new column is fresh
     val f = sch.fields.find(_.name == "src").get
     assert(CommitLog.physicalName(f) != "src")
+    // the same re-add through an evolving MERGE (one update, one
+    // insert): its commit declares the fresh physical, and the change
+    // feed's insert images must carry the source values the table does
+    CommitLog.dropColumn(spark, t, "src", publisher)
+    val beforeMerge = CommitLog.latestVersion(spark, t)
+    CommitLog.merge(spark, t, schemaOf(t),
+      Seq((3L, "t3", "upd"), (300L, "t300", "ins")).toDF("id", "text", "src"),
+      Seq("id"), publisher, mergeSchema = true)
+    val merged = schemaOf(t)
+    def bySrc(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "src").as[(Long, String)].collect().toMap
+    assert(bySrc(CommitLog.read(spark, t, merged).filter(col("id").isin(3L, 300L))) ==
+      Map(3L -> "upd", 300L -> "ins"))
+    val inserts = bySrc(CommitLog.changesSince(spark, t, beforeMerge, merged)
+      .filter(col(CommitLog.ChangeTypeCol) === "insert"))
+    assert(inserts == Map(3L -> "upd", 300L -> "ins"),
+      s"change feed insert images lost the re-added column: $inserts")
   }
 
   test("rename/drop refuse while constraints or bloom properties reference the column") {

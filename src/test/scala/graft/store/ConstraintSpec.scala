@@ -121,12 +121,7 @@ class ConstraintSpec extends SparkSpec {
     // it, and lands its staged files — but has not committed yet
     val readCs = CommitLog.constraintsAt(spark, t)
     assert(readCs.isEmpty)
-    val dir = new org.apache.hadoop.fs.Path(t)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val writerId = CommitLog.freshWriterId("w")
-    val staging = new org.apache.hadoop.fs.Path(t, s"_staging_$writerId")
-    Seq((-9L, "unvalidated")).toDF("id", "v").write.parquet(staging.toString)
-    val names = CommitLog.landStaged(fs, dir, staging, writerId)
+    val names = CommitLog.stage(Seq((-9L, "unvalidated")).toDF("id", "v"), t, Map.empty)
     // DDL lands while the write is in flight
     CommitLog.addConstraint(spark, t, "id_nonneg", "id >= 0")
     // the writer's commit re-checks the active set after deriving its
@@ -143,10 +138,7 @@ class ConstraintSpec extends SparkSpec {
     // a DROPPED constraint never invalidates already-validated rows:
     // the same expectation including a since-dropped entry still lands
     CommitLog.dropConstraint(spark, t, "id_nonneg")
-    val writer2 = CommitLog.freshWriterId("w")
-    val staging2 = new org.apache.hadoop.fs.Path(t, s"_staging_$writer2")
-    Seq((7L, "fine")).toDF("id", "v").write.parquet(staging2.toString)
-    val names2 = CommitLog.landStaged(fs, dir, staging2, writer2)
+    val names2 = CommitLog.stage(Seq((7L, "fine")).toDF("id", "v"), t, Map.empty)
     assert(CommitLog.commitOrAbort(spark, t, adds = names2, removes = Seq.empty,
       publisher = RenameOrLinkPublisher, opTag = None,
       abortOnLostRace = _ => false,

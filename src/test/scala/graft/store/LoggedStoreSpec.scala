@@ -830,6 +830,45 @@ abstract class LoggedStoreBehavior(publisher: AtomicPublisher) extends SparkSpec
     assert(CommitLog.read(spark, view, schema).count() == 25)
   }
 
+  test("incremental view: rebuild lands under the view's column mapping") {
+    val src = freshTable()
+    val view = freshTable()
+    val withV: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      _.withColumn("v", col("id") * 2)
+    append(spark.range(0, 10).toDF("id"), src)
+    IncrementalView.refresh(spark, src, schema, view, withV, publisher)
+    CommitLog.renameColumn(spark, view, "v", "w", publisher)
+    IncrementalView.rebuild(spark, src, schema, view,
+      withV.andThen(_.withColumnRenamed("v", "w")), publisher)
+    val sch = CommitLog.schemaAt(spark, view).get
+    assert(sch.fieldNames.toSeq == Seq("id", "w"))
+    val rows = CommitLog.read(spark, view, sch)
+    assert(rows.filter(col("w").isNull).count() == 0,
+      "rebuilt rows ignored the view's column mapping: the renamed column reads NULL")
+    assert(rows.as[(Long, Long)].collect().sorted
+      .sameElements((0L until 10L).map(i => (i, i * 2))))
+  }
+
+  test("incremental view: a rebuild violating the view's CHECK fails and publishes nothing") {
+    val src = freshTable()
+    val view = freshTable()
+    val ident: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      identity
+    append(spark.range(3, 5).toDF("id"), src)
+    IncrementalView.refresh(spark, src, schema, view, ident, publisher)
+    CommitLog.addConstraint(spark, view, "id_pos", "id > 0", publisher)
+    val before = CommitLog.latestVersion(spark, view)
+    val e = intercept[Exception] {
+      IncrementalView.rebuild(spark, src, schema, view,
+        _.select((col("id") - 7).as("id")), publisher) // -4, -3
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("CHECK constraint")), s"expected a CHECK violation, got: $e")
+    assert(CommitLog.latestVersion(spark, view) == before, "a refused rebuild published")
+    assert(CommitLog.read(spark, view, schema).as[Long].collect().sorted.sameElements(Seq(3L, 4L)))
+  }
+
   test("eight lockless concurrent writers: every row survives, versions serialize") {
     val t = freshTable()
     val threads = (0 until 8).map { i =>

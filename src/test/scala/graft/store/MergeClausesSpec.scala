@@ -232,7 +232,7 @@ class MergePruneSpec extends SparkSpec {
     assert(live.size == 3)
     val src = (1100L until 1150L).map(i => (i, "upd")).toDF("id", "v")
     val candidates = CommitLog.pruneByFooterStats(
-      spark, t, live, Seq("id"), src.select("id"))
+      spark, t, live, Seq("id"), src.select("id"), Map.empty)
     assert(candidates.size == 1,
       s"expected 1 candidate file from footer min/max, got ${candidates.size}")
     // the merge result is IDENTICAL to unpruned semantics, and the two
@@ -266,7 +266,7 @@ class MergePruneSpec extends SparkSpec {
     assert(Bloom.bloomColumns(spark, t).size == 2, "bloom filters missing from appends")
     val src = Seq((500L, "upd")).toDF("id", "v")
     val candidates = CommitLog.pruneByFooterStats(
-      spark, t, live, Seq("id"), src.select("id"))
+      spark, t, live, Seq("id"), src.select("id"), Map.empty)
     assert(candidates.size == 1,
       s"bloom probe should exclude the odd-only file, got ${candidates.size} candidates")
     // and the surviving candidate really is the even file (never a
@@ -311,21 +311,21 @@ class MergePruneSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val src = (1100L until 1150L).map(i => (i, "upd")).toDF("id", "v")
     val inRange = CommitLog.pruneByFooterStats(spark, t, live, Seq("id"),
-      src.select("id"),
+      src.select("id"), Map.empty,
       logStats = withStats.collect { case (n, Some(s)) => n -> s }.toMap)
     assert(inRange.size == 1)
     live.filterNot(inRange.contains).foreach { n =>
       fs.create(new org.apache.hadoop.fs.Path(t, n), true).close() // truncate to 0
     }
     val again = CommitLog.pruneByFooterStats(spark, t, live, Seq("id"),
-      src.select("id"),
+      src.select("id"), Map.empty,
       logStats = withStats.collect { case (n, Some(s)) => n -> s }.toMap)
     assert(again == inRange,
       "pruning consulted file bytes despite complete log stats")
     // WITHOUT log stats the same call keeps the unreadable files —
     // proving the fast path above really was footer-free
     val fallback = CommitLog.pruneByFooterStats(spark, t, live, Seq("id"),
-      src.select("id"))
+      src.select("id"), Map.empty)
     assert(fallback.size == 3, s"expected keep-on-unreadable, got $fallback")
   }
 
@@ -353,17 +353,17 @@ class MergePruneSpec extends SparkSpec {
     val live = CommitLog.liveFiles(spark, t)._2
     // empty source: no envelope evidence — keep everything
     assert(CommitLog.pruneByFooterStats(spark, t, live, Seq("id"),
-      Seq.empty[(Long, String)].toDF("id", "v").select("id")) == live)
+      Seq.empty[(Long, String)].toDF("id", "v").select("id"), Map.empty) == live)
     // multi-column key where each column's range overlaps: kept
     val t2 = freshTable()
     CommitLog.append((0L until 100L).map(i => (i, i % 7, "x")).toDF("a", "b", "v")
       .coalesce(1), t2)
     val live2 = CommitLog.liveFiles(spark, t2)._2
     val src2 = Seq((50L, 3L)).toDF("a", "b")
-    assert(CommitLog.pruneByFooterStats(spark, t2, live2, Seq("a", "b"), src2) == live2)
+    assert(CommitLog.pruneByFooterStats(spark, t2, live2, Seq("a", "b"), src2, Map.empty) == live2)
     // disjoint on one column of a multi-column key: skipped
     val src3 = Seq((5000L, 3L)).toDF("a", "b")
-    assert(CommitLog.pruneByFooterStats(spark, t2, live2, Seq("a", "b"), src3).isEmpty)
+    assert(CommitLog.pruneByFooterStats(spark, t2, live2, Seq("a", "b"), src3, Map.empty).isEmpty)
   }
 
   test("compound-key bloom: per-column probes intersect and beat range pruning alone") {
@@ -391,10 +391,10 @@ class MergePruneSpec extends SparkSpec {
       .coalesce(1), t2)
     val src = Seq((500L, 500L)).toDF("a", "b")
     assert(CommitLog.pruneByFooterStats(spark, t2,
-      CommitLog.liveFiles(spark, t2)._2, Seq("a", "b"), src).size == 2,
+      CommitLog.liveFiles(spark, t2)._2, Seq("a", "b"), src, Map.empty).size == 2,
       "range pruning alone cannot separate value-disjoint straddling files")
     // compound-key bloom probe: strictly fewer files than range alone
-    val candidates = CommitLog.pruneByFooterStats(spark, t, live, Seq("a", "b"), src)
+    val candidates = CommitLog.pruneByFooterStats(spark, t, live, Seq("a", "b"), src, Map.empty)
     assert(candidates.size == 1,
       s"compound-key bloom should exclude the odd-only file, got ${candidates.size}")
     assert(spark.read.parquet(s"$t/${candidates.head}")
@@ -433,7 +433,7 @@ class MergePruneSpec extends SparkSpec {
     // then INSERT a duplicate instead of updating
     val live = CommitLog.liveFiles(spark, t)._2
     val kept = CommitLog.pruneByFooterStats(spark, t, live, Seq("id"),
-      Seq((50L, "upd")).toDF("id", "v").select("id"))
+      Seq((50L, "upd")).toDF("id", "v").select("id"), Map.empty)
     assert(kept == live, "widened-key bloom probe pruned the matching INT32 file")
     CommitLog.merge(spark, t, widened,
       Seq((50L, "upd")).toDF("id", "v"), Seq("id"))
@@ -446,7 +446,7 @@ class MergePruneSpec extends SparkSpec {
     // provably cannot hold it (range stats already say so; the bloom
     // path must agree, not throw)
     assert(CommitLog.pruneByFooterStats(spark, t, live, Seq("id"),
-      Seq((Int.MaxValue.toLong + 10L, "x")).toDF("id", "v").select("id")).isEmpty)
+      Seq((Int.MaxValue.toLong + 10L, "x")).toDF("id", "v").select("id"), Map.empty).isEmpty)
   }
 
   test("string stats compare as UNSIGNED UTF-8 bytes — supplementary-plane keys never skip a match") {
@@ -461,7 +461,7 @@ class MergePruneSpec extends SparkSpec {
       .toDF("id", "v").coalesce(1), t)
     val live = CommitLog.liveFiles(spark, t)._2
     val kept = CommitLog.pruneByFooterStats(spark, t, live, Seq("id"),
-      Seq(smiley).toDF("id"))
+      Seq(smiley).toDF("id"), Map.empty)
     assert(kept == live,
       "UTF-16 ordering skipped the file containing the supplementary-plane key")
     val schema2 = Seq(("a", "b")).toDF("id", "v").schema
@@ -474,6 +474,6 @@ class MergePruneSpec extends SparkSpec {
     // and a genuinely-absent key still prunes the file (the unsigned
     // comparison keeps real skipping power, it does not blanket-keep)
     assert(CommitLog.pruneByFooterStats(spark, t, live, Seq("id"),
-      Seq("A").toDF("id")).isEmpty)
+      Seq("A").toDF("id"), Map.empty).isEmpty)
   }
 }
