@@ -1586,9 +1586,9 @@ object CorpusQueries {
       // two commits → two stats generations folded together
       CommitLog.append(a.filter(col("doc_id") % 2 === 0), table)
       CommitLog.append(a.filter(col("doc_id") % 2 === 1), table)
-      // through the FORMAT reader (GraftLogFileIndex carries the log
-      // stats the rewrite folds); CommitLog.read's visibleRows path is
-      // a plain parquet scan the rule correctly leaves alone
+      // through the FORMAT reader (its GraftLogFileIndex carries the
+      // log stats the rewrite folds; CommitLog.read's scan of this
+      // DV-free, unmapped table would fold the same way)
       val agg = s.read.format("graftlog").load(table)
         .agg(count(lit(1)).as("n_rows"),
           min("doc_id").as("lo_id"), max("doc_id").as("hi_id"),

@@ -6,31 +6,26 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
 /** The logged table as a STANDARD Spark batch relation:
-  * `spark.read.format("graftlog").load(tablePath)` — the batch
+  * `read.format("graftlog").load(tablePath)` — the batch
   * counterpart of [[GraftLogStreamProvider]], completing the "any
   * Spark API consumes the log" surface.
   *
-  * The scale feature is the [[GraftLogFileIndex]]: Catalyst hands the
-  * index the query's data predicates (the same seam Delta's
-  * TahoeLogFileIndex rides), and files whose LOG-CARRIED min/max
-  * stats refute them never enter the scan — the decision is made on
-  * the driver from commit-log metadata with ZERO file I/O. Everything
-  * downstream is Spark's native vectorized parquet path: pushed
-  * row-group filters, column pruning, whole-stage codegen — the index
-  * only shrinks the file list, it never touches row decoding.
-  *
-  * At 100 TB this is the difference between "scan 100k files and let
-  * row-group stats save you" and "open only the files a clustered
-  * key range can live in": a Z-ordered table answers a point/range
-  * query from increment-sized I/O regardless of table size, and
-  * `sizeInBytes` comes from the same snapshot so a dimension-sized
-  * logged table auto-broadcasts in joins.
+  * One Snapshot feeds the schema, the live set and the mapping. A
+  * DV-free, unmapped snapshot is served by the one scan path
+  * ([[CommitLog.scanRelation]]): a [[GraftLogFileIndex]] over the live
+  * set, so Catalyst's pushed data predicates skip files from
+  * LOG-CARRIED min/max stats before any file opens, and everything
+  * downstream is Spark's native vectorized parquet path (row-group
+  * filters, column pruning, whole-stage codegen). `sizeInBytes` comes from the
+  * same listing, so a dimension-sized logged table auto-broadcasts in
+  * joins. A snapshot carrying deletion vectors or a column mapping
+  * reads through [[GraftLogDvRelation]], whose scan is
+  * [[CommitLog.visibleRows]] over the same scan path.
   *
   * Time travel rides options: `versionAsOf` (commit version) or
   * `timestampAsOf` (epoch millis or ISO instant/`yyyy-MM-dd
@@ -55,35 +50,14 @@ private[graft] object GraftLogBatch {
       user: Option[StructType]): BaseRelation = {
     val path = graft.store.GraftSql.resolvePath(spark,
       GraftLogStreamProvider.pathOf(parameters))
-    val asOf = asOfVersion(spark, path, parameters)
-    // one snapshot feeds the schema, the live set and the mapping, so
-    // they describe one version even across a concurrent rename
-    val snap = CommitLog.snapshot(spark, path, asOf)
+    val snap = CommitLog.snapshot(spark, path, asOfVersion(spark, path, parameters))
     val schema = user.getOrElse(CommitLog.tableSchema(spark, path, snap))
-    // A snapshot carrying DELETION VECTORS cannot be served as a bare
-    // file relation — the vectored positions would resurrect. Until
-    // OPTIMIZE absorbs the vectors, such a snapshot reads through the
-    // DV-aware bridge relation (log-stats file skipping kept, pushed
-    // filters re-translated into the inner Catalyst plan); a vector-
-    // free snapshot keeps the zero-overhead HadoopFsRelation path.
-    // A COLUMN-MAPPED snapshot (renamed/dropped columns — files carry
-    // physical names) routes through the same bridge: a bare file
-    // relation has no projection hook to alias physical → logical.
+    // a bare file relation would resurrect vectored positions and has
+    // no projection hook to alias physical names back to logical ones
     val entries = snap.live
     if (entries.exists(_.dv.isDefined) || snap.mapping.nonEmpty)
-      return new GraftLogDvRelation(spark, path, nullify(schema), entries,
-        snap.mapping)
-    HadoopFsRelation(
-      location = new GraftLogFileIndex(spark, path, asOf, Some(snap)),
-      partitionSchema = StructType(Nil),
-      // nullable like Spark's own DataSource.resolveRelation makes
-      // user schemas for file sources: a column absent from an older
-      // file generation null-fills instead of tripping the vectorized
-      // reader's required-column check
-      dataSchema = nullify(schema),
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = parameters)(spark)
+      new GraftLogDvRelation(spark, path, nullify(schema), entries, snap.mapping)
+    else CommitLog.scanRelation(spark, path, entries, schema)
   }
 
   def write(spark: SparkSession, mode: SaveMode,
@@ -147,115 +121,115 @@ private[graft] object GraftLogBatch {
   }
   private[graft] def nullify(s: StructType): StructType =
     nullify(s: org.apache.spark.sql.types.DataType).asInstanceOf[StructType]
-
-  /** Schema at the snapshot — delegates to the ONE bootstrap rule
-    * ([[CommitLog.tableSchema]]: ledger first, newest-live-file
-    * inference otherwise). */
-  private[graft] def schemaFor(spark: SparkSession, path: String,
-      asOf: Long): StructType = CommitLog.tableSchema(spark, path, asOf)
 }
 
-/** Driver-side file skipping from commit-log metadata: the live file
-  * snapshot (taken once per relation, `asOf`-pinned for time travel)
-  * pairs each file with its log-carried column stats, and
-  * `listFiles` keeps only files no pushed data predicate refutes.
-  * Files committed without stats (or with stats a predicate can't be
-  * compared against) are always kept — pruning is an optimization,
-  * never a correctness input. */
+/** The file index of every logged-table scan, built only by
+  * [[CommitLog.scanRelation]]: an explicit list of log entries (a
+  * snapshot's live set or a subset of it, vector files, change files),
+  * each paired with its FileStatus and its log-carried column stats.
+  *
+  *  - Statuses come from ONE directory listing per distinct parent
+  *    ([[CommitLog.statusFor]]) taken when the index is built, never a
+  *    per-file call; a listed entry that is missing fails the planning
+  *    loudly ("… vacuumed …").
+  *  - `listFiles` keeps only the files no pushed data predicate
+  *    refutes. Stats are keyed by the names files carry (physical
+  *    names on a column-mapped table), which are the names of the
+  *    relation's dataSchema. Files without stats, or with stats a
+  *    predicate can't be compared against, are always kept — pruning
+  *    is an optimization, never a correctness input.
+  *  - `refresh()` re-lists the SAME entries. It never widens to a newer
+  *    or fuller snapshot: the CacheManager refreshes indexes by root
+  *    path, and a subset index (visibleRows' vector-free part) must
+  *    not pick up the files a deletion vector guards.
+  *  - Two indexes are equal when they cover the same files under the
+  *    same root (the InMemoryFileIndex contract), so exchange reuse and
+  *    cache lookups see through separately built scans of one set. */
 final class GraftLogFileIndex private[graft] (spark: SparkSession,
-    tablePath: String, asOf: Long, initial: Option[CommitLog.Snapshot])
+    tablePath: String, entries: Seq[CommitLog.LiveEntry],
+    listed: Option[Map[String, FileStatus]])
     extends FileIndex {
 
+  /** The live set at `asOf` (latest by default). */
   def this(spark: SparkSession, tablePath: String, asOf: Long = Long.MaxValue) =
-    this(spark, tablePath, asOf, None)
+    this(spark, tablePath, CommitLog.snapshot(spark, tablePath, asOf).live, None)
 
   private val root = new Path(tablePath)
 
-  @volatile private var snapshot: Seq[(FileStatus, Option[Map[String, (Any, Any)]])] =
-    load(initial.getOrElse(CommitLog.snapshot(spark, tablePath, asOf)))
+  private val paths = entries.map(e => CommitLog.resolveDataPath(tablePath, e.name))
 
-  private def load(snap: CommitLog.Snapshot)
-      : Seq[(FileStatus, Option[Map[String, (Any, Any)]])] = {
-    val withStats = snap.live.map(e => (e.name, e.stats))
-    if (withStats.isEmpty) Seq.empty
-    else {
-      // ONE directory listing PER DISTINCT PARENT (the table root,
-      // plus one per shallow-clone source holding absolute refs), not
-      // a getFileStatus per live file — at 100k files that is the
-      // difference between a few object-store LIST page walks and
-      // 100k HEAD round trips on the driver. Shared protocol
-      // (CommitLog.statusFor): only a MISSING parent is tolerated;
-      // transient listing failures propagate instead of mis-reporting
-      // every file as vacuumed.
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val resolved = withStats.map { case (name, j) =>
-        (CommitLog.resolveDataPath(tablePath, name), name, j) }
-      val statusOf: Map[String, FileStatus] =
-        CommitLog.statusFor(fs, tablePath, withStats.map(_._1))
-      // stats are keyed by PHYSICAL name; pushed filters are logical
-      val mapping = snap.mapping
-      resolved.map { case (abs, name, statsJson) =>
-        val st = statusOf.getOrElse(abs, throw new IllegalStateException(
-          s"live data file $name of $tablePath is missing — the snapshot " +
-            "predates the retention window (vacuumed), the table is corrupt, " +
-            "or a clone source was vacuumed from under this clone"))
-        (st, statsJson.map(j =>
-          CommitLog.statsToLogical(CommitLog.parseStatsJson(j), mapping)))
-      }
+  private lazy val key = (tablePath, paths.toSet)
+
+  @volatile private var statuses: Seq[FileStatus] = resolve(listed.getOrElse(list()))
+
+  private def list(): Map[String, FileStatus] = CommitLog.statusFor(
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration), tablePath,
+    entries.map(_.name))
+
+  private def resolve(status: Map[String, FileStatus]): Seq[FileStatus] =
+    entries.zip(paths).map { case (e, abs) =>
+      status.getOrElse(abs, throw new IllegalStateException(
+        s"live data file ${e.name} of $tablePath is missing — the snapshot " +
+          "predates the retention window (vacuumed), the table is corrupt, " +
+          "or a clone source was vacuumed from under this clone"))
     }
-  }
 
-  /** Per-live-file LOGICAL column stats at this index's snapshot
-    * (None = the file was committed without a stats suffix) — the
-    * metadata [[graft.store.GraftStatsAggRule]] folds to answer
-    * unfiltered COUNT/MIN/MAX without opening a single data file. */
-  private[graft] def fileStats: Seq[Option[Map[String, (Any, Any)]]] =
-    snapshot.map(_._2)
+  /** Per-file column stats (None = the file was committed without a
+    * stats suffix), keyed by the names the files carry — the metadata
+    * [[graft.store.GraftStatsAggRule]] folds to answer unfiltered
+    * COUNT/MIN/MAX without opening a single data file. */
+  private[graft] lazy val fileStats: Seq[Option[Map[String, (Any, Any)]]] =
+    entries.map(_.stats.map(CommitLog.parseStatsJson))
 
   override def rootPaths: Seq[Path] = Seq(root)
 
   override def partitionSchema: StructType = StructType(Nil)
 
-  override def refresh(): Unit =
-    snapshot = load(CommitLog.snapshot(spark, tablePath, asOf))
+  override def refresh(): Unit = statuses = resolve(list())
 
   override def inputFiles: Array[String] =
-    snapshot.map(_._1.getPath.toString).toArray
+    statuses.map(_.getPath.toString).toArray
 
-  /** Live bytes at the snapshot — feeds the optimizer's size estimate
-    * (broadcast-join decisions) from the same metadata pass. */
-  override def sizeInBytes: Long = snapshot.map(_._1.getLen).sum
+  override def sizeInBytes: Long = statuses.map(_.getLen).sum
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val translated = dataFilters.flatMap(e =>
       org.apache.spark.sql.graft.StreamingShim.translateFilter(e))
     val kept =
-      if (translated.isEmpty) snapshot
-      else snapshot.filter { case (_, stats) =>
-        stats.forall(m => translated.forall(f => StatsPruning.possible(m, f)))
+      if (translated.isEmpty) statuses
+      else statuses.zip(fileStats).collect { case (st, stats)
+        if stats.forall(m => translated.forall(f => StatsPruning.possible(m, f))) => st
       }
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(_._1).toArray))
+    Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }
 
-  override def toString: String = s"GraftLogFileIndex[$tablePath, asOf=$asOf]"
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftLogFileIndex => key == o.key
+    case _ => false
+  }
+
+  override def hashCode: Int = key.hashCode
+
+  override def toString: String = s"GraftLogFileIndex[$tablePath, ${paths.size} files]"
 }
 
-/** Snapshot reads of a DELETION-VECTOR-carrying logged table through
-  * the DSv1 scan seam: the vectored positions must be subtracted, and
-  * a `HadoopFsRelation` has no row-filtering hook, so this relation
-  * builds the DV-aware Catalyst plan ([[CommitLog.visibleRows]]) per
-  * scan instead. Efficiency is preserved on both axes that matter:
-  * (1) FILE SKIPPING — pushed filters prune the live set from
-  * log-carried stats exactly like [[GraftLogFileIndex]]; (2) PUSHDOWN —
-  * pushed filters and the required-column projection are re-applied
-  * INSIDE the inner plan, so Catalyst drives them into the vectorized
-  * parquet scans (the anti-join only guards DV'd files; vector-free
-  * files scan clean). The `df.rdd` bridge adds one external-row
-  * conversion — the documented cost of reading an unabsorbed vectored
-  * snapshot; OPTIMIZE restores the native path. Spark re-evaluates
-  * every filter above this relation (`unhandledFilters` default), so
-  * the inner re-translation is purely an optimization. */
+/** Snapshot reads of a logged table carrying DELETION VECTORS or a
+  * COLUMN MAPPING through the DSv1 scan seam: a `HadoopFsRelation` has
+  * no hook to subtract vectored positions or to alias physical names
+  * back to logical ones, so this relation's scan is
+  * [[CommitLog.visibleRows]] — [[CommitLog.scan]] relations under
+  * the mapping's aliases and the vectors' anti-join. The pushed
+  * filters and the required-column projection are re-applied INSIDE
+  * that plan: Catalyst pushes the filters below the aliases into the
+  * [[GraftLogFileIndex]] scans (log-stats file skipping, parquet
+  * row-group filters) and prunes columns there. A vector only removes
+  * rows, so the add-time stats stay a sound envelope. The `df.rdd`
+  * bridge adds one external-row conversion — the cost of reading an
+  * unabsorbed vectored snapshot; OPTIMIZE restores the native path.
+  * Spark re-evaluates every filter above this relation
+  * (`unhandledFilters` default), so the inner re-application is purely
+  * an optimization. */
 private[graft] final class GraftLogDvRelation(spark: SparkSession,
     tablePath: String, dataSchema: StructType,
     entries: Seq[CommitLog.LiveEntry], mapping: Map[String, String])
@@ -282,19 +256,7 @@ private[graft] final class GraftLogDvRelation(spark: SparkSession,
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    // log-stats file skipping, same contract as GraftLogFileIndex:
-    // a DV only removes rows, so the add-time stats remain a sound
-    // superset envelope; stats keys remap physical → logical on a
-    // column-mapped snapshot
-    val kept = entries.filter { e =>
-      e.stats.map(j => CommitLog.statsToLogical(
-        CommitLog.parseStatsJson(j), mapping)) match {
-        case Some(m) => filters.forall(f => StatsPruning.possible(m, f))
-        case None => true
-      }
-    }
-    val base = CommitLog.visibleRows(spark, tablePath, dataSchema, kept,
-      mapping = Some(mapping))
+    val base = CommitLog.visibleRows(spark, tablePath, dataSchema, entries, mapping)
     val filtered = filters.flatMap(FilterColumns.toColumn).foldLeft(base)(_.filter(_))
     val projected =
       if (requiredColumns.isEmpty)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The logged table as a STANDARD Spark streaming source:
-  * `spark.readStream.format("graftlog").load(tablePath)` — the
+  * `readStream.format("graftlog").load(tablePath)` — the
   * composability layer `CdcStream`'s driver-side drain deliberately
   * defers (CdcStream.scala scope note): any Spark sink now consumes
   * the change feed — `foreachBatch`, console, memory, files — with
@@ -144,19 +144,12 @@ object GraftLogStreamProvider {
       throw new IllegalArgumentException(
         "graftlog source needs a table path: .load(\"/path/to/table\")"))
 
-  /** The DATA schema: caller-supplied, else the log's schema ledger
-    * (a mergeSchema writer's record — authoritative over any one
-    * file's narrow generation), else inferred from the newest live
-    * file (one footer read; an empty unstamped table cannot
-    * self-describe). */
+  /** The DATA schema: caller-supplied, else the one bootstrap rule
+    * ([[CommitLog.tableSchema]]: the schema ledger, else the newest
+    * live file's footer). */
   private[sources] def dataSchema(spark: SparkSession, tablePath: String,
       user: Option[StructType]): StructType =
-    user.orElse(CommitLog.schemaAt(spark, tablePath)).getOrElse {
-      val (_, files) = CommitLog.liveFiles(spark, tablePath)
-      require(files.nonEmpty,
-        s"cannot infer the schema of empty logged table $tablePath — supply .schema(...)")
-      spark.read.parquet(CommitLog.resolveDataPath(tablePath, files.last)).schema
-    }
+    user.getOrElse(CommitLog.tableSchema(spark, tablePath))
 
   /** What the stream delivers: data columns + the CDC metadata pair. */
   private[sources] def feedSchema(data: StructType): StructType =

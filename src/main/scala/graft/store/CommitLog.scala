@@ -155,14 +155,17 @@ object CommitLog {
   /** FileStatus of the given file references (bare or absolute), keyed
     * by ABSOLUTE path — ONE directory listing per DISTINCT parent (the
     * table root plus one per clone source), never a HEAD round trip
-    * per file. A MISSING parent directory contributes nothing: its
-    * members are legitimately absent (a vacuumed clone source, an
-    * uncreated table) and every caller has its own absent-file
-    * contract. Any OTHER listing failure PROPAGATES — swallowing a
-    * throttle or permission error here would mis-diagnose transient IO
-    * as "vacuumed" (changesSince) or treat every file as undersized
-    * and escalate a bounded compaction into a full rewrite
-    * (optimize). */
+    * per file. This is the listing behind every scan ([[scanRelation]]:
+    * a read lists the table directory once for its data files and
+    * vectors together, changesSince once for its check and both
+    * scans) and behind optimize's sizing. A MISSING parent directory
+    * contributes nothing: its members are legitimately absent (a
+    * vacuumed clone source, an uncreated table) and every caller has
+    * its own absent-file contract (the scan's "vacuumed" failure, the
+    * feed's FeedGapException). Any OTHER listing failure PROPAGATES —
+    * swallowing a throttle or permission error here would mis-diagnose
+    * transient IO as "vacuumed" or treat every file as undersized and
+    * escalate a bounded compaction into a full rewrite (optimize). */
   private[graft] def statusFor(fs: org.apache.hadoop.fs.FileSystem,
       tablePath: String, names: Seq[String])
       : Map[String, org.apache.hadoop.fs.FileStatus] =
@@ -891,14 +894,10 @@ object CommitLog {
     while (attempts < 20) {
       val snap = snapshot(spark, tablePath)
       val (scanVersion, entries) = (snap.version, snap.live)
-      val schema = snap.schema.orElse {
-        if (entries.isEmpty) None
-        else Some(spark.read.parquet(
-          resolveDataPath(tablePath, entries.last.name)).schema)
-      }
-      schema.foreach { sch =>
-        val bad = visibleRows(spark, tablePath, sch, entries,
-          mapping = Some(snap.mapping))
+      // no live file, no row to violate
+      if (entries.nonEmpty) {
+        val bad = visibleRows(spark, tablePath, tableSchema(spark, tablePath, snap),
+          entries, snap.mapping)
           .filter(not(coalesce(expr(check).cast("boolean"), lit(true))))
           .limit(1).collect()
         if (bad.nonEmpty)
@@ -1038,7 +1037,7 @@ object CommitLog {
     val byName = entriesByName(entries)
     val matchedCounts: Map[String, Long] =
       visibleRows(spark, tablePath, schema, entries,
-        meta = Seq("_rm_file" -> "file_name"), mapping = Some(mapping))
+        meta = Seq("_rm_file" -> "file_name"), mapping = mapping)
         .filter(predicate)
         .groupBy(col("_rm_file")).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1048,7 +1047,7 @@ object CommitLog {
     val names =
       if (partial.isEmpty) Seq.empty[String] // every affected file drops whole
       else stage(visibleRows(spark, tablePath, schema, partial,
-          mapping = Some(mapping)).filter(not(coalesce(predicate, lit(false)))),
+          mapping = mapping).filter(not(coalesce(predicate, lit(false)))),
         tablePath, mapping, tableWriteOptions(snap.properties, mapping))
     (affectedEntries, names)
   }
@@ -1742,12 +1741,12 @@ object CommitLog {
     val preImages =
       if (affectedEntries.isEmpty) None
       else Some(visibleRows(spark, tablePath, schema, affectedEntries,
-        mapping = Some(mapping))
+        mapping = mapping)
         .filter(predicate).withColumn(ChangeTypeCol, lit("delete")))
     val postImages =
       if (newNames.isEmpty) None
       else Some(visibleRows(spark, tablePath, schema,
-        newNames.map(n => LiveEntry(n, None, None)), mapping = Some(mapping))
+        fileEntries(newNames), mapping = mapping)
         .withColumn(ChangeTypeCol, lit("insert")))
     val cdc = (preImages.toSeq ++ postImages.toSeq)
       .reduceOption(_.unionByName(_))
@@ -1843,14 +1842,52 @@ object CommitLog {
   def read(spark: SparkSession, tablePath: String, schema: StructType,
       asOf: Long = Long.MaxValue): DataFrame = {
     val snap = snapshot(spark, tablePath, asOf)
-    visibleRows(spark, tablePath, schema, snap.live, mapping = Some(snap.mapping))
+    visibleRows(spark, tablePath, schema, snap.live, snap.mapping)
   }
+
+  /** THE scan: the only code that turns log entries (live data
+    * files, deletion vectors, change files) into a Spark relation. A
+    * [[graft.sources.GraftLogFileIndex]] over exactly `entries` —
+    * statuses from `status` when the caller already listed, else one
+    * [[statusFor]] listing per distinct parent — as a parquet
+    * `HadoopFsRelation` over the nullable `readSchema` (like Spark's own
+    * file sources make user schemas: a column absent from an older file
+    * generation null-fills). `ignoreMissingFiles` is pinned off, so a
+    * file vanishing between planning and the scan fails the job rather
+    * than dropping its rows whatever `spark.sql.files.ignoreMissingFiles`
+    * says. */
+  private[graft] def scanRelation(spark: SparkSession, tablePath: String,
+      entries: Seq[LiveEntry], readSchema: StructType,
+      status: Option[Map[String, org.apache.hadoop.fs.FileStatus]] = None)
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation =
+    org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      location = new graft.sources.GraftLogFileIndex(spark, tablePath, entries, status),
+      partitionSchema = StructType(Nil),
+      dataSchema = graft.sources.GraftLogBatch.nullify(readSchema),
+      bucketSpec = None,
+      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      options = Map(org.apache.spark.sql.catalyst.FileSourceOptions.IGNORE_MISSING_FILES ->
+        "false"))(spark)
+
+  /** [[scanRelation]] as a DataFrame. */
+  private[graft] def scan(spark: SparkSession, tablePath: String,
+      entries: Seq[LiveEntry], readSchema: StructType,
+      status: Option[Map[String, org.apache.hadoop.fs.FileStatus]] = None): DataFrame =
+    org.apache.spark.sql.graft.StreamingShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.LogicalRelation(
+        scanRelation(spark, tablePath, entries, readSchema, status)))
 
   /** Column names of a deletion-vector parquet: the data file each
     * position belongs to and the 0-based physical row position
     * (`_metadata.row_index`) deleted from it. */
   private[store] val DvFileCol = "file_name"
   private[store] val DvPosCol = "row_index"
+
+  private val DvSchema = StructType.fromDDL(s"$DvFileCol string, $DvPosCol bigint")
+
+  /** The given files (vectors, change files) as scan entries. */
+  private def fileEntries(names: Seq[String]): Seq[LiveEntry] =
+    names.map(LiveEntry(_, None, None))
 
   /** The deleted positions of the given DV-attached entries, honoring
     * PER-FILE attachment: a DV parquet may be shared by every file of
@@ -1859,14 +1896,15 @@ object CommitLog {
     * attaches to IT (join on both the data-file name and the vector's
     * own identity). None when no entry carries a vector. */
   private[graft] def dvRows(spark: SparkSession, tablePath: String,
-      entries: Seq[LiveEntry]): Option[DataFrame] = {
+      entries: Seq[LiveEntry],
+      status: Option[Map[String, org.apache.hadoop.fs.FileStatus]] = None)
+      : Option[DataFrame] = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
     val attached = entries.collect { case LiveEntry(n, _, Some(dv), _) => (n, dv) }
     if (attached.isEmpty) return None
-    val dvFiles = attached.map(_._2).distinct
-    val raw = spark.read.parquet(
-        dvFiles.map(f => resolveDataPath(tablePath, f)): _*)
+    val raw = scan(spark, tablePath, fileEntries(attached.map(_._2).distinct),
+        DvSchema, status)
       .select(col(DvFileCol), col(DvPosCol),
         col("_metadata.file_name").as("_dv_src"))
     // attachment pairs as (tiny) broadcast data, not a plan literal;
@@ -1891,24 +1929,31 @@ object CommitLog {
   private[store] val DvBroadcastMaxBytes: Long = 64L * 1024 * 1024
 
   /** Snapshot rows VISIBLE at the given live entries — the one read
-    * primitive every consumer (read, probe scans, rewrites, compact)
-    * goes through, so merge-on-read deletes can never resurrect:
-    * DV-free files scan straight through Spark's vectorized parquet
-    * path untouched (zero overhead for a table with no vectors), and
-    * DV-carrying files subtract their vector's positions with one
-    * BROADCAST anti-join on (file, position) — vectors are
-    * increment-sized by design (OPTIMIZE absorbs them before they
-    * grow), so the join never shuffles the data side. Vectors past
-    * [[DvBroadcastMaxBytes]] drop the broadcast hint (see there).
-    * `meta` appends `_metadata`-derived columns (alias → field name)
-    * for callers that need file identity or position on the VISIBLE
-    * rows (the merge/delete probes). `mapping` is the column mapping of
-    * the snapshot `entries` came from; None takes the current one. */
+    * primitive every consumer (read, probe scans, rewrites, compact,
+    * the DV relation) goes through, so merge-on-read deletes can never
+    * resurrect. One [[statusFor]] listing serves every data file and
+    * every attached vector; the files become [[scan]] relations:
+    *  - DV-free files scan straight through Spark's vectorized parquet
+    *    path (zero overhead for a table with no vectors);
+    *  - DV-carrying files subtract their vector's positions with one
+    *    BROADCAST anti-join on (file, position) — vectors are
+    *    increment-sized by design (OPTIMIZE absorbs them before they
+    *    grow), so the join never shuffles the data side. Vectors past
+    *    [[DvBroadcastMaxBytes]] (sized from the same listing) drop the
+    *    broadcast hint.
+    * `mapping` is the column mapping of the snapshot `entries` came
+    * from: the scan reads PHYSICAL names and aliases them back to
+    * logical ones in one plain Project, so filters push below the alias
+    * onto the physical names the index's stats are keyed by (an
+    * unmapped table keeps the exact unaliased plan). `meta` appends
+    * `_metadata`-derived columns (alias → field name) for callers that
+    * need file identity or position on the VISIBLE rows (the
+    * merge/delete probes). */
   private[graft] def visibleRows(spark: SparkSession, tablePath: String,
       schema: StructType, entries: Seq[LiveEntry],
+      mapping: Map[String, String],
       meta: Seq[(String, String)] = Seq.empty,
-      dvBroadcastMaxBytes: Long = DvBroadcastMaxBytes,
-      mapping: Option[Map[String, String]] = None): DataFrame = {
+      dvBroadcastMaxBytes: Long = DvBroadcastMaxBytes): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val outSchema = StructType(schema.fields ++ meta.map { case (a, f) =>
       org.apache.spark.sql.types.StructField(a,
@@ -1917,36 +1962,24 @@ object CommitLog {
     if (entries.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    // COLUMN MAPPING: scan under physical names, alias back to logical
-    // in the same projection (a plain Project — the vectorized scan
-    // and codegen are untouched); unmapped tables keep the exact
-    // pre-mapping plan
-    val mapped = mapping.getOrElse(mappingAt(spark, tablePath))
-    def phys(n: String): String = mapped.getOrElse(n, n)
-    val readSchema =
-      if (mapped.isEmpty) schema
-      else StructType(schema.fields.map(f => f.copy(name = phys(f.name))))
-    val outCols = (if (mapped.isEmpty) schema.fieldNames.map(col).toSeq
+    def phys(n: String): String = mapping.getOrElse(n, n)
+    val readSchema = StructType(schema.fields.map(f => f.copy(name = phys(f.name))))
+    val outCols = (if (mapping.isEmpty) schema.fieldNames.map(col).toSeq
       else schema.fieldNames.map(n => col(phys(n)).as(n)).toSeq) ++
       meta.map { case (a, f) => col(s"_metadata.$f").as(a) }
-    def scan(files: Seq[String]) = spark.read.schema(readSchema)
-      .parquet(files.map(f => resolveDataPath(tablePath, f)): _*)
     val (dvd, plain) = entries.partition(_.dv.isDefined)
+    val dvFiles = dvd.flatMap(_.dv).distinct
+    val status = statusFor(fsOf(spark, new Path(tablePath)), tablePath,
+      entries.map(_.name) ++ dvFiles)
+    def rows(es: Seq[LiveEntry]) = scan(spark, tablePath, es, readSchema, Some(status))
     val parts =
-      (if (plain.isEmpty) Seq.empty
-       else Seq(scan(plain.map(_.name)).select(outCols: _*))) ++
+      (if (plain.isEmpty) Seq.empty else Seq(rows(plain).select(outCols: _*))) ++
       (if (dvd.isEmpty) Seq.empty
        else {
-         val dv = dvRows(spark, tablePath, dvd).get
-         val dir = new org.apache.hadoop.fs.Path(tablePath)
-         val fs = fsOf(spark, dir)
-         val dvBytes = dvd.flatMap(_.dv).distinct.map { f =>
-           try fs.getFileStatus(new org.apache.hadoop.fs.Path(
-             resolveDataPath(tablePath, f))).getLen
-           catch { case scala.util.control.NonFatal(_) => Long.MaxValue / 1024 }
-         }.sum
+         val dv = dvRows(spark, tablePath, dvd, Some(status)).get
+         val dvBytes = dvFiles.map(f => status(resolveDataPath(tablePath, f)).getLen).sum
          val dvSide = if (dvBytes <= dvBroadcastMaxBytes) broadcast(dv) else dv
-         Seq(scan(dvd.map(_.name))
+         Seq(rows(dvd)
            .select(outCols :+ col("_metadata.file_name").as("_vr_file")
              :+ col("_metadata.row_index").as("_vr_pos"): _*)
            .join(dvSide,
@@ -2016,8 +2049,8 @@ object CommitLog {
     val (version, entries) = (snap.version, snap.live)
     val files = entries.map(_.name)
     if (files.isEmpty) return version
-    val paths = files.map(f => resolveDataPath(tablePath, f))
-    val totalBytes = paths.map(p => fs.getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen).sum
+    val totalBytes = files.map(f =>
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(resolveDataPath(tablePath, f))).getLen).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     // DV ABSORPTION: the rewrite reads VISIBLE rows, so attached
     // deletion vectors are folded into clean files here and their
@@ -2028,7 +2061,7 @@ object CommitLog {
     // shape carries PHYSICAL names, which must not re-enter the
     // logical read path (a clash with a re-added logical name would
     // read the wrong column)
-    val schema = snap.schema.getOrElse(spark.read.parquet(paths: _*).schema)
+    val schema = tableSchema(spark, tablePath, snap)
     // same layout semantics as the unlogged compactor: plain, range-
     // clustered, or "a,b" z-order (ZOrder.layout) — compaction doubling
     // as the logged table's clustered index. writeOptions carries the
@@ -2036,7 +2069,7 @@ object CommitLog {
     // table must not silently LOSE its point-lookup index to
     // maintenance (the pruneByFooterStats probe path reads them)
     val names = stage(ZOrder.layout(visibleRows(spark, tablePath, schema, entries,
-        mapping = Some(snap.mapping)), nOut, clusterBy), tablePath, snap.mapping,
+        mapping = snap.mapping), nOut, clusterBy), tablePath, snap.mapping,
       tableWriteOptions(snap.properties, snap.mapping, writeOptions), writer = "c")
     // commit() validates `files` against the live set (and each removed
     // file's DV attachment against what this rewrite planned from) and
@@ -2095,8 +2128,7 @@ object CommitLog {
     if (entries.isEmpty) return version
     val mapping = snap.mapping
     // ledger-first for the same column-mapping reason as compact()
-    val schema = snap.schema.getOrElse(spark.read
-      .parquet(entries.map(e => resolveDataPath(tablePath, e.name)): _*).schema)
+    val schema = tableSchema(spark, tablePath, snap)
     // predicate → pushed-filter list, resolved the way a real scan
     // would resolve it (analyzed Filter node over the table's plan)
     val filters: Seq[org.apache.spark.sql.sources.Filter] = where match {
@@ -2107,7 +2139,7 @@ object CommitLog {
         // (`id < 100` on a bigint column) translates to nothing and
         // the scope silently widens to the whole table
         val optimized = visibleRows(spark, tablePath, schema, entries,
-            mapping = Some(mapping))
+            mapping = mapping)
           .filter(cond).queryExecution.optimizedPlan
         optimized.collect {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
@@ -2138,7 +2170,7 @@ object CommitLog {
       (totalBytes + targetBytes - 1) / targetBytes,
       candidates.size.toLong), 10000L)).toInt
     val names = stage(ZOrder.layout(visibleRows(spark, tablePath, schema, candidates,
-        mapping = Some(mapping)), nOut, clusterBy), tablePath, mapping,
+        mapping = mapping), nOut, clusterBy), tablePath, mapping,
       tableWriteOptions(snap.properties, mapping, writeOptions), writer = "c")
     commit(spark, tablePath, adds = names, removes = candidates.map(_.name),
       publisher = publisher, addStats = statsFor(spark, tablePath, names),
@@ -2439,12 +2471,6 @@ object CommitLog {
       case f if physicalName(f) != f.name => f.name -> physicalName(f)
     }.toMap
 
-  /** The table's active mapping at `asOf` — from the schema ledger;
-    * tables without a ledger are unmapped by construction. */
-  private[graft] def mappingAt(spark: SparkSession, tablePath: String,
-      asOf: Long = Long.MaxValue): Map[String, String] =
-    snapshot(spark, tablePath, asOf).mapping
-
   private[graft] def burnedAt(spark: SparkSession, tablePath: String): Set[String] =
     snapshot(spark, tablePath).burned
 
@@ -2556,10 +2582,10 @@ object CommitLog {
     }
   }
 
-  /** The ONE schema-bootstrap rule, shared by every surface
-    * (GraftLogBatch.schemaFor and GraftSql.schemaOf delegate here):
-    * the evolution ledger when a writer stamped one, else inferred
-    * from the newest file live at `asOf` (one footer read). */
+  /** The ONE schema-bootstrap rule, shared by every surface (the
+    * batch and streaming sources, GraftSql, addConstraint, compact,
+    * optimize): the evolution ledger when a writer stamped one, else
+    * inferred from the newest file live at `asOf` (one footer read). */
   def tableSchema(spark: SparkSession, tablePath: String,
       asOf: Long = Long.MaxValue): StructType =
     tableSchema(spark, tablePath, snapshot(spark, tablePath, asOf))
@@ -2898,7 +2924,7 @@ object CommitLog {
       removeMatching(spark, tablePath, schema, predicate, snap)
     if (affectedEntries.isEmpty) return version // nothing matched: no new version
     val affectedDf = visibleRows(spark, tablePath, schema, affectedEntries,
-      mapping = Some(snap.mapping))
+      mapping = snap.mapping)
     // CDC pre-images cover matched rows of BOTH dropped and rewritten
     // files — a dropped file's rows are read once here (its only read)
     // so the change feed stays exact
@@ -2960,7 +2986,7 @@ object CommitLog {
     // vector positions and feed pre-images that disagree
     val matched = visibleRows(spark, tablePath, schema, entries,
       meta = Seq("_dv_f" -> "file_name", "_dv_p" -> "row_index"),
-      mapping = Some(snap.mapping))
+      mapping = snap.mapping)
       .filter(predicate)
       .localCheckpoint(true)
     val affected = matched.select(col("_dv_f")).distinct()
@@ -3005,7 +3031,7 @@ object CommitLog {
     // the counts describe the exact bytes readers will subtract. DV
     // content records BASENAMES; attachment keys may be absolute
     // (cloned references)
-    val counts = spark.read.parquet(resolveDataPath(tablePath, dvName))
+    val counts = scan(spark, tablePath, fileEntries(Seq(dvName)), DvSchema)
       .groupBy(col(DvFileCol)).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     (affectedEntries.map(_.name -> dvName).toMap,
@@ -3070,7 +3096,7 @@ object CommitLog {
       // One evaluation feeds positions, post-images, and CDC.
       val matched = visibleRows(spark, tablePath, schema, entries,
         meta = Seq("_uw_f" -> "file_name", "_uw_p" -> "row_index"),
-        mapping = Some(mapping))
+        mapping = mapping)
         .filter(predicate)
         .localCheckpoint(true)
       val affected = matched.select(col("_uw_f")).distinct()
@@ -3096,14 +3122,14 @@ object CommitLog {
     }
     // probe and rewrite read VISIBLE rows (DV-aware) — see deleteWhere
     val affected = visibleRows(spark, tablePath, schema, entries,
-      meta = Seq("_uw_file" -> "file_name"), mapping = Some(mapping))
+      meta = Seq("_uw_file" -> "file_name"), mapping = mapping)
       .filter(predicate)
       .select(col("_uw_file")).distinct()
       .collect().map(_.getString(0)).toSeq
     if (affected.isEmpty) return version // nothing matched: no new version
     val affectedEntries = affected.map(byName)
     val affectedDf = visibleRows(spark, tablePath, schema, affectedEntries,
-      mapping = Some(mapping))
+      mapping = mapping)
     val hit = coalesce(predicate, lit(false))
     val rewritten = schema.fields.map(f =>
       when(hit, assignments.get(f.name).map(_.cast(f.dataType))
@@ -3435,7 +3461,7 @@ object CommitLog {
       deletionVectors: Boolean = false): Option[Long] = {
     import org.apache.spark.sql.functions.{col, lit}
     val liveEntries = snap.live
-    val mapping = Some(snap.mapping)
+    val mapping = snap.mapping
     requireBasenameSoundness(liveEntries, s"keyed rewrite on $tablePath")
     val entryByName = entriesByName(liveEntries)
     // the key set drives five jobs (stats envelope, bloom key collect,
@@ -3664,11 +3690,11 @@ object CommitLog {
     * removing commit WITHOUT change files (rebuild()) still stops the
     * feed loudly.
     *
-    * One scan, not one per commit: every fed file is read in a single
-    * parquet load and the version tag is joined scan-side from a
-    * commit-range-sized (file name → version) literal map over
-    * `_metadata.file_name` — log-sized driver state, no shuffle, no
-    * per-commit job. Throws when commits in the range were pruned past
+    * One log listing feeds the range and the column mapping; one
+    * directory listing feeds the vacuum check and the two [[scan]]s
+    * (data files, change files) — no per-commit job, and the version
+    * tag is joined scan-side from a broadcast (file name → version)
+    * table over `_metadata.file_name`. Throws when commits in the range were pruned past
     * a checkpoint: a consumer that fell behind the retention window
     * must re-bootstrap from a snapshot read (same contract as Delta —
     * silently skipping unseen versions would be data loss). */
@@ -3728,14 +3754,14 @@ object CommitLog {
     // The commit FILES surviving proves the range is replayable; the
     // fed DATA files are a separate lifetime — an in-range file later
     // removed by a compaction is vacuum-eligible, and a consumer
-    // behind the retention window would otherwise get an opaque Spark
-    // FileNotFound at JOB time. Check now (one directory listing, not
-    // per-file probes) and raise the same re-bootstrap contract the
-    // pruned-commit path documents.
-    val present = sizesFor(fsOf(spark, new org.apache.hadoop.fs.Path(tablePath)),
-      tablePath, fileToVersion.map(_._1).distinct).keySet
+    // behind the retention window would otherwise get an opaque
+    // "vacuumed" planning failure. One listing per parent serves this
+    // check and both scans below, raising the same re-bootstrap
+    // contract the pruned-commit path documents.
+    val status = statusFor(fsOf(spark, new Path(tablePath)), tablePath,
+      fileToVersion.map(_._1).distinct)
     val vacuumed = fileToVersion.collect {
-      case (f, v) if !present(f) => s"$f (version $v)" }
+      case (f, v) if !status.contains(resolveDataPath(tablePath, f)) => s"$f (version $v)" }
     if (vacuumed.nonEmpty)
       throw new FeedGapException(
         s"change feed for $tablePath references vacuumed data file(s) " +
@@ -3760,31 +3786,23 @@ object CommitLog {
     // column names; scan physical, alias back to the caller's logical
     // names — one naming scheme across every file generation, since
     // physical names never change once assigned
-    val mapping = mappingAt(spark, tablePath, upper)
+    val mapping = listing.snapshot(upper).mapping
     def phys(n: String): String = mapping.getOrElse(n, n)
-    val readSchema =
-      if (mapping.isEmpty) schema
-      else StructType(schema.fields.map(f => f.copy(name = phys(f.name))))
+    val readSchema = StructType(schema.fields.map(f => f.copy(name = phys(f.name))))
     val outCols = (schema.fieldNames.toSeq.map(n =>
         if (mapping.isEmpty) col(n) else col(phys(n)).as(n)) :+
       col(ChangeTypeCol) :+ col("_commit_version"))
     def tagged(df: DataFrame): DataFrame =
       df.join(lookup, col("_metadata.file_name") === col("_cf_name"))
         .select(outCols: _*)
-    val dataFiles = fed.collect { case (f, _, false) => f }
-    val cdcFiles = fed.collect { case (f, _, true) => f }
+    def fedScan(cdc: Boolean, sch: StructType): Option[DataFrame] =
+      Some(fed.collect { case (f, _, `cdc`) => f }).filter(_.nonEmpty)
+        .map(fs => scan(spark, tablePath, fileEntries(fs), sch, Some(status)))
     val cdcSchema = StructType(readSchema.fields :+
       org.apache.spark.sql.types.StructField(ChangeTypeCol,
         org.apache.spark.sql.types.StringType, nullable = false))
-    val parts =
-      (if (dataFiles.isEmpty) Seq.empty else Seq(tagged(
-        spark.read.schema(readSchema)
-          .parquet(dataFiles.map(f => resolveDataPath(tablePath, f)): _*)
-          .withColumn(ChangeTypeCol, lit("insert"))))) ++
-        (if (cdcFiles.isEmpty) Seq.empty else Seq(tagged(
-          spark.read.schema(cdcSchema)
-            .parquet(cdcFiles.map(f => resolveDataPath(tablePath, f)): _*))))
-    parts.reduce(_.unionByName(_))
+    (fedScan(cdc = false, readSchema).map(_.withColumn(ChangeTypeCol, lit("insert"))) ++
+      fedScan(cdc = true, cdcSchema)).map(tagged).reduce(_.unionByName(_))
   }
 
   /** RESTORE the table to an earlier version — the rollback verb

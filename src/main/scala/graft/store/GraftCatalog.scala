@@ -477,7 +477,7 @@ private[graft] case class GraftTable(path: String, asOf: Long,
   override def name(): String = identString
 
   override lazy val schema: StructType =
-    GraftLogBatch.nullify(GraftLogBatch.schemaFor(spark, path, asOf))
+    GraftLogBatch.nullify(CommitLog.tableSchema(spark, path, asOf))
 
   /** Declared clustering reports back as the CLUSTER BY transform, so
     * DESCRIBE and catalog introspection show what the writer layout
@@ -521,7 +521,7 @@ private[graft] case class GraftTable(path: String, asOf: Long,
     val predicate = filters.flatMap(FilterColumns.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
     CommitLog.deleteWhere(spark, path,
-      GraftLogBatch.schemaFor(spark, path, Long.MaxValue), predicate,
+      CommitLog.tableSchema(spark, path, Long.MaxValue), predicate,
       deletionVectors = CommitLog.morDefault(spark, path))
     ()
   }
@@ -600,7 +600,7 @@ private[store] final class GraftV1TableScan(context: SQLContext,
     val params = Map("path" -> path) ++
       (if (asOf == Long.MaxValue) Map.empty
        else Map("versionAsOf" -> asOf.toString))
-    val full = GraftLogBatch.schemaFor(spark, path, asOf)
+    val full = CommitLog.tableSchema(spark, path, asOf)
     val base = context.baseRelationToDataFrame(
       GraftLogBatch.relation(spark, params, Some(full)))
     val filtered = pushed.flatMap(FilterColumns.toColumn).foldLeft(base)(_.filter(_))
@@ -744,13 +744,14 @@ private[store] object GraftMetaTable {
     * zero data files opened. */
   private def filesFrame(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val (_, entries) = CommitLog.liveFilesFull(spark, path)
     // stats are stored under PHYSICAL column names; expose LOGICAL
     // names (the remap every other stats consumer goes through) — raw
     // physical keys would under-report renamed columns and serve a
-    // burned generation's bounds as a re-added column's
-    val mapping = CommitLog.mappingAt(spark, path)
-    entries.map { e =>
+    // burned generation's bounds as a re-added column's. One snapshot
+    // feeds both, so they cannot straddle a concurrent rename.
+    val snap = CommitLog.snapshot(spark, path)
+    val mapping = snap.mapping
+    snap.live.map { e =>
       val st = e.stats.map(j =>
         CommitLog.statsToLogical(CommitLog.parseStatsJson(j), mapping))
       def key(k: String): Option[Long] =

@@ -21,10 +21,15 @@ import org.apache.spark.sql.types._
   *
   * Soundness is carried by the PLAN SHAPE plus per-value abstention:
   *
-  *  - Both snapshot read paths are served: the native
-  *    `GraftLogFileIndex` relation (DV-free, unmapped) folds stats
-  *    directly; the `GraftLogDvRelation` path (deletion vectors
-  *    and/or column mapping) folds LOGICAL-remapped stats, answers
+  *  - Every `GraftLogFileIndex` relation is read as DV-free and folds
+  *    its stats directly, keyed by the relation's own (physical)
+  *    column names: a `format("graftlog")` read of a DV-free, unmapped
+  *    snapshot, and — since every logged-table read is a relation over
+  *    that index — `CommitLog.read`'s scans of DV-free, unmapped
+  *    tables. A DV'd scan always sits under its vector anti-join, and
+  *    a mapped read under its renaming aliases, so neither matches.
+  *    The `GraftLogDvRelation` path (deletion vectors and/or column
+  *    mapping) folds LOGICAL-remapped stats, answers
   *    COUNT as Σ row counts − Σ log-carried vector position counts
   *    (abstaining unless EVERY attached vector recorded its count —
   *    `*file|dvfile|n`), and abstains on MIN/MAX whenever any vector
@@ -64,9 +69,9 @@ case class GraftStatsAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def rewrite(agg: Aggregate): Option[LogicalPlan] =
     for {
       lr <- relationOf(agg.child)
-      // per-file stats + DV state, by read path: the native file-index
-      // relation is DV-free by construction; the DV/mapped relation
-      // carries both
+      // per-file stats + DV state, by read path: a file-index relation
+      // is read as DV-free (vectored scans stay under their anti-join);
+      // the DV/mapped relation carries both
       (stats, dvs) = lr.relation match {
         case fs: HadoopFsRelation =>
           (fs.location.asInstanceOf[GraftLogFileIndex].fileStats,

@@ -174,7 +174,7 @@ final class MergeClauses private (
             probeCols.contains(f.name)))
           val withFile = CommitLog.visibleRows(spark, tablePath, probeSchema,
             candidates.map(entryByName), meta = Seq("_mc_file" -> "file_name"),
-            mapping = Some(mapping))
+            mapping = mapping)
           val matchedFiles = withFile
             .join(srcKeys, keyCols, "left_semi").select("_mc_file")
           val claimed = bySourceDelete match {
@@ -198,7 +198,7 @@ final class MergeClauses private (
         affected.map(entryByName),
         meta = if (deletionVectors)
           Seq("_mc_f" -> "file_name", "_mc_p" -> "row_index")
-        else Seq.empty, mapping = Some(mapping)))
+        else Seq.empty, mapping = mapping))
     // matched target keys all live in affected files (the probe visited
     // every file that can hold one), so the insert anti-join needs only
     // the affected reads — increment-sized, never a table rescan
@@ -210,11 +210,16 @@ final class MergeClauses private (
       }
       unmatched.filter(coalesce(cond.getOrElse(lit(true)), lit(false)))
     }
+    // nothing to rewrite: the inserts land through the append core
+    // under this merge's Snapshot (no auto-compaction — rewrite-shaped
+    // DML never triggers it)
+    def insertOnly(ins: DataFrame): Long = CommitLog.appendOrAbort(ins, tablePath,
+      snap, publisher, Some("merge"), abortOnLostRace = _ => false)
+      .getOrElse(version)
 
     if (affected.isEmpty || !needRewrite) {
       inserts match {
-        case Some(ins) if !ins.isEmpty =>
-          return CommitLog.append(ins, tablePath, publisher, opTag = Some("merge"))
+        case Some(ins) if !ins.isEmpty => return insertOnly(ins)
         case _ => return version // proven no-op: nothing matched, nothing to insert
       }
     }
@@ -292,8 +297,7 @@ final class MergeClauses private (
       if (claimedFiles.isEmpty) {
         // clauses claimed nothing after all: degenerate to pure insert
         inserts match {
-          case Some(ins) if !ins.isEmpty =>
-            return CommitLog.append(ins, tablePath, publisher, opTag = Some("merge"))
+          case Some(ins) if !ins.isEmpty => return insertOnly(ins)
           case _ => return version
         }
       }

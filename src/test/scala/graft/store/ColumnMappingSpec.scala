@@ -115,6 +115,26 @@ abstract class ColumnMappingBehavior(publisher: AtomicPublisher) extends SparkSp
       s"change feed insert images lost the re-added column: $inserts")
   }
 
+  test("a re-added same-name column: filtered read and deleteWhere agree with an unfiltered read") {
+    val t = freshTable()
+    seed(t)
+    CommitLog.dropColumn(spark, t, "src", publisher)
+    // the dropped generation held "s1" in rows 1, 4, 7, …; the
+    // re-added column holds it only in row 201
+    CommitLog.append(Seq((200L, "t200", "s0"), (201L, "t201", "s1"))
+      .toDF("id", "text", "src"), t, publisher, mergeSchema = true)
+    val sch = schemaOf(t)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] = df.select("id").as[Long].collect().toSet
+    val unfiltered = CommitLog.read(spark, t, sch).select("id", "src")
+      .as[(Long, String)].collect().toSeq
+    val matching = unfiltered.collect { case (i, "s1") => i }.toSet
+    assert(matching == Set(201L))
+    assert(ids(CommitLog.read(spark, t, sch).filter(col("src") === "s1")) == matching)
+    assert(ids(spark.read.format("graftlog").load(t).filter(col("src") === "s1")) == matching)
+    CommitLog.deleteWhere(spark, t, sch, col("src") === "s1", publisher)
+    assert(ids(CommitLog.read(spark, t, sch)) == unfiltered.map(_._1).toSet -- matching)
+  }
+
   test("rename/drop refuse while constraints or bloom properties reference the column") {
     val t = freshTable()
     seed(t)

@@ -290,7 +290,7 @@ abstract class DeletionVectorBehavior(publisher: AtomicPublisher) extends SparkS
     val (_, entries) = CommitLog.liveFilesFull(spark, t)
     // a 1-byte cap forces the degraded (no-hint) join; result identical
     val noHint = CommitLog.visibleRows(spark, t, schema, entries,
-      dvBroadcastMaxBytes = 1L)
+      mapping = Map.empty, dvBroadcastMaxBytes = 1L)
     assert(noHint.as[Long].collect().toSet ==
       (0L until 100L).filterNot(_ % 3 == 0).toSet)
     // the default path result agrees

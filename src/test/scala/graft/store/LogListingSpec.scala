@@ -84,6 +84,26 @@ class LogListingSpec extends SparkSpec {
     "MergeClauses, copy-on-write" -> (t => clauses(t).execute()),
     "MergeClauses, deletion vectors" -> (t => clauses(t).withDeletionVectors().execute()))
 
+  test("changesSince lists _graft_log once: the mapping comes from the same listing") {
+    val t = countingTable()
+    CommitLog.append(rows(0L until 10L: _*), t)
+    CommitLog.append(rows(10L until 20L: _*), t)
+    var feed = 0L
+    assert(logListsDuring { feed = CommitLog.changesSince(spark, t, 0L, schema).count() } == 1)
+    assert(feed == 20L)
+  }
+
+  test("an insert-only MergeClauses lists _graft_log once up front and once per attempt") {
+    val t = countingTable()
+    CommitLog.append(rows(0L until 10L: _*), t)
+    CommitLog.append(rows(10L until 20L: _*), t)
+    val insertOnly = MergeClauses.into(spark, t, schema, rows(30L, 31L), Seq("id"))
+      .whenMatchedUpdate(Seq("v")).whenNotMatchedInsert()
+    assert(logListsDuring(insertOnly.execute()) == 2)
+    assert(CommitLog.latestVersion(spark, t) == 3L)
+    assert(CommitLog.read(spark, t, schema).count() == 22L)
+  }
+
   verbs.foreach { case (verb, run) =>
     test(s"a winning $verb lists _graft_log once up front and once per attempt") {
       val t = countingTable()
