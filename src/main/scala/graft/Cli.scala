@@ -28,8 +28,8 @@ object Cli {
       |  execute [storeDir] [objectRoot] [batchSize]        drain task_queue (batch)
       |  execute-stream [storeDir] [objectRoot] [ckptDir] [--continuous]
       |                                                     streaming worker; --continuous = 30 s trigger
-      |  stats [storeDir]                                   index/queue/done/dlq counts (A1/A4)
-      |  compact <table> [storeDir] [targetMB] [clusterCol] rewrite a store table into evenly-sized files
+      |  stats [storeDir]                                   index/queue/done/dlq counts (A1/A4, from the ledger)
+      |  compact <table> [storeDir] [targetMB] [clusterCol] rewrite a logged store table into evenly-sized files
       |                                                     (clusterCol → range-clustered, file-skippable;
       |                                                      "a,b" → two-column z-order)
       |  query <name> <sfDir>                               run a declared query, print row count
@@ -58,44 +58,6 @@ object Cli {
       |                                                     source's change feed into the sink in micro-batches""".stripMargin
 
   private val defaultStore = "/tmp/graft_store"
-
-  /** 0 only for a genuinely-missing table; a corrupt table must FAIL,
-    * not read as empty (an operator would mistake damage for a clean
-    * drained store — ParquetFileReader.open throws on damage).
-    *
-    * METADATA-ONLY: sums the row counts out of each file's parquet
-    * footer, driver-side — no Spark job (CliSpec pins zero jobs per
-    * stats call). The reference's counters are O(1) metadata reads
-    * (Redis SCARD / queue-depth attributes, README.md:112-116); a full
-    * count() scan matched the VALUE but not the COST — on a 100 TB
-    * table `stats` would be a cluster job, and operational counters
-    * get polled. Footer reads are O(files), the same census compact's
-    * file listing already does. */
-  private def tableCount(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) 0L
-    else {
-      val entries = fs.listStatus(p)
-      // engine store tables are flat parquet dirs; a nested (hive-
-      // partitioned) layout would be invisible to this census and read
-      // as UNDERCOUNTED — refuse loudly, exactly like Store.compact's
-      // file census (`_`/`.`-prefixed dirs exempt: in-flight appends
-      // keep a live _temporary here)
-      require(!entries.exists(st => st.isDirectory &&
-          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")),
-        s"stats does not support nested/partitioned layouts: $path")
-      entries
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map { st =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-    }
-  }
 
   /** Schema of a logged table — CommitLog reads are schema-explicit:
     * the schema LEDGER when an evolving writer stamped it, else
@@ -132,7 +94,7 @@ object Cli {
       // remove() throws IllegalStateException if the JVM is ALREADY shutting
       // down (i.e. the hook itself stopped the query) — that path is fine
       scala.util.Try(hook.remove())
-      val queued = tableCount(spark, store.taskQueue)
+      val queued = Store.count(spark, store.taskQueue)
       s"""{"cmd":"plan-stream","continuous":$continuous,"task_queue":$queued}"""
 
     case "execute" :: rest =>
@@ -160,27 +122,33 @@ object Cli {
       // remove() throws IllegalStateException if the JVM is ALREADY shutting
       // down (i.e. the hook itself stopped the query) — that path is fine
       scala.util.Try(hook.remove())
-      val done = tableCount(spark, store.taskDone)
+      val done = Store.count(spark, store.taskDone)
       s"""{"cmd":"execute-stream","continuous":$continuous,"task_done":$done}"""
 
     case "stats" :: rest =>
       // A1/A4 — the operational counters (the reference's SCARD /
-      // ApproximateNumberOfMessages inspections, README.md:112-116)
+      // ApproximateNumberOfMessages inspections, README.md:112-116):
+      // ledger folds of the tables' row-count stats, so a polled
+      // counter is O(live files) driver work and never a Spark job
       val store = Store(rest.headOption.getOrElse(defaultStore))
-      def n(path: String): Long = tableCount(spark, path)
+      def n(path: String): Long = Store.count(spark, path)
       s"""{"cmd":"stats","resource_index":${n(store.resourceIndex)},""" +
         s""""task_queue":${n(store.taskQueue)},"task_done":${n(store.taskDone)},""" +
         s""""dlq":${n(store.dlq)}}"""
 
     case "compact" :: table :: rest =>
       // operational table maintenance: micro-batch appends accumulate
-      // small files; compaction rewrites to scan-efficient sizes under
-      // the table lock (see Store.compact for the 100 TB rationale)
+      // small files; CommitLog.compact rewrites the live set to
+      // scan-efficient sizes in ONE commit (optionally range-clustered
+      // or z-ordered) — concurrent appends land before or after it,
+      // and a crash leaves only invisible orphans
       val store = Store(rest.headOption.getOrElse(defaultStore))
+      val path = s"${store.root}/$table"
       val targetMB = rest.drop(1).headOption.map(_.toLong).getOrElse(128L)
       val clusterBy = rest.drop(2).headOption
-      val ((fb, bb), (fa, ba)) =
-        Store.compact(spark, store, table, targetMB * 1024 * 1024, clusterBy)
+      val (fb, bb) = Store.census(spark, path) // refuses a pre-log directory
+      graft.store.CommitLog.compact(spark, path, targetMB * 1024 * 1024, clusterBy)
+      val (fa, ba) = Store.census(spark, path)
       s"""{"cmd":"compact","table":"$table","files_before":$fb,"bytes_before":$bb,""" +
         s""""files_after":$fa,"bytes_after":$ba}"""
 

@@ -372,85 +372,67 @@ object Execute {
     }(Encoders.product[ExecutionResult]).toDF()
   }
 
-  /** Route execution results: successes → task_done, failures → dlq —
-    * the ONE place the done/dlq row shapes are defined (shared by the
-    * batch drain below and StreamingJobs.executeStream). */
-  def routeResults(source: DataFrame, results: DataFrame, store: Store): Unit = {
-    val ok = results.filter(col("error").isNull)
-    val failed = results.filter(col("error").isNotNull)
-    Store.append(source.join(
-      ok.select("task_hash", "exit_code", "elapsed_ms", "output_files", "bytes_in", "bytes_up"),
-      Seq("task_hash")), store.taskDone)
-    Store.append(source.join(
-      failed.select("task_hash", "error", "exit_code"), Seq("task_hash")), store.dlq)
+  /** Execute `batch` and record its results: successes → task_done,
+    * failures → dlq (with error) — the ONE place the done/dlq row
+    * shapes are defined, shared by the batch drain below and
+    * StreamingJobs.executeStream. `source` holds the full task rows the
+    * results join back to. Byte totals and the ok/failed counts ride the
+    * one forcing action as observe() metrics (no extra job); the done
+    * commit lands before the dlq commit, and a side with no rows lands
+    * no commit. Returns (done, failed). */
+  def routeResults(source: DataFrame, batch: DataFrame, objectRoot: String,
+      store: Store): (Long, Long) = {
+    val results = executeBatch(batch.as[Task](Encoders.product[Task]), objectRoot).persist()
+    try {
+      val m = new org.apache.spark.sql.Observation("exec_metrics")
+      results.observe(m,
+        sum("bytes_in").as("bytes_in"), sum("bytes_up").as("bytes_up"),
+        count(lit(1)).as("n_tasks"),
+        sum(when(col("error").isNull, 1L).otherwise(0L)).as("n_ok"))
+        .count() // force execution exactly once
+      val metrics = m.get
+      def metric(k: String): Long =
+        Option(metrics(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val (nOk, nFailed) = (metric("n_ok"), metric("n_tasks") - metric("n_ok"))
+      System.err.println(s"[execute] A3 transfer totals: $metrics")
+      if (nOk > 0)
+        Store.commit(source.join(results.filter(col("error").isNull)
+          .select("task_hash", "exit_code", "elapsed_ms", "output_files", "bytes_in", "bytes_up"),
+          Seq("task_hash")), store.taskDone)
+      if (nFailed > 0)
+        Store.commit(source.join(results.filter(col("error").isNotNull)
+          .select("task_hash", "error", "exit_code"), Seq("task_hash")), store.dlq)
+      (nOk, nFailed)
+    } finally { results.unpersist(); () }
   }
 
-  /** Drain up to `batchSize` tasks from task_queue: execute, route
-    * successes → task_done, failures → dlq (with error), leave the rest
-    * queued. Returns (done, failed). */
+  /** Drain up to `batchSize` tasks from task_queue: execute the tasks
+    * not yet in `task_done ∪ dlq`, record them (routeResults), then
+    * consume the queue with one `#op=drain` commit whose removes are
+    * exactly the files this drain read (Store.drain). A full drain adds
+    * no file — every row it read was run or already finished; a limited
+    * batch restages its unconsumed rows in that same commit. No lock:
+    * a planner append landing after the read is not removed, and a
+    * crash at any point is safe to retry — the rerun's anti-join skips
+    * whatever was recorded, and its queue commit consumes the rest.
+    * Returns (done, failed). */
   def run(spark: SparkSession, store: Store, objectRoot: String,
       batchSize: Int = Int.MaxValue): (Long, Long) = {
-    val taskSchema = Encoders.product[Task].schema
-    val queue = Store.readOrEmpty(spark, store.taskQueue, taskSchema)
-    // K7/T2 idempotence: a crash between the done-append and the queue
-    // swap leaves completed hashes in the queue — never re-execute them
-    // (the streaming path anti-joins identically).
-    val doneHashes = Store.readOrEmpty(spark, store.taskDone, taskSchema)
-      .select("task_hash")
-    val pending = queue.join(doneHashes, Seq("task_hash"), "left_anti")
+    val read = Store.snapshot(spark, store.taskQueue)
+    val queue = graft.store.CommitLog.read(spark, store.taskQueue,
+      Encoders.product[Task].schema, read)
+    val pending = queue.join(Store.finished(spark, store), Seq("task_hash"), "left_anti")
+    val full = batchSize == Int.MaxValue
     val batchDf =
-      if (batchSize == Int.MaxValue) pending
+      if (full) pending
       else // limit() collapses to one partition — re-spread for T3 parallelism
         pending.limit(batchSize)
           .repartition(math.min(spark.sparkContext.defaultParallelism, 32))
-    val results = executeBatch(batchDf.as[Task](Encoders.product[Task]), objectRoot)
-      .persist()
-
-    // A3 — byte totals AND the ok/failed counts ride the one forcing
-    // action as observe() metrics: no extra jobs, and no re-derivation
-    // from `results` after the queue files below are swapped away.
-    val m = new org.apache.spark.sql.Observation("exec_metrics")
-    results.observe(m,
-      sum("bytes_in").as("bytes_in"), sum("bytes_up").as("bytes_up"),
-      count(lit(1)).as("n_tasks"),
-      sum(when(col("error").isNull, 1L).otherwise(0L)).as("n_ok"))
-      .count() // force execution exactly once
-    val metrics = m.get
-    def metric(k: String): Long =
-      Option(metrics(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val (nTasks, nOk) = (metric("n_tasks"), metric("n_ok"))
-    System.err.println(s"[execute] A3 transfer totals: $metrics")
-
-    routeResults(queue, results, store)
-
-    // Consume the queue. The rewrite holds the queue lock, but ONLY for
-    // the swap — not the (unbounded) execution above, which would stall
-    // concurrent planners past their lock timeout. Correctness without
-    // locking execution: `remaining` is recomputed from the LIVE queue
-    // inside the critical section, so a planner append that landed
-    // mid-execution is carried into the rewritten table instead of
-    // being dropped with the pre-execution snapshot.
-    graft.store.StoreLock.withLock(spark, store, "task_queue") {
-      val live = Store.readOrEmpty(spark, store.taskQueue, taskSchema)
-      val remaining = live
-        .join(results.select("task_hash").unionAll(doneHashes), Seq("task_hash"), "left_anti")
-        .select(live.columns.map(col): _*)
-      val tmp = store.taskQueue + "__next"
-      Store.delete(spark, tmp)
-      remaining.write.parquet(tmp)
-      Store.delete(spark, store.taskQueue)
-      swapInQueue(spark, tmp, store.taskQueue)
-    }
-
-    results.unpersist()
-    (nOk, nTasks - nOk)
+    val counts = routeResults(queue, batchDf, objectRoot, store)
+    // finished now includes this batch's results
+    Store.drain(spark, store.taskQueue, read,
+      if (full) None
+      else Some(queue.join(Store.finished(spark, store), Seq("task_hash"), "left_anti")))
+    counts
   }
-
-  /** Publish the freshly-written queue at its table path. Swap
-    * semantics (Store.publishDir with reuseExisting = false): ANY
-    * anomaly throws, because a silent failure here would leave a stale
-    * queue in place and re-execute drained tasks (DLQ'd failures are
-    * not masked by the done anti-join). */
-  private[exec] def swapInQueue(spark: SparkSession, tmp: String, dst: String): Unit =
-    Store.publishDir(spark, tmp, dst, reuseExisting = false)
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * resource rows (url/scheme/bucket/key/size/phony/hash) →
   * dropDuplicates(url) → anti-join against the existing index (the Redis
   * SADD set semantics, resource.go:77-87: re-ingesting the same URL is a
-  * no-op) → append to resource_index → SCARD-style count
-  * (service.go:114-118).
+  * no-op) → one logged append to resource_index → SCARD-style count
+  * from the ledger (service.go:114-118).
   *
   * Scale: the listing distributes per-prefix; filter + hash are
   * codegen'd Column expressions evaluated during the listing scan; dedup
@@ -51,19 +51,20 @@ object Ingest {
     toResources(Listing.listResources(spark, root, depth), filterSpec)
 
   /** Full ingest: append new resources to the index, return its
-    * cardinality (A1). Idempotent: re-running with the same tree adds
-    * nothing; no cache entries survive the call (the listing checkpoint
-    * is dropped once the append lands). */
+    * cardinality (A1) — a ledger fold, no count job. Idempotent:
+    * re-running with the same tree adds nothing; no cache entries
+    * survive the call (the listing checkpoint is dropped once the
+    * append lands). */
   def run(spark: SparkSession, root: String, filterSpec: String, depth: Int,
           store: Store): Long = {
     val (listed, release) = Listing.listResourcesManaged(spark, root, depth)
     try {
       val incoming = toResources(listed, filterSpec).dropDuplicates("url")
-      val existing = Store.readOrEmpty(spark, store.resourceIndex, resourceSchema)
+      val existing = Store.read(spark, store.resourceIndex, resourceSchema)
       val fresh = incoming.join(existing.select("url"), Seq("url"), "left_anti")
         .select(resourceSchema.fieldNames.map(col): _*)
-      Store.append(fresh, store.resourceIndex)
-      spark.read.schema(resourceSchema).parquet(store.resourceIndex).count()
+      Store.commit(fresh, store.resourceIndex)
+      Store.count(spark, store.resourceIndex)
     } finally release()
   }
 }

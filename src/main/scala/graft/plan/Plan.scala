@@ -12,49 +12,45 @@ import org.apache.spark.sql.types._
   * each resource out through the template registry, enqueues tasks to
   * SQS and SADDs their hashes (internal/tasker/service.go:85-132). Its
   * intended-but-commented task dedup (service.go:104-112) is implemented
-  * here for real: a left-anti join of the fanned-out tasks against both
-  * `task_done` and the pending `task_queue` on task_hash, so re-planning
-  * is idempotent and completed work is never re-enqueued.
+  * here for real: a left-anti join of the fanned-out tasks against the
+  * pending `task_queue` and against `task_done ∪ dlq` on task_hash, so
+  * re-planning is idempotent and finished work — a dead letter included
+  * — is never re-enqueued.
   *
-  * Scale: fan-out is a narrow Generate (no shuffle); the two anti-joins
+  * Scale: fan-out is a narrow Generate (no shuffle); the anti-joins
   * hash-partition on task_hash — or broadcast when the done/pending sets
   * are small, AQE's call. The resource set is never collected.
   */
 object Plan {
 
-  private[graft] def hashOnly(spark: SparkSession, path: String): DataFrame =
-    Store.readOrEmpty(spark, path,
-      StructType(Seq(StructField("task_hash", StringType))))
-      .select("task_hash")
-
   /** The planning core shared by the batch job and the streaming tasker
     * (StreamingJobs.planStream): fan the given resources out through
-    * the templates and drop anything already done or already queued —
-    * ONE implementation, so batch and streaming planners can never
-    * derive different task identities for the same resources. */
+    * the templates and drop anything already queued, done or
+    * dead-lettered — ONE implementation, so batch and streaming planners
+    * can never derive different task identities for the same resources.
+    * The queue is read BEFORE `task_done ∪ dlq`: a drain records its
+    * results before it removes their queue files, so a task missing
+    * from the queue read is in the later read of its results. */
   private[graft] def freshTasks(spark: SparkSession, resources: DataFrame, store: Store,
       templates: Seq[TemplateDef], cfg: Templates.PlanConfig): DataFrame = {
     val tasks = Templates.fanOut(resources, templates, cfg)
       .dropDuplicates("task_hash")
+    val queued = Store.read(spark, store.taskQueue,
+      StructType(Seq(StructField("task_hash", StringType))))
     tasks
-      .join(hashOnly(spark, store.taskDone), Seq("task_hash"), "left_anti")
-      .join(hashOnly(spark, store.taskQueue), Seq("task_hash"), "left_anti")
+      .join(Store.finished(spark, store), Seq("task_hash"), "left_anti")
+      .join(queued, Seq("task_hash"), "left_anti")
       .select(tasks.columns.map(col): _*) // stable column order across appends
   }
 
-  /** Fan out un-planned resources into task_queue; returns tasks added.
-    * The plan-and-append runs under the queue lock: an append landing
-    * inside a concurrent batch drain's snapshot→swap window would be
-    * silently dropped by the queue rewrite (see StoreLock). */
+  /** Fan out un-planned resources into task_queue in one logged append;
+    * returns the tasks it added, from that commit's ledger stats (no
+    * count job). No lock: a concurrent drain's queue commit removes only
+    * the files it read, never this append's. */
   def run(spark: SparkSession, store: Store,
       templates: Seq[TemplateDef] = Templates.registry,
-      cfg: Templates.PlanConfig = Templates.PlanConfig()): Long =
-    graft.store.StoreLock.withLock(spark, store, "task_queue") {
-      val resources = Store.readOrEmpty(spark, store.resourceIndex, Ingest.resourceSchema)
-      val fresh = freshTasks(spark, resources, store, templates, cfg)
-      // count via the written table so the number reflects what landed
-      val before = hashOnly(spark, store.taskQueue).count()
-      Store.append(fresh, store.taskQueue)
-      hashOnly(spark, store.taskQueue).count() - before
-    }
+      cfg: Templates.PlanConfig = Templates.PlanConfig()): Long = {
+    val resources = Store.read(spark, store.resourceIndex, Ingest.resourceSchema)
+    Store.commit(freshTasks(spark, resources, store, templates, cfg), store.taskQueue)
+  }
 }

@@ -37,7 +37,8 @@ object ExecOps {
       Ingest.run(s, FixtureTree.root, "ext/mov", 4, store)
       Plan.run(s, store)
       Execute.run(s, store, obj)
-      s.read.parquet(store.taskDone)
+      Store.read(s, store.taskDone,
+          org.apache.spark.sql.types.StructType.fromDDL("bytes_in bigint, bytes_up bigint"))
         .agg(count(lit(1)).as("n_tasks"),
           sum("bytes_in").as("bytes_in"), sum("bytes_up").as("bytes_up"))
     },
@@ -54,9 +55,9 @@ object ExecOps {
       val obj = Files.createTempDirectory("graft_obj_a4").toString
       Ingest.run(s, FixtureTree.root, "ext/mov", 4, store)
       Plan.run(s, store)
-      val afterPlan = s.read.parquet(store.taskQueue).count()
+      val afterPlan = Store.count(s, store.taskQueue)
       Execute.run(s, store, obj)
-      val afterExec = s.read.parquet(store.taskQueue).count()
+      val afterExec = Store.count(s, store.taskQueue)
       import s.implicits._
       Seq((afterPlan, afterExec)).toDF("depth_after_plan", "depth_after_execute")
     })

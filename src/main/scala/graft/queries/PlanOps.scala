@@ -122,9 +122,8 @@ object PlanOps {
         |       CAST(0 AS BIGINT) AS n_replan""".stripMargin) { (s, _) =>
       FixtureTree.ensure()
       val store = Store("/tmp/graft_state/plan_e2e")
-      Store.delete(s, store.resourceIndex)
-      Store.delete(s, store.taskQueue)
-      Store.delete(s, store.taskDone)
+      Seq(store.resourceIndex, store.taskQueue, store.taskDone, store.dlq)
+        .foreach(Store.delete(s, _))
       val nRes = Ingest.run(s, FixtureTree.root, "ext/mov", 4, store)
       val nTasks = Plan.run(s, store)
       val nReplan = Plan.run(s, store)

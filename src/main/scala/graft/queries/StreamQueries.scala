@@ -741,7 +741,7 @@ object StreamQueries {
       Ingest.run(s, FixtureTree.root, "ext/mov", 4, store)
       Plan.run(s, store)
       val (done, failed) = Execute.run(s, store, obj)
-      val queueLeft = s.read.parquet(store.taskQueue).count()
+      val queueLeft = Store.count(s, store.taskQueue)
       val replan = Plan.run(s, store)
       import s.implicits._
       Seq((done, failed, queueLeft, replan))
@@ -764,15 +764,13 @@ object StreamQueries {
       val ckpt = Files.createTempDirectory("graft_ckpt_q").toString
       Ingest.run(s, FixtureTree.root, "ext/mov", 4, store)
       Plan.run(s, store)
-      def countOrZero(path: String): Long =
-        try s.read.parquet(path).count() catch { case _: Throwable => 0L }
       val q1 = StreamingJobs.executeStream(s, store, obj, ckpt)
       q1.awaitTermination()
-      val done1 = s.read.parquet(store.taskDone).count()
-      val dlq1 = countOrZero(store.dlq)
+      val done1 = Store.count(s, store.taskDone)
+      val dlq1 = Store.count(s, store.dlq)
       val q2 = StreamingJobs.executeStream(s, store, obj, ckpt) // resume: no new files
       q2.awaitTermination()
-      val done2 = s.read.parquet(store.taskDone).count()
+      val done2 = Store.count(s, store.taskDone)
       import s.implicits._
       Seq((done1, dlq1, done2)).toDF("n_done", "n_dlq", "n_done_after_resume")
     })

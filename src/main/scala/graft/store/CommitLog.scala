@@ -18,10 +18,10 @@ import scala.collection.immutable.SortedMap
   * loud-failure contract unchanged. */
 final class FeedGapException(msg: String) extends IllegalStateException(msg)
 
-/** Minimal Delta-style transaction log — the ACID seam Store's
-  * docstrings promise for object-store deployments (Store.scala:39-41:
-  * the advisory lock FILE is correct on local/HDFS, but multi-writer
-  * safety on a store without atomic create needs a real log).
+/** Minimal Delta-style transaction log — the ACID layer under every
+  * engine table, the pipeline's four [[Store]] tables included:
+  * multi-writer safety without a lock file, on any store with one
+  * publish-if-absent primitive.
   *
   * Protocol (the published Delta/Iceberg core, stripped to appends +
   * rewrites over one flat parquet table):
@@ -53,8 +53,7 @@ final class FeedGapException(msg: String) extends IllegalStateException(msg)
   *    readers see the old files or the new files, never both, never
   *    neither. A concurrent append simply wins an earlier or later
   *    version — its files are not in the rewrite's remove set, so
-  *    nothing is lost (the lost-update window the lock file guards in
-  *    the unlogged layout does not exist here).
+  *    nothing is lost (no lost-update window, so no lock).
   *
   * Publish-if-absent is the ONE primitive the protocol needs, and it
   * is pluggable ([[AtomicPublisher]]): [[RenameOrLinkPublisher]] (the
@@ -64,10 +63,6 @@ final class FeedGapException(msg: String) extends IllegalStateException(msg)
   * a server-side create-if-absent condition (`If-None-Match: *`) —
   * no rename, no coordination service. The PROTOCOL is identical under
   * both; LoggedStoreSpec drives the full suite against each.
-  *
-  * The unlogged Store layout stays the default for local/HDFS — this
-  * layer is opt-in per table (LoggedStoreSpec drives it; the two
-  * layouts never mix on one table).
   */
 object CommitLog {
 
@@ -1474,6 +1469,22 @@ object CommitLog {
     }
   }
 
+  /** Rows the commit at `version` added: its add lines' log-carried
+    * [[RowCountKey]] counts — one commit-file read, no data I/O. */
+  private[graft] def addedRows(spark: SparkSession, tablePath: String,
+      version: Long): Long = {
+    val p = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(tablePath, LogDir),
+      f"$version%020d.commit")
+    readLines(fsOf(spark, p), p).filter(_.startsWith("+")).map { l =>
+      val bar = l.indexOf('|')
+      (if (bar < 0) None
+       else parseStatsJson(l.substring(bar + 1)).get(RowCountKey)
+         .collect { case (n: Long, _) => n })
+        .getOrElse(throw new IllegalStateException(
+          s"commit $version of $tablePath adds a file without a row count: $l"))
+    }.sum
+  }
+
   /** Byte-budgeted streaming admission over (base, capped]: the end
     * version whose cumulative [[feedCostOf]] fits `budget`, walking
     * commit files BY DIRECT PATH from base+1 and stopping at the first
@@ -1840,10 +1851,13 @@ object CommitLog {
     * reads, so they operate uniformly over mixed file generations —
     * LoggedStoreSpec pins both evolutions under both publishers. */
   def read(spark: SparkSession, tablePath: String, schema: StructType,
-      asOf: Long = Long.MaxValue): DataFrame = {
-    val snap = snapshot(spark, tablePath, asOf)
+      asOf: Long = Long.MaxValue): DataFrame =
+    read(spark, tablePath, schema, snapshot(spark, tablePath, asOf))
+
+  /** [[read]] of an already-taken snapshot. */
+  private[graft] def read(spark: SparkSession, tablePath: String, schema: StructType,
+      snap: Snapshot): DataFrame =
     visibleRows(spark, tablePath, schema, snap.live, snap.mapping)
-  }
 
   /** THE scan: the only code that turns log entries (live data
     * files, deletion vectors, change files) into a Spark relation. A
@@ -2043,14 +2057,14 @@ object CommitLog {
       publisher: AtomicPublisher,
       writeOptions: Map[String, String]): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
+    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(tablePath))
     val snap = snapshot(spark, tablePath)
     val (version, entries) = (snap.version, snap.live)
     val files = entries.map(_.name)
     if (files.isEmpty) return version
-    val totalBytes = files.map(f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(resolveDataPath(tablePath, f))).getLen).sum
+    // one listing per distinct parent, like optimize — never a status
+    // probe per file
+    val totalBytes = sizesFor(fs, tablePath, files).values.sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     // DV ABSORPTION: the rewrite reads VISIBLE rows, so attached
     // deletion vectors are folded into clean files here and their
@@ -2062,9 +2076,8 @@ object CommitLog {
     // logical read path (a clash with a re-added logical name would
     // read the wrong column)
     val schema = tableSchema(spark, tablePath, snap)
-    // same layout semantics as the unlogged compactor: plain, range-
-    // clustered, or "a,b" z-order (ZOrder.layout) — compaction doubling
-    // as the logged table's clustered index. writeOptions carries the
+    // plain, range-clustered, or "a,b" z-order (ZOrder.layout) —
+    // compaction doubling as the table's clustered index. writeOptions carries the
     // parquet bloom-filter knobs through the rewrite: a bloom-indexed
     // table must not silently LOSE its point-lookup index to
     // maintenance (the pruneByFooterStats probe path reads them)
@@ -2130,7 +2143,11 @@ object CommitLog {
     // ledger-first for the same column-mapping reason as compact()
     val schema = tableSchema(spark, tablePath, snap)
     // predicate → pushed-filter list, resolved the way a real scan
-    // would resolve it (analyzed Filter node over the table's plan)
+    // would resolve it: the filters the optimizer pushes onto the scan
+    // relation, which name the PHYSICAL columns below visibleRows'
+    // aliases — the name space the files' own stats are keyed by (a
+    // filter left above the aliases is not taken: wider scope, never
+    // a wrong one)
     val filters: Seq[org.apache.spark.sql.sources.Filter] = where match {
       case None => Seq.empty
       case Some(cond) =>
@@ -2142,11 +2159,12 @@ object CommitLog {
             mapping = mapping)
           .filter(cond).queryExecution.optimizedPlan
         optimized.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+          case org.apache.spark.sql.catalyst.plans.logical.Filter(c,
+              _: org.apache.spark.sql.execution.datasources.LogicalRelation) => c
         }.flatMap(org.apache.spark.sql.graft.StreamingShim.translateFilter(_).toSeq)
     }
     def inScope(e: LiveEntry): Boolean =
-      e.stats.map(s => statsToLogical(parseStatsJson(s), mapping)) match {
+      e.stats.map(parseStatsJson) match {
         case Some(m) if filters.nonEmpty =>
           filters.forall(f => graft.sources.StatsPruning.possible(m, f))
         case _ => true

@@ -1,103 +1,56 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** Engine-owned table layer (SURVEY.md §7.1, K9 analog).
+/** The pipeline's four state tables under one work root (SURVEY.md
+  * §7.1, K9 analog).
   *
   * The reference keeps pipeline state in external systems — a Redis SET as
   * the resource index (resource.go:77-87), SQS as the task queue, a Redis
   * SET of task hashes as the done-registry (task.go:157-179), and an SQS
-  * DLQ (task.go:132-147). Here state lives in parquet tables under one
-  * work root; every job is a pure DataFrame transform between tables, so
-  * Spark's planner sees the whole pipeline.
+  * DLQ (task.go:132-147). Here each is a LOGGED table ([[CommitLog]]):
+  * every job is a pure DataFrame transform between tables, so Spark's
+  * planner sees the whole pipeline, and every write is one atomic commit
+  * that concurrent writers fence through the log (Delta Lake's design,
+  * Armbrust et al., VLDB 2020) — no lock file, no directory swap.
   *
-  * Scale: append-only writes, partitioned by Spark's natural output
-  * partitioning (no driver materialization); dedup/claim joins are
-  * key-partitioned shuffles or broadcast anti-joins depending on AQE's
-  * runtime sizes. At cluster scale these paths would be s3a:// prefixes
-  * (or Delta tables for ACID appends) — the API is path-based so nothing
-  * else changes.
+  *  - Ingest, plan and execute append through CommitLog's append core
+  *    ([[Store.commit]]); every engine read goes through
+  *    [[CommitLog.read]] ([[Store.read]]).
+  *  - A batch drain consumes the queue with ONE commit tagged
+  *    `#op=drain` whose removes are exactly the files it read
+  *    ([[Store.drain]]): a planner append landing after that read is not
+  *    among them and survives.
+  *  - A dead letter is terminal: planners and drains anti-join
+  *    `task_done ∪ dlq` ([[Store.finished]]), so a drain retried after a
+  *    crash at any point neither runs nor records a task twice.
+  *  - Counts ([[Store.count]]) are ledger folds of the log-carried
+  *    `rows.count` stats — no Spark job.
+  *  - `task_done` and `dlq` are append-only (no auto-compaction), so a
+  *    reader listing their directory sees exactly the committed rows.
+  *
+  * Scale: appends are partitioned by Spark's natural output partitioning
+  * (no driver materialization); the dedup/claim anti-joins are
+  * key-partitioned shuffles or broadcasts, AQE's call. The API is
+  * path-based, so s3a:// roots change nothing but the log publisher.
   */
 final case class Store(root: String) {
   val resourceIndex: String = s"$root/resource_index"
   val taskQueue: String = s"$root/task_queue"
   val taskDone: String = s"$root/task_done"
   val dlq: String = s"$root/dlq"
-  val metadata: String = s"$root/metadata"
 }
 
-/** Advisory exclusive lock on a store table, held as an atomically
-  * created lock FILE under the store root. Guards the one genuinely
-  * destructive section in the engine — the batch drain's
-  * read-snapshot → execute → queue-swap in Execute.run — against
-  * concurrent queue APPENDS (Plan.run / planStream): an append landing
-  * between the snapshot and the swap would be silently dropped by the
-  * rewrite (lost update), so both sides serialize on this lock.
-  * Local/HDFS `create(overwrite=false)` is atomic; object stores
-  * without atomic create want the commit-log layer instead (graft.store
-  * .CommitLog — same seam, log-serialized writers, no lock file at
-  * all). A crash can leave the file behind —
-  * the timeout error names it for manual removal (same operational
-  * contract as any advisory lock file). */
-object StoreLock {
-  def withLock[T](spark: SparkSession, store: Store, table: String,
-      timeoutMs: Long = 60000)(body: => T): T = {
-    val p = new org.apache.hadoop.fs.Path(s"${store.root}/.lock_$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val deadline = System.currentTimeMillis() + timeoutMs
-    // Hadoop's LOCAL create(overwrite=false) is check-then-create (not
-    // atomic — concurrent creators all pass the exists check), so the
-    // file:// path uses NIO's O_CREAT|O_EXCL instead; HDFS enforces
-    // no-overwrite atomically namenode-side via the Hadoop call.
-    def tryAcquire(): Boolean =
-      if (fs.getScheme == "file") {
-        try {
-          java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toUri.getPath))
-          java.nio.file.Files.write(java.nio.file.Paths.get(p.toUri.getPath),
-            s"pid=${ProcessHandle.current().pid()}\n".getBytes)
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } else {
-        // Only the create() can mean "someone else holds it". A failure
-        // AFTER the create succeeded (write/close) would otherwise leave
-        // the caller spinning against its OWN orphaned lock file until
-        // timeout — and block every later writer until manual deletion —
-        // so the file is best-effort removed before reporting failure.
-        val created =
-          try Some(fs.create(p, false))
-          catch { case _: java.io.IOException => None }
-        created match {
-          case None => false
-          case Some(out) =>
-            try {
-              out.writeBytes(s"pid=${ProcessHandle.current().pid()}\n")
-              out.close()
-              true
-            } catch {
-              case _: java.io.IOException =>
-                // close the won handle FIRST — an open stream leaks a
-                // descriptor per retry, and some filesystems refuse to
-                // delete a file with a live writer (which would
-                // resurrect exactly the orphan this path removes)
-                try out.close() catch { case _: java.io.IOException => () }
-                try fs.delete(p, false) catch { case _: java.io.IOException => () }
-                false
-            }
-        }
-      }
-    while (!tryAcquire()) {
-      if (System.currentTimeMillis() > deadline)
-        throw new IllegalStateException(
-          s"could not acquire '$table' lock at $p within ${timeoutMs}ms — " +
-            "held by a live writer, or stale after a crash (delete the file to recover)")
-      Thread.sleep(100)
-    }
-    try body
-    finally { fs.delete(p, false); () }
-  }
-}
+/** A store table directory that holds parquet files but no commit log:
+  * written before the pipeline tables moved onto [[CommitLog]]. Reading
+  * it as empty would silently drop its rows, so every pipeline read
+  * refuses it until it is adopted in place. */
+final class UnloggedStoreTableException(val path: String) extends IllegalStateException(
+  s"$path holds parquet files but no _graft_log: a store table written before " +
+    "the pipeline tables moved onto the commit log. Adopt it in place with " +
+    s"CONVERT TO GRAFT graftlog.`$path` (CommitLog.convertParquet; CLI " +
+    "log-convert) and rerun")
 
 /** Bucketed (pre-partitioned, pre-sorted) table copies — Spark's
   * at-rest co-location primitive. A join between two tables bucketed
@@ -143,7 +96,7 @@ object Bucketing {
         .sortBy(bucketCol)
         .saveAsTable(tmpName)
       val tmpLoc = new org.apache.hadoop.fs.Path(warehouse, tmpName.toLowerCase)
-      Store.publishDir(spark, tmpLoc.toString, loc.toString, reuseExisting = true)
+      Store.publishDir(spark, tmpLoc.toString, loc.toString)
       // the files have moved; dropping the throwaway entry only clears
       // catalog metadata (its managed location no longer exists)
       spark.sql(s"DROP TABLE IF EXISTS $tmpName")
@@ -214,7 +167,7 @@ object Staging {
       // other's half-written copies (first COMPLETED rename wins)
       val tmp = s"${stage}__staging_${ProcessHandle.current().pid()}_${System.nanoTime()}"
       write(tmp)
-      Store.publishDir(spark, tmp, stage.toString, reuseExisting = true)
+      Store.publishDir(spark, tmp, stage.toString)
       // prune STALE versions of this source — only completed version
       // dirs (16-hex names), never a concurrent writer's live
       // `__staging_` tmp, whose publish must be allowed to lose the
@@ -309,9 +262,8 @@ object ZOrder {
     * ranges, min/max footers prune on c), or multi-column Z-order
     * ("a,b[,c,…]" — each file covers a hyper-rectangle of the value
     * space, prunes on any listed column; up to 7 columns at the
-    * default 8-bit buckets). Shared by the unlogged compactor
-    * (Store.compact) and the commit-log one (CommitLog.compact) so the
-    * two layers cannot drift on layout semantics. */
+    * default 8-bit buckets). The layout of CommitLog's compact and
+    * optimize rewrites. */
   def layout(df: DataFrame, nOut: Int, clusterBy: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     clusterBy match {
@@ -334,8 +286,9 @@ object ZOrder {
 
 object Store {
 
-  /** Read a parquet table, or an empty frame with the given schema when
-    * the table doesn't exist yet (first run). */
+  /** Read an UNLOGGED parquet table, or an empty frame with the given
+    * schema when it doesn't exist yet — the scratch state of the
+    * streaming dedup jobs. The pipeline tables read through [[read]]. */
   def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -343,6 +296,7 @@ object Store {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
+  /** Unlogged append, the counterpart of [[readOrEmpty]]. */
   def append(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).parquet(path)
 
@@ -353,234 +307,120 @@ object Store {
     ()
   }
 
-  /** Small-file compaction: rewrite a store table into
-    * max(1, ceil(totalBytes / targetBytes)) files and swap the
-    * directory in. Micro-batch sinks (execute-stream's per-trigger
-    * appends) and partition-batched bulk inserts accumulate files far
-    * below a scan-efficient split, and at 100 TB file COUNT is itself
-    * a scale limit: listing cost, per-file task overhead,
-    * split-planning memory. `repartition` (not coalesce) so output
-    * files are evenly sized — the one shuffle IS the compaction job's
-    * cost, amortized across every later scan.
-    *
-    * Concurrency (the queue drain's lock discipline, Execute.run): the
-    * whole operation is serialized against OTHER COMPACTORS by a
-    * dedicated `compact_<table>` lock (plus a writer-unique tmp dir, so
-    * even a rogue unserialized compactor can't clobber a rewrite in
-    * progress), while the TABLE lock — the one writers contend on — is
-    * held only for reconcile + swap, never across the unbounded
-    * rewrite. The rewrite reads a file SNAPSHOT; files appended since
-    * the snapshot are COPIED into the compacted output inside the table
-    * lock, so a locked writer (task_queue's planners) can never lose an
-    * append. Writers that do NOT take the table lock (done/dlq/index
-    * appends) are covered too: after the atomic park rename the parked
-    * directory is re-listed and any file the reconcile listing missed
-    * is folded into the rewrite — the listing-to-park window is closed
-    * exactly, not documented away. An append that begins after the park
-    * re-creates the table directory, which publishDir detects and
-    * REFUSES (loud failure, never silent loss).
-    *
-    * Crash safety: the swap parks the old directory at
-    * `<table>__pre_compact`, publishes the rewrite (whose `_COMPACTED`
-    * marker is the positive completion signal recovery keys on), then
-    * drops the parked copy — a crash at ANY point leaves the data
-    * intact under one of the two names, and the next compact (or any
-    * caller of `recoverParked`) restores it, folding in files any
-    * writer appended to a post-crash re-created table; no window ends
-    * in silent loss, unlike a bare delete-then-rename.
-    *
-    * `clusterBy` additionally range-partitions and sorts the rewrite on
-    * a column, so each output file covers a DISJOINT value range and
-    * parquet min/max footer stats let later scans skip whole files —
-    * compaction doubling as the table's clustered index. A two-column
-    * spec ("a,b") upgrades this to true Z-ORDER (see ZOrder): each file
-    * covers a rectangle of the two-dimensional value space, so scans
-    * filtering on EITHER column skip files. At 100 TB, data layout is
-    * the cheapest index there is. Returns (files, bytes) before/after.
-    */
-  def compact(spark: SparkSession, store: Store, table: String,
-      targetBytes: Long = 128L * 1024 * 1024,
-      clusterBy: Option[String] = None): ((Int, Long), (Int, Long)) = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val path = s"${store.root}/$table"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The latest snapshot of a logged store table (version 0 when
+    * nothing is committed). A directory with no commit yet is listed
+    * once more: parquet files there that no writer of the log landed
+    * make it a pre-log table, refused with
+    * [[UnloggedStoreTableException]] — never read as empty. (A writer's
+    * landed-but-uncommitted files carry its stamp and are not data.) */
+  def snapshot(spark: SparkSession, table: String): CommitLog.Snapshot = {
+    val snap = CommitLog.snapshot(spark, table)
+    if (snap.version == 0) {
+      val p = new org.apache.hadoop.fs.Path(table)
+      val entries =
+        try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+        catch { case _: java.io.FileNotFoundException => Seq.empty }
+      val names = entries.map(_.getPath.getName)
+      if (!names.contains("_graft_log") && entries.exists(st => st.isFile &&
+          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".") &&
+          CommitLog.writerStampMs(st.getPath.getName).isEmpty))
+        throw new UnloggedStoreTableException(table)
+    }
+    snap
+  }
 
-    def dataFiles(): Array[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(p)) Array.empty
-      else {
-        val entries = fs.listStatus(p)
-        // engine store tables are flat parquet dirs; a nested layout
-        // (hive-partitioned) would be INVISIBLE to this census and
-        // silently skipped — refuse loudly. `_`/`.`-prefixed dirs are
-        // exempt: an in-flight append keeps a live `_temporary` dir
-        // here, and aborting on one would fail compact for exactly the
-        // concurrency this design permits
-        require(!entries.exists(st => st.isDirectory &&
-            !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")),
-          s"compact does not support nested/partitioned layouts: $path")
-        entries.filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-      }
+  /** The committed rows of a store table under `schema` (an empty frame
+    * before its first commit), through [[CommitLog.read]]. */
+  def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
+    CommitLog.read(spark, table, schema, snapshot(spark, table))
 
-    // one compactor at a time — a second concurrent compact would
-    // mistake the first's published output for "late appends" (its
-    // part-file names differ from every snapshot name) and duplicate
-    // the whole table into its own rewrite
-    StoreLock.withLock(spark, store, s"compact_$table") {
-      StoreLock.withLock(spark, store, table) { recoverParked(spark, path) }
-      // sweep rewrite dirs left by compactors that crashed mid-write —
-      // safe under the compact lock: no other compactor is live
-      fs.globStatus(new org.apache.hadoop.fs.Path(path + "__compact_w*"))
-        .foreach(st => fs.delete(st.getPath, true))
-      val snapshot = dataFiles()
-      val before = (snapshot.length, snapshot.map(_.getLen).sum)
-      if (before._1 == 0) (before, before)
-      else {
-        // unbounded rewrite, table lock NOT held: read the snapshot
-        // files by name so appends landing mid-rewrite are neither read
-        // twice nor lost — they are reconciled below
-        val nOut = math.max(1L, (before._2 + targetBytes - 1) / targetBytes).toInt
-        val tmp = path + s"__compact_w${ProcessHandle.current().pid()}_${System.nanoTime()}"
-        val df = spark.read.parquet(snapshot.map(_.getPath.toString): _*)
-        val laid = ZOrder.layout(df, nOut, clusterBy)
-        laid.write.parquet(tmp)
-        // the positive completion signal recoverParked keys on: only a
-        // fully-written compacted directory carries it, and parquet
-        // readers ignore `_`-prefixed files
-        fs.create(new org.apache.hadoop.fs.Path(tmp, CompactedMarker), true).close()
+  /** Append `df` to a store table in one commit — the append core of
+    * [[CommitLog.append]] without its auto-compaction, so `task_done`
+    * and `dlq` stay append-only whatever the table's properties say.
+    * Returns the rows it added, from the commit's ledger stats. Every
+    * pipeline write follows a [[read]] of the same table in the same
+    * verb, which is what refuses a pre-log directory. */
+  def commit(df: DataFrame, table: String): Long = {
+    val spark = df.sparkSession
+    CommitLog.appendOrAbort(df, table, snapshot(spark, table), RenameOrLinkPublisher,
+      opTag = None, abortOnLostRace = _ => false)
+      .fold(0L)(CommitLog.addedRows(spark, table, _))
+  }
 
-        StoreLock.withLock(spark, store, table) {
-          // reconcile: copy (not move — the live table stays complete
-          // until the park) every file appended since the snapshot into
-          // the compacted output
-          val snapNames = snapshot.map(_.getPath.getName).toSet
-          val late = dataFiles().filterNot(st => snapNames(st.getPath.getName))
-          late.foreach { st =>
-            org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-              new org.apache.hadoop.fs.Path(tmp, s"late-${st.getPath.getName}"),
-              false, spark.sparkContext.hadoopConfiguration)
-          }
-          // test seam: CompactSpec injects an unlocked append HERE to
-          // pin that the listing-to-park window cannot lose files
-          testHookBeforePark()
-          val parked = new org.apache.hadoop.fs.Path(path + "__pre_compact")
-          if (!fs.rename(p, parked))
-            throw new IllegalStateException(s"compact could not park $path")
-          // Writers that do NOT take the table lock (done/dlq/index
-          // appends) may have landed files between the reconcile
-          // listing above and the park rename — inside the parked
-          // directory now, and a bare delete would silently drop them
-          // (round-5 advice: an operator compacting dlq against a live
-          // executeStream lost dead letters). The park rename is atomic,
-          // so re-listing the PARKED directory closes the window
-          // exactly: copy any file not already accounted for into the
-          // rewrite. (Appends that start after the park re-create the
-          // table directory, which publishDir detects and refuses —
-          // loud, never silent loss.)
-          val accounted = snapNames ++ late.map(_.getPath.getName)
-          fs.listStatus(parked)
-            .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith(".") && !accounted(st.getPath.getName))
-            .foreach { st =>
-              org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-                new org.apache.hadoop.fs.Path(tmp, s"late-${st.getPath.getName}"),
-                false, spark.sparkContext.hadoopConfiguration)
-            }
-          publishDir(spark, tmp, path, reuseExisting = false)
-          fs.delete(parked, true)
-          ()
-        }
-        val after = dataFiles()
-        (before, (after.length, after.map(_.getLen).sum))
-      }
+  /** Consume the queue files a drain read, in ONE commit tagged
+    * `#op=drain`: its removes are exactly `read`'s live files, so an
+    * append landing after the read survives. `rest` — only a limited
+    * batch has one — is restaged as that same commit's adds. No commit
+    * when the drain read no files. A concurrent rewrite that removed
+    * one of them first fails this commit loudly (the log's remove
+    * validation); the drain's results are recorded by then, and the
+    * next drain consumes the files. */
+  def drain(spark: SparkSession, queue: String, read: CommitLog.Snapshot,
+      rest: Option[DataFrame]): Unit = {
+    val files = read.live.map(_.name)
+    if (files.nonEmpty) rest match {
+      case None =>
+        CommitLog.commit(spark, queue, adds = Seq.empty, removes = files,
+          opTag = Some(DrainOp))
+        ()
+      case Some(df) =>
+        CommitLog.appendOrAbort(df, queue, read, RenameOrLinkPublisher,
+          Some(DrainOp), abortOnLostRace = _ => false, removes = files)
+        ()
     }
   }
 
-  private val CompactedMarker = "_COMPACTED"
+  /** The op tag of a drain's queue commit (`history()`'s operation). */
+  val DrainOp = "drain"
 
-  /** Test-only injection point inside compact's reconcile-to-park
-    * window (no-op in production) — the only way to exercise that race
-    * deterministically. */
-  private[store] var testHookBeforePark: () => Unit = () => ()
-
-  /** Restore a table left parked by a compact that crashed mid-swap.
-    * The decision keys on the POSITIVE completion marker, not bare
-    * existence (a writer may have re-created the table directory after
-    * the crash, which bare existence would mistake for a completed
-    * publish and delete the parked original):
-    *  - parked present, table missing → crash between park and publish:
-    *    the parked directory IS the table — rename it back;
-    *  - parked present, table carries `_COMPACTED` → the publish
-    *    completed and only the cleanup was lost — drop the parked twin;
-    *  - parked present, table present WITHOUT the marker → a writer
-    *    re-created the table post-crash: fold its files into the parked
-    *    original (as `post_crash-` appends), then restore the parked
-    *    directory — both pre-crash and post-crash rows survive.
-    * Callers hold the table lock. */
-  private[store] def recoverParked(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val parked = new org.apache.hadoop.fs.Path(path + "__pre_compact")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(parked)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(parked, p))
-          throw new IllegalStateException(s"could not restore parked table at $parked")
-      } else if (fs.exists(new org.apache.hadoop.fs.Path(p, CompactedMarker))) {
-        fs.delete(parked, true); ()
-      } else {
-        fs.listStatus(p)
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .foreach { st =>
-            if (!fs.rename(st.getPath,
-                new org.apache.hadoop.fs.Path(parked, s"post_crash-${st.getPath.getName}")))
-              throw new IllegalStateException(
-                s"could not fold post-crash file ${st.getPath} into $parked")
-          }
-        fs.delete(p, true)
-        if (!fs.rename(parked, p))
-          throw new IllegalStateException(s"could not restore parked table at $parked")
-      }
-    }
+  /** `task_hash` of every task recorded done or dead-lettered — what
+    * planners and drains anti-join, so a dead letter is terminal and a
+    * retried drain never runs or records a task twice. */
+  def finished(spark: SparkSession, store: Store): DataFrame = {
+    val hash = StructType(Seq(StructField("task_hash", StringType)))
+    read(spark, store.taskDone, hash).union(read(spark, store.dlq, hash))
   }
 
-  /** Publish a freshly-written `tmp` directory at `dst` via rename —
-    * the ONE implementation of the two Hadoop local-FS publish traps
-    * (previously hand-rolled separately by the stream staging and the
-    * queue swap):
+  /** Committed rows of a store table from the ledger alone: each live
+    * file's `rows.count` stat minus its deletion-vector rows. No Spark
+    * job, no footer read. */
+  def count(spark: SparkSession, table: String): Long =
+    ledgerSum(snapshot(spark, table), "row count")(CommitLog.metadataVisibleCount)
+
+  /** (live files, bytes) of a store table from the ledger's
+    * `bytes.size` stats — `Cli compact`'s before/after census. */
+  def census(spark: SparkSession, table: String): (Int, Long) = {
+    val snap = snapshot(spark, table)
+    (snap.live.size, ledgerSum(snap, "size")(e => e.stats.flatMap(j =>
+      CommitLog.parseStatsJson(j).get(CommitLog.BytesSizeKey)
+        .collect { case (b: Long, _) => b })))
+  }
+
+  private def ledgerSum(snap: CommitLog.Snapshot, what: String)(
+      f: CommitLog.LiveEntry => Option[Long]): Long =
+    snap.live.map(e => f(e).getOrElse(throw new IllegalStateException(
+      s"live file ${e.name} carries no ledger $what"))).sum
+
+  /** Publish a freshly-written `tmp` directory at `dst` via rename,
+    * staging semantics: losing the publish race is fine (tmp is
+    * discarded, the winner's complete dst is used). Handles the two
+    * Hadoop local-FS rename traps:
     *  - `rename` returns false when dst exists as a file / reappeared;
     *  - `rename` "succeeds" against a dst DIRECTORY that appeared
     *    concurrently by falling back to FileUtil.copy — it copies tmp
     *    INTO dst (a nested non-partition subdir that breaks parquet
-    *    discovery), detected via the tmp-basename child.
-    *
-    * `reuseExisting = true` — staging semantics: losing the publish
-    * race is fine (tmp is discarded, the winner's complete dst is
-    * used) and a nested copy is repaired by deleting it.
-    * `reuseExisting = false` — swap semantics: ANY anomaly throws,
-    * because proceeding against a stale dst is a lost update. */
-  def publishDir(spark: SparkSession, tmp: String, dst: String,
-      reuseExisting: Boolean): Unit = {
+    *    discovery), detected via the tmp-basename child and deleted. */
+  def publishDir(spark: SparkSession, tmp: String, dst: String): Unit = {
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     val dstPath = new org.apache.hadoop.fs.Path(dst)
     val fs = tmpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.rename(tmpPath, dstPath)) {
-      if (!reuseExisting)
-        throw new IllegalStateException(
-          s"table swap rename failed; data remains at $tmp")
       fs.delete(tmpPath, true)
       if (!fs.exists(dstPath))
         throw new IllegalStateException(s"publish rename failed and no table at $dst")
-      ()
     } else {
       val nested = new org.apache.hadoop.fs.Path(dstPath, tmpPath.getName)
-      if (fs.exists(nested)) {
-        if (reuseExisting) { fs.delete(nested, true); () }
-        else throw new IllegalStateException(
-          s"table swap landed nested at $nested (concurrent writer re-created $dst); " +
-            "the table is polluted — recover from the nested copy")
-      }
+      if (fs.exists(nested)) { fs.delete(nested, true); () }
     }
   }
 }

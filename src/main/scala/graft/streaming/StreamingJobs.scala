@@ -815,12 +815,15 @@ object StreamingJobs {
 
   /** The plan (tasker) job as a streaming query over the resource_index
     * table — the reference's 30 s poll loop (T1, cmd/tasker.go:85-98)
-    * as a file-source stream: each Ingest append becomes a micro-batch,
-    * fanned out through the template registry and anti-joined against
-    * task_done/task_queue inside foreachBatch (D3 — the dedup the
-    * reference intended but commented out, tasker/service.go:104-112).
-    * A failed batch retries from the checkpoint and the anti-joins make
-    * the retry idempotent (T2). */
+    * as a file-source stream over the logged table's root, where its
+    * committed data files sit: each Ingest append becomes a
+    * micro-batch, fanned out through the template registry, anti-joined
+    * against the queue and `task_done ∪ dlq` (D3 — the dedup the
+    * reference intended but commented out, tasker/service.go:104-112)
+    * and appended to task_queue through the log — no lock: a drain's
+    * queue commit removes only the files it read. A failed batch
+    * retries from the checkpoint and the anti-joins make the retry
+    * idempotent (T2). */
   def planStream(spark: SparkSession, store: Store, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       templates: Seq[graft.plan.TemplateDef] = graft.plan.Templates.registry,
@@ -833,26 +836,26 @@ object StreamingJobs {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // same planning core as the batch job — identical task
-        // identities for identical resources, whichever planner runs;
-        // the append takes the queue lock so it can't be dropped by a
-        // concurrent batch drain's queue rewrite (see StoreLock)
-        graft.store.StoreLock.withLock(batch.sparkSession, store, "task_queue") {
-          Store.append(
-            graft.plan.Plan.freshTasks(batch.sparkSession, batch, store, templates, cfg),
-            store.taskQueue)
-        }
+        // identities for identical resources, whichever planner runs
+        Store.commit(
+          graft.plan.Plan.freshTasks(batch.sparkSession, batch, store, templates, cfg),
+          store.taskQueue)
         ()
       }
       .start()
   }
 
   /** The execute job as a streaming query over the task_queue table
-    * (S2 queue source semantics): new parquet files appended by Plan are
-    * discovered by the file source, executed per micro-batch, results
-    * routed to task_done/dlq. The checkpoint makes restarts resume after
-    * the last committed batch (T6); the anti-join against task_done
-    * makes batch REPLAY idempotent (T2/K7 — at-least-once delivery +
-    * idempotent sink ≡ effective exactly-once).
+    * (S2 queue source semantics): a file source over the logged table's
+    * root discovers each data file a planner commits, executes the
+    * micro-batch's tasks not yet in `task_done ∪ dlq` and records the
+    * results (Execute.routeResults: done, then dlq, each only when
+    * non-empty). The checkpoint makes restarts resume after the last
+    * committed batch (T6). The source also sees files a batch drain has
+    * since consumed, a limited batch restaged or a compaction rewrote;
+    * the anti-join makes every such replay — and a batch REPLAY after a
+    * failure — a no-op (T2/K7: at-least-once delivery + idempotent sink
+    * ≡ effective exactly-once).
     *
     * @param maxFilesPerTrigger S4's batch-size rate limit
     */
@@ -860,9 +863,8 @@ object StreamingJobs {
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Int = 10,
       failInjector: DataFrame => Unit = _ => ()): StreamingQuery = {
-    val taskSchema = Encoders.product[Task].schema
     val stream = spark.readStream
-      .schema(taskSchema)
+      .schema(Encoders.product[Task].schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(store.taskQueue)
 
@@ -871,14 +873,9 @@ object StreamingJobs {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         failInjector(batch) // test hook: T2 batch-failure → retry path
-        val doneHashes = Store.readOrEmpty(batch.sparkSession, store.taskDone, taskSchema)
-          .select("task_hash")
-        val todo = batch.join(doneHashes, Seq("task_hash"), "left_anti")
-          .as[Task](Encoders.product[Task])
-        val results = Execute.executeBatch(todo, objectRoot).persist()
-        results.count()
-        Execute.routeResults(batch, results, store)
-        results.unpersist()
+        val todo = batch.join(Store.finished(batch.sparkSession, store),
+          Seq("task_hash"), "left_anti")
+        Execute.routeResults(batch, todo, objectRoot, store)
         ()
       }
       .start()

@@ -26,8 +26,8 @@ class CliSpec extends SparkSpec {
     val out = Cli.run(spark, Array("execute-stream", root, obj))
     assert(out == """{"cmd":"execute-stream","continuous":false,"task_done":8}""")
     assert(spark.read.parquet(store.taskDone).count() == 8)
-    // stats is METADATA-ONLY: counts come from parquet footers, so the
-    // call must launch zero Spark jobs — on a 100 TB store a count()
+    // stats is METADATA-ONLY: counts are ledger folds of the tables'
+    // row-count stats, so the call must launch zero Spark jobs — on a 100 TB store a count()
     // scan would turn a polled operational counter into a cluster job
     // (the reference's counters are O(1) SCARD / queue-attribute reads)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -232,18 +232,17 @@ class ExecuteSpec extends SparkSpec {
     val (done1, _) = Execute.run(spark, store, obj)
     assert(done1 == 8)
     // simulate the crash: done rows exist but the queue was never
-    // swapped — re-plan the same tasks back into the queue
+    // consumed — re-plan the same tasks back into the queue
     Store.delete(spark, store.taskQueue)
     Plan.run(spark, store) // anti-joins task_done → adds 0, queue stays empty
     // but even with completed hashes forced into the queue...
-    spark.read.parquet(store.taskDone)
+    graft.store.CommitLog.append(spark.read.parquet(store.taskDone)
       .select("input", "output", "metadata", "hooks", "strategy",
-        "timeout_s", "version", "task_hash")
-      .write.mode("append").parquet(store.taskQueue)
+        "timeout_s", "version", "task_hash"), store.taskQueue)
     val (done2, failed2) = Execute.run(spark, store, obj)
     assert((done2, failed2) == (0L, 0L), "completed tasks were re-executed")
     assert(spark.read.parquet(store.taskDone).count() == 8, "task_done duplicated")
-    assert(spark.read.parquet(store.taskQueue).count() == 0, "queue not drained of done hashes")
+    assert(Store.count(spark, store.taskQueue) == 0, "queue not drained of done hashes")
   }
 
   test("e2e ingest→plan→execute: done/dlq/queue bookkeeping (T5, K6)") {
@@ -260,7 +259,7 @@ class ExecuteSpec extends SparkSpec {
     assert((done, failedN) == (8L, 0L))
     assert(spark.read.parquet(store.taskDone).count() == 8)
     // queue fully drained
-    assert(spark.read.parquet(store.taskQueue).count() == 0)
+    assert(Store.count(spark, store.taskQueue) == 0)
     // mov outputs: manifest + copied input per task; metadata none for mov
     val manifests = graft.ingest.Listing.listResources(spark, obj, 12)
       .filter(col("key").endsWith("manifest.mpd"))
@@ -392,47 +391,6 @@ class ExecuteSpec extends SparkSpec {
     assert(injected.error.contains("invalid image reference"))
   }
 
-  test("queue swap: rename failure throws even with a stale queue present") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_swap").toString
-    val tmp = s"$root/task_queue__next"
-    val dst = s"$root/task_queue"
-    Seq(("h1", 1)).toDF("task_hash", "n").write.parquet(tmp)
-    // destination reappears as a FILE (stale queue artifact): rename of
-    // a directory onto it returns false — must throw, never proceed
-    // against the stale table
-    Files.write(Paths.get(dst), "stale".getBytes)
-    val e = intercept[IllegalStateException](Execute.swapInQueue(spark, tmp, dst))
-    assert(e.getMessage.contains("swap rename failed"))
-    assert(Files.exists(Paths.get(tmp)), "tmp queue must survive for recovery")
-  }
-
-  test("queue swap: rename 'success' that copies INTO a re-created dir is detected") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_swap2").toString
-    val tmp = s"$root/task_queue__next"
-    val dst = s"$root/task_queue"
-    Seq(("h1", 1)).toDF("task_hash", "n").write.parquet(tmp)
-    // a concurrent writer re-created the destination DIR between the
-    // delete and the rename: Hadoop's local rename falls back to
-    // copying tmp INTO it and returns true — the nested-layout check
-    // must catch the pollution
-    Seq(("h2", 2)).toDF("task_hash", "n").write.parquet(dst)
-    val e = intercept[IllegalStateException](Execute.swapInQueue(spark, tmp, dst))
-    assert(e.getMessage.contains("nested"))
-  }
-
-  test("queue swap: clean rename publishes the new queue") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_swap3").toString
-    val tmp = s"$root/task_queue__next"
-    val dst = s"$root/task_queue"
-    Seq(("h1", 1)).toDF("task_hash", "n").write.parquet(tmp)
-    Execute.swapInQueue(spark, tmp, dst)
-    assert(spark.read.parquet(dst).count() == 1)
-    assert(!Files.exists(Paths.get(tmp)))
-  }
-
   test("forced failure lands in dlq with error; successes unaffected (K6)") {
     FixtureTree.ensure()
     val store = Store("/tmp/graft_test_state/exec_dlq")
@@ -452,5 +410,61 @@ class ExecuteSpec extends SparkSpec {
     assert(dlq.count() == 4)
     assert(dlq.select("error").head().getString(0).contains("exited 3"))
     assert(dlq.select("hooks").distinct().head().getString(0) == "mov")
+  }
+
+  /** 4 .mov resources planned with a failing container template:
+    * 4 thumb tasks succeed, 4 mov tasks dead-letter. */
+  private val failing = Seq(
+    TemplateDef("mov", Seq("mov"), "img", "fail_stub", 60),
+    TemplateDef("thumb", Seq("mov"), "img", "process_thumb", 60))
+
+  test("a dead letter is terminal: re-plan enqueues 0 tasks and a second drain runs 0") {
+    FixtureTree.ensure()
+    val store = Store(Files.createTempDirectory("graft_dlq_terminal").toString)
+    val (obj, _) = freshDirs()
+    Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
+    assert(Plan.run(spark, store, failing) == 8)
+    assert(Execute.run(spark, store, obj) == ((4L, 4L)))
+    assert(Plan.run(spark, store, failing) == 0, "re-plan re-enqueued dead letters")
+    assert(Execute.run(spark, store, obj) == ((0L, 0L)))
+    assert(Store.count(spark, store.dlq) == 4 && Store.count(spark, store.taskDone) == 4)
+  }
+
+  test("history of task_queue shows one drain commit per drain; a full drain adds no file") {
+    FixtureTree.ensure()
+    val store = Store(Files.createTempDirectory("graft_drain_history").toString)
+    val (obj, _) = freshDirs()
+    Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
+    Plan.run(spark, store) // 8 tasks
+    assert(Execute.run(spark, store, obj, batchSize = 3) == ((3L, 0L)))
+    assert(Store.count(spark, store.taskQueue) == 5)
+    assert(Execute.run(spark, store, obj) == ((5L, 0L)))
+    // an empty queue: nothing read, so nothing committed
+    assert(Execute.run(spark, store, obj) == ((0L, 0L)))
+    val drains = graft.store.CommitLog.history(spark, store.taskQueue)
+      .filter(col("operation") === Store.DrainOp)
+      .select("n_added", "n_removed").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(drains.size == 2, s"drain commits: $drains")
+    assert(drains(0)._1 > 0 && drains(0)._2 > 0, "the limited batch restages its rest")
+    assert(drains(1)._1 == 0 && drains(1)._2 > 0, "the full drain wrote data")
+    assert(Store.count(spark, store.taskQueue) == 0 && Store.count(spark, store.taskDone) == 8)
+  }
+
+  test("pipeline verbs refuse a store table written before the commit log") {
+    FixtureTree.ensure()
+    val store = Store(Files.createTempDirectory("graft_prelog").toString)
+    val (obj, _) = freshDirs()
+    Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
+    // a task_done directory of plain parquet, as a pre-log drain left it
+    spark.range(0, 3).selectExpr("cast(id as string) as task_hash").write.parquet(store.taskDone)
+    def refused(body: => Any): Unit = {
+      val e = intercept[graft.store.UnloggedStoreTableException](body)
+      assert(e.path == store.taskDone && e.getMessage.contains("CommitLog.convertParquet"),
+        e.getMessage)
+    }
+    refused(Plan.run(spark, store))
+    refused(Execute.run(spark, store, obj))
+    refused(graft.Cli.run(spark, Array("stats", store.root)))
+    assert(Store.count(spark, store.taskQueue) == 0, "a refused plan enqueued tasks")
   }
 }

@@ -68,8 +68,9 @@ class PlanSpec extends SparkSpec {
 
     // complete one task -> moving it to done keeps it excluded even if
     // the queue were rebuilt from scratch
-    val one = spark.read.parquet(store.taskQueue).limit(1)
-    Store.append(one, store.taskDone)
+    val one = Store.read(spark, store.taskQueue,
+      org.apache.spark.sql.Encoders.product[graft.core.Task].schema).limit(1)
+    graft.store.CommitLog.append(one, store.taskDone)
     Store.delete(spark, store.taskQueue)
     assert(Plan.run(spark, store) == 7)
   }

@@ -5,20 +5,36 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** Small-file compaction: content must survive byte-for-byte, the file
-  * count must actually shrink, and the op must be safe to re-run and to
-  * point at a missing table. */
+/** Small-file compaction of logged store tables — what `Cli compact`
+  * runs (CommitLog.compact): content must survive byte-for-byte, the
+  * live file count must actually shrink, and the op must be safe to
+  * re-run and to point at a missing table. The layout cases call
+  * CommitLog.compact with byte targets (the CLI takes whole MB, and
+  * these tables are a few KB). */
 class CompactSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore(): Store =
     Store(Files.createTempDirectory("graft_compact").toString)
 
-  private def dataFiles(path: String): Array[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Array.empty
-    else fs.listStatus(p).filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+  private def append(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    CommitLog.append(df, path); ()
+  }
+
+  /** The table's live data files (what a reader scans). */
+  private def dataFiles(path: String): Seq[String] =
+    CommitLog.liveFiles(spark, path)._2.map(n => s"$path/$n")
+
+  private def totalBytes(path: String): Long = Store.census(spark, path)._2
+
+  private def rows(path: String, ddl: String): org.apache.spark.sql.DataFrame =
+    CommitLog.read(spark, path, org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  /** `Cli compact`'s before/after census. */
+  private def compactCli(args: String*): ((Int, Long), (Int, Long)) = {
+    val out = graft.Cli.run(spark, ("compact" +: args).toArray)
+    def n(k: String) = s""""$k":(\\d+)""".r.findFirstMatchIn(out).get.group(1).toLong
+    ((n("files_before").toInt, n("bytes_before")), (n("files_after").toInt, n("bytes_after")))
   }
 
   test("compact shrinks the file count and preserves every row") {
@@ -26,49 +42,49 @@ class CompactSpec extends SparkSpec {
     val path = s"${store.root}/metadata"
     // 5 appends of 4 partitions each — the micro-batch small-file shape
     (0 until 5).foreach { i =>
-      Store.append(
+      append(
         spark.range(i * 100, (i + 1) * 100).repartition(4)
           .select(col("id"), (col("id") * 2).as("v")),
         path)
     }
     val before = dataFiles(path)
     assert(before.length >= 20, s"fixture should be fragmented, got ${before.length} files")
-    val expected = spark.read.parquet(path).as[(Long, Long)].collect().sorted
+    val expected = rows(path, "id bigint, v bigint").as[(Long, Long)].collect().sorted
 
-    val ((fb, bb), (fa, ba)) =
-      Store.compact(spark, store, "metadata", targetBytes = 1L << 30)
+    val ((fb, bb), (fa, ba)) = compactCli("metadata", store.root, "1024")
     assert(fb == before.length && fa == 1, s"expected 1 output file, got $fa of $fb")
     assert(bb > 0 && ba > 0)
     assert(dataFiles(path).length == 1)
-    assert(spark.read.parquet(path).as[(Long, Long)].collect().sorted.sameElements(expected),
-      "compaction changed the table contents")
+    assert(rows(path, "id bigint, v bigint").as[(Long, Long)].collect().sorted
+      .sameElements(expected), "compaction changed the table contents")
   }
 
   test("compact splits to ceil(bytes/target) evenly-sized files") {
     val store = freshStore()
     val path = s"${store.root}/metadata"
-    Store.append(spark.range(0, 5000).repartition(10).toDF("id"), path)
-    val total = dataFiles(path).map(_.getLen).sum
+    append(spark.range(0, 5000).repartition(10).toDF("id"), path)
+    val total = totalBytes(path)
     val target = total / 3 + 1 // → ceil < 4 output files, > 1
-    val ((_, _), (fa, _)) = Store.compact(spark, store, "metadata", target)
+    CommitLog.compact(spark, path, target)
+    val fa = dataFiles(path).length
     val nOut = ((total + target - 1) / target).toInt
     assert(fa == nOut, s"expected $nOut files, got $fa")
-    assert(spark.read.parquet(path).count() == 5000)
+    assert(rows(path, "id bigint").count() == 5000)
   }
 
   test("compact of a missing table is a no-op; rerun is idempotent; lock is released") {
     val store = freshStore()
-    assert(Store.compact(spark, store, "metadata") == ((0, 0L), (0, 0L)))
+    assert(compactCli("metadata", store.root) == ((0, 0L), (0, 0L)))
     val path = s"${store.root}/metadata"
-    Store.append(spark.range(0, 10).toDF("id"), path)
-    val r1 = Store.compact(spark, store, "metadata")
-    val r2 = Store.compact(spark, store, "metadata")
+    append(spark.range(0, 10).toDF("id"), path)
+    val r1 = compactCli("metadata", store.root)
+    val r2 = compactCli("metadata", store.root)
     assert(r2._1._1 == 1 && r2._2._1 == 1, s"rerun not idempotent: $r2")
     assert(r1._2._2 == r2._2._2, "byte size drifted across reruns")
-    // the lock file must be gone — a held lock would starve the planner
+    // no lock file: the log fences concurrent writers
     val lock = new org.apache.hadoop.fs.Path(s"${store.root}/.lock_metadata")
     val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(lock), "compaction leaked its table lock")
+    assert(!fs.exists(lock), "compaction leaked a table lock")
   }
 
   test("clusterBy compaction yields disjoint per-file value ranges") {
@@ -77,27 +93,24 @@ class CompactSpec extends SparkSpec {
     // shuffled ids across many appends — every file initially spans the
     // whole id domain, so nothing is file-skippable before compaction
     (0 until 4).foreach { i =>
-      Store.append(
+      append(
         spark.range(0, 2000).filter(col("id") % 4 === i).repartition(3).toDF("id"),
         path)
     }
-    val total = dataFiles(path).map(_.getLen).sum
-    Store.compact(spark, store, "metadata", total / 3 + 1, clusterBy = Some("id"))
+    CommitLog.compact(spark, path, totalBytes(path) / 3 + 1, clusterBy = Some("id"))
     val files = dataFiles(path)
     assert(files.length > 1, "need several files to prove disjointness")
     // each output file must cover a range disjoint from every other —
     // that is what lets parquet min/max footer stats skip whole files
-    val ranges = files.map { st =>
-      val r = spark.read.parquet(st.getPath.toString)
-        .agg(min("id"), max("id")).as[(Long, Long)].head()
-      r
+    val ranges = files.map { f =>
+      spark.read.parquet(f).agg(min("id"), max("id")).as[(Long, Long)].head()
     }.sortBy(_._1)
     ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) =>
+      case Seq((_, hi), (lo2, _)) =>
         assert(hi < lo2, s"file ranges overlap: ${ranges.mkString(", ")}")
       case _ =>
     }
-    assert(spark.read.parquet(path).as[Long].collect().sorted.sameElements(0L until 2000L),
+    assert(rows(path, "id bigint").as[Long].collect().sorted.sameElements(0L until 2000L),
       "cluster compaction changed the table contents")
   }
 
@@ -106,12 +119,11 @@ class CompactSpec extends SparkSpec {
     val path = s"${store.root}/metadata"
     // a 64×64 grid in row-major id order: single-column clustering on
     // `a` would leave every file spanning the FULL b domain
-    Store.append(
+    append(
       spark.range(0, 64 * 64).select(
         (col("id") % 64).as("a"), expr("id div 64").as("b")).repartition(8),
       path)
-    val total = dataFiles(path).map(_.getLen).sum
-    Store.compact(spark, store, "metadata", total / 4 + 1, clusterBy = Some("a,b"))
+    CommitLog.compact(spark, path, totalBytes(path) / 4 + 1, clusterBy = Some("a,b"))
     val files = dataFiles(path)
     assert(files.length >= 4, s"need several files, got ${files.length}")
     // the property single-column clustering CANNOT give: min/max
@@ -122,8 +134,8 @@ class CompactSpec extends SparkSpec {
     // window. (Exact per-file rectangles depend on where the sampled
     // range partitioner cuts the curve, so this asserts prunability,
     // not cut positions.)
-    val ranges = files.map { st =>
-      spark.read.parquet(st.getPath.toString)
+    val ranges = files.map { f =>
+      spark.read.parquet(f)
         .agg(min("a"), max("a"), min("b"), max("b"))
         .as[(Long, Long, Long, Long)].head()
     }
@@ -131,7 +143,7 @@ class CompactSpec extends SparkSpec {
       s"no file skippable for a <= 15: ${ranges.mkString(", ")}")
     assert(ranges.exists(_._3 > 15),
       s"no file skippable for b <= 15: ${ranges.mkString(", ")}")
-    assert(spark.read.parquet(path).count() == 64 * 64,
+    assert(rows(path, "a bigint, b bigint").count() == 64 * 64,
       "z-order compaction changed the table contents")
   }
 
@@ -140,20 +152,19 @@ class CompactSpec extends SparkSpec {
     val path = s"${store.root}/metadata"
     // a 16×16×16 cube in row-major id order: clustering on any prefix
     // of the columns leaves files spanning the remaining dimensions
-    Store.append(
+    append(
       spark.range(0, 16 * 16 * 16).select(
         (col("id") % 16).as("a"),
         expr("(id div 16) % 16").as("b"),
         expr("id div 256").as("c")).repartition(8),
       path)
-    val total = dataFiles(path).map(_.getLen).sum
     // 3 dimensions need ≥8 curve segments before the least-significant
     // interleaved column's top bit gets a cut — aim for ~12 files
-    Store.compact(spark, store, "metadata", total / 12 + 1, clusterBy = Some("a,b,c"))
+    CommitLog.compact(spark, path, totalBytes(path) / 12 + 1, clusterBy = Some("a,b,c"))
     val files = dataFiles(path)
     assert(files.length >= 8, s"need at least 8 files, got ${files.length}")
-    val ranges = files.map { st =>
-      spark.read.parquet(st.getPath.toString)
+    val ranges = files.map { f =>
+      spark.read.parquet(f)
         .agg(min("a"), max("a"), min("b"), max("b"), min("c"), max("c"))
         .as[(Long, Long, Long, Long, Long, Long)].head()
     }
@@ -166,7 +177,7 @@ class CompactSpec extends SparkSpec {
       s"no file skippable for b <= 3: ${ranges.mkString(", ")}")
     assert(ranges.exists(_._5 > 3),
       s"no file skippable for c <= 3: ${ranges.mkString(", ")}")
-    assert(spark.read.parquet(path).count() == 16 * 16 * 16,
+    assert(rows(path, "a bigint, b bigint, c bigint").count() == 16 * 16 * 16,
       "z-order compaction changed the table contents")
     // dimension overflow refuses loudly instead of silently wrapping
     val e = intercept[IllegalArgumentException] {
@@ -178,85 +189,6 @@ class CompactSpec extends SparkSpec {
     assert(e.getMessage.contains("z-bits"), e.getMessage)
   }
 
-  test("an unlocked append landing between reconcile and park survives compaction") {
-    // done/dlq/index writers do NOT take the table lock; round 5 could
-    // silently delete a file they landed between the reconcile listing
-    // and the park rename (it vanished with the parked directory). The
-    // post-park re-list must fold it into the rewrite.
-    val store = freshStore()
-    val path = s"${store.root}/metadata"
-    (0 until 3).foreach(i =>
-      Store.append(spark.range(i * 100, (i + 1) * 100).toDF("id"), path))
-    Store.testHookBeforePark = () =>
-      Store.append(spark.range(1000, 1100).toDF("id"), path)
-    try {
-      Store.compact(spark, store, "metadata", targetBytes = 1L << 30)
-    } finally Store.testHookBeforePark = () => ()
-    val ids = spark.read.parquet(path).as[Long].collect().sorted
-    assert(ids.length == 400 && ids.takeRight(100).sameElements(1000L until 1100L),
-      s"the in-window append was lost: ${ids.length} rows")
-  }
-
-  test("compact self-heals a table parked by a crashed swap") {
-    val store = freshStore()
-    val path = s"${store.root}/metadata"
-    Store.append(spark.range(0, 100).repartition(4).toDF("id"), path)
-    // simulate a crash between park and publish: table parked, none live
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "__pre_compact")))
-    val ((fb, _), (fa, _)) = Store.compact(spark, store, "metadata")
-    assert(fb == 4 && fa == 1, s"recovered table should compact 4→1, got $fb→$fa")
-    assert(spark.read.parquet(path).count() == 100, "parked rows lost")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__pre_compact")))
-  }
-
-  test("recovery folds a post-crash re-created table into the parked original") {
-    val store = freshStore()
-    val path = s"${store.root}/metadata"
-    Store.append(spark.range(0, 100).toDF("id"), path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash between park and publish…
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "__pre_compact")))
-    // …then a writer re-creates the table with NEW rows (no marker)
-    Store.append(spark.range(100, 120).toDF("id"), path)
-    Store.compact(spark, store, "metadata")
-    // both the parked 100 pre-crash rows and the 20 post-crash rows survive
-    assert(spark.read.parquet(path).as[Long].collect().sorted.sameElements(0L until 120L),
-      "recovery lost pre-crash or post-crash rows")
-  }
-
-  test("recovery trusts the _COMPACTED marker: a completed publish drops the parked twin") {
-    val store = freshStore()
-    val path = s"${store.root}/metadata"
-    Store.append(spark.range(0, 50).toDF("id"), path)
-    // first compact publishes the marker
-    Store.compact(spark, store, "metadata")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(path, "_COMPACTED")))
-    // simulate a crash AFTER publish but before parked cleanup: the
-    // parked twin holds the same (stale) rows
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path + "__pre_compact"))
-    Store.compact(spark, store, "metadata")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__pre_compact")))
-    assert(spark.read.parquet(path).count() == 50, "live rows must be untouched")
-  }
-
-  test("compact refuses nested (hive-partitioned) layouts loudly") {
-    val store = freshStore()
-    spark.range(0, 100)
-      .select(col("id"), (col("id") % 3).cast("string").as("part"))
-      .write.partitionBy("part").parquet(s"${store.root}/metadata")
-    val e = intercept[IllegalArgumentException] {
-      Store.compact(spark, store, "metadata")
-    }
-    assert(e.getMessage.contains("nested"), e.getMessage)
-  }
-
   test("compacting the queue under a checkpointed streaming worker stays idempotent") {
     graft.ingest.FixtureTree.ensure()
     val store = Store(Files.createTempDirectory("graft_compact_stream").toString)
@@ -266,27 +198,36 @@ class CompactSpec extends SparkSpec {
     graft.plan.Plan.run(spark, store)
     val q1 = graft.streaming.StreamingJobs.executeStream(spark, store, obj, ckpt)
     q1.awaitTermination()
-    val done1 = spark.read.parquet(store.taskDone).count()
+    val done1 = Store.count(spark, store.taskDone)
     assert(done1 > 0)
     // compaction rewrites the queue into NEW file names; the
     // checkpointed file source treats them as unseen and replays every
     // task — the done anti-join must make that replay a no-op
-    Store.compact(spark, store, "task_queue")
+    compactCli("task_queue", store.root)
     val q2 = graft.streaming.StreamingJobs.executeStream(spark, store, obj, ckpt)
     q2.awaitTermination()
-    assert(spark.read.parquet(store.taskDone).count() == done1,
+    assert(Store.count(spark, store.taskDone) == done1,
       "replay after queue compaction re-executed completed tasks")
-    val dlqP = new org.apache.hadoop.fs.Path(store.dlq)
-    val fs = dlqP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(dlqP) || spark.read.parquet(store.dlq).count() == 0,
-      "queue compaction produced dead letters")
+    assert(Store.count(spark, store.dlq) == 0, "queue compaction produced dead letters")
   }
 
   test("CLI compact subcommand reports the before/after census") {
     val store = freshStore()
-    Store.append(spark.range(0, 50).repartition(5).toDF("id"), s"${store.root}/dlq")
+    append(spark.range(0, 50).repartition(5).toDF("id"), s"${store.root}/dlq")
     val out = graft.Cli.run(spark, Array("compact", "dlq", store.root, "128"))
     assert(out.contains(""""cmd":"compact"""") && out.contains(""""table":"dlq""""))
     assert(out.contains(""""files_before":5""") && out.contains(""""files_after":1"""), out)
+  }
+
+  test("compact refuses a store table written before the commit log, naming the adoption verb") {
+    val store = freshStore()
+    spark.range(0, 20).toDF("id").write.parquet(s"${store.root}/dlq")
+    val e = intercept[UnloggedStoreTableException](
+      graft.Cli.run(spark, Array("compact", "dlq", store.root)))
+    assert(e.getMessage.contains("CommitLog.convertParquet") &&
+      e.getMessage.contains("CONVERT TO GRAFT"), e.getMessage)
+    // adopted in place, the same directory compacts
+    CommitLog.convertParquet(spark, s"${store.root}/dlq")
+    assert(compactCli("dlq", store.root)._2._1 == 1)
   }
 }

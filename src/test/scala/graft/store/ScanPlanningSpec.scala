@@ -18,7 +18,10 @@ class ScanCountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     try super.listStatus(f) finally listing.set(false)
   }
   override def getFileStatus(f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
-    if (!listing.get) probes.add(f.toUri.getPath)
+    if (!listing.get) {
+      probes.add(f.toUri.getPath)
+      probeThreads.add(Thread.currentThread.getId -> f.toUri.getPath)
+    }
     super.getFileStatus(f)
   }
 }
@@ -27,6 +30,9 @@ object ScanCountingFileSystem {
   val Scheme = "graftscan"
   val lists = new ConcurrentLinkedQueue[String]
   val probes = new ConcurrentLinkedQueue[String]
+  /** (thread id, path) of each probe: a caller's own probes apart from
+    * the ones its Spark job's tasks make. */
+  val probeThreads = new ConcurrentLinkedQueue[(Long, String)]
   private val listing = ThreadLocal.withInitial[Boolean](() => false)
 }
 
@@ -114,6 +120,22 @@ class ScanPlanningSpec extends SparkSpec {
       .as[(Long, String, Long)].collect().toSeq
     assert(feed.count(_._2 == "insert") == 400 && feed.forall(r => r._2 != "insert" || r._3 == 1L))
     assert(feed.filter(_._2 == "delete") == Seq((3L, "delete", 2L)))
+  }
+
+  test("compact sizes its inputs from one listing, no per-file status probe") {
+    val t = table.stripSuffix("/t") + "/c" // the counting scheme, a fresh table
+    // a schema ledger, so no footer is read to infer the schema
+    CommitLog.append(spark.range(0, 400, 1, 40).toDF("id"), t, mergeSchema = true)
+    val inputs = CommitLog.liveFiles(spark, t)._2.toSet
+    assert(inputs.size == 40)
+    ScanCountingFileSystem.probeThreads.clear()
+    CommitLog.compact(spark, t, targetBytes = Long.MaxValue)
+    // the rewrite's scan tasks open every input; the driver sizes them
+    val me = Thread.currentThread.getId
+    val probed = ScanCountingFileSystem.probeThreads.toArray(Array.empty[(Long, String)])
+      .toSeq.collect { case (`me`, p) if inputs(p.substring(p.lastIndexOf('/') + 1)) => p }
+    assert(probed.isEmpty, s"compact probed ${probed.size} input file(s): ${probed.take(3)}")
+    assert(CommitLog.read(spark, t, schema).count() == 400)
   }
 
   test("a live file deleted by hand fails the read loudly, even with spark.sql.files.ignoreMissingFiles on") {
