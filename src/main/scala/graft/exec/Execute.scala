@@ -376,8 +376,13 @@ object Execute {
     * failures → dlq (with error) — the ONE place the done/dlq row
     * shapes are defined, shared by the batch drain below and
     * StreamingJobs.executeStream. `source` holds the full task rows the
-    * results join back to. Byte totals and the ok/failed counts ride the
-    * one forcing action as observe() metrics (no extra job); the done
+    * results join back to. Both hold one row per `task_hash`: a queue
+    * may hold a task twice — two planners that read one queue snapshot
+    * both land it, and a file source sees a queue file beside its
+    * restaged or compacted copy until vacuum — so each caller
+    * deduplicates the rows it read, and every task runs once and lands
+    * one row. Byte totals and the ok/failed counts ride the one
+    * forcing action as observe() metrics (no extra job); the done
     * commit lands before the dlq commit, and a side with no rows lands
     * no commit. Returns (done, failed). */
   def routeResults(source: DataFrame, batch: DataFrame, objectRoot: String,
@@ -411,16 +416,16 @@ object Execute {
     * consume the queue with one `#op=drain` commit whose removes are
     * exactly the files this drain read (Store.drain). A full drain adds
     * no file — every row it read was run or already finished; a limited
-    * batch restages its unconsumed rows in that same commit. No lock:
-    * a planner append landing after the read is not removed, and a
-    * crash at any point is safe to retry — the rerun's anti-join skips
-    * whatever was recorded, and its queue commit consumes the rest.
-    * Returns (done, failed). */
+    * batch restages its unconsumed tasks, once each, in that same
+    * commit. No lock: a planner append landing after the read is not
+    * removed, and a crash at any point is safe to retry — the rerun's
+    * anti-join skips whatever was recorded, and its queue commit
+    * consumes the rest. Returns (done, failed). */
   def run(spark: SparkSession, store: Store, objectRoot: String,
       batchSize: Int = Int.MaxValue): (Long, Long) = {
     val read = Store.snapshot(spark, store.taskQueue)
     val queue = graft.store.CommitLog.read(spark, store.taskQueue,
-      Encoders.product[Task].schema, read)
+      Encoders.product[Task].schema, read).dropDuplicates("task_hash")
     val pending = queue.join(Store.finished(spark, store), Seq("task_hash"), "left_anti")
     val full = batchSize == Int.MaxValue
     val batchDf =

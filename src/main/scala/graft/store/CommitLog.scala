@@ -3631,6 +3631,29 @@ object CommitLog {
     rows.toDF("version", "operation", "n_added", "n_removed", "commit_ts_ms")
   }
 
+  /** Bytes of a snapshot's live files, LEDGER-FIRST: when every live
+    * file carries its log-recorded byte size this is a driver-side fold
+    * (zero listings — DESCRIBE DETAIL on a 100k-file table costs a log
+    * read); any size-less file (pre-recording generations) falls back
+    * to one listing per parent. The byte census of [[detail]] and of
+    * `Cli compact`. */
+  private[graft] def liveBytes(spark: SparkSession, tablePath: String,
+      snap: Snapshot): Long = {
+    val entries = snap.live
+    val fromLedger = entries.map(e =>
+      e.stats.flatMap(j => parseStatsJson(j).get(BytesSizeKey))
+        .collect { case (b: Long, _) => b })
+    if (fromLedger.forall(_.isDefined)) fromLedger.flatten.sum
+    else {
+      val dir = new org.apache.hadoop.fs.Path(tablePath)
+      val fs = fsOf(spark, dir)
+      val sizeByName: Map[String, Long] =
+        if (!fs.exists(dir)) Map.empty
+        else sizesFor(fs, tablePath, entries.map(_.name))
+      entries.map(e => sizeByName.getOrElse(e.name, 0L)).sum
+    }
+  }
+
   /** DESCRIBE DETAIL — the one-row operational summary an operator
     * checks before touching a table: current version, live file
     * census (count + bytes from ONE directory listing), deletion-
@@ -3648,27 +3671,10 @@ object CommitLog {
     val listing = listLog(spark, tablePath)
     val snap = listing.snapshot()
     val (version, entries) = (snap.version, snap.live)
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
-    // LEDGER-FIRST sizing: when every live file carries its
-    // log-recorded byte size the census is a driver-side fold (zero
-    // listings — DESCRIBE DETAIL on a 100k-file table costs a log
-    // read); any size-less file (pre-recording generations) falls back
-    // to the per-parent listing
-    def ledgerSize(e: LiveEntry): Option[Long] =
-      e.stats.flatMap(j => parseStatsJson(j).get(BytesSizeKey))
-        .collect { case (b: Long, _) => b }
-    val fromLedger = entries.map(ledgerSize)
-    val sizeBytes =
-      if (fromLedger.forall(_.isDefined)) fromLedger.flatten.sum
-      else {
-        val sizeByName: Map[String, Long] =
-          if (!fs.exists(dir)) Map.empty
-          else sizesFor(fs, tablePath, entries.map(_.name))
-        entries.map(e => sizeByName.getOrElse(e.name, 0L)).sum
-      }
-    // vectored positions likewise: log-carried counts when every
-    // attachment recorded one, else the vector-parquet count job
+    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(tablePath))
+    val sizeBytes = liveBytes(spark, tablePath, snap)
+    // vectored positions: log-carried counts when every attachment
+    // recorded one, else the vector-parquet count job
     val vectored = entries.filter(_.dv.isDefined)
     val dvPositions =
       if (vectored.forall(_.dvRows.isDefined)) vectored.flatMap(_.dvRows).sum

@@ -27,8 +27,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    crash at any point neither runs nor records a task twice.
   *  - Counts ([[Store.count]]) are ledger folds of the log-carried
   *    `rows.count` stats — no Spark job.
-  *  - `task_done` and `dlq` are append-only (no auto-compaction), so a
-  *    reader listing their directory sees exactly the committed rows.
+  *  - `task_done` and `dlq` are append-only (no auto-compaction). A
+  *    reader that lists a table's directory instead of reading its log
+  *    also sees, until vacuum, the data files a crashed writer landed
+  *    but never committed, and a queue file a drain has consumed; only
+  *    [[read]] and [[count]] give exactly the committed rows.
   *
   * Scale: appends are partitioned by Spark's natural output partitioning
   * (no driver materialization); the dedup/claim anti-joins are
@@ -385,21 +388,17 @@ object Store {
     * file's `rows.count` stat minus its deletion-vector rows. No Spark
     * job, no footer read. */
   def count(spark: SparkSession, table: String): Long =
-    ledgerSum(snapshot(spark, table), "row count")(CommitLog.metadataVisibleCount)
+    snapshot(spark, table).live.map(e => CommitLog.metadataVisibleCount(e)
+      .getOrElse(throw new IllegalStateException(
+        s"live file ${e.name} of $table carries no ledger row count"))).sum
 
-  /** (live files, bytes) of a store table from the ledger's
-    * `bytes.size` stats — `Cli compact`'s before/after census. */
+  /** (live files, bytes) of a store table — `Cli compact`'s
+    * before/after census ([[CommitLog.liveBytes]]); refuses a pre-log
+    * directory. */
   def census(spark: SparkSession, table: String): (Int, Long) = {
     val snap = snapshot(spark, table)
-    (snap.live.size, ledgerSum(snap, "size")(e => e.stats.flatMap(j =>
-      CommitLog.parseStatsJson(j).get(CommitLog.BytesSizeKey)
-        .collect { case (b: Long, _) => b })))
+    (snap.live.size, CommitLog.liveBytes(spark, table, snap))
   }
-
-  private def ledgerSum(snap: CommitLog.Snapshot, what: String)(
-      f: CommitLog.LiveEntry => Option[Long]): Long =
-    snap.live.map(e => f(e).getOrElse(throw new IllegalStateException(
-      s"live file ${e.name} carries no ledger $what"))).sum
 
   /** Publish a freshly-written `tmp` directory at `dst` via rename,
     * staging semantics: losing the publish race is fine (tmp is

@@ -852,10 +852,12 @@ object StreamingJobs {
     * results (Execute.routeResults: done, then dlq, each only when
     * non-empty). The checkpoint makes restarts resume after the last
     * committed batch (T6). The source also sees files a batch drain has
-    * since consumed, a limited batch restaged or a compaction rewrote;
-    * the anti-join makes every such replay — and a batch REPLAY after a
-    * failure — a no-op (T2/K7: at-least-once delivery + idempotent sink
-    * ≡ effective exactly-once).
+    * since consumed, a limited batch restaged or a compaction rewrote
+    * (they stay on disk until vacuum). When such a file and its copy
+    * fall into one micro-batch, the batch's `task_hash` dedup runs the
+    * task once; across micro-batches the anti-join makes every replay —
+    * and a batch REPLAY after a failure — a no-op (T2/K7: at-least-once
+    * delivery + idempotent sink ≡ effective exactly-once).
     *
     * @param maxFilesPerTrigger S4's batch-size rate limit
     */
@@ -873,9 +875,10 @@ object StreamingJobs {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         failInjector(batch) // test hook: T2 batch-failure → retry path
-        val todo = batch.join(Store.finished(batch.sparkSession, store),
+        val tasks = batch.dropDuplicates("task_hash")
+        val todo = tasks.join(Store.finished(batch.sparkSession, store),
           Seq("task_hash"), "left_anti")
-        Execute.routeResults(batch, todo, objectRoot, store)
+        Execute.routeResults(tasks, todo, objectRoot, store)
         ()
       }
       .start()

@@ -25,7 +25,7 @@ class CliSpec extends SparkSpec {
     // nothing new (idempotent resume path)
     val out = Cli.run(spark, Array("execute-stream", root, obj))
     assert(out == """{"cmd":"execute-stream","continuous":false,"task_done":8}""")
-    assert(spark.read.parquet(store.taskDone).count() == 8)
+    assert(Store.count(spark, store.taskDone) == 8)
     // stats is METADATA-ONLY: counts are ledger folds of the tables'
     // row-count stats, so the call must launch zero Spark jobs — on a 100 TB store a count()
     // scan would turn a polled operational counter into a cluster job

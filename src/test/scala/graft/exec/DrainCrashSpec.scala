@@ -2,7 +2,7 @@ package graft.exec
 
 import graft.SparkSpec
 import graft.ingest.{FixtureTree, Ingest}
-import graft.plan.{Plan, TemplateDef}
+import graft.plan.{Plan, TemplateDef, Templates}
 import graft.store.Store
 
 import java.nio.file.Files
@@ -36,7 +36,8 @@ object CrashingFileSystem {
 /** A batch drain on the commit log is safe to retry after a crash at any
   * phase — after execute, after the done commit, after the dlq commit,
   * just before and just after the queue commit — and needs no lock
-  * against a concurrent planner. */
+  * against a concurrent planner. A task the queue holds twice (racing
+  * planners, or a file beside its restaged copy) runs and lands once. */
 class DrainCrashSpec extends SparkSpec {
 
   /** Each .mov resource plans a dead-lettering container task and a
@@ -119,5 +120,39 @@ class DrainCrashSpec extends SparkSpec {
     val done = hashes(store.taskDone)
     assert(done.size == 8 && done.distinct.size == 8, s"task_done rows: $done")
     assert(Store.count(spark, store.taskQueue) == 0)
+  }
+
+  test("two planners that read one queue snapshot both land; the drain runs each task once") {
+    FixtureTree.ensure()
+    val store = Store(Files.createTempDirectory("graft_plan_race").toString)
+    val obj = Files.createTempDirectory("graft_plan_race_obj").toString
+    Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
+    // both planners anti-join the same (empty) queue before either commits
+    val resources = Store.read(spark, store.resourceIndex, Ingest.resourceSchema)
+    val planners = Seq.fill(2)(Plan.freshTasks(spark, resources, store,
+      Templates.registry, Templates.PlanConfig()))
+    assert(planners.map(Store.commit(_, store.taskQueue)) == Seq(8L, 8L))
+    assert(Execute.run(spark, store, obj) == ((8L, 0L)))
+    val done = hashes(store.taskDone)
+    assert(done.size == 8 && done.distinct.size == 8, s"task_done rows: $done")
+    assert(Store.count(spark, store.taskQueue) == 0)
+  }
+
+  test("a stream that reads a drained queue file beside its restaged copy runs each task once") {
+    FixtureTree.ensure()
+    val root = Files.createTempDirectory("graft_restage_stream").toString
+    val store = Store(s"$root/store")
+    val obj = Files.createTempDirectory("graft_restage_stream_obj").toString
+    Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
+    assert(Plan.run(spark, store) == 8)
+    // the limited drain restages 5 tasks; the file it consumed stays on
+    // disk until vacuum, so a fresh file source reads those 5 twice
+    assert(Execute.run(spark, store, obj, batchSize = 3) == ((3L, 0L)))
+    graft.streaming.StreamingJobs.executeStream(spark, store, obj, s"$root/ckpt",
+      maxFilesPerTrigger = 1000).awaitTermination()
+    // done rows per task = results per task = runs per task
+    val done = hashes(store.taskDone)
+    assert(done.size == 8 && done.distinct.size == 8, s"task_done rows: $done")
+    assert(Store.count(spark, store.dlq) == 0)
   }
 }

@@ -236,12 +236,13 @@ class ExecuteSpec extends SparkSpec {
     Store.delete(spark, store.taskQueue)
     Plan.run(spark, store) // anti-joins task_done → adds 0, queue stays empty
     // but even with completed hashes forced into the queue...
-    graft.store.CommitLog.append(spark.read.parquet(store.taskDone)
-      .select("input", "output", "metadata", "hooks", "strategy",
-        "timeout_s", "version", "task_hash"), store.taskQueue)
+    graft.store.CommitLog.append(
+      Store.read(spark, store.taskDone, org.apache.spark.sql.Encoders.product[Task].schema)
+        .select("input", "output", "metadata", "hooks", "strategy",
+          "timeout_s", "version", "task_hash"), store.taskQueue)
     val (done2, failed2) = Execute.run(spark, store, obj)
     assert((done2, failed2) == (0L, 0L), "completed tasks were re-executed")
-    assert(spark.read.parquet(store.taskDone).count() == 8, "task_done duplicated")
+    assert(Store.count(spark, store.taskDone) == 8, "task_done duplicated")
     assert(Store.count(spark, store.taskQueue) == 0, "queue not drained of done hashes")
   }
 
@@ -257,7 +258,7 @@ class ExecuteSpec extends SparkSpec {
 
     val (done, failedN) = Execute.run(spark, store, obj)
     assert((done, failedN) == (8L, 0L))
-    assert(spark.read.parquet(store.taskDone).count() == 8)
+    assert(Store.count(spark, store.taskDone) == 8)
     // queue fully drained
     assert(Store.count(spark, store.taskQueue) == 0)
     // mov outputs: manifest + copied input per task; metadata none for mov
@@ -406,7 +407,8 @@ class ExecuteSpec extends SparkSpec {
 
     val (done, failedN) = Execute.run(spark, store, obj)
     assert((done, failedN) == (4L, 4L))
-    val dlq = spark.read.parquet(store.dlq)
+    val dlq = Store.read(spark, store.dlq,
+      org.apache.spark.sql.types.StructType.fromDDL("error string, hooks string"))
     assert(dlq.count() == 4)
     assert(dlq.select("error").head().getString(0).contains("exited 3"))
     assert(dlq.select("hooks").distinct().head().getString(0) == "mov")
