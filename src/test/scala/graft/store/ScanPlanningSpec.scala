@@ -3,7 +3,6 @@ package graft.store
 import graft.SparkSpec
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The local filesystem under its own scheme, recording every listing
   * and every status probe made through it (the probes the local
@@ -63,33 +62,19 @@ class ScanPlanningSpec extends SparkSpec {
 
   private final case class Cost(jobs: Int, tableLists: Int, fileCalls: Seq[String])
 
-  /** Spark jobs started, listings of the table directory, and listings
-    * or status probes of parquet files while `body` runs. A sentinel
-    * job drains the (FIFO) listener bus before the count is read. */
+  /** Spark jobs started ([[graft.SparkJobs]]), listings of the table
+    * directory, and listings or status probes of parquet files while
+    * `body` runs. */
   private def costOf(body: => Any): Cost = {
     val root = new org.apache.hadoop.fs.Path(table).toUri.getPath
-    val jobs = new AtomicInteger
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("graft.sentinel") != null)
-          sentinelSeen.countDown()
-        else { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
     ScanCountingFileSystem.lists.clear()
     ScanCountingFileSystem.probes.clear()
-    try {
+    val ((lists, probes), jobs) = graft.SparkJobs.during(spark) {
       body
-      val lists = ScanCountingFileSystem.lists.toArray(Array.empty[String]).toSeq
-      val probes = ScanCountingFileSystem.probes.toArray(Array.empty[String]).toSeq
-      spark.sparkContext.setLocalProperty("graft.sentinel", "1")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty("graft.sentinel", null)
-      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      Cost(jobs.get, lists.count(_ == root),
-        (lists ++ probes).filter(_.endsWith(".parquet")))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      (ScanCountingFileSystem.lists.toArray(Array.empty[String]).toSeq,
+        ScanCountingFileSystem.probes.toArray(Array.empty[String]).toSeq)
+    }
+    Cost(jobs, lists.count(_ == root), (lists ++ probes).filter(_.endsWith(".parquet")))
   }
 
   private def assertPlannedFromTheIndex(what: String)(frame: => org.apache.spark.sql.DataFrame) = {
