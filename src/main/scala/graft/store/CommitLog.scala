@@ -123,7 +123,7 @@ object CommitLog {
     * clone/restore commits published AFTER it landed; a LEGACY ledger
     * that already carries colliding basenames (a converted-then-cloned
     * chain) would replay unchecked into the basename-keyed probes
-    * (removeMatching / keyedRewrite), where two colliding files' match
+    * (the row-level core, [[rewriteRows]]), where two colliding files' match
     * counts merge under one key and only the entriesByName winner gets
     * removed/rewritten — matching rows of the loser silently stay
     * live. So the probe consumers re-check: any MULTI-SEGMENT
@@ -999,54 +999,6 @@ object CommitLog {
     deleted <- if (e.dv.isEmpty) Some(0L) else e.dvRows
   } yield rc - deleted
 
-  /** FILE-DROP classification shared by every predicate/key-addressed
-    * rewrite (deleteWhere, replaceWhere, keyedRewrite): of the
-    * affected entries, keep only those NOT proven fully matched —
-    * i.e. whose probe match count (keyed by `_metadata.file_name`
-    * basename) does not equal [[metadataVisibleCount]]. A file absent
-    * here is droppable as a pure log line: every visible row it
-    * holds matched, so removing it and (re)stating nothing loses no
-    * row. */
-  private[store] def partialMatches(affected: Seq[LiveEntry],
-      matchedCounts: Map[String, Long]): Seq[LiveEntry] =
-    affected.filterNot(e =>
-      metadataVisibleCount(e).contains(matchedCounts(baseNameOf(e.name))))
-
-  /** The OLD SIDE of a predicate-addressed rewrite, shared by
-    * [[deleteWhere]] and [[replaceWhere]]: ONE pruned probe (the
-    * filter precedes the aggregation, so pushdown + min/max skipping
-    * prune the scan exactly as a distinct-files probe would)
-    * aggregates per-file MATCH COUNTS, [[partialMatches]] splits
-    * fully-matched files (droppable as log lines) from boundary
-    * stragglers, and ONLY the stragglers rewrite without their
-    * matching rows. DV-aware end to end (visibleRows). Returns the
-    * affected entries (the caller removes all of them) and the staged
-    * straggler rewrites (the caller adds them). */
-  private def removeMatching(spark: SparkSession, tablePath: String,
-      schema: StructType, predicate: org.apache.spark.sql.Column,
-      snap: Snapshot): (Seq[LiveEntry], Seq[String]) = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val (entries, mapping) = (snap.live, snap.mapping)
-    if (entries.isEmpty) return (Seq.empty, Seq.empty)
-    requireBasenameSoundness(entries, s"predicate rewrite on $tablePath")
-    val byName = entriesByName(entries)
-    val matchedCounts: Map[String, Long] =
-      visibleRows(spark, tablePath, schema, entries,
-        meta = Seq("_rm_file" -> "file_name"), mapping = mapping)
-        .filter(predicate)
-        .groupBy(col("_rm_file")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (matchedCounts.isEmpty) return (Seq.empty, Seq.empty)
-    val affectedEntries = matchedCounts.keys.toSeq.sorted.map(byName)
-    val partial = partialMatches(affectedEntries, matchedCounts)
-    val names =
-      if (partial.isEmpty) Seq.empty[String] // every affected file drops whole
-      else stage(visibleRows(spark, tablePath, schema, partial,
-          mapping = mapping).filter(not(coalesce(predicate, lit(false)))),
-        tablePath, mapping, tableWriteOptions(snap.properties, mapping))
-    (affectedEntries, names)
-  }
-
   /** Reserved stats key carrying the file's total ROW COUNT (summed
     * across row groups at write time). The dot makes collision with a
     * real column impossible: `footerStatsJson` refuses to emit any
@@ -1362,8 +1314,8 @@ object CommitLog {
   /** THE write path of every file a logged-table verb lands (data,
     * change and deletion-vector files): `df` is written with `options`
     * under a fresh `_staging_<writerId>` dir, its columns renamed to
-    * their PHYSICAL names under `mapping`, then landed by
-    * [[landStaged]]. `mapping` and `options` come from the [[Snapshot]]
+    * their PHYSICAL names under `mapping`, then landed in the table
+    * directory. `mapping` and `options` come from the [[Snapshot]]
     * the verb already holds, or from the schema its commit will
     * declare — never from a second log read, so the files and the
     * commit that publishes them describe one table state. `writer` is
@@ -1372,27 +1324,21 @@ object CommitLog {
       mapping: Map[String, String], options: Map[String, String] = Map.empty,
       writer: String = "w"): Seq[String] = {
     val dir = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = fsOf(df.sparkSession, dir)
     val writerId = freshWriterId(writer)
     val staging = new org.apache.hadoop.fs.Path(dir, s"_staging_$writerId")
     toPhysical(df, mapping).write.options(options).parquet(staging.toString)
-    landStaged(fsOf(df.sparkSession, dir), dir, staging, writerId)
-  }
-
-  /** Land a staged parquet write's part files in the table directory
-    * under writer-unique names (still uncommitted — invisible until
-    * the caller's commit references them). [[stage]] is its one engine
-    * caller; vacuum keys on the name scheme. */
-  private[store] def landStaged(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, staging: org.apache.hadoop.fs.Path,
-      writerId: String): Seq[String] = {
-    val parts = fs.listStatus(staging).filter(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-    val names = parts.map { st =>
-      val n = s"$writerId-${st.getPath.getName}"
-      if (!fs.rename(st.getPath, new org.apache.hadoop.fs.Path(dir, n)))
-        throw new IllegalStateException(s"could not land data file $n in $dir")
-      n
-    }.toSeq
+    // land the part files in the table directory under writer-unique
+    // names (still uncommitted — invisible until the caller's commit
+    // references them); vacuum keys on the name scheme
+    val names = fs.listStatus(staging).toSeq.filter(st => st.isFile &&
+        !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      .map { st =>
+        val n = s"$writerId-${st.getPath.getName}"
+        if (!fs.rename(st.getPath, new org.apache.hadoop.fs.Path(dir, n)))
+          throw new IllegalStateException(s"could not land data file $n in $dir")
+        n
+      }
     fs.delete(staging, true)
     names
   }
@@ -1526,7 +1472,7 @@ object CommitLog {
     * file is only reclaimed when BOTH say it predates the retention
     * window — mod times alone are one skewed NFS/object-store clock
     * away from eating an in-flight writer's files. */
-  private[store] def freshWriterId(prefix: String): String =
+  private def freshWriterId(prefix: String): String =
     s"$prefix${ProcessHandle.current().pid()}_${System.currentTimeMillis()}_${System.nanoTime()}"
 
   /** The staging-start ms embedded in a landed data file's or staging
@@ -1702,10 +1648,13 @@ object CommitLog {
   }
 
   /** [[replaceWhere]]'s engine over the caller's `snap`,
-    * fence-parameterized: None when the operation nets to nothing (no
-    * incoming rows, no matching old rows) or when a lost publish race
-    * re-evaluates `abortOnLostRace` to true (the staged files become
-    * vacuum-eligible orphans). */
+    * fence-parameterized: the incoming rows land first (guarded — a row
+    * outside the predicate fails the write before anything is probed or
+    * published), then [[rewriteRows]] removes the live rows the
+    * predicate claims and publishes both in one commit. None when the
+    * operation nets to nothing (no incoming rows, no matching old rows)
+    * or when a lost publish race re-evaluates `abortOnLostRace` to true
+    * (the staged files become vacuum-eligible orphans). */
   private def replaceWhereCore(df: DataFrame, tablePath: String,
       snap: Snapshot,
       predicate: org.apache.spark.sql.Column,
@@ -1716,7 +1665,6 @@ object CommitLog {
     import org.apache.spark.sql.functions.{coalesce, col, concat, lit,
       raise_error, struct, to_json, when}
     val spark = df.sparkSession
-    val entries = snap.live
     val props = snap.properties
     val dfG = withGenerated(df, props)
     // after withGenerated: the predicate may name a generated column
@@ -1729,9 +1677,7 @@ object CommitLog {
           s"match the table's declared schema (${c.simpleString}) — a " +
           "replace swaps rows, not the table's shape (overwrite() restamps)")
     }
-    val schema = cur.getOrElse(dfG.schema)
     val mapping = snap.mapping
-    val cs = snap.constraints
     // incoming rows must live inside the replaced region — in-plan,
     // loud, before anything publishes (NULL predicate = outside)
     val inside = coalesce(predicate, lit(false))
@@ -1742,44 +1688,12 @@ object CommitLog {
           to_json(struct(dfG.columns.map(col).toIndexedSeq: _*)))))
           .otherwise(lit(null).cast("string")))
       .filter(col(guard).isNull).drop(guard)
-    val newNames = stage(enforcedWith(clusteredForWrite(guarded, props), cs),
+    val newNames = stage(enforcedWith(clusteredForWrite(guarded, props), snap.constraints),
       tablePath, mapping, tableWriteOptions(props, mapping, writeOptions))
-    // old side: deleteWhere's shared probe + file-drop classification
-    // + straggler rewrite, over this write's snapshot
-    val (affectedEntries, rewriteNames) =
-      removeMatching(spark, tablePath, schema, predicate, snap)
-    if (newNames.isEmpty && affectedEntries.isEmpty) return None // nets to nothing
-    val preImages =
-      if (affectedEntries.isEmpty) None
-      else Some(visibleRows(spark, tablePath, schema, affectedEntries,
-        mapping = mapping)
-        .filter(predicate).withColumn(ChangeTypeCol, lit("delete")))
-    val postImages =
-      if (newNames.isEmpty) None
-      else Some(visibleRows(spark, tablePath, schema,
-        fileEntries(newNames), mapping = mapping)
-        .withColumn(ChangeTypeCol, lit("insert")))
-    val cdc = (preImages.toSeq ++ postImages.toSeq)
-      .reduceOption(_.unionByName(_))
-    val cdcNames = cdc.map(landChangeFiles(tablePath, _, mapping))
-      .getOrElse(Seq.empty)
-    val adds = newNames ++ rewriteNames
-    // deleteWhere's self-describing stamp: a replace that empties an
-    // un-ledgered table must leave its schema behind
-    val stamp =
-      if (adds.isEmpty && affectedEntries.size == entries.size && cur.isEmpty)
-        Some(schema.json)
-      else None
-    commitOrAbort(spark, tablePath, adds = adds,
-      removes = affectedEntries.map(_.name),
-      publisher = publisher, opTag = Some(opTag),
-      abortOnLostRace = abortOnLostRace,
-      changeAdds = cdcNames,
-      addStats = statsFor(spark, tablePath, adds),
-      schemaJson = stamp,
-      schemaExpect = if (stamp.isDefined) Some(None) else None,
-      removeDvExpect = affectedEntries.map(e => e.name -> e.dv).toMap,
-      constraintsExpect = Some(cs))
+    rewriteRows(spark, tablePath, snap, cur.getOrElse(dfG.schema), snap.live,
+      claim = _.withColumn(Claimed, predicate), landed = Some(newNames),
+      publisher = publisher, opTag = Some(opTag), abortOnLostRace = abortOnLostRace,
+      stampEmptied = true)
   }
 
   /** THE append core — every verb that lands NEW rows without
@@ -2038,7 +1952,8 @@ object CommitLog {
   }
 
   /** Logged compaction: rewrite the current live set into
-    * ceil(bytes/target) files and publish adds+removes as ONE commit —
+    * ceil(bytes/target) files ([[rewriteFiles]], every live file an
+    * input) and publish adds+removes as ONE commit —
     * readers switch atomically, and a concurrent append's files are
     * untouched (they are not in this rewrite's remove set). No parking,
     * no lock: a crash leaves only invisible orphans for vacuum().
@@ -2057,40 +1972,45 @@ object CommitLog {
       publisher: AtomicPublisher,
       writeOptions: Map[String, String]): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(tablePath))
     val snap = snapshot(spark, tablePath)
-    val (version, entries) = (snap.version, snap.live)
-    val files = entries.map(_.name)
-    if (files.isEmpty) return version
+    if (snap.live.isEmpty) return snap.version
     // one listing per distinct parent, like optimize — never a status
     // probe per file
-    val totalBytes = sizesFor(fs, tablePath, files).values.sum
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    // DV ABSORPTION: the rewrite reads VISIBLE rows, so attached
-    // deletion vectors are folded into clean files here and their
-    // attachments die with the removed inputs (the vector parquets
-    // become vacuum-eligible) — OPTIMIZE is how a vectored table
-    // returns to the zero-overhead read path.
-    // LEDGER schema first: on a column-mapped table the file-inferred
-    // shape carries PHYSICAL names, which must not re-enter the
-    // logical read path (a clash with a re-added logical name would
-    // read the wrong column)
-    val schema = tableSchema(spark, tablePath, snap)
-    // plain, range-clustered, or "a,b" z-order (ZOrder.layout) —
-    // compaction doubling as the table's clustered index. writeOptions carries the
-    // parquet bloom-filter knobs through the rewrite: a bloom-indexed
-    // table must not silently LOSE its point-lookup index to
-    // maintenance (the pruneByFooterStats probe path reads them)
-    val names = stage(ZOrder.layout(visibleRows(spark, tablePath, schema, entries,
+    val totalBytes = sizesFor(fsOf(spark, new Path(tablePath)), tablePath,
+      snap.live.map(_.name)).values.sum
+    rewriteFiles(spark, tablePath, snap, tableSchema(spark, tablePath, snap), snap.live,
+      math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt,
+      clusterBy, publisher, writeOptions)
+  }
+
+  /** The maintenance rewrite [[compact]] and [[optimize]] share: the
+    * visible rows of `inputs`, laid out by [[ZOrder.layout]] into `nOut`
+    * files (plain, range-clustered, or "a,b" z-order — compaction
+    * doubling as the table's clustered index), staged as maintenance
+    * files and published with the removal of `inputs` as ONE untagged
+    * version. DV ABSORPTION: the rewrite reads VISIBLE rows, so attached
+    * deletion vectors fold into clean files and their attachments die
+    * with the removed inputs — OPTIMIZE is how a vectored table returns
+    * to the zero-overhead read path. The commit validates the inputs
+    * against the live set and each one's DV attachment against what
+    * this rewrite planned from, and throws on a concurrent rewrite or
+    * delete — never a silent table doubling, never a resurrected
+    * concurrent delete. `schema` is the LEDGER schema first
+    * ([[tableSchema]]): on a column-mapped table the file-inferred shape
+    * carries PHYSICAL names, which must not re-enter the logical read
+    * path. `writeOptions` carries the parquet bloom-filter knobs
+    * through: a bloom-indexed table must not LOSE its point-lookup index
+    * to maintenance. */
+  private def rewriteFiles(spark: SparkSession, tablePath: String, snap: Snapshot,
+      schema: StructType, inputs: Seq[LiveEntry], nOut: Int,
+      clusterBy: Option[String], publisher: AtomicPublisher,
+      writeOptions: Map[String, String]): Long = {
+    val names = stage(ZOrder.layout(visibleRows(spark, tablePath, schema, inputs,
         mapping = snap.mapping), nOut, clusterBy), tablePath, snap.mapping,
       tableWriteOptions(snap.properties, snap.mapping, writeOptions), writer = "c")
-    // commit() validates `files` against the live set (and each removed
-    // file's DV attachment against what this rewrite planned from) and
-    // throws on a concurrent rewrite or delete — never a silent table
-    // doubling, never a resurrected concurrent delete
-    commit(spark, tablePath, adds = names, removes = files, publisher = publisher,
-      addStats = statsFor(spark, tablePath, names),
-      removeDvExpect = entries.map(e => e.name -> e.dv).toMap)
+    commit(spark, tablePath, adds = names, removes = inputs.map(_.name),
+      publisher = publisher, addStats = statsFor(spark, tablePath, names),
+      removeDvExpect = inputs.map(e => e.name -> e.dv).toMap)
   }
 
   /** Selective OPTIMIZE — the maintenance verb a 100 TB table can
@@ -2134,13 +2054,9 @@ object CommitLog {
       publisher: AtomicPublisher,
       writeOptions: Map[String, String]): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = fsOf(spark, dir)
     val snap = snapshot(spark, tablePath)
     val (version, entries) = (snap.version, snap.live)
     if (entries.isEmpty) return version
-    val mapping = snap.mapping
-    // ledger-first for the same column-mapping reason as compact()
     val schema = tableSchema(spark, tablePath, snap)
     // predicate → pushed-filter list, resolved the way a real scan
     // would resolve it: the filters the optimizer pushes onto the scan
@@ -2156,7 +2072,7 @@ object CommitLog {
         // (`id < 100` on a bigint column) translates to nothing and
         // the scope silently widens to the whole table
         val optimized = visibleRows(spark, tablePath, schema, entries,
-            mapping = mapping)
+            mapping = snap.mapping)
           .filter(cond).queryExecution.optimizedPlan
         optimized.collect {
           case org.apache.spark.sql.catalyst.plans.logical.Filter(c,
@@ -2171,7 +2087,8 @@ object CommitLog {
       }
     // one directory listing PER DISTINCT PARENT (table root + clone
     // sources) for every size, not a HEAD per file
-    val sizeByName = sizesFor(fs, tablePath, entries.map(_.name))
+    val sizeByName = sizesFor(fsOf(spark, new Path(tablePath)), tablePath,
+      entries.map(_.name))
     val scoped = entries.filter(inScope)
     val candidates =
       if (clusterBy.isDefined) scoped
@@ -2187,12 +2104,8 @@ object CommitLog {
     val nOut = math.max(1L, math.min(math.min(
       (totalBytes + targetBytes - 1) / targetBytes,
       candidates.size.toLong), 10000L)).toInt
-    val names = stage(ZOrder.layout(visibleRows(spark, tablePath, schema, candidates,
-        mapping = mapping), nOut, clusterBy), tablePath, mapping,
-      tableWriteOptions(snap.properties, mapping, writeOptions), writer = "c")
-    commit(spark, tablePath, adds = names, removes = candidates.map(_.name),
-      publisher = publisher, addStats = statsFor(spark, tablePath, names),
-      removeDvExpect = candidates.map(e => e.name -> e.dv).toMap)
+    rewriteFiles(spark, tablePath, snap, schema, candidates, nOut, clusterBy,
+      publisher, writeOptions)
   }
 
   // ── AUTO-COMPACTION (small-file self-healing) ──────────────────────
@@ -2888,140 +2801,40 @@ object CommitLog {
     won
   }
 
-  /** Row-level delete — the right-to-be-forgotten / retention operation
-    * (DELETE WHERE): every live file holding a matching row is
-    * rewritten WITHOUT its matching rows and the swap commits as ONE
-    * `#op=delete`-tagged version — readers see all deletions or none,
-    * and `asOf` still reads the pre-delete snapshot until vacuum
-    * reclaims it (the retention window IS the forget horizon — run
-    * vacuum after the window to make the purge physical).
-    *
-    * Scale shape: one pruning scan finds the AFFECTED files (predicate
-    * pushdown + parquet min/max make this cheap; the collect is
-    * file-count-sized) and only those files are rewritten — a delete
-    * touching 0.1% of files costs 0.1% of a full rewrite, the
-    * copy-on-write Delta/Iceberg model. Untouched files keep their
-    * identity (spec-pinned), so incremental consumers and caches over
-    * them stay valid.
+  /** Row-level DELETE (DELETE WHERE) — the right-to-be-forgotten /
+    * retention operation: the live rows matching `predicate` leave the
+    * table in ONE `#op=delete`-tagged version, landed by the row-level
+    * core [[rewriteRows]] — copy-on-write by default (fully matched
+    * files drop as log lines, boundary stragglers restate their other
+    * rows; a retention delete on a cluster-aligned boundary, the 100 TB
+    * shape `ts < horizon` on a ts-clustered table, rewrites only the one
+    * file the boundary cuts through), merge-on-read with
+    * `deletionVectors` (the matched positions are vectored, no data file
+    * is rewritten — best for SPARSE deletes; OPTIMIZE absorbs the
+    * vectors). Readers see all deletions or none, and `asOf` still reads
+    * the pre-delete snapshot until vacuum reclaims it (the retention
+    * window IS the forget horizon — run vacuum after it to make the
+    * purge physical). Untouched files keep their identity.
     *
     * SQL DELETE semantics: rows where the predicate is TRUE go; rows
     * where it is false OR NULL stay. A concurrent compaction of an
-    * affected file surfaces as the rewrite-conflict exception (rerun
-    * the delete). The deleted rows are ALSO materialized as CDC change
-    * files (`_change_type = 'delete'`) committed atomically with the
-    * swap, so `changesSince` hands incremental consumers the deletions
-    * as data instead of refusing to cross the version — the Delta CDF
-    * delete feed.
-    *
-    * FILE-DROP fast path: a file whose every VISIBLE row matches the
-    * predicate is removed as pure METADATA — no rewrite, no staged
-    * output. The proof is metadata-only: the probe's per-file match
-    * count equals the file's log-carried [[RowCountKey]] row count
-    * minus its attached deletion-vector position count. A retention
-    * delete on a cluster-aligned boundary (the 100 TB shape: `ts <
-    * horizon` on a ts-clustered table) thus rewrites only the one
-    * straggler file the boundary cuts through; every older file drops
-    * for the cost of a log line. Files without log stats (or with a
-    * countless pre-count DV attachment) conservatively take the
-    * rewrite path — the fast path never guesses. */
+    * affected file (or a competing vector) surfaces as a conflict
+    * exception — rerun the delete. An EMPTYING delete on an
+    * un-ledgered table stamps the schema ledger in the same commit:
+    * once the last data file drops there is no footer left to infer a
+    * schema from, and a logged table must stay self-describing. */
   def deleteWhere(spark: SparkSession, tablePath: String, schema: StructType,
       predicate: org.apache.spark.sql.Column,
       publisher: AtomicPublisher = RenameOrLinkPublisher,
       deletionVectors: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.lit
     val snap = snapshot(spark, tablePath)
-    val (version, entries) = (snap.version, snap.live)
-    if (entries.isEmpty) return version
+    if (snap.live.isEmpty) return snap.version
     requireDeterministicPredicate(spark, schema, predicate, "deleteWhere")
-    if (deletionVectors)
-      return deleteWhereMor(spark, tablePath, schema, predicate, publisher, snap)
-    // the probe and the rewrite both read VISIBLE rows (DV-aware): a
-    // position an earlier merge-on-read delete vectored out must
-    // neither count as a match nor resurrect in the rewrite
-    val (affectedEntries, names) =
-      removeMatching(spark, tablePath, schema, predicate, snap)
-    if (affectedEntries.isEmpty) return version // nothing matched: no new version
-    val affectedDf = visibleRows(spark, tablePath, schema, affectedEntries,
-      mapping = snap.mapping)
-    // CDC pre-images cover matched rows of BOTH dropped and rewritten
-    // files — a dropped file's rows are read once here (its only read)
-    // so the change feed stays exact
-    val cdcNames = landChangeFiles(tablePath,
-      affectedDf.filter(predicate).withColumn(ChangeTypeCol, lit("delete")),
-      snap.mapping)
-    // an EMPTYING delete on an un-ledgered table stamps the schema
-    // ledger in the same commit: once the last data file drops there
-    // is no footer left to infer a schema from, and a logged table
-    // must stay self-describing (the emptied table still answers
-    // count 0 / DESCRIBE / streaming reads)
-    val stamp =
-      if (names.isEmpty && affectedEntries.size == entries.size &&
-          snap.schema.isEmpty) Some(schema.json)
-      else None
-    commit(spark, tablePath, adds = names,
-      removes = affectedEntries.map(_.name),
-      publisher = publisher, opTag = Some("delete"), changeAdds = cdcNames,
-      addStats = statsFor(spark, tablePath, names),
-      schemaJson = stamp,
-      schemaExpect = if (stamp.isDefined) Some(None) else None,
-      removeDvExpect = affectedEntries.map(e => e.name -> e.dv).toMap)
-  }
-
-  /** MERGE-ON-READ delete (deletion vectors — the Delta/Iceberg DV
-    * model): instead of rewriting every file that holds a matching row,
-    * write one small parquet of (file, position) pairs and ATTACH it to
-    * each affected file in the commit (`*file|dvfile` lines). The data
-    * files are untouched — a delete hitting one row in each of 10k
-    * files costs one increment-sized vector write instead of 10k file
-    * rewrites, which at 100 TB is the difference between a usable
-    * retention job and a full-table rewrite. Readers subtract attached
-    * positions ([[visibleRows]]); compact() absorbs vectors back into
-    * clean files; OPTIMIZE is the maintenance verb.
-    *
-    * Vectors are CUMULATIVE: a second delete on an already-vectored
-    * file writes a new vector carrying the old positions plus the new
-    * ones and the attachment REPLACES (the old vector parquet becomes
-    * vacuum-eligible once unreferenced). Concurrency: the commit
-    * re-validates per attempt that each affected file is still live
-    * with exactly the attachment this planner read — a concurrent
-    * compaction or competing delete fails one side loudly instead of
-    * silently resurrecting rows. CDC delete pre-images ride the same
-    * commit, so the change feed is identical to the copy-on-write
-    * path's. Best for SPARSE deletes; a delete matching most of a
-    * file's rows is better served copy-on-write (the vector would
-    * approach the file's own row count). */
-  private def deleteWhereMor(spark: SparkSession, tablePath: String,
-      schema: StructType, predicate: org.apache.spark.sql.Column,
-      publisher: AtomicPublisher, snap: Snapshot): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val (version, entries) = (snap.version, snap.live)
-    // the _dv_f keying below is by basename — a legacy colliding ledger
-    // would attach one file's positions to the other's vector
-    requireBasenameSoundness(entries, s"merge-on-read delete on $tablePath")
-    val byName = entriesByName(entries)
-    // one evaluation feeds the vector write, the CDC write, and the
-    // affected-file collect — a non-deterministic predicate must not
-    // vector positions and feed pre-images that disagree
-    val matched = visibleRows(spark, tablePath, schema, entries,
-      meta = Seq("_dv_f" -> "file_name", "_dv_p" -> "row_index"),
-      mapping = snap.mapping)
-      .filter(predicate)
-      .localCheckpoint(true)
-    val affected = matched.select(col("_dv_f")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (affected.isEmpty) return version // nothing matched: no new version
-    val affectedEntries = affected.map(byName)
-    val fresh = matched.select(col("_dv_f").as(DvFileCol), col("_dv_p").as(DvPosCol))
-    val (dvAttach, dvExpect, dvCounts) =
-      landVector(spark, tablePath, affectedEntries, fresh)
-    val cdcNames = landChangeFiles(tablePath,
-      matched.drop("_dv_f", "_dv_p").withColumn(ChangeTypeCol, lit("delete")),
-      snap.mapping)
-    commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
-      publisher = publisher, opTag = Some("delete"),
-      abortOnLostRace = _ => false, changeAdds = cdcNames,
-      dvAttach = dvAttach, dvExpect = dvExpect, dvRowCounts = dvCounts)
-      .getOrElse(throw new IllegalStateException("unreachable: unfenced DV delete"))
+    rewriteRows(spark, tablePath, snap, schema, snap.live,
+      claim = _.withColumn(Claimed, predicate),
+      deletionVectors = deletionVectors, publisher = publisher,
+      opTag = Some("delete"), stampEmptied = true)
+      .getOrElse(snap.version) // nothing matched: no new version
   }
 
   /** Land ONE cumulative vector parquet covering `fresh` positions for
@@ -3032,7 +2845,7 @@ object CommitLog {
     * exact): vectors are increment-sized by design (~16 B/position;
     * massive hits belong on the copy-on-write path), so a single file
     * is the right shape. */
-  private[store] def landVector(spark: SparkSession, tablePath: String,
+  private def landVector(spark: SparkSession, tablePath: String,
       affectedEntries: Seq[LiveEntry], fresh: DataFrame)
       : (Map[String, String], Map[String, Option[String]], Map[String, Long]) = {
     import org.apache.spark.sql.functions.col
@@ -3060,111 +2873,49 @@ object CommitLog {
 
   /** Row-level UPDATE … SET … WHERE — the predicate-addressed sibling
     * of [[deleteWhere]] (an UPDATE is not a keyed merge: the rows it
-    * touches are named by a condition, not by source keys). Same
-    * copy-on-write shape: one pruning scan finds ONLY the files
-    * holding matching rows, those files rewrite with `assignments`
-    * applied to matching rows (everything else restates byte-value
-    * identical), and the swap publishes as ONE `#op=update` commit
-    * carrying CDC delete pre-images + insert post-images — readers
-    * see pre- or post-update, never a mix, and a keyed change-feed
-    * consumer replays the update exactly. Untouched files keep their
-    * identity. SQL semantics: rows where the predicate is TRUE
-    * update; false or NULL stay. Assignment expressions see the row's
-    * PRE-update columns (standard SQL UPDATE: `SET a = b, b = a`
-    * swaps) and cast to the column's declared type. Assignments
-    * should be deterministic — they evaluate once for the data write
-    * and once for the CDC post-images. */
+    * touches are named by a condition, not by source keys): the
+    * matching rows leave and their post-images enter, published by
+    * [[rewriteRows]] as ONE `#op=update` commit — readers see pre- or
+    * post-update, never a mix, and a keyed change-feed consumer replays
+    * the update exactly. Copy-on-write restates the affected files in
+    * one pass (`assignments` applied to matching rows, everything else
+    * byte-value identical); `deletionVectors` vectors the matched
+    * positions and appends the post-images instead. SQL semantics: rows
+    * where the predicate is TRUE update; false or NULL stay. Assignment
+    * expressions see the row's PRE-update columns (standard SQL UPDATE:
+    * `SET a = b, b = a` swaps) and cast to the column's declared type;
+    * they must be deterministic — they evaluate for the data write and
+    * again for the change feed's post-images. */
   def updateWhere(spark: SparkSession, tablePath: String, schema: StructType,
       predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
       publisher: AtomicPublisher = RenameOrLinkPublisher,
       deletionVectors: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    import org.apache.spark.sql.functions.{col, lit}
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     val unknown = assignments.keys.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty,
       s"UPDATE SET references unknown column(s) ${unknown.mkString(", ")} " +
         s"of $tablePath (${schema.fieldNames.mkString(", ")})")
     val snap = snapshot(spark, tablePath)
-    val (version, entries) = (snap.version, snap.live)
-    if (entries.isEmpty) return version
-    val mapping = snap.mapping
-    val writeOptions = tableWriteOptions(snap.properties, mapping)
-    // same double-evaluation exposure as deleteWhere/replaceWhere: the
-    // predicate runs for the probe, the when(hit) rewrite, and both
-    // CDC image filters — a nondeterministic one updates rows that
-    // were never probed and images a third row set. Assignments
-    // evaluate twice too (the data write and the CDC post-images): a
-    // rand()-bearing SET would publish a change feed that disagrees
-    // with the table.
+    if (snap.live.isEmpty) return snap.version
+    // the predicate runs for the probe, the rewrite and the change
+    // feed's images; a nondeterministic one would update rows that
+    // were never probed. Assignments evaluate twice too (the data
+    // write and the post-images).
     requireDeterministicPredicate(spark, schema, predicate, "updateWhere")
     assignments.foreach { case (c, a) =>
       requireDeterministicPredicate(spark, schema, a, s"updateWhere SET $c") }
-    requireBasenameSoundness(entries, s"keyed update on $tablePath")
-    val byName = entriesByName(entries)
-    // post-image projection over the PRE-update row (all assignments
-    // read the original columns — the SQL simultaneous-SET rule)
+    // post-image over the PRE-update row (all assignments read the
+    // original columns — the SQL simultaneous-SET rule)
     val post = schema.fields.map(f =>
-      assignments.get(f.name)
-        .map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))).toIndexedSeq
-    if (deletionVectors) {
-      // MERGE-ON-READ update: vector out the matched positions and
-      // APPEND their post-images — zero file rewrites (a sparse update
-      // of a wide table costs one vector + increment-sized new files).
-      // One evaluation feeds positions, post-images, and CDC.
-      val matched = visibleRows(spark, tablePath, schema, entries,
-        meta = Seq("_uw_f" -> "file_name", "_uw_p" -> "row_index"),
-        mapping = mapping)
-        .filter(predicate)
-        .localCheckpoint(true)
-      val affected = matched.select(col("_uw_f")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      if (affected.isEmpty) return version // nothing matched: no new version
-      val fresh = matched.select(col("_uw_f").as(DvFileCol), col("_uw_p").as(DvPosCol))
-      val (dvAttach, dvExpect, dvCounts) = landVector(spark, tablePath,
-        affected.map(byName), fresh)
-      val postDf = matched.select(post: _*)
-      val cs = snap.constraints
-      val names = stage(enforcedWith(withGenerated(postDf, snap.properties), cs),
-        tablePath, mapping, writeOptions)
-      val cdcNames = landChangeFiles(tablePath,
-        matched.drop("_uw_f", "_uw_p").withColumn(ChangeTypeCol, lit("delete"))
-          .unionByName(postDf.withColumn(ChangeTypeCol, lit("insert"))), mapping)
-      return commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
-        publisher = publisher, opTag = Some("update"),
-        abortOnLostRace = _ => false, changeAdds = cdcNames,
-        addStats = statsFor(spark, tablePath, names),
-        dvAttach = dvAttach, dvExpect = dvExpect, dvRowCounts = dvCounts,
-        constraintsExpect = Some(cs))
-        .getOrElse(throw new IllegalStateException("unreachable: unfenced DV update"))
-    }
-    // probe and rewrite read VISIBLE rows (DV-aware) — see deleteWhere
-    val affected = visibleRows(spark, tablePath, schema, entries,
-      meta = Seq("_uw_file" -> "file_name"), mapping = mapping)
-      .filter(predicate)
-      .select(col("_uw_file")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (affected.isEmpty) return version // nothing matched: no new version
-    val affectedEntries = affected.map(byName)
-    val affectedDf = visibleRows(spark, tablePath, schema, affectedEntries,
-      mapping = mapping)
-    val hit = coalesce(predicate, lit(false))
-    val rewritten = schema.fields.map(f =>
-      when(hit, assignments.get(f.name).map(_.cast(f.dataType))
-        .getOrElse(col(f.name))).otherwise(col(f.name)).as(f.name)).toIndexedSeq
-    val cs = snap.constraints
-    val names = stage(enforcedWith(withGenerated(affectedDf.select(rewritten: _*),
-      snap.properties), cs), tablePath, mapping, writeOptions)
-    val cdcNames = landChangeFiles(tablePath,
-      affectedDf.filter(predicate)
-        .withColumn(ChangeTypeCol, lit("delete"))
-        .unionByName(affectedDf.filter(predicate).select(post: _*)
-          .withColumn(ChangeTypeCol, lit("insert"))), mapping)
-    commit(spark, tablePath, adds = names, removes = affectedEntries.map(_.name),
-      publisher = publisher, opTag = Some("update"), changeAdds = cdcNames,
-      addStats = statsFor(spark, tablePath, names),
-      removeDvExpect = affectedEntries.map(e => e.name -> e.dv).toMap,
-      constraintsExpect = Some(cs))
+      assignments.get(f.name).map(_.cast(f.dataType)).getOrElse(col(f.name))).toSeq
+    rewriteRows(spark, tablePath, snap, schema, snap.live,
+      claim = _.withColumn(Claimed, predicate),
+      restate = Some(Restate(lit(true), post)),
+      deletionVectors = deletionVectors, publisher = publisher,
+      opTag = Some("update"))
+      .getOrElse(snap.version) // nothing matched: no new version
   }
 
   /** Column name the change feed uses to label each fed row's kind
@@ -3173,18 +2924,200 @@ object CommitLog {
     * a keyed consumer needs to stay exact. */
   val ChangeTypeCol = "_change_type"
 
-  /** Land a CDC frame (`schema` + [[ChangeTypeCol]]) as change files in
-    * the table directory through [[stage]]: writer-unique names
-    * (collision-free on any store), invisible to scans until the
-    * caller's commit lists them under `~`. Change files carry PHYSICAL
-    * column names like data files (the change-type tag is never a
-    * mapped column), so the feed reads one naming scheme across every
-    * file generation — which is why `mapping` must be the one the
-    * caller's commit declares: an evolving merge assigns fresh
-    * physicals that the table's current mapping does not know yet. */
-  private[store] def landChangeFiles(tablePath: String, cdc: DataFrame,
-      mapping: Map[String, String]): Seq[String] =
-    stage(cdc, tablePath, mapping)
+  // ── THE ROW-LEVEL CORE ──────────────────────────────────────────────
+
+  /** Columns of the visible-row frames [[rewriteRows]] hands a verb's
+    * `claim`: the row's data-file basename (`_metadata.file_name`), its
+    * 0-based position (`_metadata.row_index`, merge-on-read only), and
+    * the one column `claim` adds — [[Claimed]], true for a row that
+    * leaves the table (false or NULL: it stays). */
+  private[store] val RowFile = "_rl_file"
+  private[store] val RowPos = "_rl_pos"
+  private[store] val Claimed = "_rl_claimed"
+
+  /** Claimed rows that re-enter the table as post-images (UPDATE, a
+    * merge's update clauses): those of them `when` holds on, projected
+    * by `post` — one expression per table column, in schema order,
+    * over the claimed frame. */
+  private[store] final case class Restate(when: org.apache.spark.sql.Column,
+      post: Seq[org.apache.spark.sql.Column])
+
+  /** FILE-DROP classification: of the affected entries, keep only those
+    * NOT proven fully claimed — whose claimed-row count (keyed by
+    * `_metadata.file_name` basename) does not equal
+    * [[metadataVisibleCount]]. A file absent here is droppable as a
+    * pure log line: every visible row it holds leaves, so removing it
+    * and restating nothing loses no row. */
+  private[store] def partialMatches(affected: Seq[LiveEntry],
+      matchedCounts: Map[String, Long]): Seq[LiveEntry] =
+    affected.filterNot(e =>
+      metadataVisibleCount(e).contains(matchedCounts(baseNameOf(e.name))))
+
+  /** THE row-level landing — every verb that removes live rows
+    * ([[deleteWhere]], [[updateWhere]], [[replaceWhere]],
+    * [[keyedRewrite]] under merge/upsert/view refresh/CDC apply, and
+    * [[MergeClauses]]) decides only WHICH rows leave and which enter,
+    * and lands them here in one commit, planned and fenced on `snap`:
+    *
+    *  - `claim` marks the leaving rows ([[Claimed]]) on a frame of
+    *    VISIBLE rows (DV-aware: a position an earlier merge-on-read
+    *    delete vectored out never counts, never resurrects) of
+    *    `candidates` — the live entries the verb could not rule out;
+    *  - `restate` re-enters claimed rows as post-images; `adds` are
+    *    rows entering from outside the table (merge sources, inserts),
+    *    staged under the new-row chain (generated columns, CHECK
+    *    constraints); `landed` are files the verb already staged
+    *    (replaceWhere's guarded rows).
+    *
+    * Two landings:
+    *  - COPY-ON-WRITE: one probe counts claimed rows per file; fully
+    *    claimed files drop as log lines ([[partialMatches]]), the partly
+    *    claimed ones restate their surviving rows — in the same single
+    *    pass as the post-images and alongside `adds` — and the removes
+    *    commit with the DV attachment each was planned from
+    *    (`removeDvExpect`), so a concurrent vector fails the commit
+    *    instead of being resurrected.
+    *  - MERGE-ON-READ (`deletionVectors`): the claimed rows are
+    *    evaluated once (eager localCheckpoint) and their positions
+    *    vectored ([[landVector]]) under the DV fences; post-images and
+    *    `adds` append. No data file is rewritten.
+    *
+    * THE CHANGE-FEED RULE, for every verb in both landings: the claimed
+    * rows' pre-images feed as `delete`, and every row that enters
+    * (post-images, `adds`, `landed`) as `insert`, in change files
+    * committed atomically with the data.
+    *
+    * Nothing claimed: `unclaimed` answers (a keyed rewrite's tagged
+    * append, a clause merge's insert-only path); without it the
+    * entering rows land alone, and a verb with none gets None. None also
+    * when a lost publish race re-evaluates `abortOnLostRace` to true.
+    * `schemaJson` is the schema an evolving merge stamps (files land
+    * under its mapping); `stampEmptied` stamps the operating schema
+    * when the rewrite empties an un-ledgered table. CHECK constraints
+    * fence the commit whenever the verb writes rows of its own. Keys
+    * entries by name AND basename ([[entriesByName]]), after
+    * [[requireBasenameSoundness]]. */
+  private[store] def rewriteRows(spark: SparkSession, tablePath: String,
+      snap: Snapshot, schema: StructType, candidates: Seq[LiveEntry],
+      claim: DataFrame => DataFrame,
+      restate: Option[Restate] = None,
+      adds: Option[DataFrame] = None,
+      landed: Option[Seq[String]] = None,
+      deletionVectors: Boolean = false,
+      publisher: AtomicPublisher, opTag: Option[String],
+      abortOnLostRace: Snapshot => Boolean = _ => false,
+      schemaJson: Option[String] = None,
+      stampEmptied: Boolean = false,
+      unclaimed: Option[() => Option[Long]] = None): Option[Long] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    requireBasenameSoundness(snap.live, s"row-level rewrite on $tablePath")
+    val byName = entriesByName(snap.live)
+    val (mapping, props, cs) = (snap.mapping, snap.properties, snap.constraints)
+    // data and change files land under the mapping the commit declares
+    // (an evolving merge's schemaJson may assign fresh physicals)
+    val writeMapping = schemaJson.map(j => columnMapping(
+        org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType]))
+      .getOrElse(mapping)
+    val writeOptions = tableWriteOptions(props, writeMapping)
+    val cols = schema.fieldNames.toSeq
+    // Claimed may be NULL (a predicate's unknown): a filter on the column
+    // itself pushes the verb's predicate down to the scan, its negation
+    // keeps NULL rows
+    val claimedCol = col(Claimed)
+    val stays = !coalesce(claimedCol, lit(false))
+    def claimedIn(es: Seq[LiveEntry], positions: Boolean): DataFrame =
+      claim(visibleRows(spark, tablePath, schema, es, mapping,
+        meta = (RowFile -> "file_name") +:
+          (if (positions) Seq(RowPos -> "row_index") else Seq.empty)))
+    // new values: generated columns and CHECK constraints ride their
+    // write plan (survivor restatements are valid by induction)
+    def fresh(df: DataFrame): DataFrame = enforcedWith(withGenerated(df, props), cs)
+    val freshAdds = adds.map(fresh)
+    def postImages(claimedRows: DataFrame): Option[DataFrame] = restate.map(r =>
+      claimedRows.filter(claimedCol && r.when)
+        .select(cols.zip(r.post).map { case (c, p) => p.as(c) }: _*))
+    def stageAll(frames: Seq[DataFrame]): Seq[String] =
+      landed.getOrElse(Seq.empty) ++ frames.reduceOption(_.unionByName(_))
+        .map(stage(_, tablePath, writeMapping, writeOptions)).getOrElse(Seq.empty)
+    // the change-feed rule: claimed pre-images as delete, entering rows
+    // as insert (landed files read back — their exact bytes)
+    def changeFiles(claimedRows: Option[DataFrame]): Seq[String] = {
+      def tagged(df: DataFrame, kind: String) = df.withColumn(ChangeTypeCol, lit(kind))
+      val images = claimedRows.toSeq.flatMap(g =>
+          tagged(g.filter(claimedCol).select(cols.map(col): _*), "delete") +:
+            postImages(g).toSeq.map(tagged(_, "insert"))) ++
+        freshAdds.toSeq.map(tagged(_, "insert")) ++
+        landed.filter(_.nonEmpty).toSeq.map(ns => tagged(visibleRows(spark, tablePath,
+          schema, fileEntries(ns), writeMapping), "insert"))
+      images.reduceOption(_.unionByName(_))
+        .map(stage(_, tablePath, writeMapping)).getOrElse(Seq.empty)
+    }
+    val constraintsExpect =
+      if (restate.isDefined || adds.isDefined || landed.isDefined) Some(cs) else None
+    def publish(names: Seq[String], removed: Seq[LiveEntry], cdcNames: Seq[String],
+        vectors: (Map[String, String], Map[String, Option[String]], Map[String, Long]),
+        stamp: Option[String]): Option[Long] = {
+      val stamped = schemaJson.orElse(stamp)
+      commitOrAbort(spark, tablePath, adds = names, removes = removed.map(_.name),
+        publisher = publisher, opTag = opTag, abortOnLostRace = abortOnLostRace,
+        changeAdds = cdcNames, addStats = statsFor(spark, tablePath, names),
+        schemaJson = stamped,
+        dvAttach = vectors._1, dvExpect = vectors._2, dvRowCounts = vectors._3,
+        removeDvExpect = removed.map(e => e.name -> e.dv).toMap,
+        constraintsExpect = constraintsExpect,
+        schemaExpect = stamped.map(_ => snap.schema.map(_.json)))
+    }
+    def nothingClaimed(): Option[Long] = unclaimed.map(_()).getOrElse {
+      val names = stageAll(freshAdds.toSeq)
+      if (names.isEmpty) None
+      else publish(names, Seq.empty, changeFiles(None), (Map.empty, Map.empty, Map.empty), None)
+    }
+
+    if (deletionVectors) {
+      if (candidates.isEmpty) return nothingClaimed()
+      // one evaluation feeds the vector, the post-images and the change
+      // feed — a vectored position and its pre-image cannot disagree
+      val claimedRows = claimedIn(candidates, positions = true).filter(claimedCol)
+        .localCheckpoint(true)
+      val affected = claimedRows.select(col(RowFile)).distinct()
+        .collect().map(r => byName(r.getString(0))).toSeq
+      if (affected.isEmpty) return nothingClaimed()
+      val vectors = landVector(spark, tablePath, affected,
+        claimedRows.select(col(RowFile).as(DvFileCol), col(RowPos).as(DvPosCol)))
+      val names = stageAll(postImages(claimedRows).map(fresh).toSeq ++ freshAdds)
+      return publish(names, Seq.empty, changeFiles(Some(claimedRows)), vectors, None)
+    }
+    val claimedCounts: Map[String, Long] =
+      if (candidates.isEmpty) Map.empty
+      else claimedIn(candidates, positions = false).filter(claimedCol)
+        .groupBy(col(RowFile)).count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (claimedCounts.isEmpty) return nothingClaimed()
+    val affected = claimedCounts.keys.toSeq.sorted.map(byName)
+    val partial = partialMatches(affected, claimedCounts)
+    // survivors of the partly claimed files — with post-images, one
+    // pass over every affected file restates both
+    val restated: Option[DataFrame] = restate match {
+      case None if partial.nonEmpty => Some(claimedIn(partial, positions = false)
+        .filter(stays).select(cols.map(col): _*))
+      case None => None
+      case Some(r) =>
+        val survives = stays && (if (partial.size == affected.size) lit(true)
+          else col(RowFile).isin(partial.map(e => baseNameOf(e.name)): _*))
+        Some(fresh(claimedIn(affected, positions = false)
+          .filter(claimedCol && r.when || survives)
+          .select(cols.zip(r.post).map { case (c, p) =>
+            when(claimedCol, p).otherwise(col(c)).as(c) }: _*)))
+    }
+    val names = stageAll(restated.toSeq ++ freshAdds)
+    val stamp =
+      if (stampEmptied && names.isEmpty && affected.size == snap.live.size &&
+          snap.schema.isEmpty) Some(schema.json)
+      else None
+    publish(names, affected,
+      changeFiles(Some(claimedIn(affected, positions = false))),
+      (Map.empty, Map.empty, Map.empty), stamp)
+  }
 
   /** Keyed upsert (MERGE): for every source row whose key matches a
     * live target row, the target row is REPLACED by the source row;
@@ -3193,17 +3126,12 @@ object CommitLog {
     * operation on a log-structured table (CDC apply, dimension
     * updates, late corrections).
     *
-    * Composed from the deleteWhere machinery: one pruning scan finds
-    * the files holding matched rows (a merge touching 0.1% of files
-    * rewrites 0.1% of the table — copy-on-write), those files are
-    * rewritten with matched rows swapped out, the WHOLE source is
-    * appended alongside, and adds + removes + CDC publish as ONE
-    * `#op=merge` commit: readers see pre-merge or post-merge, never a
-    * mix, and remove-validation makes a concurrent rewrite of an
-    * affected file fail loudly instead of resurrecting replaced rows.
-    * Untouched files keep their identity. The CDC files carry matched
-    * pre-images as `delete` rows and every source row as `insert` —
-    * exactly what a keyed incremental consumer replays as an upsert.
+    * A [[keyedRewrite]]: the matched target rows leave and the WHOLE
+    * source enters, landed by [[rewriteRows]] as ONE `#op=merge` commit
+    * (copy-on-write, or merge-on-read with `deletionVectors`) — readers
+    * see pre-merge or post-merge, never a mix, and a concurrent rewrite
+    * of an affected file fails loudly instead of resurrecting replaced
+    * rows. Untouched files keep their identity.
     *
     * A source with duplicate keys is REJECTED (which duplicate wins is
     * undefined — same contract as Delta's multiple-source-rows-match
@@ -3458,17 +3386,18 @@ object CommitLog {
     files.filter(name => fromLog(name).getOrElse(footerCheck(name)))
   }
 
-  /** The shared copy-on-write core of merge and keyed incremental-view
-    * maintenance: atomically (1) remove every live row whose key
-    * appears in `deleteKeys`, (2) append `appendDf`, (3) materialize
-    * CDC (removed pre-images as `delete`, appended rows as `insert`),
-    * all in one optionally-tagged commit. Files without a matching key
-    * are never rewritten (pruning scan); a call that matches nothing
-    * is a plain [[appendOrAbort]]. Everything is planned, staged and
-    * fenced on the caller's `snap`: probes read under its mapping, and
-    * data and CDC files land under the mapping the commit declares
-    * (`schemaJson`'s, when an evolving merge stamps one — fresh
-    * physicals for new columns — else `snap`'s). */
+  /** The keyed rewrite behind merge and keyed incremental maintenance
+    * (upsertOnce, IncrementalView.refresh, CdcStream.applyChangesOnce):
+    * every live row whose key appears in `deleteKeys` leaves and
+    * `appendDf` enters, in one optionally-tagged commit landed by
+    * [[rewriteRows]]. Files whose stats rule out every key never enter
+    * the probe ([[pruneByFooterStats]]); a call that matches nothing is
+    * a plain [[appendOrAbort]] (still tagged, still fenced — an EMPTY
+    * append still commits, so a view refresh riding a consumed= tag
+    * advances its checkpoint even when the increment nets to nothing).
+    * Everything is planned, staged and fenced on the caller's `snap`;
+    * data and change files land under the mapping the commit declares
+    * (`schemaJson`'s, when an evolving merge stamps one). */
   private[store] def keyedRewrite(spark: SparkSession, tablePath: String,
       snap: Snapshot,
       schema: StructType, keyCols: Seq[String], deleteKeys: DataFrame,
@@ -3479,119 +3408,33 @@ object CommitLog {
       deletionVectors: Boolean = false): Option[Long] = {
     import org.apache.spark.sql.functions.{col, lit}
     val liveEntries = snap.live
-    val mapping = snap.mapping
-    requireBasenameSoundness(liveEntries, s"keyed rewrite on $tablePath")
-    val entryByName = entriesByName(liveEntries)
-    // the key set drives five jobs (stats envelope, bloom key collect,
-    // affected-file probe, the anti-join rewrite, the CDC semi-join) —
-    // materialize it once, increment-sized (the merge-source
-    // single-evaluation discipline, applied to the keys)
+    // the key set drives the stats envelope, the bloom key collect, the
+    // probe, the restatement and the change feed — materialize it once,
+    // increment-sized (the merge-source single-evaluation discipline)
     val keyD = deleteKeys.select(keyCols.map(col): _*).distinct()
       .localCheckpoint(true)
     val appendRows = appendDf.select(schema.fieldNames.map(col).toSeq: _*)
-    // nothing matched: the operation degenerates to a plain append
-    // (still tagged, still fenced). An EMPTY append still commits —
-    // a tagged caller (view refresh riding a consumed= tag) must
-    // advance its checkpoint even when the increment nets to
-    // nothing, or it reprocesses the same increment forever.
-    def appendOnly = appendOrAbort(appendRows, tablePath, snap, publisher,
-      opTag, abortOnLostRace, schemaJson = schemaJson)
-    // appended rows are NEW values: active CHECK constraints ride their
-    // write plan (survivor restatements are valid by induction); the
-    // captured set doubles as the commit-time constraint fence
-    val cs = snap.constraints
-    val app = enforcedWith(withGenerated(appendRows, snap.properties), cs)
-    // write under the mapping the commit will declare (an evolving
-    // merge's schemaJson may assign fresh physicals to new columns)
-    val writeMapping = schemaJson
-      .map(j => columnMapping(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType]))
-      .getOrElse(snap.mapping)
-    val writeOptions = tableWriteOptions(snap.properties, writeMapping)
-    val schemaExpect = schemaJson.map(_ => snap.schema.map(_.json))
     // stats-based skipping first: files whose LOG-carried min/max (or,
     // fallback, footer min/max + bloom filters) prove no key can match
-    // never enter the probe scan — on a clustered table an
-    // increment-shaped merge probes only the files its key range lands
-    // in (MergePruneSpec pins fewer-files-than-live-set and the
-    // footer-free log path)
+    // never enter the probe scan (MergePruneSpec pins
+    // fewer-files-than-live-set and the footer-free log path)
     val candidates =
       if (liveEntries.isEmpty) Seq.empty
-      else pruneByFooterStats(spark, tablePath, liveEntries.map(_.name), keyCols, keyD,
-        snap.mapping,
-        logStats = liveEntries.collect { case LiveEntry(n, Some(s), _, _) => n -> s }.toMap)
-    if (deletionVectors && candidates.nonEmpty) {
-      // MERGE-ON-READ upsert: vector out the matched target positions
-      // and append the source alongside — no affected-file rewrite at
-      // all (an increment-shaped merge against a wide 100 TB table
-      // writes one vector + the increment, instead of rewriting every
-      // matched file). The matched frame is evaluated ONCE (positions,
-      // CDC pre-images, affected-file collect all read the checkpoint).
-      val matched = visibleRows(spark, tablePath, schema,
-        candidates.map(entryByName),
-        meta = Seq("_kr_f" -> "file_name", "_kr_p" -> "row_index"), mapping = mapping)
-        .join(keyD, keyCols, "left_semi")
-        .localCheckpoint(true)
-      val affectedMor = matched.select(col("_kr_f")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      if (affectedMor.isEmpty) return appendOnly
-      val fresh = matched.select(col("_kr_f").as(DvFileCol),
-        col("_kr_p").as(DvPosCol))
-      val (dvAttach, dvExpect, dvCounts) = landVector(spark, tablePath,
-        affectedMor.map(entryByName), fresh)
-      val names = stage(app, tablePath, writeMapping, writeOptions)
-      val cdcNames = landChangeFiles(tablePath,
-        matched.drop("_kr_f", "_kr_p").withColumn(ChangeTypeCol, lit("delete"))
-          .unionByName(app.withColumn(ChangeTypeCol, lit("insert"))), writeMapping)
-      return commitOrAbort(spark, tablePath, adds = names, removes = Seq.empty,
-        publisher = publisher, opTag = opTag, abortOnLostRace = abortOnLostRace,
-        changeAdds = cdcNames, addStats = statsFor(spark, tablePath, names),
-        schemaJson = schemaJson, dvAttach = dvAttach, dvExpect = dvExpect,
-        dvRowCounts = dvCounts,
-        constraintsExpect = Some(cs), schemaExpect = schemaExpect)
-    }
-    val matchedCounts: Map[String, Long] =
-      if (candidates.isEmpty) Map.empty
       else {
-        // key columns only: the probe scan must never read payload
-        // bytes (Catalyst would prune anyway; saying it keeps the
-        // contract visible in the plan's ReadSchema). DV-aware: a
-        // position an earlier merge-on-read delete vectored out must
-        // not mark its file affected. Per-file MATCH COUNTS (same
-        // shuffle shape as a distinct-files probe) feed the file-drop
-        // classification below for free.
-        val keyOnly = StructType(schema.fields.filter(f =>
-          keyCols.contains(f.name)))
-        visibleRows(spark, tablePath, keyOnly, candidates.map(entryByName),
-          meta = Seq("_kr_file" -> "file_name"), mapping = mapping)
-          .join(keyD, keyCols, "left_semi")
-          .groupBy(col("_kr_file")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val byName = liveEntries.map(e => e.name -> e).toMap
+        pruneByFooterStats(spark, tablePath, liveEntries.map(_.name), keyCols, keyD,
+          snap.mapping,
+          logStats = liveEntries.collect { case LiveEntry(n, Some(s), _, _) => n -> s }.toMap)
+          .map(byName)
       }
-    if (matchedCounts.isEmpty) return appendOnly
-    val affectedEntries = matchedCounts.keys.toSeq.sorted.map(entryByName)
-    // a file whose every visible row's key is in the delete set DROPS
-    // as a pure log line (a merge re-landing a whole aligned slice
-    // removes the old slice's files without restating a byte); only
-    // the partially-covered files restate their surviving rows
-    val partial = partialMatches(affectedEntries, matchedCounts)
-    val aff = visibleRows(spark, tablePath, schema, affectedEntries, mapping = mapping)
-    val restate =
-      if (partial.isEmpty) app
-      else visibleRows(spark, tablePath, schema, partial, mapping = mapping)
-        .join(keyD, keyCols, "left_anti").unionByName(app)
-    val names = stage(restate, tablePath, writeMapping, writeOptions)
-    val cdcNames = landChangeFiles(tablePath,
-      aff.join(keyD, keyCols, "left_semi")
-        .withColumn(ChangeTypeCol, lit("delete"))
-        .unionByName(app.withColumn(ChangeTypeCol, lit("insert"))), writeMapping)
-    commitOrAbort(spark, tablePath, adds = names,
-      removes = affectedEntries.map(_.name),
+    val hit = keyD.withColumn(Claimed, lit(true))
+    rewriteRows(spark, tablePath, snap, schema, candidates,
+      claim = _.join(hit, keyCols, "left"),
+      adds = Some(appendRows), deletionVectors = deletionVectors,
       publisher = publisher, opTag = opTag, abortOnLostRace = abortOnLostRace,
-      changeAdds = cdcNames, addStats = statsFor(spark, tablePath, names),
       schemaJson = schemaJson,
-      removeDvExpect = affectedEntries.map(e => e.name -> e.dv).toMap,
-      constraintsExpect = Some(cs), schemaExpect = schemaExpect)
+      unclaimed = Some(() => appendOrAbort(appendRows, tablePath, snap, publisher,
+        opTag, abortOnLostRace, schemaJson = schemaJson)))
   }
 
   /** The table's commit history as a DataFrame — the DESCRIBE HISTORY

@@ -289,20 +289,6 @@ object ZOrder {
 
 object Store {
 
-  /** Read an UNLOGGED parquet table, or an empty frame with the given
-    * schema when it doesn't exist yet — the scratch state of the
-    * streaming dedup jobs. The pipeline tables read through [[read]]. */
-  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /** Unlogged append, the counterpart of [[readOrEmpty]]. */
-  def append(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
-
   def delete(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

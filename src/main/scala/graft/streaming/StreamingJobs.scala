@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.Task
 import graft.exec.Execute
-import graft.store.Store
+import graft.store.{CommitLog, Store}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -377,7 +377,9 @@ object StreamingJobs {
     * documents are banded by the per-row kernel, candidates are the
     * batch's band collisions against an AT-REST band index (plus
     * within-batch collisions), verified pairs append to a pairs table,
-    * and the batch's own bands/texts then join the index. This is how a
+    * and the batch's own bands/texts then join the index — all three
+    * logged tables, each batch landing through
+    * [[graft.store.CommitLog.appendOnce]] under its batch id. This is how a
     * 100 TB corpus dedups its daily increment: the increment joins a
     * (band, bh)-keyed history index — work scales with the increment
     * and its collision set, never with a history rescan; history TEXT
@@ -419,7 +421,7 @@ object StreamingJobs {
     val q = originals.unionAll(mutants).writeStream
       .option("checkpointLocation", tmpCheckpoint("inc_lsh"))
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
         val s = batch.sparkSession
         GraftFunctions.register(s)
         // the batch feeds banding, verification texts, and the index
@@ -437,8 +439,8 @@ object StreamingJobs {
             .as(Seq("band", "bh")))
           .persist()
         bandsB.count()
-        val histBands = Store.readOrEmpty(s, bandIndexPath, bandsSchema)
-        val histDocs = Store.readOrEmpty(s, docTextPath, docsSchema)
+        val histBands = CommitLog.read(s, bandIndexPath, bandsSchema)
+        val histDocs = CommitLog.read(s, docTextPath, docsSchema)
         val newVsHist = bandsB.as("n").join(histBands.as("h"),
             col("n.band") === col("h.band") && col("n.bh") === col("h.bh"))
           .select(least(col("n.doc_id"), col("h.doc_id")).as("id_a"),
@@ -457,17 +459,19 @@ object StreamingJobs {
           .filter(col("jaccard") >= threshold)
         // pairs FIRST (it reads the pre-batch index state), THEN the
         // batch joins the index — reversing this would double-discover
-        // within-batch pairs through the history join
-        Store.append(verified, pairsPath)
-        Store.append(bandsB, bandIndexPath)
-        Store.append(docsB, docTextPath)
+        // within-batch pairs through the history join. Each table's
+        // commit claims the batch id, so a replayed batch lands nothing
+        // twice
+        CommitLog.appendOnce(verified, pairsPath, "inc_lsh_pairs", bid)
+        CommitLog.appendOnce(bandsB, bandIndexPath, "inc_lsh_bands", bid)
+        CommitLog.appendOnce(docsB, docTextPath, "inc_lsh_docs", bid)
         bandsB.unpersist()
         docsB.unpersist()
         ()
       }
       .start()
     q.awaitTermination()
-    Store.readOrEmpty(spark, pairsPath, pairsSchema)
+    CommitLog.read(spark, pairsPath, pairsSchema)
   }
 
   /** Streaming incremental IMAGE near-dup — [[incrementalLshPairs]]'s
@@ -584,7 +588,6 @@ object StreamingJobs {
       maxDistance: Int,
       crashAfter: (Long, String) => Unit): StreamingQuery = {
     import graft.multimodal.Multimodal
-    import graft.store.CommitLog
     val idxTable = s"$stateRoot/band_index"
     val pairsTable = s"$stateRoot/pairs"
     val arrivals = s"$stateRoot/arrivals"

@@ -148,6 +148,49 @@ class CloneSpec extends SparkSpec {
     assert(got.length == 50 && got.forall { case (_, t, v) => t == "insert" && v == 1L })
   }
 
+  /** A 100-row source and its shallow clone; returns the clone's path. */
+  private def clonedTable(name: String): String = {
+    import spark.implicits._
+    val src = freshDir(s"${name}_src"); val dst = freshDir(s"${name}_dst")
+    (1L to 100L).map(i => (i, s"v$i")).toDF("id", "s")
+      .write.format("graftlog").mode("append").option("mergeSchema", "true").save(src)
+    CommitLog.shallowClone(spark, src, dst)
+    dst
+  }
+
+  /** The clone after updating ids 1..10 to `s = "m"`. */
+  private val mergedRows: Set[(Long, String)] =
+    (1L to 100L).map(i => (i, if (i <= 10L) "m" else s"v$i")).toSet
+
+  Seq(false, true).foreach { dv =>
+    val mode = if (dv) "merge-on-read" else "copy-on-write"
+    test(s"a clause merge ($mode) rewrites a clone's referenced files") {
+      import spark.implicits._
+      val t = clonedTable(s"clause_${if (dv) "mor" else "cow"}")
+      val merge = MergeClauses.into(spark, t, CommitLog.tableSchema(spark, t),
+        (1L to 10L).map(i => (i, "m")).toDF("id", "s"), Seq("id"))
+        .whenMatchedUpdate(Seq("s"))
+      val v = (if (dv) merge.withDeletionVectors() else merge).execute()
+      assert(v == 2L)
+      assert(rows(t) == mergedRows)
+      val feed = CommitLog.changesSince(spark, t, 1L, CommitLog.tableSchema(spark, t))
+        .select(col("id"), col(CommitLog.ChangeTypeCol)).as[(Long, String)].collect()
+      assert(feed.sorted.toSeq == (1L to 10L).flatMap(i => Seq((i, "delete"), (i, "insert"))))
+    }
+  }
+
+  test("SQL MERGE INTO a clone updates its referenced files") {
+    import spark.implicits._
+    val t = clonedTable("sql_merge")
+    (1L to 10L).map(i => (i, "m")).toDF("id", "s").createOrReplaceTempView("graft_clone_src")
+    GraftSql.execute(spark,
+      s"""MERGE INTO graftlog.`$t` AS t
+         |USING graft_clone_src AS s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET s = s.s""".stripMargin)
+    assert(rows(t) == mergedRows)
+  }
+
   test("a clone whose source was vacuumed from under it fails loudly at read") {
     import spark.implicits._
     val src = freshDir("vac_src"); val dst = freshDir("vac_dst")
@@ -237,6 +280,15 @@ class CloneSpec extends SparkSpec {
         Map("id" -> (col("id") + 100L)))
     }
     assert(ex4.getMessage.contains("basename collision"), ex4.getMessage)
+    // ...and the clause merge, in both landings
+    Seq(false, true).foreach { dv =>
+      val merge = MergeClauses.into(spark, t, schema, Seq(1L, 9L).toDF("id"), Seq("id"))
+        .whenMatchedDelete().whenNotMatchedInsert()
+      val ex5 = intercept[IllegalArgumentException] {
+        (if (dv) merge.withDeletionVectors() else merge).execute()
+      }
+      assert(ex5.getMessage.contains("basename collision"), ex5.getMessage)
+    }
   }
 
   test("clone refuses a non-absolute source, a self-clone, and an occupied destination") {

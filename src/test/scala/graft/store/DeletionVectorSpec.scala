@@ -176,12 +176,8 @@ abstract class DeletionVectorBehavior(publisher: AtomicPublisher) extends SparkS
     // (one vector-free file) and stages its restatement of those rows
     val (_, planned) = CommitLog.liveFilesFull(spark, t)
     assert(planned.size == 1 && planned.head.dv.isEmpty)
-    val dir = new org.apache.hadoop.fs.Path(t)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val writerId = CommitLog.freshWriterId("c")
-    val staging = new org.apache.hadoop.fs.Path(t, s"_staging_$writerId")
-    spark.range(0, 100).toDF("id").coalesce(1).write.parquet(staging.toString)
-    val names = CommitLog.landStaged(fs, dir, staging, writerId)
+    val names = CommitLog.stage(spark.range(0, 100).toDF("id").coalesce(1), t,
+      Map.empty, writer = "c")
     // a MOR delete lands BETWEEN the rewrite's planning read and its
     // commit: the planned file is still live, but now carries a vector
     CommitLog.deleteWhere(spark, t, schema, col("id") === 7, publisher,
