@@ -3055,8 +3055,9 @@ object CommitLog {
     val constraintsExpect =
       if (restate.isDefined || adds.isDefined || landed.isDefined) Some(cs) else None
     def publish(names: Seq[String], removed: Seq[LiveEntry], cdcNames: Seq[String],
-        vectors: (Map[String, String], Map[String, Option[String]], Map[String, Long]),
-        stamp: Option[String]): Option[Long] = {
+        vectors: (Map[String, String], Map[String, Option[String]], Map[String, Long]) =
+          (Map.empty, Map.empty, Map.empty),
+        stamp: Option[String] = None): Option[Long] = {
       val stamped = schemaJson.orElse(stamp)
       commitOrAbort(spark, tablePath, adds = names, removes = removed.map(_.name),
         publisher = publisher, opTag = opTag, abortOnLostRace = abortOnLostRace,
@@ -3070,11 +3071,11 @@ object CommitLog {
     def nothingClaimed(): Option[Long] = unclaimed.map(_()).getOrElse {
       val names = stageAll(freshAdds.toSeq)
       if (names.isEmpty) None
-      else publish(names, Seq.empty, changeFiles(None), (Map.empty, Map.empty, Map.empty), None)
+      else publish(names, Seq.empty, changeFiles(None))
     }
 
+    if (candidates.isEmpty) return nothingClaimed()
     if (deletionVectors) {
-      if (candidates.isEmpty) return nothingClaimed()
       // one evaluation feeds the vector, the post-images and the change
       // feed — a vectored position and its pre-image cannot disagree
       val claimedRows = claimedIn(candidates, positions = true).filter(claimedCol)
@@ -3085,13 +3086,11 @@ object CommitLog {
       val vectors = landVector(spark, tablePath, affected,
         claimedRows.select(col(RowFile).as(DvFileCol), col(RowPos).as(DvPosCol)))
       val names = stageAll(postImages(claimedRows).map(fresh).toSeq ++ freshAdds)
-      return publish(names, Seq.empty, changeFiles(Some(claimedRows)), vectors, None)
+      return publish(names, Seq.empty, changeFiles(Some(claimedRows)), vectors)
     }
-    val claimedCounts: Map[String, Long] =
-      if (candidates.isEmpty) Map.empty
-      else claimedIn(candidates, positions = false).filter(claimedCol)
-        .groupBy(col(RowFile)).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val claimedCounts = claimedIn(candidates, positions = false).filter(claimedCol)
+      .groupBy(col(RowFile)).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     if (claimedCounts.isEmpty) return nothingClaimed()
     val affected = claimedCounts.keys.toSeq.sorted.map(byName)
     val partial = partialMatches(affected, claimedCounts)
@@ -3114,9 +3113,8 @@ object CommitLog {
       if (stampEmptied && names.isEmpty && affected.size == snap.live.size &&
           snap.schema.isEmpty) Some(schema.json)
       else None
-    publish(names, affected,
-      changeFiles(Some(claimedIn(affected, positions = false))),
-      (Map.empty, Map.empty, Map.empty), stamp)
+    publish(names, affected, changeFiles(Some(claimedIn(affected, positions = false))),
+      stamp = stamp)
   }
 
   /** Keyed upsert (MERGE): for every source row whose key matches a
@@ -3386,6 +3384,18 @@ object CommitLog {
     files.filter(name => fromLog(name).getOrElse(footerCheck(name)))
   }
 
+  /** The live entries of `snap` that could hold a row whose key is in
+    * `keys` — [[pruneByFooterStats]] over the snapshot's log stats. */
+  private[store] def keyCandidates(spark: SparkSession, tablePath: String,
+      snap: Snapshot, keyCols: Seq[String], keys: DataFrame,
+      alwaysAll: Boolean = false): Seq[LiveEntry] = {
+    val byName = snap.live.map(e => e.name -> e).toMap
+    pruneByFooterStats(spark, tablePath, snap.live.map(_.name), keyCols, keys,
+      snap.mapping, alwaysAll,
+      logStats = snap.live.collect { case LiveEntry(n, Some(s), _, _) => n -> s }.toMap)
+      .map(byName)
+  }
+
   /** The keyed rewrite behind merge and keyed incremental maintenance
     * (upsertOnce, IncrementalView.refresh, CdcStream.applyChangesOnce):
     * every live row whose key appears in `deleteKeys` leaves and
@@ -3407,7 +3417,6 @@ object CommitLog {
       schemaJson: Option[String] = None,
       deletionVectors: Boolean = false): Option[Long] = {
     import org.apache.spark.sql.functions.{col, lit}
-    val liveEntries = snap.live
     // the key set drives the stats envelope, the bloom key collect, the
     // probe, the restatement and the change feed — materialize it once,
     // increment-sized (the merge-source single-evaluation discipline)
@@ -3418,15 +3427,7 @@ object CommitLog {
     // fallback, footer min/max + bloom filters) prove no key can match
     // never enter the probe scan (MergePruneSpec pins
     // fewer-files-than-live-set and the footer-free log path)
-    val candidates =
-      if (liveEntries.isEmpty) Seq.empty
-      else {
-        val byName = liveEntries.map(e => e.name -> e).toMap
-        pruneByFooterStats(spark, tablePath, liveEntries.map(_.name), keyCols, keyD,
-          snap.mapping,
-          logStats = liveEntries.collect { case LiveEntry(n, Some(s), _, _) => n -> s }.toMap)
-          .map(byName)
-      }
+    val candidates = keyCandidates(spark, tablePath, snap, keyCols, keyD)
     val hit = keyD.withColumn(Claimed, lit(true))
     rewriteRows(spark, tablePath, snap, schema, candidates,
       claim = _.join(hit, keyCols, "left"),

@@ -108,7 +108,7 @@ final class MergeClauses private (
     require(matched.nonEmpty || insertClause.nonEmpty || bySourceDelete.nonEmpty,
       "merge with no clauses")
     val snap = CommitLog.snapshot(spark, tablePath)
-    val (version, liveEntries) = (snap.version, snap.live)
+    val version = snap.version
     val cols = schema.fieldNames.toSeq
     val nonKey = cols.filterNot(keyCols.contains)
     // Clause conditions evaluate MORE THAN ONCE over the same joined
@@ -146,15 +146,8 @@ final class MergeClauses private (
 
     // files that can hold a matched row (stats-based skipping over the
     // key columns); a by-source clause must visit every file
-    val candidates =
-      if (liveEntries.isEmpty) Seq.empty
-      else {
-        val byName = liveEntries.map(e => e.name -> e).toMap
-        CommitLog.pruneByFooterStats(spark, tablePath, liveEntries.map(_.name),
-          keyCols, src, snap.mapping, alwaysAll = bySourceDelete.nonEmpty,
-          logStats = liveEntries.collect { case CommitLog.LiveEntry(n, Some(s), _, _) =>
-            n -> s }.toMap).map(byName)
-      }
+    val candidates = CommitLog.keyCandidates(spark, tablePath, snap, keyCols, src,
+      alwaysAll = bySourceDelete.nonEmpty)
     // unmatched source rows: every target key a source row can match
     // lives in a candidate file (DV-aware — a vectored-out row matches
     // nothing), so the anti-join reads only those files' keys
