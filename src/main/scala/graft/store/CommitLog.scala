@@ -1808,8 +1808,8 @@ object CommitLog {
   /** Column names of a deletion-vector parquet: the data file each
     * position belongs to and the 0-based physical row position
     * (`_metadata.row_index`) deleted from it. */
-  private[store] val DvFileCol = "file_name"
-  private[store] val DvPosCol = "row_index"
+  private val DvFileCol = "file_name"
+  private val DvPosCol = "row_index"
 
   private val DvSchema = StructType.fromDDL(s"$DvFileCol string, $DvPosCol bigint")
 
@@ -2840,7 +2840,7 @@ object CommitLog {
   /** Land ONE cumulative vector parquet covering `fresh` positions for
     * `affectedEntries` — prior vectors of those files are unioned in
     * (cumulative-replacement invariant) — and return the commit's
-    * (dvAttach, dvExpect) pair. One parquet per commit, shared by
+    * (dvAttach, dvExpect, dvRowCounts). One parquet per commit, shared by
     * every affected file (per-file attachment filtering keeps sharing
     * exact): vectors are increment-sized by design (~16 B/position;
     * massive hits belong on the copy-on-write path), so a single file
@@ -2931,8 +2931,8 @@ object CommitLog {
     * 0-based position (`_metadata.row_index`, merge-on-read only), and
     * the one column `claim` adds — [[Claimed]], true for a row that
     * leaves the table (false or NULL: it stays). */
-  private[store] val RowFile = "_rl_file"
-  private[store] val RowPos = "_rl_pos"
+  private val RowFile = "_rl_file"
+  private val RowPos = "_rl_pos"
   private[store] val Claimed = "_rl_claimed"
 
   /** Claimed rows that re-enter the table as post-images (UPDATE, a
