@@ -255,7 +255,7 @@ class CloneSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType)))
     // reads are reference-keyed and stay sound
     assert(spark.read.format("graftlog").load(t).count() == 4)
-    // the predicate-rewrite probe (deleteWhere → removeMatching) refuses
+    // the predicate-rewrite probe (deleteWhere → rewriteRows) refuses
     val ex = intercept[IllegalArgumentException] {
       CommitLog.deleteWhere(spark, t, schema, col("id") === 1L)
     }
