@@ -28,9 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Registered by [[GraftFunctions.register]] (session) and
   * [[GraftExtensions]] (spark.sql.extensions), alongside the scalar
-  * kernels. Write-side statements (MERGE INTO) stay on the Scala/CLI
-  * surface — a table function cannot mutate, and injecting a custom
-  * parser for one statement buys syntax, not capability. */
+  * kernels. Write-side statements (MERGE INTO, UPDATE, DELETE) run
+  * through the `graft` catalog and [[graft.store.GraftDmlRule]] — a
+  * table function cannot mutate. */
 object LogTableFunction {
 
   val descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
@@ -91,13 +91,8 @@ object LogTableFunction {
     val asOf = if (args.length == 3) longArg(args(2), "asOf") else Long.MaxValue
     val spark = SparkSession.active
     val path = graft.store.GraftSql.resolvePath(spark, rawPath)
-    val schema = CommitLog.schemaAt(spark, path, asOf).getOrElse {
-      val (_, files) = CommitLog.liveFiles(spark, path)
-      require(files.nonEmpty,
-        s"cannot infer the schema of $path — no schema ledger and no live files")
-      spark.read.parquet(CommitLog.resolveDataPath(path, files.last)).schema
-    }
-    CommitLog.changesSince(spark, path, since, schema, asOf)
+    CommitLog.changesSince(spark, path, since,
+      CommitLog.tableSchema(spark, path, asOf), asOf)
       .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.logical
   }

@@ -151,8 +151,8 @@ object SqlPassthrough {
     },
 
     // ── MERGE INTO / the full clause grammar from RAW SQL
-    // (GraftSql.execute): the statement Spark's parser produces routes
-    // onto MergeClauses — matched delete, partial update, conditional
+    // (GraftSql.execute): the statement Spark's parser produces runs
+    // through GraftDmlRule onto MergeClauses — matched delete, partial update, conditional
     // insert, by-source delete, all in ONE statement — then the merged
     // snapshot is read back through the graft_log TVF. The oracle
     // replays the clause semantics relationally; the digest covers the

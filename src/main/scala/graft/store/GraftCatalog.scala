@@ -23,15 +23,15 @@ import scala.jdk.CollectionConverters._
   *
   * and every Spark entry point sees logged tables with zero
   * graft-specific syntax: `SELECT * FROM graft.t`, `INSERT INTO
-  * graft.t`, `INSERT OVERWRITE`, `DELETE FROM graft.t WHERE …`,
-  * `CREATE TABLE graft.t (…)`, CTAS, `DROP TABLE`, `DESCRIBE TABLE`,
-  * `SHOW TABLES IN graft`, and native time travel (`SELECT … FROM
-  * graft.t VERSION AS OF 3` / `TIMESTAMP AS OF …`) all route through
-  * Spark's own analyzer to the commit log — this is the Delta
-  * `DeltaCatalog` shape, and it retires the regex seam in
-  * [[GraftSql]] for everything Spark's grammar can say. (The
-  * extension verbs Spark has no grammar for — OPTIMIZE, VACUUM,
-  * RESTORE, constraints — remain on [[GraftSql.execute]].)
+  * graft.t`, `INSERT OVERWRITE`, `DELETE` / `UPDATE` / `MERGE INTO`
+  * (executed by [[GraftDmlRule]]), `CREATE TABLE graft.t (…)`, CTAS,
+  * `DROP TABLE`, `DESCRIBE TABLE`, `SHOW TABLES IN graft`, and native
+  * time travel (`SELECT … FROM graft.t VERSION AS OF 3` / `TIMESTAMP
+  * AS OF …`) all route through Spark's own analyzer to the commit
+  * log — this is the Delta `DeltaCatalog` shape. [[GraftSql.execute]]
+  * resolves its `graftlog.` DML spellings through this catalog too;
+  * the extension verbs Spark has no grammar for — OPTIMIZE, VACUUM,
+  * RESTORE, constraints — remain on its regex routes.
   *
   * Identifier resolution: `graft.name` (and `graft.ns.name`) resolve
   * against the `spark.graft.warehouse` root as `wh/ns/name` — the

@@ -18,18 +18,19 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * SupportsRowLevelOperations rewrite machinery; this rule intercepts
   * the RESOLVED command during analysis (the Delta `DeltaAnalysis`
   * pattern) and replaces it with a runnable command over the SAME
-  * copy-on-write / merge-on-read machinery the Scala and GraftSql
-  * surfaces use — identical semantics, stats-pruned probes, CDC riding
-  * the commit, the session's deletion-vector switch honored.
+  * copy-on-write / merge-on-read machinery the Scala API uses —
+  * identical semantics, stats-pruned probes, CDC riding the commit,
+  * the session's deletion-vector switch honored.
   * DELETE is intercepted too, which upgrades it past the
   * `SupportsDelete` fallback: arbitrary predicates (`id % 7 = 0`)
-  * work instead of only filter-translatable ones.
+  * work instead of only filter-translatable ones. The one DML
+  * translator: [[GraftSql]] routes its `graftlog.` spellings here too.
   *
-  * Namespace translation mirrors GraftSql, but keyed on RESOLVED
-  * attribute identity instead of alias strings: an attribute bound to
-  * the target relation renders as its plain name, one bound to the
-  * merge source as `_src_<name>` ([[MergeClauses.SrcPrefix]]) —
-  * alias-free and ambiguity-free by construction. */
+  * Namespaces are keyed on RESOLVED attribute identity: an attribute
+  * bound to the target relation renders as its plain name, one bound
+  * to the merge source as `_src_<name>` ([[MergeClauses.SrcPrefix]]);
+  * a column both sides carry must be qualified, or the analyzer
+  * refuses it as ambiguous before this rule runs. */
 final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** ``[alias ->] DataSourceV2Relation(GraftTable)`` under a command's
@@ -102,7 +103,7 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val insertCond: Option[Option[Column]] = m.notMatchedActions match {
         case Seq() => None
         case Seq(InsertAction(cond, assignments)) =>
-          checkInsertAssignments(assignments, target, source)
+          checkInsertAssignments(assignments, rel.output)
           Some(cond.map(toColumn(_, source, AttributeSet.empty, Seq.empty)))
         case other => fail(s"unsupported WHEN NOT MATCHED actions: $other")
       }
@@ -143,9 +144,8 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * `_src_<name>` — EXCEPT source KEY columns, which render plain
     * (the clause join carries keys once under their plain names; they
     * are equal on both sides by the ON condition); leaves are swapped
-    * then the tree re-renders through its SQL form (the GraftSql
-    * technique — arbitrary scalar expressions survive without
-    * re-implementing a grammar). */
+    * then the tree re-renders through its SQL form (arbitrary scalar
+    * expressions survive without re-implementing a grammar). */
   private def toColumn(e: Expression, target: AttributeSet,
       source: AttributeSet, keys: Seq[String]): Column =
     expr(e.transformUp {
@@ -184,9 +184,11 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
         case _ => None
       }) match {
         case Some((a: AttributeReference, b: AttributeReference))
-            if a.name.equalsIgnoreCase(b.name) &&
-              ((target.contains(a) && source.contains(b)) ||
-                (source.contains(a) && target.contains(b))) =>
+            if (target.contains(a) && source.contains(b)) ||
+              (source.contains(a) && target.contains(b)) =>
+          if (!a.name.equalsIgnoreCase(b.name)) fail(
+            s"ON equality must pair the SAME column name on both sides " +
+              s"(got `${a.name}` = `${b.name}`) — logged merges are keyed")
           if (target.contains(a)) a.name else b.name
         case _ => fail(
           s"unsupported ON term `${term.sql}` — the condition must be a " +
@@ -222,11 +224,12 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     }
 
-  /** INSERT column list must be the full same-name mapping (analyzer
-    * casts stripped). */
+  /** INSERT column list must be the full same-name mapping: every
+    * target column named, each from the same-named source column
+    * (analyzer casts stripped). */
   private def checkInsertAssignments(assignments: Seq[Assignment],
-      target: AttributeSet, source: AttributeSet): Unit =
-    assignments.foreach { case Assignment(key, value) =>
+      target: Seq[Attribute]): Unit = {
+    val named = assignments.map { case Assignment(key, value) =>
       val name = uncast(key) match {
         case a: AttributeReference => a.name
         case other => fail(s"INSERT column must be a plain column, got `${other.sql}`")
@@ -237,7 +240,13 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           s"INSERT (`$name`) VALUES (`${other.sql}`): only same-name source " +
             "columns are supported — use INSERT * or shape the USING subquery")
       }
+      name
     }
+    val missing = target.map(_.name)
+      .filterNot(c => named.exists(_.equalsIgnoreCase(c)))
+    if (missing.nonEmpty) fail(
+      s"INSERT must cover every table column; missing ${missing.mkString(", ")}")
+  }
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"graft SQL DML: $msg")

@@ -1,9 +1,8 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, InsertIntoStatement, LogicalPlan, MergeIntoTable, OverwriteByExpression, SubqueryAlias, UpdateTable}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.graft.StreamingShim
 import org.apache.spark.sql.types.StructType
@@ -25,32 +24,38 @@ import org.apache.spark.sql.types.StructType
   * GraftSql.execute(spark, "DELETE FROM graftlog.`/tables/docs` WHERE doc_id % 7 = 0")
   * }}}
   *
-  * Design: Spark's OWN parser already produces `MergeIntoTable` /
-  * `DeleteFromTable` logical plans for these statements — they only
-  * fail later, at analysis, because no v2 catalog owns the table. So
-  * this router parses with `sessionState.sqlParser`, intercepts the
-  * two command shapes when the target is spelled
-  * ``graftlog.`/table/path` ``, translates the parsed clause tree onto
-  * [[MergeClauses]] / [[CommitLog.deleteWhere]] (the same copy-on-write
-  * machinery the Scala API uses — stats-pruned probes, CDC riding the
-  * commit, clause-order semantics), and hands EVERY other statement to
-  * `spark.sql` untouched. One parse, zero custom grammar, identical
-  * clause semantics between the SQL and builder surfaces — the Delta
-  * approach (their `DeltaAnalysis` rule does the same interception
-  * inside the analyzer; out-of-tree we do it at the statement seam).
+  * Design: Spark's OWN parser produces `MergeIntoTable` /
+  * `UpdateTable` / `DeleteFromTable` plans for these statements. This
+  * router parses with `sessionState.sqlParser`, renames every
+  * ``graftlog.`x` `` relation in the plan to the registered `graft`
+  * catalog ([[GraftCatalog]]), and analyzes the result through the
+  * session — so DML runs through [[GraftDmlRule]], the one DML
+  * translator, with the same resolved-plan semantics as a plain
+  * `spark.sql` over `graft.` identifiers. INSERT / INSERT OVERWRITE /
+  * REPLACE WHERE on a path spelling land here through the commit log
+  * (INSERT bootstraps an empty table); their query side resolves
+  * `graftlog.` sources through the same rename. EVERY other statement
+  * goes to `spark.sql` untouched.
   *
-  * Supported subset (loud `IllegalArgumentException` otherwise):
+  * DML therefore requires the session to carry the `graft` catalog
+  * (`spark.sql.catalog.graft = graft.store.GraftCatalog`) and
+  * [[graft.functions.GraftExtensions]]; `graft.Sessions.local` sets
+  * both. Supported subset (loud `IllegalArgumentException` otherwise;
+  * see [[GraftDmlRule]]):
   *  - `ON` must be a conjunction of `t.key = s.key` same-name
   *    equalities — [[MergeClauses]] merges are keyed (that is what
   *    makes the probe prunable at 100 TB).
   *  - `UPDATE SET col = s.col` assigns same-name source columns
-  *    (or `UPDATE SET *`); arbitrary update expressions are not
-  *    representable as a column-copy rewrite.
-  *  - `INSERT *` or a full same-name column list.
-  *  - target and source need aliases when clause conditions reference
-  *    columns both sides share (the `t.`/`s.` namespace).
+  *    (or `UPDATE SET *`, which updates the target's columns by name);
+  *    arbitrary update expressions are not representable as a
+  *    column-copy rewrite.
+  *  - `INSERT *` or a same-name column list covering every table
+  *    column.
+  *  - a column both sides carry must be qualified (`t.v` / `s.v`);
+  *    an unqualified one is refused as ambiguous by the analyzer.
+  *  - no `WITH SCHEMA EVOLUTION`.
   *
-  * A merge/delete statement returns a 1-row frame
+  * A DML or INSERT statement returns a 1-row frame
   * `(table, committed_version)` — the caller can thread it into a
   * `graft_log(path, version)` read for read-your-writes.
   *
@@ -66,10 +71,10 @@ object GraftSql {
 
   /** The REGISTERED DSv2 catalog name ([[GraftCatalog]]) — `graft.t`
     * identifiers are first-class through Spark's analyzer for
-    * SELECT/INSERT/DELETE/CREATE/DROP/DESCRIBE; this router accepts
-    * the same spelling for the verbs a plain v2 table cannot express
-    * (UPDATE, MERGE, and the extension verbs below), so one identifier
-    * form works across the whole SQL surface. */
+    * SELECT/INSERT/UPDATE/DELETE/MERGE/CREATE/DROP/DESCRIBE; this
+    * router accepts the same spelling for the extension verbs below,
+    * so one identifier form works across the whole SQL surface, and
+    * renames `graftlog.` DML relations to it. */
   val CatalogV2 = "graft"
 
   private def isGraftCatalog(name: String): Boolean =
@@ -347,80 +352,30 @@ object GraftSql {
 
   private def executeParsed(spark: SparkSession, sql: String): DataFrame =
     spark.sessionState.sqlParser.parsePlan(sql) match {
-      case m: MergeIntoTable =>
-        pathOf(m.targetTable) match {
-          case Some((path, tAlias)) =>
-            runMerge(spark, m, resolvePath(spark, path), tAlias)
-          case None => spark.sql(sql)
-        }
-      case d: DeleteFromTable =>
-        pathOf(d.table) match {
-          case Some((path, _)) => runDelete(spark, d, resolvePath(spark, path))
-          case None => spark.sql(sql)
-        }
+      // DML analyzes through the session: with the `graftlog.` names
+      // renamed to the `graft` catalog, GraftDmlRule turns the RESOLVED
+      // command into the commit-log operation and returns its
+      // (table, committed_version) row
+      case dml @ (_: DeleteFromTable | _: UpdateTable | _: MergeIntoTable) =>
+        StreamingShim.ofRows(spark, toCatalog(spark, dml))
       case i: InsertIntoStatement =>
         pathOf(i.table) match {
-          case Some((path, _)) => runInsert(spark, i, resolvePath(spark, path))
+          case Some(path) => runInsert(spark, i, resolvePath(spark, path))
           case None => spark.sql(sql)
         }
       // `INSERT INTO graftlog.`p` REPLACE WHERE cond SELECT …` parses
       // to OverwriteByExpression (the v2 write plan), not an
       // InsertIntoStatement — route the path spelling to replaceWhere
-      case o: org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression =>
+      case o: OverwriteByExpression =>
         pathOf(o.table) match {
-          case Some((path, _)) =>
-            runReplaceWhere(spark, o, resolvePath(spark, path))
-          case None => spark.sql(sql)
-        }
-      case u: UpdateTable =>
-        pathOf(u.table) match {
-          case Some((path, _)) => runUpdate(spark, u, resolvePath(spark, path))
+          case Some(path) => runReplaceWhere(spark, o, resolvePath(spark, path))
           case None => spark.sql(sql)
         }
       case _ => spark.sql(sql)
     }
 
-  // ── UPDATE ────────────────────────────────────────────────────────
-
-  /** `UPDATE graftlog.`p` SET col = expr, … [WHERE cond]` → the
-    * predicate-addressed copy-on-write rewrite. Unlike MERGE's SET
-    * (a column copy from the source row), a plain UPDATE's values are
-    * arbitrary expressions over the TARGET row — `SET v = concat(v,
-    * '!')` — rendered through the same alias-stripping as the DELETE
-    * predicate. No WHERE updates every row. */
-  private def runUpdate(spark: SparkSession, u: UpdateTable,
-      path: String): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val alias = aliasOf(u.table)
-    val predicate = u.condition
-      .map(targetColumn(_, alias, where = "UPDATE WHERE condition"))
-      .getOrElse(lit(true))
-    val sets: Map[String, Column] = u.assignments.map {
-      case Assignment(key: UnresolvedAttribute, value) =>
-        val target = key match {
-          case a if a.nameParts.length == 1 ||
-              alias.exists(a.nameParts.head.equalsIgnoreCase) => colName(a)
-          case other =>
-            fail(s"UPDATE SET target must be a target column, got `${other.name}`")
-        }
-        target -> targetColumn(value, alias, where = s"UPDATE SET `$target`")
-      case Assignment(other, _) =>
-        fail(s"UPDATE SET target must be a column, got `${other.sql}`")
-    }.toMap
-    // merge-on-read default: session conf, else table property (see runDelete)
-    val v = CommitLog.updateWhere(spark, path, schemaOf(spark, path),
-      predicate, sets, deletionVectors = CommitLog.morDefault(spark, path))
-    result(spark, path, v)
-  }
-
-
   // ── target recognition ────────────────────────────────────────────
 
-  /** Resolve a graftlog table identifier: a PATH (contains '/')
-    * passes through; a bare NAME resolves against the session's
-    * `spark.graft.warehouse` root — the SQL-only user's named-table
-    * surface (`CREATE TABLE graftlog.`corpus` …`, then every verb by
-    * name). */
   /** Absolute local path or scheme-qualified Hadoop URI (hdfs://,
     * s3a://, file:/ …) — the shapes path-addressed identifiers accept;
     * anything relative would resolve against an undefined working
@@ -428,6 +383,11 @@ object GraftSql {
   private[graft] def isAbsolutePath(p: String): Boolean =
     p.startsWith("/") || p.matches("^[A-Za-z][A-Za-z0-9+.-]*:/.*")
 
+  /** Resolve a graftlog table identifier: a PATH (contains '/')
+    * passes through; a bare NAME resolves against the session's
+    * `spark.graft.warehouse` root — the SQL-only user's named-table
+    * surface (`CREATE TABLE graftlog.`corpus` …`, then every verb by
+    * name). */
   private[graft] def resolvePath(spark: SparkSession, ident: String): String =
     if (ident.contains('/')) {
       // path-addressed: explicit and absolute only — a RELATIVE path
@@ -451,47 +411,32 @@ object GraftSql {
       }
     }
 
-  /** ``[alias ->] graftlog.`/path` `` → (path, alias). */
-  private def pathOf(plan: LogicalPlan): Option[(String, Option[String])] =
-    plan match {
-      case SubqueryAlias(ident, child) =>
-        pathOf(child).map { case (p, _) => (p, Some(ident.name)) }
-      case u: UnresolvedRelation if u.multipartIdentifier.length == 2 &&
-          isGraftCatalog(u.multipartIdentifier.head) =>
-        Some((u.multipartIdentifier(1), None))
-      case _ => None
-    }
-
-  private def aliasOf(plan: LogicalPlan): Option[String] = plan match {
-    case SubqueryAlias(ident, _) => Some(ident.name)
+  /** ``[alias ->] graftlog.`/path` `` → the identifier after the
+    * catalog name. */
+  private def pathOf(plan: LogicalPlan): Option[String] = plan match {
+    case SubqueryAlias(_, child) => pathOf(child)
+    case u: UnresolvedRelation if u.multipartIdentifier.length == 2 &&
+        isGraftCatalog(u.multipartIdentifier.head) =>
+      Some(u.multipartIdentifier(1))
     case _ => None
   }
 
-  /** Current schema of the logged table — the ONE bootstrap rule
-    * ([[CommitLog.tableSchema]]: ledger first, newest-file inference
-    * otherwise). */
-  private def schemaOf(spark: SparkSession, path: String): StructType =
-    CommitLog.tableSchema(spark, path)
+  /** Rename every ``graftlog.`x` `` relation in a parsed plan to the
+    * registered catalog, ``graft.`<resolved path>` ``: the one way a
+    * `graftlog.` name resolves inside a statement — through
+    * [[GraftCatalog]] (and, in read positions, [[GraftV2ReadRule]]'s
+    * native relation). */
+  private def toCatalog(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
+    plan.transform {
+      case u: UnresolvedRelation if u.multipartIdentifier.length == 2 &&
+          u.multipartIdentifier.head.equalsIgnoreCase(Catalog) =>
+        u.copy(multipartIdentifier =
+          Seq(CatalogV2, resolvePath(spark, u.multipartIdentifier(1))))
+    }
 
   private def result(spark: SparkSession, path: String, version: Long): DataFrame = {
     import spark.implicits._
     Seq((path, version)).toDF("table", "committed_version")
-  }
-
-  // ── DELETE ────────────────────────────────────────────────────────
-
-  private def runDelete(spark: SparkSession, d: DeleteFromTable,
-      path: String): DataFrame = {
-    val alias = aliasOf(d.table)
-    val predicate = targetColumn(d.condition, alias,
-      where = "DELETE WHERE condition")
-    // merge-on-read when the session switch or the table's
-    // graft.deletionVectors property says so: sparse deletes
-    // write one small position vector instead of rewriting every
-    // touched file; OPTIMIZE absorbs the vectors
-    val v = CommitLog.deleteWhere(spark, path, schemaOf(spark, path), predicate,
-      deletionVectors = CommitLog.morDefault(spark, path))
-    result(spark, path, v)
   }
 
   // ── INSERT ────────────────────────────────────────────────────────
@@ -501,7 +446,7 @@ object GraftSql {
     * an explicit column list (or `BY NAME`) matches by name — columns
     * left out null-fill; otherwise positional, requiring the table's
     * arity, cast to the table's types. The query side resolves through
-    * the session with `graftlog` relations spliced, so
+    * the session with `graftlog` relations renamed to the catalog, so
     * `INSERT INTO graftlog.`/a` SELECT * FROM graftlog.`/b`` works. */
   private def runInsert(spark: SparkSession, i: InsertIntoStatement,
       path: String): DataFrame = {
@@ -509,7 +454,7 @@ object GraftSql {
     require(i.partitionSpec.isEmpty && !i.ifPartitionNotExists,
       "logged tables have no partition dirs — cluster with compaction " +
         "(Z-order); stats pruning replaces partition pruning")
-    val q = StreamingShim.ofRows(spark, resolveLoggedRelations(spark, i.query))
+    val q = StreamingShim.ofRows(spark, toCatalog(spark, i.query))
     // INSERT into a table with no commits yet BOOTSTRAPS it: the query's
     // shape becomes the table's, stamped into the schema ledger (the
     // CTAS-flavored path — there is no separate CREATE TABLE verb)
@@ -521,7 +466,7 @@ object GraftSql {
         else CommitLog.append(q, path, mergeSchema = true)
       return result(spark, path, v)
     }
-    val schema = schemaOf(spark, path)
+    val schema = CommitLog.tableSchema(spark, path)
     val byName = i.byName || i.userSpecifiedCols.nonEmpty
     val aligned =
       if (byName) {
@@ -566,8 +511,7 @@ object GraftSql {
     * TARGET columns only. Requires an existing table — a replace
     * swaps rows inside a declared shape; bootstrap with INSERT INTO
     * first. */
-  private def runReplaceWhere(spark: SparkSession,
-      o: org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression,
+  private def runReplaceWhere(spark: SparkSession, o: OverwriteByExpression,
       path: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(CommitLog.latestVersion(spark, path) > 0,
@@ -578,8 +522,8 @@ object GraftSql {
     require(!o.isByName,
       "by-name REPLACE WHERE is not reachable through raw SQL — use " +
         "df.writeTo(\"graft.t\").overwrite(cond) for by-name semantics")
-    val schema = schemaOf(spark, path)
-    val q = StreamingShim.ofRows(spark, resolveLoggedRelations(spark, o.query))
+    val schema = CommitLog.tableSchema(spark, path)
+    val q = StreamingShim.ofRows(spark, toCatalog(spark, o.query))
     require(q.schema.size == schema.size,
       s"REPLACE WHERE query produces ${q.schema.size} column(s); $path " +
         s"has ${schema.size} — matching is positional, so the SELECT must " +
@@ -587,205 +531,14 @@ object GraftSql {
     val aligned = q.toDF(schema.fieldNames.toIndexedSeq: _*)
       .select(schema.fields.map(f =>
         col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    val predicate = targetColumn(o.deleteExpr, None,
-      where = "REPLACE WHERE condition")
+    // the condition names TARGET columns, unqualified: it renders as
+    // a predicate over the table's own rows
+    val qualified = o.deleteExpr.collect {
+      case a: UnresolvedAttribute if a.nameParts.length > 1 => a.name
+    }
+    require(qualified.isEmpty, "REPLACE WHERE condition sees only TARGET " +
+      s"columns, unqualified; got ${qualified.mkString(", ")}")
+    val predicate = expr(o.deleteExpr.sql)
     result(spark, path, CommitLog.replaceWhere(aligned, path, predicate))
   }
-
-  // ── MERGE ─────────────────────────────────────────────────────────
-
-  private def runMerge(spark: SparkSession, m: MergeIntoTable,
-      path: String, tAlias: Option[String]): DataFrame = {
-    val sAlias = aliasOf(m.sourceTable)
-    val schema = schemaOf(spark, path)
-    // The source analyzes through the session (views, subqueries —
-    // whatever spark.sql could read); a graftlog relation INSIDE it
-    // resolves to the logged snapshot first, so `USING graftlog.`…``
-    // works as a source too.
-    val source = StreamingShim.ofRows(spark, resolveLoggedRelations(spark, m.sourceTable))
-    val keys = keysOf(m.mergeCondition, tAlias, sAlias)
-    keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"merge key `$k` is not a column of $path (${schema.fieldNames.mkString(", ")})"))
-
-    var merge = MergeClauses.into(spark, path, schema, source, keys)
-    // merge-on-read default: session conf, else table property (see runDelete)
-    if (CommitLog.morDefault(spark, path)) merge = merge.withDeletionVectors()
-    m.matchedActions.foreach {
-      case UpdateAction(cond, assignments, _) =>
-        merge = merge.whenMatchedUpdate(
-          updateCols(assignments, keys, tAlias, sAlias, source),
-          cond.map(matchedColumn(_, tAlias, sAlias, keys)))
-      case UpdateStarAction(cond) =>
-        merge = merge.whenMatchedUpdate(
-          source.columns.toSeq.filterNot(keys.contains),
-          cond.map(matchedColumn(_, tAlias, sAlias, keys)))
-      case DeleteAction(cond) =>
-        merge = merge.whenMatchedDelete(cond.map(matchedColumn(_, tAlias, sAlias, keys)))
-      case other => fail(s"unsupported WHEN MATCHED action: $other")
-    }
-    m.notMatchedActions.foreach {
-      case InsertStarAction(cond) =>
-        merge = merge.whenNotMatchedInsert(
-          cond.map(sourceColumn(_, sAlias, where = "WHEN NOT MATCHED condition")))
-      case InsertAction(cond, assignments) =>
-        checkInsertAssignments(assignments, schema, tAlias, sAlias)
-        merge = merge.whenNotMatchedInsert(
-          cond.map(sourceColumn(_, sAlias, where = "WHEN NOT MATCHED condition")))
-      case other => fail(s"unsupported WHEN NOT MATCHED action: $other")
-    }
-    m.notMatchedBySourceActions.foreach {
-      case DeleteAction(cond) =>
-        merge = merge.whenNotMatchedBySourceDelete(
-          cond.map(targetColumn(_, tAlias, where = "WHEN NOT MATCHED BY SOURCE condition")))
-      case other => fail(
-        s"unsupported WHEN NOT MATCHED BY SOURCE action (only DELETE): $other")
-    }
-    result(spark, path, merge.execute())
-  }
-
-  /** Swap any nested ``graftlog.`path` `` relation for the logged
-    * snapshot's plan, so merge SOURCES can be logged tables. */
-  private def resolveLoggedRelations(spark: SparkSession,
-      plan: LogicalPlan): LogicalPlan =
-    plan.transform {
-      case u: UnresolvedRelation if u.multipartIdentifier.length == 2 &&
-          isGraftCatalog(u.multipartIdentifier.head) =>
-        val p = resolvePath(spark, u.multipartIdentifier(1))
-        StreamingShim.planOf(CommitLog.read(spark, p, schemaOf(spark, p)))
-    }
-
-  // ── ON clause → key columns ───────────────────────────────────────
-
-  private def keysOf(cond: Expression, tAlias: Option[String],
-      sAlias: Option[String]): Seq[String] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    conjuncts(cond).map {
-      case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
-        val (an, bn) = (colName(a), colName(b))
-        if (an != bn) fail(
-          s"ON equality must pair the SAME column name on both sides " +
-          s"(got `${a.name}` = `${b.name}`) — logged merges are keyed")
-        val sides = Set(sideOf(a, tAlias, sAlias), sideOf(b, tAlias, sAlias))
-        if (sides == Set("t", "s") ||
-            (sides.contains("?") && sides.size <= 2)) an
-        else fail(s"ON equality `${a.name}` = `${b.name}` must join target to source")
-      case other => fail(
-        s"unsupported ON term `${other.sql}` — the condition must be a " +
-        "conjunction of target-key = source-key equalities")
-    }.distinct
-  }
-
-  private def colName(a: UnresolvedAttribute): String = a.nameParts.last
-
-  private def sideOf(a: UnresolvedAttribute, tAlias: Option[String],
-      sAlias: Option[String]): String =
-    if (a.nameParts.length < 2) "?"
-    else {
-      val q = a.nameParts.head
-      if (tAlias.exists(q.equalsIgnoreCase)) "t"
-      else if (sAlias.exists(q.equalsIgnoreCase)) "s"
-      else fail(s"`${a.name}`: unknown qualifier `$q` " +
-        s"(target is ${tAlias.getOrElse("<unaliased>")}, source is ${sAlias.getOrElse("<unaliased>")})")
-    }
-
-  // ── clause-condition translation ──────────────────────────────────
-  //
-  // The parsed condition is an UNRESOLVED Catalyst tree. MergeClauses
-  // conditions live in a documented namespace instead of a two-sided
-  // join: target columns by plain name, source columns as
-  // `_src_<col>`. Rewriting just the attribute leaves and re-rendering
-  // with Expression.sql keeps arbitrary scalar expressions (functions,
-  // arithmetic, literals) intact without re-implementing a grammar.
-
-  /** Matched-clause namespace: `t.c` → `c`, `s.c` → `_src_c` — EXCEPT
-    * source KEY columns, which render plain: the clause join carries
-    * keys once under their plain names (they are equal on both sides
-    * by the ON condition), so `s.id` must resolve to that shared
-    * column, not a nonexistent `_src_id`. */
-  private def matchedColumn(e: Expression, tAlias: Option[String],
-      sAlias: Option[String], keys: Seq[String]): Column =
-    render(e.transformUp {
-      case a: UnresolvedAttribute => sideOf(a, tAlias, sAlias) match {
-        case "s" if !keys.exists(_.equalsIgnoreCase(colName(a))) =>
-          UnresolvedAttribute(Seq(MergeClauses.SrcPrefix + colName(a)))
-        case _ => UnresolvedAttribute(Seq(colName(a)))
-      }
-    })
-
-  /** Source-only namespace (NOT MATCHED): plain source column names. */
-  private def sourceColumn(e: Expression, sAlias: Option[String],
-      where: String): Column =
-    render(e.transformUp {
-      case a: UnresolvedAttribute =>
-        if (a.nameParts.length >= 2 && !sAlias.exists(a.nameParts.head.equalsIgnoreCase))
-          fail(s"$where sees only SOURCE columns; `${a.name}` is not one")
-        else UnresolvedAttribute(Seq(colName(a)))
-    })
-
-  /** Target-only namespace (DELETE WHERE / NOT MATCHED BY SOURCE). */
-  private def targetColumn(e: Expression, tAlias: Option[String],
-      where: String): Column =
-    render(e.transformUp {
-      case a: UnresolvedAttribute =>
-        if (a.nameParts.length >= 2 && !tAlias.exists(a.nameParts.head.equalsIgnoreCase))
-          fail(s"$where sees only TARGET columns; `${a.name}` is not one")
-        else UnresolvedAttribute(Seq(colName(a)))
-    })
-
-  private def render(e: Expression): Column = expr(e.sql)
-
-  // ── assignment validation ─────────────────────────────────────────
-
-  /** `SET c = s.c, …` → the copied column list. Values must be the
-    * same-named source column — a logged UPDATE is a column copy from
-    * the source row (arbitrary expressions would need a compute-then-
-    * merge: derive the column in the USING subquery instead). */
-  private def updateCols(assignments: Seq[Assignment], keys: Seq[String],
-      tAlias: Option[String], sAlias: Option[String],
-      source: DataFrame): Seq[String] =
-    assignments.map { case Assignment(key, value) =>
-      val target = key match {
-        case a: UnresolvedAttribute if sideOf(a, tAlias, sAlias) != "s" => colName(a)
-        case other => fail(s"UPDATE SET target must be a target column, got `${other.sql}`")
-      }
-      value match {
-        case a: UnresolvedAttribute if sideOf(a, tAlias, sAlias) != "t" &&
-            colName(a).equalsIgnoreCase(target) => ()
-        case other => fail(
-          s"UPDATE SET `$target` = `${other.sql}`: only same-name source-column " +
-          s"copies (`$target = s.$target`) are supported — compute derived " +
-          "columns in the USING subquery")
-      }
-      require(source.columns.exists(_.equalsIgnoreCase(target)),
-        s"UPDATE SET `$target`: source has no such column")
-      target
-    }
-
-  /** INSERT column list must be the full-row same-name mapping —
-    * anything else is a shaped insert this log does not express. */
-  private def checkInsertAssignments(assignments: Seq[Assignment],
-      schema: StructType, tAlias: Option[String], sAlias: Option[String]): Unit = {
-    val targets = assignments.map { case Assignment(key, value) =>
-      val t = key match {
-        case a: UnresolvedAttribute => colName(a)
-        case other => fail(s"INSERT column must be a plain column, got `${other.sql}`")
-      }
-      value match {
-        case a: UnresolvedAttribute if colName(a).equalsIgnoreCase(t) => ()
-        case other => fail(
-          s"INSERT (`$t`) VALUES (`${other.sql}`): only same-name source " +
-          "columns are supported — use INSERT * or shape the USING subquery")
-      }
-      t
-    }
-    val missing = schema.fieldNames.filterNot(f => targets.exists(_.equalsIgnoreCase(f)))
-    if (missing.nonEmpty) fail(
-      s"INSERT must cover every table column; missing ${missing.mkString(", ")}")
-  }
-
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(s"graftlog SQL: $msg")
 }

@@ -29,18 +29,13 @@ object StreamingShim {
 
   /** Analyze a (possibly unresolved) logical plan into a DataFrame —
     * what `spark.sql` does after parsing. The GraftSql statement
-    * router needs it to turn a parsed MERGE's `USING` subplan into the
-    * source frame; `Dataset.ofRows` is `private[sql]` for no deeper
+    * router needs it to run a parsed statement after renaming its
+    * relations, and GraftDmlRule to turn a MERGE's `USING` subplan into
+    * the source frame; `Dataset.ofRows` is `private[sql]` for no deeper
     * reason than the streaming constructor above. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
-
-  /** The analyzed logical plan under a DataFrame — for splicing an
-    * API-built frame (e.g. a logged-table snapshot) into a parsed
-    * statement's plan tree. */
-  def planOf(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.asInstanceOf[ClassicDataset[Row]].queryExecution.analyzed
 
   /** The inverse bridge for a V1 streaming SINK: the DataFrame
     * `Sink.addBatch` receives carries the incremental streaming plan,

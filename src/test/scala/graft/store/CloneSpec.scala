@@ -191,6 +191,23 @@ class CloneSpec extends SparkSpec {
     assert(rows(t) == mergedRows)
   }
 
+  test("graft_log_changes on a clone returns CommitLog.changesSince's rows, with and without asOf") {
+    import spark.implicits._
+    val t = clonedTable("tvf")
+    CommitLog.deleteWhere(spark, t, CommitLog.tableSchema(spark, t), col("id") <= 5L) // v2
+    CommitLog.append((101L to 103L).map(i => (i, s"v$i")).toDF("id", "s"), t) // v3
+    def sorted(df: DataFrame): Seq[String] =
+      df.select("id", "s", CommitLog.ChangeTypeCol, "_commit_version")
+        .collect().map(_.toString).sorted.toSeq
+    val schema = CommitLog.tableSchema(spark, t)
+    val latest = sorted(spark.sql(s"SELECT * FROM graft_log_changes('$t', 0)"))
+    assert(latest.size == 100 + 5 + 3)
+    assert(latest == sorted(CommitLog.changesSince(spark, t, 0L, schema)))
+    val pinned = sorted(spark.sql(s"SELECT * FROM graft_log_changes('$t', 0, 2)"))
+    assert(pinned.size == 100 + 5)
+    assert(pinned == sorted(CommitLog.changesSince(spark, t, 0L, schema, asOf = 2L)))
+  }
+
   test("a clone whose source was vacuumed from under it fails loudly at read") {
     import spark.implicits._
     val src = freshDir("vac_src"); val dst = freshDir("vac_dst")

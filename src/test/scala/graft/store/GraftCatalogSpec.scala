@@ -437,6 +437,20 @@ class GraftCatalogSpec extends SparkSpec {
       "the claiming no-op update let a later clause fire")
   }
 
+  test("a MERGE INSERT column list must name every table column") {
+    val wh = freshWarehouse()
+    spark.sql("CREATE TABLE graft.ins (id BIGINT, cat STRING, v STRING)")
+    spark.sql("INSERT INTO graft.ins VALUES (1, 'a', 'old')")
+    Seq((500L, "src", "new")).toDF("id", "cat", "v")
+      .createOrReplaceTempView("ins_src")
+    val v0 = CommitLog.latestVersion(spark, s"$wh/ins")
+    val e = intercept[IllegalArgumentException](spark.sql(
+      """MERGE INTO graft.ins AS t USING ins_src AS s ON t.id = s.id
+        |WHEN NOT MATCHED THEN INSERT (id, cat) VALUES (s.id, s.cat)""".stripMargin))
+    assert(e.getMessage.contains("every table column"), s"message was: ${e.getMessage}")
+    assert(CommitLog.latestVersion(spark, s"$wh/ins") == v0)
+  }
+
   test("spark.readStream.table streams a catalog table's change feed") {
     freshWarehouse()
     spark.sql("CREATE TABLE graft.st (id BIGINT)")

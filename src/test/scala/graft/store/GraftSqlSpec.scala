@@ -1,13 +1,14 @@
 package graft.store
 
 import graft.SparkSpec
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** The SQL statement router (GraftSql): MERGE INTO / DELETE FROM over
-  * ``graftlog.`path` `` targets execute through MergeClauses /
-  * CommitLog with the exact clause semantics of the builder API, every
+/** The SQL statement router (GraftSql): MERGE INTO / UPDATE / DELETE
+  * FROM over ``graftlog.`path` `` targets execute through GraftDmlRule
+  * with the exact clause semantics of the builder API, every
   * other statement passes through to spark.sql, and each unsupported
   * corner of the grammar refuses loudly instead of mistranslating. */
 class GraftSqlSpec extends SparkSpec {
@@ -361,8 +362,8 @@ class GraftSqlSpec extends SparkSpec {
   test("DML and extension verbs accept `graft.` catalog identifiers") {
     val t = freshTable()
     seed(t)
-    // UPDATE and MERGE — the verbs a plain v2 table cannot express —
-    // route through this router under the registered catalog's name
+    // UPDATE and MERGE under the registered catalog's name run through
+    // the same DML rule as the graftlog spelling
     GraftSql.execute(spark,
       s"UPDATE graft.`$t` SET v = 'edited' WHERE id < 3")
     assert(CommitLog.read(spark, t, schema).filter(col("v") === "edited")
@@ -450,10 +451,61 @@ class GraftSqlSpec extends SparkSpec {
       s"""MERGE INTO graftlog.`$t` AS t USING graft_sql_bad AS s ON t.id = s.id
          |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 'x'""".stripMargin,
       "only DELETE")
-    rejects( // source column in a target-only namespace
+    // source column in a target-only namespace: the analyzer cannot
+    // resolve it there, so it refuses before any commit
+    val v0 = CommitLog.latestVersion(spark, t)
+    val e = intercept[AnalysisException](GraftSql.execute(spark,
       s"""MERGE INTO graftlog.`$t` AS t USING graft_sql_bad AS s ON t.id = s.id
-         |WHEN NOT MATCHED BY SOURCE AND s.cat = 'x' THEN DELETE""".stripMargin,
-      "only TARGET")
+         |WHEN NOT MATCHED BY SOURCE AND s.cat = 'x' THEN DELETE""".stripMargin))
+    assert(e.getMessage.contains("`s`.`cat`"), s"message was: ${e.getMessage}")
+    assert(CommitLog.latestVersion(spark, t) == v0)
+  }
+
+  test("MERGE WITH SCHEMA EVOLUTION is refused and publishes nothing") {
+    val t = freshTable()
+    seed(t)
+    Seq((500L, "src", "new", "x")).toDF("id", "cat", "v", "extra")
+      .createOrReplaceTempView("graft_sql_evo_src")
+    val v0 = CommitLog.latestVersion(spark, t)
+    val e = intercept[IllegalArgumentException](GraftSql.execute(spark,
+      s"""MERGE WITH SCHEMA EVOLUTION INTO graftlog.`$t` AS t
+         |USING graft_sql_evo_src AS s ON t.id = s.id
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+    assert(e.getMessage.contains("SCHEMA EVOLUTION"), s"message was: ${e.getMessage}")
+    assert(CommitLog.latestVersion(spark, t) == v0)
+    assert(CommitLog.tableSchema(spark, t).fieldNames.toSeq == Seq("id", "cat", "v"))
+  }
+
+  test("UPDATE SET * from a source with an extra column updates the target's columns") {
+    val t = freshTable()
+    seed(t)
+    (45L until 50L).map(i => (i, "SRC", "upd", "x")).toDF("id", "cat", "v", "extra")
+      .createOrReplaceTempView("graft_sql_wide_src")
+    GraftSql.execute(spark,
+      s"""MERGE INTO graftlog.`$t` AS t USING graft_sql_wide_src AS s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
+    assert(CommitLog.tableSchema(spark, t).fieldNames.toSeq == Seq("id", "cat", "v"))
+    val rows = CommitLog.read(spark, t, schema)
+      .as[(Long, String, String)].collect()
+      .map { case (id, cat, v) => id -> ((cat, v)) }.toMap
+    assert(rows.size == 100)
+    assert((45L until 50L).forall(i => rows(i) == (("SRC", "upd"))))
+    assert((0L until 45L).forall(i => rows(i) == ((s"c${i % 5}", "old"))))
+  }
+
+  test("an unqualified column both sides carry is refused as ambiguous") {
+    val t = freshTable()
+    seed(t)
+    Seq((7L, "src", "old")).toDF("id", "cat", "v")
+      .createOrReplaceTempView("graft_sql_amb_src")
+    val v0 = CommitLog.latestVersion(spark, t)
+    val e = intercept[AnalysisException](GraftSql.execute(spark,
+      s"""MERGE INTO graftlog.`$t` AS t USING graft_sql_amb_src AS s
+         |ON t.id = s.id
+         |WHEN MATCHED AND v = 'old' THEN DELETE""".stripMargin))
+    assert(e.getMessage.contains("AMBIGUOUS_REFERENCE"), s"message was: ${e.getMessage}")
+    assert(CommitLog.latestVersion(spark, t) == v0)
   }
 
   test("non-storage statements pass through to spark.sql") {
