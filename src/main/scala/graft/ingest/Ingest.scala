@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.core.Hashing
-import graft.store.Store
+import graft.store.{CommitLog, Store}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,10 +60,11 @@ object Ingest {
     val (listed, release) = Listing.listResourcesManaged(spark, root, depth)
     try {
       val incoming = toResources(listed, filterSpec).dropDuplicates("url")
-      val existing = Store.read(spark, store.resourceIndex, resourceSchema)
+      val read = Store.snapshot(spark, store.resourceIndex)
+      val existing = CommitLog.read(spark, store.resourceIndex, resourceSchema, read)
       val fresh = incoming.join(existing.select("url"), Seq("url"), "left_anti")
         .select(resourceSchema.fieldNames.map(col): _*)
-      Store.commit(fresh, store.resourceIndex)
+      Store.commit(fresh, store.resourceIndex, read)
       Store.count(spark, store.resourceIndex)
     } finally release()
   }

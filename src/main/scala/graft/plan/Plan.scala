@@ -1,7 +1,7 @@
 package graft.plan
 
 import graft.ingest.Ingest
-import graft.store.Store
+import graft.store.{CommitLog, Store}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,15 +28,17 @@ object Plan {
     * the templates and drop anything already queued, done or
     * dead-lettered — ONE implementation, so batch and streaming planners
     * can never derive different task identities for the same resources.
-    * The queue is read BEFORE `task_done ∪ dlq`: a drain records its
-    * results before it removes their queue files, so a task missing
+    * The queue is read through `queue`, the snapshot the planner's
+    * queue commit then shares, BEFORE `task_done ∪ dlq`: a drain records
+    * its results before it removes their queue files, so a task missing
     * from the queue read is in the later read of its results. */
   private[graft] def freshTasks(spark: SparkSession, resources: DataFrame, store: Store,
-      templates: Seq[TemplateDef], cfg: Templates.PlanConfig): DataFrame = {
+      templates: Seq[TemplateDef], cfg: Templates.PlanConfig,
+      queue: CommitLog.Snapshot): DataFrame = {
     val tasks = Templates.fanOut(resources, templates, cfg)
       .dropDuplicates("task_hash")
-    val queued = Store.read(spark, store.taskQueue,
-      StructType(Seq(StructField("task_hash", StringType))))
+    val queued = CommitLog.read(spark, store.taskQueue,
+      StructType(Seq(StructField("task_hash", StringType))), queue)
     tasks
       .join(Store.finished(spark, store), Seq("task_hash"), "left_anti")
       .join(queued, Seq("task_hash"), "left_anti")
@@ -51,6 +53,7 @@ object Plan {
       templates: Seq[TemplateDef] = Templates.registry,
       cfg: Templates.PlanConfig = Templates.PlanConfig()): Long = {
     val resources = Store.read(spark, store.resourceIndex, Ingest.resourceSchema)
-    Store.commit(freshTasks(spark, resources, store, templates, cfg), store.taskQueue)
+    val queue = Store.snapshot(spark, store.taskQueue)
+    Store.commit(freshTasks(spark, resources, store, templates, cfg, queue), store.taskQueue, queue)
   }
 }

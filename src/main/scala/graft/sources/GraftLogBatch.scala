@@ -418,18 +418,7 @@ private[graft] object StatsPruning {
         val pb = p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val lb = lo.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         !(CommitLog.utf8UnsignedCmp(p, hi) > 0 ||
-          unsignedCmp(lb.take(pb.length), pb) > 0)
+          java.util.Arrays.compareUnsigned(lb.take(pb.length), pb) > 0)
       case _ => true
     }
-
-  private def unsignedCmp(x: Array[Byte], y: Array[Byte]): Int = {
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
 }

@@ -1,10 +1,12 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.immutable.SortedMap
+
+import LogLine.{Add, Change, Constraint, Dv, Ledger, Op, Property, Remove, Schema, Ts}
 
 /** The change feed's "this range is gone" failure, as a TYPE: raised by
   * [[CommitLog.changesSince]] when the requested version range cannot
@@ -77,7 +79,7 @@ object CommitLog {
     * table that accumulates thousands of commits. */
   private[store] val CheckpointInterval = 10L
 
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
+  private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** A log-carried file reference is normally a BARE NAME resolved
@@ -161,36 +163,23 @@ object CommitLog {
     * swallowing a throttle or permission error here would mis-diagnose
     * transient IO as "vacuumed" or treat every file as undersized and
     * escalate a bounded compaction into a full rewrite (optimize). */
-  private[graft] def statusFor(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String, names: Seq[String])
-      : Map[String, org.apache.hadoop.fs.FileStatus] =
+  private[graft] def statusFor(fs: FileSystem, tablePath: String,
+      names: Seq[String]): Map[String, FileStatus] =
     names.map(n => resolveDataPath(tablePath, n))
       .map(abs => abs.substring(0, abs.lastIndexOf('/')))
       .distinct.flatMap { parent =>
-        try fs.listStatus(new org.apache.hadoop.fs.Path(parent)).toSeq.collect {
+        try fs.listStatus(new Path(parent)).toSeq.collect {
           case st if st.isFile => s"$parent/${st.getPath.getName}" -> st
-        } catch {
-          case _: java.io.FileNotFoundException =>
-            Seq.empty[(String, org.apache.hadoop.fs.FileStatus)]
-        }
+        } catch { case _: java.io.FileNotFoundException => Seq.empty[(String, FileStatus)] }
       }.toMap
 
   /** Sizes of the given file references (bare or absolute), keyed by
     * the caller's reference — [[statusFor]]'s listing discipline. */
-  private[store] def sizesFor(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String, names: Seq[String]): Map[String, Long] = {
+  private[store] def sizesFor(fs: FileSystem, tablePath: String,
+      names: Seq[String]): Map[String, Long] = {
     val st = statusFor(fs, tablePath, names)
     names.flatMap(n =>
       st.get(resolveDataPath(tablePath, n)).map(n -> _.getLen)).toMap
-  }
-
-  private def readLines(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Iterator[String] = {
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    content.linesIterator.filter(_.nonEmpty)
   }
 
   /** One-line projections of [[Snapshot]] — each is one listing and one
@@ -200,10 +189,8 @@ object CommitLog {
     * that read several ledgers of one table take one [[snapshot]]
     * instead of calling several of these. */
   def liveFiles(spark: SparkSession, tablePath: String,
-      asOf: Long = Long.MaxValue): (Long, Seq[String]) = {
-    val s = snapshot(spark, tablePath, asOf)
-    (s.version, s.live.map(_.name))
-  }
+      asOf: Long = Long.MaxValue): (Long, Seq[String]) =
+    liveFilesFull(spark, tablePath, asOf) match { case (v, es) => (v, es.map(_.name)) }
 
   /** Latest committed version of the table (0 = no commits yet) — one
     * log-directory listing, no content read; what a streaming source
@@ -214,16 +201,14 @@ object CommitLog {
     listLog(spark, tablePath).latest
 
   /** [[liveFiles]] plus each live file's LOG-CARRIED column statistics
-    * (the optional `|{json}` suffix its add line recorded at write
-    * time — Delta's stats-in-add-action pattern): file name → raw
+    * (recorded by its add at write time — Delta's stats-in-add-action
+    * pattern): file name → raw
     * stats JSON, None for files committed without stats. Consumers:
     * the merge/delete match probe skips files from the LOG instead of
     * paying one footer read per live file. */
   private[graft] def liveFilesWithStats(spark: SparkSession, tablePath: String,
-      asOf: Long = Long.MaxValue): (Long, Seq[(String, Option[String])]) = {
-    val s = snapshot(spark, tablePath, asOf)
-    (s.version, s.live.map(e => (e.name, e.stats)))
-  }
+      asOf: Long = Long.MaxValue): (Long, Seq[(String, Option[String])]) =
+    liveFilesFull(spark, tablePath, asOf) match { case (v, es) => (v, es.map(e => (e.name, e.stats))) }
 
   /** One live-set entry of the replay: the data file, its log-carried
     * stats JSON, the DELETION VECTOR file currently attached to it
@@ -288,18 +273,15 @@ object CommitLog {
     * listing alone; the files are read once, when a ledger is first
     * asked for — a commit attempt that needs no ledger reads none.
     * Content becomes visible atomically with the publish rename, so
-    * incomplete files cannot exist. The fold holds:
-    *  - the LIVE SET, in first-add order: `+name[|stats]` adds (a
-    *    re-added file starts DV-free), `-name` removes, `*file|dv[|n]`
-    *    deletion-vector attachments (a later one REPLACES it — vectors
-    *    are cumulative);
+    * incomplete files cannot exist. The fold ([[LogLine]] has the line
+    * format) holds:
+    *  - the LIVE SET, in first-add order, with each file's stats and
+    *    deletion-vector attachment;
     *  - the IDEMPOTENCE ledgers: per-query max batch (`txn=<q>:<b>` op
     *    tags) and max consumed source version (`consumed=<v>` op tags);
-    *  - the SCHEMA ledger (newest `#schema=` header ≤ `asOf`) and the
+    *  - the SCHEMA ledger (newest schema header ≤ `asOf`) and the
     *    column mapping and burned names derived from it;
-    *  - the CHECK-constraint ledger (`#constraint=+name:sql` adds,
-    *    `#constraint=-name` drops) and the TABLE-PROPERTIES ledger
-    *    (`#property=+key:value` sets, `#property=-key` unsets).
+    *  - the CHECK-constraint and TABLE-PROPERTIES ledgers (keyed tags).
     * Only live-set reads ([[live]]) refuse an explicit `asOf` the
     * replay cannot reach exactly — versions are contiguous, so reaching
     * a lower one means the requested version never existed or was
@@ -331,57 +313,34 @@ object CommitLog {
         case ConsumedTagRe(v) => consumed = math.max(consumed, v.toLong)
         case _ => ()
       }
-      def keyed(m: Map[String, String], b: String): Map[String, String] =
-        if (b.startsWith("+")) {
-          val i = b.indexOf(':')
-          if (i > 1) m + (b.substring(1, i) -> b.substring(i + 1)) else m
-        } else if (b.startsWith("-")) m - b.substring(1)
-        else m
-      // file names never contain '|', so the split is unambiguous; the
-      // optional POSITION COUNT (`*file|dv|n`) is absent on attachments
-      // committed before counts were recorded (consumers abstain)
-      def dvLine(body: String, p: Path, line: String): Unit =
-        body.split("\\|", 3) match {
-          case Array(data, dv, n @ _*) => live.get(data) match {
-            // `*file|-` DETACHES (restore() resetting a kept file to a
-            // vector-free historical state)
-            case Some(e) => live(data) =
-              if (dv == "-") e.copy(dv = None, dvRows = None)
-              else e.copy(dv = Some(dv), dvRows = n.headOption.map(_.toLong))
-            case None =>
-              fail(s"corrupt commit in $p: DV attached to non-live file $data")
-          }
-          case _ => fail(s"corrupt DV line in $p (no |dvfile): $line")
-        }
       def fold(v: Long, p: Path, checkpoint: Boolean): Unit =
-        readLines(listing.fs, p).foreach { l =>
-          val body = l.drop(1)
-          l.head match {
-            case '+' =>
-              val bar = body.indexOf('|')
-              val e =
-                if (bar < 0) LiveEntry(body, None, None)
-                else LiveEntry(body.substring(0, bar), Some(body.substring(bar + 1)), None)
-              live(e.name) = e
-            case '-' if !checkpoint => live -= body
-            case '*' => dvLine(body, p, l)
-            case '~' if !checkpoint => () // change (CDC) file — never live
-            case '#' =>
-              // the newest `#schema=` version wins (a checkpoint's
-              // carried header is outranked by any later evolution)
-              if (body.startsWith("schema=")) {
-                if (schema.forall(_._1 < v)) schema = Some(v -> body.stripPrefix("schema="))
-              } else if (body.startsWith("constraint="))
-                constraints = keyed(constraints, body.stripPrefix("constraint="))
-              else if (body.startsWith("property="))
-                properties = keyed(properties, body.stripPrefix("property="))
-              // a checkpoint carries the idempotence tags bare; a commit
-              // carries them as its op tag (`#op=txn=q:b`)
-              else if (checkpoint) ledgerTag(body)
-              else if (body.startsWith("op=")) ledgerTag(body.stripPrefix("op="))
-            case _ => fail(
-              s"corrupt ${if (checkpoint) "checkpoint" else "commit"} line in $p: $l")
+        LogLine.read(listing.fs, p).foreach {
+          // a re-added file starts vector-free
+          case Add(name, stats) => live(name) = LiveEntry(name, stats, None)
+          case Remove(name) if !checkpoint => live -= name
+          case Change(_) if !checkpoint => () // never live
+          // a later attachment REPLACES the vector (vectors are
+          // cumulative); a countless one (committed before counts were
+          // recorded) leaves consumers to abstain
+          case Dv(file, dv, rows) => live.get(file) match {
+            case Some(e) => live(file) =
+              if (dv == LogLine.Detach) e.copy(dv = None, dvRows = None)
+              else e.copy(dv = Some(dv), dvRows = rows)
+            case None =>
+              fail(s"corrupt commit in $p: DV attached to non-live file $file")
           }
+          // the newest `#schema=` version wins (a checkpoint's carried
+          // header is outranked by any later evolution)
+          case Schema(json) => if (schema.forall(_._1 < v)) schema = Some(v -> json)
+          case Constraint(tag) => constraints = LogLine.keyed(constraints, tag)
+          case Property(tag) => properties = LogLine.keyed(properties, tag)
+          // a checkpoint carries the idempotence tags bare; a commit
+          // carries them as its op tag (`#op=txn=q:b`)
+          case Ledger(tag) if checkpoint => ledgerTag(tag)
+          case Op(tag) if !checkpoint => ledgerTag(tag)
+          case Ts(_) | Ledger(_) | Op(_) => ()
+          case l => fail(s"corrupt ${if (checkpoint) "checkpoint" else "commit"} " +
+            s"line in $p: ${LogLine.render(l)}")
         }
       base.foreach { case (v, p) => fold(v, p, checkpoint = true) }
       commits.foreach { case (v, p) => fold(v, p, checkpoint = false) }
@@ -422,15 +381,12 @@ object CommitLog {
       * ledger, sorted), so a version-tie loser writes identical bytes. */
     def checkpoint: String = {
       val entries = live
-      (state.txn.toSeq.sortBy(_._1).map { case (q, b) => s"#txn=$q:$b" } ++
-        (if (consumed > 0L) Seq(s"#consumed=$consumed") else Seq.empty) ++
-        schemaJson.map("#schema=" + _).toSeq ++
-        constraints.toSeq.sortBy(_._1).map { case (n, c) => s"#constraint=+$n:$c" } ++
-        properties.toSeq.sortBy(_._1).map { case (k, v) => s"#property=+$k:$v" } ++
-        entries.map(e => "+" + e.name + e.stats.map("|" + _).getOrElse("")) ++
-        entries.collect { case e if e.dv.isDefined =>
-          s"*${e.name}|${e.dv.get}" + e.dvRows.map("|" + _).getOrElse("") })
-        .mkString("\n")
+      LogLine.render(state.txn.toSeq.sortBy(_._1).map { case (q, b) => Ledger(s"txn=$q:$b") } ++
+        (if (consumed > 0L) Seq(Ledger(s"consumed=$consumed")) else Seq.empty) ++
+        schemaJson.map(Schema).toSeq ++
+        LogLine.setTags(constraints).map(Constraint) ++ LogLine.setTags(properties).map(Property) ++
+        entries.map(e => Add(e.name, e.stats)) ++
+        entries.collect { case LiveEntry(n, _, Some(dv), rows) => Dv(n, dv, rows) })
     }
   }
 
@@ -509,47 +465,33 @@ object CommitLog {
     require(adds.nonEmpty || removes.nonEmpty || dvAttach.nonEmpty ||
       constraintTags.nonEmpty || propertyTags.nonEmpty ||
       schemaJson.nonEmpty, "empty commit")
-    require(propertyTags.forall(t => !t.exists(c => c == '\n' || c == '\r')),
-      "property tags must be newline-free")
     require(dvAttach.keySet.forall(dvExpect.contains),
       "every DV attachment needs its expected prior attachment (conflict check input)")
     require(dvRowCounts.keySet.subsetOf(dvAttach.keySet),
       "DV row counts must describe this commit's own attachments")
     require(removeDvExpect.keySet.subsetOf(removes.toSet),
       "removeDvExpect keys must be removed files (remove-side DV fence input)")
-    require(constraintTags.forall(t => !t.exists(c => c == '\n' || c == '\r')),
-      "constraint tags must be newline-free")
     require(opTag.forall(t => t.nonEmpty && !t.exists(_.isWhitespace)),
       s"malformed opTag: $opTag")
-    require(addStats.values.forall(s => !s.exists(c => c == '\n' || c == '\r')),
-      "stats JSON must be newline-free (one add per line)")
-    require(schemaJson.forall(s => !s.exists(c => c == '\n' || c == '\r')),
-      "schema JSON must be newline-free (one header line)")
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
+    // rendered once, before anything is written ([[LogLine]] has the
+    // format and refuses a payload holding a newline). A rewrite that is
+    // NOT row-preserving (deleteWhere/merge) must carry an op tag, or
+    // change-feed consumers would skip it as a compaction; change files
+    // are never live, read only by changesSince, and vacuum-protected
+    // while this commit file survives. The IN-COMMIT timestamp is added
+    // per attempt (below).
+    val body = LogLine.render(opTag.map(Op).toSeq ++
+      schemaJson.map(Schema).toSeq ++
+      constraintTags.map(Constraint) ++
+      propertyTags.map(Property) ++
+      changeAdds.map(Change) ++
+      adds.map(a => Add(a, addStats.get(a))) ++
+      removes.map(Remove) ++
+      dvAttach.toSeq.sortBy(_._1).map { case (f, dv) => Dv(f, dv, dvRowCounts.get(f)) })
+    def contentFor(tsMs: Long): String = LogLine.render(Ts(tsMs)) + "\n" + body
+    val log = new Path(tablePath, LogDir)
     val fs = fsOf(spark, log)
     fs.mkdirs(log)
-    // optional `#op=<tag>` header: a rewrite that is NOT row-preserving
-    // (deleteWhere/merge) must say so, or change-feed consumers would
-    // skip it as a compaction; untagged commits keep the shape-derived
-    // meaning. `~name` lines are CDC (change-data) files the operation
-    // materialized at write time — never in the live set, read only by
-    // changesSince, vacuum-protected while this commit file survives.
-    // An add line optionally carries the file's column statistics as a
-    // `|{json}` suffix (Delta's stats-in-add-action pattern) — replay
-    // strips it, checkpoints carry it, the match probe prunes from it.
-    // Removes are always bare names. The `#ts=` header (added per
-    // attempt, see below) is the IN-COMMIT timestamp.
-    def contentFor(tsMs: Long): String = (Seq(s"#ts=$tsMs") ++
-      opTag.map("#op=" + _).toSeq ++
-      schemaJson.map("#schema=" + _).toSeq ++
-      constraintTags.map("#constraint=" + _) ++
-      propertyTags.map("#property=" + _) ++
-      changeAdds.map("~" + _) ++
-      adds.map(a => "+" + a + addStats.get(a).map("|" + _).getOrElse("")) ++
-      removes.map("-" + _) ++
-      dvAttach.toSeq.sortBy(_._1).map { case (f, dv) =>
-        s"*$f|$dv" + dvRowCounts.get(f).map("|" + _).getOrElse("")
-      }).mkString("\n")
     var attempts = 0
     while (attempts < 10000) {
       // ONE snapshot per attempt feeds `next` and every check below. A
@@ -768,7 +710,7 @@ object CommitLog {
       publisher = publisher, opTag = Some("properties"),
       abortOnLostRace = _ => false,
       constraintTags = Seq.empty,
-      propertyTags = props.toSeq.sortBy(_._1).map { case (k, v) => s"+$k:$v" })
+      propertyTags = LogLine.setTags(props))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced property set"))
   }
 
@@ -793,7 +735,7 @@ object CommitLog {
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("properties"),
       abortOnLostRace = taken,
-      propertyTags = props.toSeq.sortBy(_._1).map { case (k, v) => s"+$k:$v" })
+      propertyTags = LogLine.setTags(props))
       .isDefined
   }
 
@@ -810,7 +752,7 @@ object CommitLog {
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("properties"),
       abortOnLostRace = _ => false,
-      propertyTags = keys.sorted.map("-" + _))
+      propertyTags = keys.sorted.map(LogLine.unsetTag))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced property unset"))
   }
 
@@ -903,7 +845,7 @@ object CommitLog {
       commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
         publisher = publisher, opTag = Some("constraint"),
         abortOnLostRace = _.version != scanVersion,
-        constraintTags = Seq(s"+$name:$check")) match {
+        constraintTags = Seq(LogLine.setTag(name, check))) match {
         case Some(v) => return v
         case None => attempts += 1 // something landed since the scan: revalidate
       }
@@ -922,7 +864,7 @@ object CommitLog {
       s"no CHECK constraint $name on $tablePath")
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
       publisher = publisher, opTag = Some("constraint"),
-      abortOnLostRace = _ => false, constraintTags = Seq(s"-$name"))
+      abortOnLostRace = _ => false, constraintTags = Seq(LogLine.unsetTag(name)))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced constraint drop"))
   }
 
@@ -948,14 +890,11 @@ object CommitLog {
     }
   }
 
-  /** The in-commit timestamp a commit file carries (`#ts=<ms>`); None
-    * for a missing file or a pre-timestamp commit. */
-  private def commitTsOf(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[Long] =
+  /** The in-commit timestamp a commit file carries; None for a
+    * missing file or a pre-timestamp commit. */
+  private def commitTsOf(fs: FileSystem, p: Path): Option[Long] =
     if (!fs.exists(p)) None
-    else readLines(fs, p).collectFirst {
-      case l if l.startsWith("#ts=") => l.drop(4).toLong
-    }
+    else LogLine.read(fs, p).collectFirst { case Ts(ms) => ms }
 
   /** TIME TRAVEL BY TIMESTAMP: the latest version whose in-commit
     * timestamp is ≤ `tsMs` — `read(…, asOf = versionAtTimestamp(…))`
@@ -994,10 +933,14 @@ object CommitLog {
     * countless pre-count DV attachment — callers must then take their
     * conservative (rewrite/scan) path; the fast path never guesses. */
   private[store] def metadataVisibleCount(e: LiveEntry): Option[Long] = for {
-    j <- e.stats
-    rc <- parseStatsJson(j).get(RowCountKey).collect { case (n: Long, _) => n }
+    rc <- statsCount(e.stats, RowCountKey)
     deleted <- if (e.dv.isEmpty) Some(0L) else e.dvRows
   } yield rc - deleted
+
+  /** A reserved count ([[RowCountKey]], [[BytesSizeKey]]) from a file's
+    * log-carried stats JSON; None for a file without stats or the key. */
+  private[graft] def statsCount(stats: Option[String], key: String): Option[Long] =
+    stats.flatMap(parseStatsJson(_).get(key)).collect { case (n: Long, _) => n }
 
   /** Reserved stats key carrying the file's total ROW COUNT (summed
     * across row groups at write time). The dot makes collision with a
@@ -1040,9 +983,8 @@ object CommitLog {
     * (unscaled ints), non-micros timestamps, unsigned ints. None when
     * nothing is statable or the footer is unreadable (stats are an
     * optimization, never a correctness input). */
-  private[store] def footerStatsJson(
-      conf: org.apache.hadoop.conf.Configuration,
-      p: org.apache.hadoop.fs.Path): Option[String] = {
+  private[store] def footerStatsJson(conf: org.apache.hadoop.conf.Configuration,
+      p: Path): Option[String] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     try {
@@ -1050,12 +992,6 @@ object CommitLog {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        // a zero-row file (a rewrite that kept nothing) still records
-        // its row count and size — consumers skip it instead of
-        // abstaining
-        if (blocks.isEmpty)
-          return Some("{\"" + RowCountKey + "\":[0,0],\"" + BytesSizeKey +
-            "\":[" + in.getLength + "," + in.getLength + "]}")
         // col → (min, max) folded across every row group; a column is
         // dropped the moment ANY row group lacks usable stats
         var acc = Map.empty[String, (Any, Any)]
@@ -1085,15 +1021,14 @@ object CommitLog {
             // JSON; a '.' means NESTED (or reserved-key-shaped) — only
             // clean top-level columns ever emit, which is what makes
             // the dotted key space reserved
-            if (!name.exists(ch => ch == '.' || ch == '"' || ch == '\\') &&
-                !nullDead(name)) {
+            val clean = !name.exists(ch => ch == '.' || ch == '"' || ch == '\\')
+            if (clean && !nullDead(name)) {
               val stN = c.getStatistics
               if (stN != null && stN.isNumNullsSet)
                 nullAcc += name -> (nullAcc.getOrElse(name, 0L) + stN.getNumNulls)
               else { nullDead += name; nullAcc -= name }
             }
-            if (!name.exists(ch => ch == '.' || ch == '"' || ch == '\\') &&
-                !dead(name)) {
+            if (clean && !dead(name)) {
               val st = c.getStatistics
               val ok = st != null && st.hasNonNullValue
               val ann = c.getPrimitiveType.getLogicalTypeAnnotation
@@ -1136,9 +1071,11 @@ object CommitLog {
         // ROW COUNT and BYTE SIZE under the reserved dotted keys (a
         // real column with a '.' in its name can never be emitted —
         // see the name guard above), recorded even when every column
-        // abstains: the count lets COUNT(*) answer from the log alone
-        // (GraftStatsAggRule); the size lets the auto-compaction
-        // census run without a directory listing (maybeAutoCompact)
+        // abstains or the file holds no row (a rewrite that kept
+        // nothing records [0,0], so consumers skip it): the count lets
+        // COUNT(*) answer from the log alone (GraftStatsAggRule); the
+        // size lets the auto-compaction census run without a directory
+        // listing (maybeAutoCompact)
         val rows = blocks.map(_.getRowCount).sum
         val entries = Seq(
           RowCountKey -> ((rows: Any, rows: Any)),
@@ -1147,11 +1084,7 @@ object CommitLog {
           nullAcc.toSeq.sortBy(_._1).map { case (n, k) =>
             s"$n$NullCountSuffix" -> ((k: Any, k: Any)) }
         Some(entries.map { case (n, (mn, mx)) =>
-          def emit(v: Any): String = v match {
-            case s: String => jsonQuote(s)
-            case other => other.toString
-          }
-          "\"" + n + "\":[" + emit(mn) + "," + emit(mx) + "]"
+          "\"" + n + "\":[" + jsonValue(mn) + "," + jsonValue(mx) + "]"
         }.mkString("{", ",", "}"))
       } finally reader.close()
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -1210,12 +1143,13 @@ object CommitLog {
     * suffix. */
   private[store] def statsJsonOf(stats: Map[String, (Any, Any)]): String =
     stats.toSeq.sortBy(_._1).map { case (k, (lo, hi)) =>
-      def emit(v: Any): String = v match {
-        case s: String => jsonQuote(s)
-        case other => other.toString
-      }
-      jsonQuote(k) + ":[" + emit(lo) + "," + emit(hi) + "]"
+      jsonQuote(k) + ":[" + jsonValue(lo) + "," + jsonValue(hi) + "]"
     }.mkString("{", ",", "}")
+
+  private def jsonValue(v: Any): String = v match {
+    case s: String => jsonQuote(s)
+    case other => other.toString
+  }
 
   private def jsonUnquote(q: String): String = {
     val s = q.substring(1, q.length - 1)
@@ -1253,18 +1187,9 @@ object CommitLog {
     * supplementary-plane code points (U+10000+ sort BELOW U+E000..FFFF
     * in UTF-16 but ABOVE them in UTF-8), so stats pruning must never
     * use it: a wrongly-skipped file is a silently lost merge row. */
-  private[graft] def utf8UnsignedCmp(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
+  private[graft] def utf8UnsignedCmp(a: String, b: String): Int =
+    java.util.Arrays.compareUnsigned(a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Exact numeric comparison across Int/Long/Float/Double boxes —
     * BigDecimal of the decimal rendering, so 2^63-scale longs never
@@ -1323,10 +1248,10 @@ object CommitLog {
   private[store] def stage(df: DataFrame, tablePath: String,
       mapping: Map[String, String], options: Map[String, String] = Map.empty,
       writer: String = "w"): Seq[String] = {
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
+    val dir = new Path(tablePath)
     val fs = fsOf(df.sparkSession, dir)
     val writerId = freshWriterId(writer)
-    val staging = new org.apache.hadoop.fs.Path(dir, s"_staging_$writerId")
+    val staging = new Path(dir, s"_staging_$writerId")
     toPhysical(df, mapping).write.options(options).parquet(staging.toString)
     // land the part files in the table directory under writer-unique
     // names (still uncommitted — invisible until the caller's commit
@@ -1335,7 +1260,7 @@ object CommitLog {
         !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
       .map { st =>
         val n = s"$writerId-${st.getPath.getName}"
-        if (!fs.rename(st.getPath, new org.apache.hadoop.fs.Path(dir, n)))
+        if (!fs.rename(st.getPath, new Path(dir, n)))
           throw new IllegalStateException(s"could not land data file $n in $dir")
         n
       }
@@ -1351,7 +1276,7 @@ object CommitLog {
       names: Seq[String]): Map[String, String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     def one(n: String): Option[(String, String)] = footerStatsJson(conf,
-      new org.apache.hadoop.fs.Path(resolveDataPath(tablePath, n))).map(n -> _)
+      new Path(resolveDataPath(tablePath, n))).map(n -> _)
     // footer reads are independent metadata round trips; on an
     // object store each costs tens of ms, so a large landing (a big
     // rewrite, a CONVERT adopting 100k files) reads them 16-way —
@@ -1398,19 +1323,13 @@ object CommitLog {
 
   /** What one commit file costs the change feed, per commit shape —
     * see [[addedBytesByVersion]] for the accounting. None = opaque. */
-  private def feedCostOf(fs: org.apache.hadoop.fs.FileSystem,
-      commitFile: org.apache.hadoop.fs.Path): Option[Long] = {
-    val lines = readLines(fs, commitFile).toSeq
-    if (lines.exists(_.startsWith("~"))) None // CDC-fed: sizes unknown
-    else if (lines.exists(_.startsWith("-")) &&
-      !lines.exists(_.startsWith("#op="))) Some(0L) // rewrite: feeds nothing
+  private def feedCostOf(fs: FileSystem, commitFile: Path): Option[Long] = {
+    val lines = LogLine.read(fs, commitFile).toSeq
+    if (lines.exists(_.isInstanceOf[Change])) None // CDC-fed: sizes unknown
+    else if (lines.exists(_.isInstanceOf[Remove]) &&
+      !lines.exists(_.isInstanceOf[Op])) Some(0L) // rewrite: feeds nothing
     else {
-      val sizes = lines.filter(_.startsWith("+")).map { l =>
-        val bar = l.indexOf('|')
-        if (bar < 0) None
-        else parseStatsJson(l.substring(bar + 1)).get(BytesSizeKey)
-          .collect { case (b: Long, _) => b }
-      }
+      val sizes = lines.collect { case a: Add => statsCount(a.stats, BytesSizeKey) }
       if (sizes.exists(_.isEmpty)) None else Some(sizes.flatten.sum)
     }
   }
@@ -1419,15 +1338,10 @@ object CommitLog {
     * [[RowCountKey]] counts — one commit-file read, no data I/O. */
   private[graft] def addedRows(spark: SparkSession, tablePath: String,
       version: Long): Long = {
-    val p = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(tablePath, LogDir),
-      f"$version%020d.commit")
-    readLines(fsOf(spark, p), p).filter(_.startsWith("+")).map { l =>
-      val bar = l.indexOf('|')
-      (if (bar < 0) None
-       else parseStatsJson(l.substring(bar + 1)).get(RowCountKey)
-         .collect { case (n: Long, _) => n })
-        .getOrElse(throw new IllegalStateException(
-          s"commit $version of $tablePath adds a file without a row count: $l"))
+    val p = new Path(new Path(tablePath, LogDir), f"$version%020d.commit")
+    LogLine.read(fsOf(spark, p), p).collect { case a: Add =>
+      statsCount(a.stats, RowCountKey).getOrElse(throw new IllegalStateException(
+        s"commit $version of $tablePath adds a file without a row count: ${LogLine.render(a)}"))
     }.sum
   }
 
@@ -1448,13 +1362,13 @@ object CommitLog {
     * reaches it. */
   private[graft] def admitByBytes(spark: SparkSession, tablePath: String,
       base: Long, capped: Long, budget: Long): Option[Long] = {
-    val log = new org.apache.hadoop.fs.Path(tablePath, LogDir)
+    val log = new Path(tablePath, LogDir)
     val fs = fsOf(spark, log)
     var e = base
     var left = budget
     var v = base + 1
     while (v <= capped) {
-      val p = new org.apache.hadoop.fs.Path(log, f"$v%020d.commit")
+      val p = new Path(log, f"$v%020d.commit")
       if (!fs.exists(p)) return None // gap in the walked prefix
       val cost = feedCostOf(fs, p).getOrElse(Long.MaxValue) // opaque: admits alone
       if (e == base || cost <= left) {
@@ -1518,39 +1432,28 @@ object CommitLog {
     * conflicts and one side fails loudly (the remove-validation
     * contract). When a schema ledger exists and the new frame's shape
     * differs, the ledger is restamped in the same commit — after a
-    * replace the table simply IS the new frame's shape. */
+    * replace the table simply IS the new frame's shape. The append core
+    * lands it ([[appendOrAbort]]). */
   def overwrite(df: DataFrame, tablePath: String,
       publisher: AtomicPublisher = RenameOrLinkPublisher,
       writeOptions: Map[String, String] = Map.empty): Long = {
-    val spark = df.sparkSession
-    val snap = snapshot(spark, tablePath)
-    val (version, live) = (snap.version, snap.live.map(_.name))
-    val props = snap.properties
-    val dfG = withGenerated(df, props) // before the restamp sees the shape
-    val cur = snap.schema
-    // a restamp inherits surviving columns' PHYSICAL identities and
-    // burns-aware fresh ones for new names — an overwrite must not
-    // silently discard the mapping a renamed table carries
-    val restamped: Option[StructType] = cur match {
-      case Some(c) if !sameShape(c, dfG.schema) =>
-        Some(inheritMapping(c, dfG.schema, snap.burned))
-      case _ => None
+    val snap = snapshot(df.sparkSession, tablePath)
+    // a restamp sees the shape with generated columns, inherits
+    // surviving columns' PHYSICAL identities and burns-aware fresh ones
+    // for new names — an overwrite must not silently discard the
+    // mapping a renamed table carries
+    val shape = withGenerated(df, snap.properties).schema
+    val restamp = snap.schema.collect {
+      case c if !sameShape(c, shape) => inheritMapping(c, shape, snap.burned).json
     }
-    val restamp = restamped.map(_.json)
-    val mapping = restamped.orElse(cur).map(columnMapping).getOrElse(Map.empty)
-    val cs = snap.constraints
-    val names = stage(enforcedWith(clusteredForWrite(dfG, props), cs), tablePath,
-      mapping, tableWriteOptions(props, mapping, writeOptions))
-    if (names.isEmpty && live.isEmpty) return version // nothing to publish
     // no removeDvExpect: an overwrite's adds derive from the NEW frame,
     // not the removed files' rows, so a concurrently attached vector on
     // a removed file cannot resurrect anything — the result equals the
     // delete-then-overwrite serial order either way
-    commit(spark, tablePath, adds = names, removes = live,
-      publisher = publisher, opTag = Some("overwrite"),
-      addStats = statsFor(spark, tablePath, names), schemaJson = restamp,
-      constraintsExpect = Some(cs),
-      schemaExpect = if (restamp.isDefined) Some(cur.map(_.json)) else None)
+    appendOrAbort(df, tablePath, snap, publisher, Some("overwrite"),
+      abortOnLostRace = _ => false, writeOptions, schemaJson = restamp,
+      removes = snap.live.map(_.name))
+      .getOrElse(snap.version) // nothing to publish
   }
 
   /** Predicate-scoped atomic overwrite — Delta's `replaceWhere`, the
@@ -1706,7 +1609,7 @@ object CommitLog {
     * fence to true (the staged files become vacuum-eligible orphans)
     * or when there is nothing to publish (no files landed, nothing
     * removed, no schema stamped). `removes` replaces those files in
-    * the same commit (rebuild). The constraint set enforced is the one
+    * the same commit (rebuild, overwrite). The constraint set enforced is the one
     * the commit fences on.
     *
     * WRITE-PATH schema evolution (Delta's mergeSchema): `mergeSchema`
@@ -1786,7 +1689,7 @@ object CommitLog {
     * says. */
   private[graft] def scanRelation(spark: SparkSession, tablePath: String,
       entries: Seq[LiveEntry], readSchema: StructType,
-      status: Option[Map[String, org.apache.hadoop.fs.FileStatus]] = None)
+      status: Option[Map[String, FileStatus]] = None)
       : org.apache.spark.sql.execution.datasources.HadoopFsRelation =
     org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       location = new graft.sources.GraftLogFileIndex(spark, tablePath, entries, status),
@@ -1800,7 +1703,7 @@ object CommitLog {
   /** [[scanRelation]] as a DataFrame. */
   private[graft] def scan(spark: SparkSession, tablePath: String,
       entries: Seq[LiveEntry], readSchema: StructType,
-      status: Option[Map[String, org.apache.hadoop.fs.FileStatus]] = None): DataFrame =
+      status: Option[Map[String, FileStatus]] = None): DataFrame =
     org.apache.spark.sql.graft.StreamingShim.ofRows(spark,
       org.apache.spark.sql.execution.datasources.LogicalRelation(
         scanRelation(spark, tablePath, entries, readSchema, status)))
@@ -1824,8 +1727,7 @@ object CommitLog {
     * attaches to IT (join on both the data-file name and the vector's
     * own identity). None when no entry carries a vector. */
   private[graft] def dvRows(spark: SparkSession, tablePath: String,
-      entries: Seq[LiveEntry],
-      status: Option[Map[String, org.apache.hadoop.fs.FileStatus]] = None)
+      entries: Seq[LiveEntry], status: Option[Map[String, FileStatus]] = None)
       : Option[DataFrame] = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
@@ -2153,11 +2055,7 @@ object CommitLog {
       val minFiles = props.get("graft.autoCompact.minFiles")
         .map(_.toInt).getOrElse(8)
       val (_, withStats) = liveFilesWithStats(spark, tablePath)
-      val nSmall = withStats.count(_._2.exists(j =>
-        parseStatsJson(j).get(BytesSizeKey).exists {
-          case (b: Long, _) => b < small
-          case _ => false
-        }))
+      val nSmall = withStats.count(f => statsCount(f._2, BytesSizeKey).exists(_ < small))
       if (nSmall >= minFiles) { optimize(spark, tablePath, targetBytes = target); () }
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -2532,11 +2430,6 @@ object CommitLog {
       spark.read.parquet(resolveDataPath(tablePath, files.last.name)).schema
     }
 
-  /** RENAME COLUMN — metadata-only (one schema commit, zero file
-    * rewrites): the field keeps its PHYSICAL name, so every existing
-    * file serves the renamed column unchanged and time travel reads
-    * historical names at historical versions. Refused while a
-    * constraint or bloom property references the column. */
   /** Rename preconditions only — no commit. `cur` is the schema the
     * change applies AGAINST: callers pass their already-loaded
     * snapshot (one log read, not two), and a multi-change ALTER passes
@@ -2556,30 +2449,38 @@ object CommitLog {
     guardColumnReferences(spark, tablePath, from, "rename")
   }
 
+  /** RENAME COLUMN — metadata-only (one schema commit, zero file
+    * rewrites): the field keeps its PHYSICAL name, so every existing
+    * file serves the renamed column unchanged and time travel reads
+    * historical names at historical versions. Refused while a
+    * constraint or bloom property references the column. */
   def renameColumn(spark: SparkSession, tablePath: String, from: String,
-      to: String, publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
+      to: String, publisher: AtomicPublisher = RenameOrLinkPublisher): Long =
+    alterSchema(spark, tablePath, publisher, "rename_column") { (_, cur) =>
+      validateRenameColumn(spark, tablePath, cur, from, to)
+      (StructType(cur.fields.map { f =>
+        if (f.name == from)
+          f.copy(name = to, metadata = withPhysical(f.metadata, physicalName(f)))
+        else f
+      }), Seq.empty)
+    }
+
+  /** One metadata-only schema commit: `change` derives the new schema
+    * (and any property tags riding along) from the snapshot and its
+    * current schema; the commit fences on that schema ledger. */
+  private def alterSchema(spark: SparkSession, tablePath: String,
+      publisher: AtomicPublisher, op: String)(
+      change: (Snapshot, StructType) => (StructType, Seq[String])): Long = {
     val snap = snapshot(spark, tablePath)
     val ledger = snap.schema
-    val cur = ledger.getOrElse(tableSchema(spark, tablePath, snap))
-    validateRenameColumn(spark, tablePath, cur, from, to)
-    val next = StructType(cur.fields.map { f =>
-      if (f.name == from)
-        f.copy(name = to, metadata = withPhysical(f.metadata, physicalName(f)))
-      else f
-    })
+    val (next, propertyTags) = change(snap, ledger.getOrElse(tableSchema(spark, tablePath, snap)))
     commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
-      publisher = publisher, opTag = Some("rename_column"),
-      abortOnLostRace = _ => false, schemaJson = Some(next.json),
+      publisher = publisher, opTag = Some(op), abortOnLostRace = _ => false,
+      schemaJson = Some(next.json), propertyTags = propertyTags,
       schemaExpect = Some(ledger.map(_.json)))
-      .getOrElse(throw new IllegalStateException("unreachable: unfenced rename"))
+      .getOrElse(throw new IllegalStateException(s"unreachable: unfenced $op"))
   }
 
-  /** DROP COLUMN — metadata-only: the field leaves the ledger schema
-    * (one commit, zero file rewrites; the bytes linger in files until
-    * rewrites retire them — run a full OPTIMIZE to purge physically),
-    * and its physical name is BURNED so a later same-named column gets
-    * fresh storage instead of resurrecting the hidden data. Time
-    * travel before the drop still reads the column. */
   /** Drop preconditions only — see [[validateRenameColumn]]. */
   private[store] def validateDropColumn(spark: SparkSession,
       tablePath: String, cur: StructType, name: String): Unit = {
@@ -2590,29 +2491,21 @@ object CommitLog {
     guardColumnReferences(spark, tablePath, name, "drop")
   }
 
+  /** DROP COLUMN — metadata-only: the field leaves the ledger schema
+    * (one commit, zero file rewrites; the bytes linger in files until
+    * rewrites retire them — run a full OPTIMIZE to purge physically),
+    * and its physical name is BURNED so a later same-named column gets
+    * fresh storage instead of resurrecting the hidden data. Time
+    * travel before the drop still reads the column. */
   def dropColumn(spark: SparkSession, tablePath: String, name: String,
-      publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
-    val snap = snapshot(spark, tablePath)
-    val ledger = snap.schema
-    val cur = ledger.getOrElse(tableSchema(spark, tablePath, snap))
-    validateDropColumn(spark, tablePath, cur, name)
-    val field = cur.fields.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(
-        s"no column $name in $tablePath (${cur.fieldNames.mkString(", ")})"))
-    val burned = snap.burned + physicalName(field)
-    val next = StructType(cur.fields.filterNot(_.name == name))
-    commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
-      publisher = publisher, opTag = Some("drop_column"),
-      abortOnLostRace = _ => false, schemaJson = Some(next.json),
-      propertyTags = Seq(s"+$BurnedProp:${burned.toSeq.sorted.mkString(",")}"),
-      schemaExpect = Some(ledger.map(_.json)))
-      .getOrElse(throw new IllegalStateException("unreachable: unfenced drop"))
-  }
+      publisher: AtomicPublisher = RenameOrLinkPublisher): Long =
+    alterSchema(spark, tablePath, publisher, "drop_column") { (snap, cur) =>
+      validateDropColumn(spark, tablePath, cur, name)
+      val burned = snap.burned + physicalName(cur.fields.find(_.name == name).get)
+      (StructType(cur.fields.filterNot(_.name == name)),
+        Seq(LogLine.setTag(BurnedProp, burned.toSeq.sorted.mkString(","))))
+    }
 
-  /** ADD COLUMNS — metadata-only evolution (one schema commit): new
-    * fields append nullable (old files null-fill); a name colliding
-    * with a live physical or BURNED name gets fresh storage. Fenced
-    * like rename/drop against concurrent ledger movement. */
   /** Add-columns preconditions only — see [[validateRenameColumn]].
     * Duplicates WITHIN `fields` are refused too (two adds of the same
     * name in one statement). */
@@ -2629,22 +2522,18 @@ object CommitLog {
       s"column(s) ${selfDup.mkString(", ")} added more than once")
   }
 
+  /** ADD COLUMNS — metadata-only evolution (one schema commit): new
+    * fields append nullable (old files null-fill); a name colliding
+    * with a live physical or BURNED name gets fresh storage. Fenced
+    * like rename/drop against concurrent ledger movement. */
   def addColumns(spark: SparkSession, tablePath: String,
       fields: Seq[org.apache.spark.sql.types.StructField],
-      publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
-    val snap = snapshot(spark, tablePath)
-    val ledger = snap.schema
-    val cur = ledger.getOrElse(tableSchema(spark, tablePath, snap))
-    validateAddColumns(spark, tablePath, cur, fields)
-    val next = evolveSchema(cur,
-      StructType(cur.fields ++ fields.map(_.copy(nullable = true))),
-      snap.burned)
-    commitOrAbort(spark, tablePath, adds = Seq.empty, removes = Seq.empty,
-      publisher = publisher, opTag = Some("evolve"),
-      abortOnLostRace = _ => false, schemaJson = Some(next.json),
-      schemaExpect = Some(ledger.map(_.json)))
-      .getOrElse(throw new IllegalStateException("unreachable: unfenced add-columns"))
-  }
+      publisher: AtomicPublisher = RenameOrLinkPublisher): Long =
+    alterSchema(spark, tablePath, publisher, "evolve") { (snap, cur) =>
+      validateAddColumns(spark, tablePath, cur, fields)
+      (evolveSchema(cur, StructType(cur.fields ++ fields.map(_.copy(nullable = true))),
+        snap.burned), Seq.empty)
+    }
 
   /** Widen/extend `current` with `incoming` — the `mergeSchema` rule:
     * new source columns append (nullable: old files read them as
@@ -2787,12 +2676,8 @@ object CommitLog {
         s"upsert batch columns (${src.schema.fieldNames.mkString(", ")}) do not " +
           s"match the sink's declared schema (${ledger.fieldNames.mkString(", ")})")
     }
-    val dup = src.groupBy(keyCols.map(col): _*)
-      .count().filter(col("count") > 1).limit(1).collect()
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"upsert batch has duplicate key(s), e.g. ${dup.head.toSeq.init.mkString(",")} — " +
-          "an Update-mode state store emits one row per key; dedupe the batch")
+    requireUniqueKeys(src, keyCols, "upsert batch",
+      "an Update-mode state store emits one row per key; dedupe the batch")
     val won = keyedRewrite(spark, tablePath, snap, src.schema, keyCols,
       deleteKeys = src, appendDf = src,
       opTag = Some(s"txn=$queryId:$batchId"), publisher = publisher,
@@ -2916,6 +2801,17 @@ object CommitLog {
       deletionVectors = deletionVectors, publisher = publisher,
       opTag = Some("update"))
       .getOrElse(snap.version) // nothing matched: no new version
+  }
+
+  /** Refuse a keyed source holding a key twice — one probe job, one
+    * offending key collected into the message. */
+  private[store] def requireUniqueKeys(src: DataFrame, keyCols: Seq[String],
+      what: String, remedy: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val dup = src.groupBy(keyCols.map(col): _*)
+      .count().filter(col("count") > 1).limit(1).collect()
+    if (dup.nonEmpty) throw new IllegalArgumentException(
+      s"$what has duplicate key(s), e.g. ${dup.head.toSeq.init.mkString(",")} — $remedy")
   }
 
   /** Column name the change feed uses to label each fed row's kind
@@ -3176,12 +3072,8 @@ object CommitLog {
     // could commit data and CDC that disagree.
     val src = source.select(opSchema.fieldNames.map(col).toSeq: _*)
       .localCheckpoint(true)
-    val dup = src.groupBy(keyCols.map(col): _*)
-      .count().filter(col("count") > 1).limit(1).collect()
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"merge source has duplicate key(s), e.g. ${dup.head.toSeq.init.mkString(",")} — " +
-          "which duplicate wins is undefined; dedupe the source first")
+    requireUniqueKeys(src, keyCols, "merge source",
+      "which duplicate wins is undefined; dedupe the source first")
     if (src.isEmpty) return snap.version // empty merge: no-op
     keyedRewrite(spark, tablePath, snap, opSchema, keyCols,
       deleteKeys = src, appendDf = src, opTag = Some("merge"),
@@ -3309,7 +3201,7 @@ object CommitLog {
         case _ => None
       }
     def footerCheck(name: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(resolveDataPath(tablePath, name))
+      val p = new Path(resolveDataPath(tablePath, name))
       try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -3457,20 +3349,16 @@ object CommitLog {
     val rows: Seq[(Long, String, Long, Long, Option[Long])] =
       files.map { case (version, isCommit, p) =>
         if (isCommit) {
-          val lines = readLines(listing.fs, p).toSeq
-          val adds = lines.count(_.startsWith("+"))
-          val removes = lines.count(_.startsWith("-"))
+          val lines = LogLine.read(listing.fs, p).toSeq
+          val removes = lines.count(_.isInstanceOf[Remove]).toLong
           // explicit header wins; otherwise derive from commit shape
-          val op = lines.collectFirst {
-            case l if l.startsWith("#op=") => l.stripPrefix("#op=")
-          }.getOrElse(if (removes > 0) "rewrite" else "append")
-          val ts = lines.collectFirst {
-            case l if l.startsWith("#ts=") => l.drop(4).toLong
-          }
-          (version, op, adds.toLong, removes.toLong, ts)
-        } else
+          val op = lines.collectFirst { case Op(tag) => tag }
+            .getOrElse(if (removes > 0) "rewrite" else "append")
+          (version, op, lines.count(_.isInstanceOf[Add]).toLong, removes,
+            lines.collectFirst { case Ts(ms) => ms })
+        } else // streamed: a checkpoint holds the whole live set
           (version, "checkpoint",
-            readLines(listing.fs, p).count(_.startsWith("+")).toLong, 0L, None: Option[Long])
+            LogLine.read(listing.fs, p).count(_.isInstanceOf[Add]).toLong, 0L, None: Option[Long])
       }
     rows.toDF("version", "operation", "n_added", "n_removed", "commit_ts_ms")
   }
@@ -3484,12 +3372,10 @@ object CommitLog {
   private[graft] def liveBytes(spark: SparkSession, tablePath: String,
       snap: Snapshot): Long = {
     val entries = snap.live
-    val fromLedger = entries.map(e =>
-      e.stats.flatMap(j => parseStatsJson(j).get(BytesSizeKey))
-        .collect { case (b: Long, _) => b })
+    val fromLedger = entries.map(e => statsCount(e.stats, BytesSizeKey))
     if (fromLedger.forall(_.isDefined)) fromLedger.flatten.sum
     else {
-      val dir = new org.apache.hadoop.fs.Path(tablePath)
+      val dir = new Path(tablePath)
       val fs = fsOf(spark, dir)
       val sizeByName: Map[String, Long] =
         if (!fs.exists(dir)) Map.empty
@@ -3515,7 +3401,7 @@ object CommitLog {
     val listing = listLog(spark, tablePath)
     val snap = listing.snapshot()
     val (version, entries) = (snap.version, snap.live)
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(tablePath))
+    val fs = fsOf(spark, new Path(tablePath))
     val sizeBytes = liveBytes(spark, tablePath, snap)
     // vectored positions: log-carried counts when every attachment
     // recorded one, else the vector-parquet count job
@@ -3599,14 +3485,13 @@ object CommitLog {
     // an insert-only feed silently skipping it would hand consumers
     // deleted rows as still-live; consumers re-bootstrap past it.
     val fed: Seq[(String, Long, Boolean)] = commits.toSeq.flatMap { case (v, p) =>
-      val lines = readLines(listing.fs, p).toSeq
-      val removing = lines.exists(_.startsWith("-"))
-      // a DV-attaching commit (`*` lines) DELETES rows without removing
-      // files — row-changing by definition, never a compaction
-      val vectoring = lines.exists(_.startsWith("*"))
-      val changeFiles = lines.filter(_.startsWith("~")).map(_.drop(1))
-      val tag = lines.collectFirst {
-        case l if l.startsWith("#op=") => l.stripPrefix("#op=") }
+      val lines = LogLine.read(listing.fs, p).toSeq
+      val removing = lines.exists(_.isInstanceOf[Remove])
+      // a DV-attaching commit DELETES rows without removing files —
+      // row-changing by definition, never a compaction
+      val vectoring = lines.exists(_.isInstanceOf[Dv])
+      val changeFiles = lines.collect { case Change(f) => f }
+      val tag = lines.collectFirst { case Op(t) => t }
       if (changeFiles.nonEmpty) changeFiles.map(f => (f, v, true))
       else if (vectoring || (removing && tag.isDefined))
         throw new FeedGapException(
@@ -3614,8 +3499,7 @@ object CommitLog {
             s"commit (version $v, op=${tag.getOrElse("dv-attach")}) that " +
             "carries no change files: re-bootstrap from a snapshot read() past it")
       else if (removing) Seq.empty
-      else lines.filter(_.startsWith("+"))
-        .map(l => (l.drop(1).takeWhile(_ != '|'), v, false)) // bare name: strip stats
+      else lines.collect { case Add(f, _) => (f, v, false) }
     }
     val fileToVersion: Seq[(String, Long)] = fed.map { case (f, v, _) => (f, v) }
     if (fileToVersion.isEmpty) return empty
@@ -3710,7 +3594,7 @@ object CommitLog {
     requireDistinctBasenames(target, s"restore of $tablePath to $toVersion")
     // every restored file (and attached vector) must still exist —
     // restoring to a vacuumed snapshot would publish dangling names
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
+    val dir = new Path(tablePath)
     val fs = fsOf(spark, dir)
     val present: Set[String] =
       if (!fs.exists(dir)) Set.empty
@@ -3740,7 +3624,7 @@ object CommitLog {
     val dvAttach: Map[String, String] = target.collect {
       case e if addSet(e.name) && e.dv.isDefined => e.name -> e.dv.get
       case e if !addSet(e.name) && curDv.getOrElse(e.name, None) != e.dv =>
-        e.name -> e.dv.getOrElse("-")
+        e.name -> e.dv.getOrElse(LogLine.Detach)
     }.toMap
     val dvExpect = dvAttach.keys.map { f =>
       f -> (if (addSet(f)) None else curDv.getOrElse(f, None))
@@ -3748,7 +3632,7 @@ object CommitLog {
     // re-attached vectors keep their historical position counts
     val dvRowsByName = target.flatMap(e => e.dvRows.map(e.name -> _)).toMap
     val dvCounts = dvAttach.collect {
-      case (f, dv) if dv != "-" && dvRowsByName.contains(f) =>
+      case (f, dv) if dv != LogLine.Detach && dvRowsByName.contains(f) =>
         f -> dvRowsByName(f)
     }
     val statsByName = target.map(e => e.name -> e.stats).toMap
@@ -3819,7 +3703,7 @@ object CommitLog {
     * convert contract). */
   def convertParquet(spark: SparkSession, tablePath: String,
       publisher: AtomicPublisher = RenameOrLinkPublisher): Long = {
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
+    val dir = new Path(tablePath)
     val fs = fsOf(spark, dir)
     require(fs.exists(dir), s"cannot convert $tablePath — no such directory")
     require(latestVersion(spark, tablePath) == 0,
@@ -3893,8 +3777,7 @@ object CommitLog {
     require(src.startsWith("/") || src.contains("://"),
       s"shallow clone needs an absolute source path (its references must " +
         s"resolve from the clone): $sourcePath")
-    require(new org.apache.hadoop.fs.Path(src) !=
-      new org.apache.hadoop.fs.Path(clonePath.stripSuffix("/")),
+    require(new Path(src) != new Path(clonePath.stripSuffix("/")),
       s"cannot clone $src onto itself")
     require(latestVersion(spark, clonePath) == 0,
       s"clone destination $clonePath already has commits")
@@ -3926,9 +3809,8 @@ object CommitLog {
       dvAttach = dvAttach,
       dvExpect = dvAttach.map { case (k, _) => k -> None },
       dvRowCounts = dvCounts,
-      constraintTags = constraints.toSeq.sortBy(_._1)
-        .map { case (n, c) => s"+$n:$c" },
-      propertyTags = props.toSeq.sortBy(_._1).map { case (k, v) => s"+$k:$v" })
+      constraintTags = LogLine.setTags(constraints),
+      propertyTags = LogLine.setTags(props))
       .getOrElse(throw new IllegalStateException(
         s"clone destination $clonePath was created concurrently — " +
           "pick an empty path"))
@@ -3950,12 +3832,12 @@ object CommitLog {
   def vacuum(spark: SparkSession, tablePath: String, minAgeMs: Long,
       dryRun: Boolean = false): Seq[String] = {
     require(minAgeMs >= 0, s"minAgeMs must be >= 0: $minAgeMs")
-    val dir = new org.apache.hadoop.fs.Path(tablePath)
+    val dir = new Path(tablePath)
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) return Seq.empty
     val listing = listLog(spark, tablePath)
     val changeRefs: Set[String] = listing.commits.values.flatMap(p =>
-      readLines(fs, p).filter(_.startsWith("~")).map(_.drop(1))).toSet
+      LogLine.read(fs, p).collect { case Change(f) => f }).toSet
     // keep-set: live data files, their ATTACHED deletion vectors, and
     // commit-referenced CDC files — a superseded vector (its file
     // re-vectored or compacted) drops out of the attachments and ages

@@ -196,7 +196,7 @@ class GraftCatalog extends TableCatalog {
       publisher = RenameOrLinkPublisher, opTag = Some("create"),
       abortOnLostRace = _ => false, schemaJson = Some(schema.json),
       schemaExpect = Some(None),
-      propertyTags = user.toSeq.sortBy(_._1).map { case (k, v) => s"+$k:$v" })
+      propertyTags = LogLine.setTags(user))
       .getOrElse(throw new IllegalStateException("unreachable: unfenced create"))
     GraftTable(path, asOf = Long.MaxValue, ident.toString, catalogName)
   }

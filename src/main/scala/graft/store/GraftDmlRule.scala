@@ -2,7 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, EqualTo, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -145,9 +145,13 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * (the clause join carries keys once under their plain names; they
     * are equal on both sides by the ON condition); leaves are swapped
     * then the tree re-renders through its SQL form (arbitrary scalar
-    * expressions survive without re-implementing a grammar). */
+    * expressions survive without re-implementing a grammar). A
+    * subquery has no SQL form a Column can re-parse, so it is refused. */
   private def toColumn(e: Expression, target: AttributeSet,
-      source: AttributeSet, keys: Seq[String]): Column =
+      source: AttributeSet, keys: Seq[String]): Column = {
+    if (e.exists(_.isInstanceOf[SubqueryExpression])) fail(
+      "a subquery in a DML condition or SET value is not supported — " +
+        "join its rows in as a MERGE INTO … USING source instead")
     expr(e.transformUp {
       case a: AttributeReference if source.contains(a) &&
           !keys.exists(_.equalsIgnoreCase(a.name)) =>
@@ -158,6 +162,7 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case a: AttributeReference =>
         fail(s"`${a.name}` is bound to neither the target nor the source")
     }.sql)
+  }
 
   /** Strip analyzer-inserted casts: an INT-keyed source merged into a
     * BIGINT-keyed table arrives as `t.id = CAST(s.id AS BIGINT)` —

@@ -425,9 +425,9 @@ object GraftSql {
     * registered catalog, ``graft.`<resolved path>` ``: the one way a
     * `graftlog.` name resolves inside a statement — through
     * [[GraftCatalog]] (and, in read positions, [[GraftV2ReadRule]]'s
-    * native relation). */
+    * native relation) — subquery plans included. */
   private def toCatalog(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
-    plan.transform {
+    plan.transformWithSubqueries {
       case u: UnresolvedRelation if u.multipartIdentifier.length == 2 &&
           u.multipartIdentifier.head.equalsIgnoreCase(Catalog) =>
         u.copy(multipartIdentifier =

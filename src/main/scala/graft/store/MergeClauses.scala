@@ -137,12 +137,8 @@ final class MergeClauses private (
     }
     // single evaluation of the source for every pass below
     val src = source.select(cols.map(col): _*).localCheckpoint(true)
-    val dup = src.groupBy(keyCols.map(col): _*)
-      .count().filter(col("count") > 1).limit(1).collect()
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"merge source has duplicate key(s), e.g. ${dup.head.toSeq.init.mkString(",")} — " +
-          "which duplicate wins is undefined; dedupe the source first")
+    CommitLog.requireUniqueKeys(src, keyCols, "merge source",
+      "which duplicate wins is undefined; dedupe the source first")
 
     // files that can hold a matched row (stats-based skipping over the
     // key columns); a by-source clause must visit every file

@@ -323,15 +323,20 @@ object Store {
   def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
     CommitLog.read(spark, table, schema, snapshot(spark, table))
 
+  def commit(df: DataFrame, table: String): Long =
+    commit(df, table, snapshot(df.sparkSession, table))
+
   /** Append `df` to a store table in one commit — the append core of
     * [[CommitLog.append]] without its auto-compaction, so `task_done`
     * and `dlq` stay append-only whatever the table's properties say.
-    * Returns the rows it added, from the commit's ledger stats. Every
-    * pipeline write follows a [[read]] of the same table in the same
-    * verb, which is what refuses a pre-log directory. */
-  def commit(df: DataFrame, table: String): Long = {
+    * Returns the rows it added, from the commit's ledger stats. `read`
+    * is the [[snapshot]] the verb read the table through, which is what
+    * refuses a pre-log directory; the append takes its schema,
+    * constraints and properties from it, and the commit's fences still
+    * judge a fresh listing on every publish attempt. */
+  def commit(df: DataFrame, table: String, read: CommitLog.Snapshot): Long = {
     val spark = df.sparkSession
-    CommitLog.appendOrAbort(df, table, snapshot(spark, table), RenameOrLinkPublisher,
+    CommitLog.appendOrAbort(df, table, read, RenameOrLinkPublisher,
       opTag = None, abortOnLostRace = _ => false)
       .fold(0L)(CommitLog.addedRows(spark, table, _))
   }

@@ -840,9 +840,9 @@ object StreamingJobs {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // same planning core as the batch job — identical task
         // identities for identical resources, whichever planner runs
-        Store.commit(
-          graft.plan.Plan.freshTasks(batch.sparkSession, batch, store, templates, cfg),
-          store.taskQueue)
+        val queue = Store.snapshot(batch.sparkSession, store.taskQueue)
+        Store.commit(graft.plan.Plan.freshTasks(batch.sparkSession, batch, store,
+          templates, cfg, queue), store.taskQueue, queue)
         ()
       }
       .start()

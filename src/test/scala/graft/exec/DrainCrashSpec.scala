@@ -130,7 +130,7 @@ class DrainCrashSpec extends SparkSpec {
     // both planners anti-join the same (empty) queue before either commits
     val resources = Store.read(spark, store.resourceIndex, Ingest.resourceSchema)
     val planners = Seq.fill(2)(Plan.freshTasks(spark, resources, store,
-      Templates.registry, Templates.PlanConfig()))
+      Templates.registry, Templates.PlanConfig(), Store.snapshot(spark, store.taskQueue)))
     assert(planners.map(Store.commit(_, store.taskQueue)) == Seq(8L, 8L))
     assert(Execute.run(spark, store, obj) == ((8L, 0L)))
     val done = hashes(store.taskDone)

@@ -138,6 +138,22 @@ class GraftCatalogSpec extends SparkSpec {
     spark.sql("DROP TABLE graft.trunc")
   }
 
+  test("DML with a subquery predicate is refused by name and commits nothing") {
+    val wh = freshWarehouse()
+    spark.sql("CREATE TABLE graft.sq (id BIGINT)")
+    spark.sql("INSERT INTO graft.sq SELECT id FROM range(10)")
+    spark.sql("CREATE TABLE graft.sq_keys (id BIGINT)")
+    spark.sql("INSERT INTO graft.sq_keys VALUES (1), (2)")
+    val before = CommitLog.latestVersion(spark, s"$wh/sq")
+    Seq(s"DELETE FROM graft.`$wh/sq` WHERE id IN (SELECT id FROM graft.sq_keys)",
+      "UPDATE graft.sq SET id = 0 WHERE EXISTS (SELECT 1 FROM graft.sq_keys k WHERE k.id = sq.id)"
+    ).foreach { sql =>
+      val e = intercept[IllegalArgumentException](spark.sql(sql))
+      assert(e.getMessage.contains("subquery"), s"$sql: ${e.getMessage}")
+    }
+    assert(CommitLog.latestVersion(spark, s"$wh/sq") == before)
+  }
+
   test("DELETE FROM through the catalog honors the deletion-vector switch") {
     freshWarehouse()
     spark.sql("CREATE TABLE graft.del (id BIGINT)")

@@ -115,6 +115,18 @@ class GraftSqlSpec extends SparkSpec {
     assert(e.getMessage.contains("every table column"))
   }
 
+  test("a subquery predicate in DML is refused by name and commits nothing") {
+    val t = freshTable()
+    seed(t)
+    val u = freshTable()
+    CommitLog.append(Seq(1L, 2L).toDF("id"), u)
+    val before = CommitLog.latestVersion(spark, t)
+    val e = intercept[IllegalArgumentException](GraftSql.execute(spark,
+      s"DELETE FROM graftlog.`$t` WHERE id IN (SELECT id FROM graftlog.`$u`)"))
+    assert(e.getMessage.contains("subquery"), e.getMessage)
+    assert(CommitLog.latestVersion(spark, t) == before)
+  }
+
   test("INSERT INTO: positional, column-list null-fill, OVERWRITE, VALUES") {
     val t = freshTable()
     seed(t)

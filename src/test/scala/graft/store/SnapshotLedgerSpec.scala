@@ -250,6 +250,16 @@ class SnapshotLedgerSpec extends SparkSpec {
     // past the latest version: live-set reads refuse, ledgers fold all
     unavailable(version + 5)
     withClue(s"seed=$Seed version=${version + 5}: ")(checkLedgers(version + 5, cur))
+
+    // ── the line codec re-renders every commit and checkpoint ─────────
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val files = (1L to version).map(v => mirror.resolve(f"$v%020d.commit")) ++
+      checkpoints.toSeq.sorted.map(v => log.resolve(f"$v%020d.checkpoint"))
+    files.foreach { f =>
+      val bytes = new String(Files.readAllBytes(f), "UTF-8")
+      assert(LogLine.render(LogLine.read(local, new org.apache.hadoop.fs.Path(f.toUri))) == bytes,
+        s"seed=$Seed: ${f.getFileName} does not re-render byte-identically")
+    }
   }
 }
 
