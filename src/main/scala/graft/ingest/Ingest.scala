@@ -17,11 +17,13 @@ import org.apache.spark.sql.types._
   * no-op) → one logged append to resource_index → SCARD-style count
   * from the ledger (service.go:114-118).
   *
-  * Scale: the listing distributes per-prefix; filter + hash are
-  * codegen'd Column expressions evaluated during the listing scan; dedup
-  * and the idempotence anti-join are hash-partitioned on `url` (or
-  * broadcast when the existing index is small — AQE decides). Nothing is
-  * ever collected to the driver.
+  * Scale: the listing walks narrow levels on the driver and hands the
+  * first level wider than Spark's parallel-discovery threshold to one
+  * Spark job (see [[Listing]]); filter + hash are codegen'd Column
+  * expressions evaluated during the listing scan; dedup and the
+  * idempotence anti-join are hash-partitioned on `url` (or broadcast
+  * when the existing index is small — AQE decides). No distributed
+  * result is collected to the driver.
   */
 object Ingest {
 

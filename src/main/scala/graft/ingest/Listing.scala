@@ -1,18 +1,22 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 
 /** S1 — depth-bounded recursive prefix scan (SURVEY.md §2.1).
   *
   * The reference lists S3 one '/'-delimited level at a time, recursing
   * into CommonPrefixes with one goroutine per sub-prefix
-  * (pkg/aws/s3.go:311-357). The Spark-native shape is the same BFS, but
-  * each level's listing is DISTRIBUTED: the current level's directories
-  * are a Dataset, and each partition lists its directories executor-side.
-  * At 100 TB / millions of prefixes the listing fan-out therefore scales
-  * with the cluster, exactly like the reference's errgroup — but with no
-  * single-process bottleneck, and with two reference bugs fixed by
+  * (pkg/aws/s3.go:311-357). The BFS here follows Spark's
+  * `InMemoryFileIndex` rule (`HadoopFSUtils.parallelListLeafFiles`): a
+  * level is listed on the DRIVER, with no Spark job, while it holds at
+  * most `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  * directories; the first wider level goes to ONE Spark job whose tasks
+  * each list their directories' subtrees to the depth bound. Millions of
+  * prefixes still fan out across the cluster, like the reference's
+  * errgroup; a narrow tree costs no job. Two reference bugs are fixed by
   * construction (SURVEY §7.5): the root prefix is honored (s3.go:72-79
   * ignores it), and listing streams every entry instead of stopping at
   * one page (s3.go:354 never follows the continuation token).
@@ -30,87 +34,82 @@ object Listing {
       url: String, scheme: String, bucket: String, key: String,
       size: Long, is_dir: Boolean)
 
-  private def listOneLevel(root: String)(dir: String): Iterator[Entry] = {
-    val d = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(d)) Iterator.empty
+  /** `dir`'s entries, each stat'ed once (links followed); none when
+    * `dir` is missing or not a directory. */
+  private def listOneLevel(root: String)(dir: String): Vector[Entry] = {
+    val d = Paths.get(dir)
+    if (!Files.isDirectory(d)) Vector.empty
     else {
-      val stream = java.nio.file.Files.list(d)
-      // materialize the level eagerly so the stream handle closes; one
-      // directory level is bounded (the fan-out lives in the Dataset)
+      val stream = Files.list(d)
       import scala.jdk.CollectionConverters._
-      val entries = stream.iterator().asScala.map { p =>
-        val isDir = java.nio.file.Files.isDirectory(p)
-        val rel = java.nio.file.Paths.get(root).relativize(p).toString
-        val key = if (isDir) rel + "/" else rel
-        Entry(
-          url = "file://" + p.toAbsolutePath.toString + (if (isDir) "/" else ""),
-          scheme = "file",
-          bucket = root,
-          key = key,
-          size = if (isDir) 0L else java.nio.file.Files.size(p),
-          is_dir = isDir)
+      try stream.iterator().asScala.map { p =>
+        val attrs = Files.readAttributes(p, classOf[BasicFileAttributes])
+        val isDir = attrs.isDirectory
+        val slash = if (isDir) "/" else ""
+        Entry(url = "file://" + p.toAbsolutePath.toString + slash, scheme = "file",
+          bucket = root, key = Paths.get(root).relativize(p).toString + slash,
+          size = if (isDir) 0L else attrs.size, is_dir = isDir)
       }.toVector
-      stream.close()
-      entries.iterator
+      finally stream.close()
     }
   }
+
+  private def dirPath(e: Entry): String = e.url.stripPrefix("file://")
+
+  /** The files of `dir`'s subtree down to `depth` levels below it. */
+  private def walk(root: String, dir: String, depth: Int): Iterator[Entry] =
+    listOneLevel(root)(dir).iterator.flatMap { e =>
+      if (!e.is_dir) Iterator.single(e)
+      else if (depth > 1) walk(root, dirPath(e), depth - 1) else Iterator.empty
+    }
 
   /** List `root` down to `depth` directory levels (depth 1 = root's own
     * entries only — the reference's --recursion flag, cmd/ingest.go:18).
     * Returns a DataFrame of file entries (dirs are traversal-internal).
-    * The frame reads a checkpointed listing the ContextCleaner releases
-    * on GC; callers that want deterministic release use
+    * A distributed listing reads a checkpoint the ContextCleaner
+    * releases on GC; callers that want deterministic release use
     * listResourcesManaged. */
   def listResources(spark: SparkSession, root: String, depth: Int): DataFrame =
     listResourcesManaged(spark, root, depth)._1
 
   /** listResources plus an explicit release hook for the checkpointed
     * listing storage (Dataset.unpersist can't reach it — it only clears
-    * CacheManager entries, and the checkpoint is RDD-level). */
+    * CacheManager entries, and the checkpoint is RDD-level). A listing
+    * finished on the driver is a local frame, and its hook does nothing. */
   def listResourcesManaged(spark: SparkSession, root: String,
       depth: Int): (DataFrame, () => Unit) = {
     import spark.implicits._
     require(depth >= 1, "depth must be >= 1")
     // normalize once: deeper levels carry ABSOLUTE paths (from e.url),
     // and relativize() against a relative root would throw
-    val absRoot = java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
+    val absRoot = Paths.get(root).toAbsolutePath.normalize.toString
+    val threshold = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
 
-    var dirs: Dataset[String] = spark.createDataset(Seq(absRoot))
-    var files: Option[Dataset[Entry]] = None
-    val levels = scala.collection.mutable.ArrayBuffer.empty[Dataset[Entry]]
-
-    for (_ <- 1 to depth) {
-      // Spread this level's directories across the cluster before listing:
-      // at scale one level can be millions of prefixes.
-      // persisted + materialized per level (it feeds both the files
-      // union and the next level's dirs, and each FS listing must run
-      // exactly once); entries are path metadata — bytes per object —
-      // so the cache is bounded by the tree size, not the data size
-      val level = dirs.repartition(spark.sparkContext.defaultParallelism.min(32))
-        .flatMap(listOneLevel(absRoot) _)
-        .persist()
-      level.count()
-      levels += level
-      val levelFiles = level.filter(!_.is_dir)
-      files = Some(files.map(_.union(levelFiles)).getOrElse(levelFiles))
-      dirs = level.filter(_.is_dir).map(e => e.url.stripPrefix("file://"))
+    // Driver-side BFS while the level is narrow: no Spark job.
+    var dirs = Vector(absRoot)
+    var files = Vector.empty[Entry]
+    var listed = 0
+    while (listed < depth && dirs.nonEmpty && dirs.size <= threshold) {
+      val (subdirs, found) = dirs.flatMap(listOneLevel(absRoot)).partition(_.is_dir)
+      files ++= found
+      dirs = subdirs.map(dirPath)
+      listed += 1
     }
-
-    // One eager pass assembles the result from the hot level caches and
-    // CUTS the lineage to them (localCheckpoint), so every per-level
-    // cache can be dropped here instead of leaking for the session's
-    // lifetime (round-3 audit). The checkpointed frame itself is the
-    // caller's to release via the returned hook (Ingest.run calls it
-    // after the index append; the ContextCleaner GC-collects it for
-    // lazier callers).
-    val out = files.get.toDF().localCheckpoint(true)
-    levels.foreach(_.unpersist(false))
-    val release: () => Unit = () => {
-      out.queryExecution.analyzed.foreach {
+    if (listed == depth || dirs.isEmpty) (files.toDF(), () => ())
+    else {
+      // One job lists every remaining subtree, each directory exactly
+      // once; the eager local checkpoint pins that result, so later
+      // actions on the frame never list again.
+      val remaining = depth - listed
+      val parts = dirs.size.min(4 * spark.sparkContext.defaultParallelism)
+      val walked = spark.sparkContext.parallelize(dirs, parts)
+        .flatMap(walk(absRoot, _, remaining))
+      val out = files.toDS().union(spark.createDataset(walked)).toDF()
+        .localCheckpoint(true)
+      (out, () => out.queryExecution.analyzed.foreach {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false); ()
         case _ => ()
-      }
+      })
     }
-    (out, release)
   }
 }

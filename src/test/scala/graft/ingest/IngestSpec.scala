@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.SparkSpec
+import graft.{SparkJobs, SparkSpec}
 import graft.store.Store
 import org.apache.spark.sql.functions._
 
@@ -51,7 +51,7 @@ class IngestSpec extends SparkSpec {
     val n1 = Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
     val n2 = Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
     assert(n1 == 4 && n2 == 4)
-    val idx = spark.read.parquet(store.resourceIndex)
+    val idx = Store.read(spark, store.resourceIndex, Ingest.resourceSchema)
     assert(idx.count() == 4)
     // hash column is the sha256 of the url — spot-check one row
     val row = idx.filter(col("key") === "video/b.mov")
@@ -61,13 +61,52 @@ class IngestSpec extends SparkSpec {
 
   test("Ingest.run leaves no new persistent RDDs behind (listing caches released)") {
     FixtureTree.ensure()
-    val store = Store("/tmp/graft_test_state/ingest_nopersist")
+    for ((root, tag) <- Seq(FixtureTree.root -> "narrow", wideTree() -> "wide")) {
+      val store = Store(s"/tmp/graft_test_state/ingest_nopersist_$tag")
+      Store.delete(spark, store.resourceIndex)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      Ingest.run(spark, root, "ext/mov", 4, store)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty,
+        s"ingest of the $tag tree leaked persistent RDD ids $leaked — the listing checkpoint survived")
+    }
+  }
+
+  /** Directories on the wide tree's second level: more than Spark's
+    * parallel-discovery threshold. */
+  private def wideWidth: Int = spark.sessionState.conf.parallelPartitionDiscoveryThreshold + 8
+
+  /** A tree with `wideWidth` directories `w<i>` under its root, holding
+    * `w<i>/f.mov` and `w<i>/sub/g.mov`. */
+  private def wideTree(): String = {
+    val root = java.nio.file.Paths.get("/tmp/graft_test_state/wide_bucket")
+    for (i <- 0 until wideWidth; key <- Seq(s"w$i/f.mov", s"w$i/sub/g.mov")) {
+      val p = root.resolve(key)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, key.getBytes("UTF-8"))
+    }
+    root.toString
+  }
+
+  test("listing job budget: 0 Spark jobs on a narrow tree, 1 past the threshold") {
+    FixtureTree.ensure()
+    val (narrow, narrowJobs) = SparkJobs.during(spark)(
+      Listing.listResourcesManaged(spark, FixtureTree.root, 4))
+    narrow._2()
+    assert(narrowJobs == 0)
+    val root = wideTree()
+    val ((wide, release), wideJobs) = SparkJobs.during(spark)(
+      Listing.listResourcesManaged(spark, root, 3))
+    try {
+      assert(wideJobs == 1)
+      assert(wide.count() == 2L * wideWidth)
+    } finally release()
+    val store = Store("/tmp/graft_test_state/ingest_jobs")
     Store.delete(spark, store.resourceIndex)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"ingest leaked persistent RDD ids $leaked — per-level listing caches or the checkpoint survived")
+    val (_, ingestJobs) = SparkJobs.during(spark)(
+      Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store))
+    // the listing runs none of them on this narrow tree
+    assert(ingestJobs <= 2, s"Ingest.run ran $ingestJobs Spark jobs")
   }
 
   test("ingest with a broader filter later adds only the new files") {

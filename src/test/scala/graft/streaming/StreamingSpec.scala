@@ -7,6 +7,7 @@ import graft.store.Store
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
@@ -24,6 +25,10 @@ class StreamingSpec extends SparkSpec {
     store
   }
 
+  /** The committed `task_hash` column of a logged task table. */
+  private def taskHashes(table: String): DataFrame =
+    Store.read(spark, table, StructType(Seq(StructField("task_hash", StringType))))
+
   test("T6 resume: restart after Plan appends new files processes only the delta") {
     FixtureTree.ensure()
     val store = freshStore("resume")
@@ -33,13 +38,13 @@ class StreamingSpec extends SparkSpec {
     Ingest.run(spark, FixtureTree.root, "ext/mov", 2, store) // depth 2: 2 .mov files
     Plan.run(spark, store) // 2 × (mov+thumb) = 4 tasks
     StreamingJobs.executeStream(spark, store, obj, ckpt).awaitTermination()
-    assert(spark.read.parquet(store.taskDone).count() == 4)
+    assert(Store.count(spark, store.taskDone) == 4)
 
     // deepen the scan: 2 more resources → 4 more tasks appended
     Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store)
     Plan.run(spark, store)
     StreamingJobs.executeStream(spark, store, obj, ckpt).awaitTermination()
-    val done = spark.read.parquet(store.taskDone)
+    val done = taskHashes(store.taskDone)
     assert(done.count() == 8)
     // no task executed twice
     assert(done.select("task_hash").distinct().count() == 8)
@@ -52,11 +57,11 @@ class StreamingSpec extends SparkSpec {
 
     Ingest.run(spark, FixtureTree.root, "ext/mov", 2, store) // 2 resources
     StreamingJobs.planStream(spark, store, ckpt).awaitTermination()
-    assert(spark.read.parquet(store.taskQueue).count() == 4) // 2 × (mov+thumb)
+    assert(Store.count(spark, store.taskQueue) == 4) // 2 × (mov+thumb)
 
     Ingest.run(spark, FixtureTree.root, "ext/mov", 4, store) // +2 resources
     StreamingJobs.planStream(spark, store, ckpt).awaitTermination()
-    val queue = spark.read.parquet(store.taskQueue)
+    val queue = taskHashes(store.taskQueue)
     assert(queue.count() == 8)
     assert(queue.select("task_hash").distinct().count() == 8) // no re-fan-out
   }
@@ -84,7 +89,7 @@ class StreamingSpec extends SparkSpec {
     // Restart with the same checkpoint: the failed batch replays; the
     // task_done anti-join makes the replay a no-op for completed work.
     StreamingJobs.executeStream(spark, store, obj, ckpt).awaitTermination()
-    val done = spark.read.parquet(store.taskDone)
+    val done = taskHashes(store.taskDone)
     assert(done.count() == 8, "all tasks completed exactly once after retry")
     assert(done.select("task_hash").distinct().count() == 8)
   }
@@ -102,7 +107,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       def done(): Long =
-        try spark.read.parquet(store.taskDone).count() catch { case _: Throwable => 0L }
+        try Store.count(spark, store.taskDone) catch { case _: Throwable => 0L }
       while (done() < 4 && System.nanoTime() < deadline) Thread.sleep(250)
       assert(done() == 4, "live trigger did not process the batch in time")
     } finally {
@@ -111,7 +116,7 @@ class StreamingSpec extends SparkSpec {
     assert(!q.isActive)
     // the checkpoint survives the stop: a later run resumes with nothing to do
     StreamingJobs.executeStream(spark, store, obj, ckpt).awaitTermination()
-    assert(spark.read.parquet(store.taskDone).count() == 4)
+    assert(Store.count(spark, store.taskDone) == 4)
   }
 
   test("watermark lateness: a small delay budget on out-of-order input drops late rows") {
